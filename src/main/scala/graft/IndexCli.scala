@@ -231,8 +231,13 @@ object IndexCli {
     *   :del <key>[,<key>...]        DELETE — tombstone keys (meta only)
     *   :opt                         OPTIMIZE — compact tombstones away,
     *                                re-attach PQ codes if the graph was
-    *                                fused, full durable save
+    *                                fused, full durable save (a no-op
+    *                                when there is nothing to purge)
     *   (empty line / EOF)           quit
+    *
+    * A line that fails (malformed key or vector, bad arity) answers
+    * `ERROR <reason>` and the loop goes on; the pinned cache is released
+    * however the loop ends.
     *
     * Refresh protocol: a WRITE or OPTIMIZE changes cluster contents, so
     * the per-cluster serving cache rebuilds (close + re-pin); DELETE only
@@ -253,13 +258,17 @@ object IndexCli {
       "(SEARCH 'v1,v2,...' | ':p <nProbe> <ef> v...' | ':t <tau> v...' " +
       "threshold | ':a <sim> <key> v...' next page | WRITE ':w <key> v...' " +
       "| DELETE ':del k,k' | OPTIMIZE ':opt'; empty line or EOF quits)")
-    def parseVec(s: String): Seq[Float] =
-      s.split(",").filter(_.nonEmpty).map(_.toFloat).toSeq
+    val dim = g.centroids.head.length
+    def parseVec(s: String): Seq[Float] = {
+      val v = s.split(",").filter(_.nonEmpty).map(_.toFloat).toSeq
+      require(v.length == dim, s"vector has ${v.length} dims, the graph $dim")
+      v
+    }
     var go = true
-    while (go && in.hasNext) {
+    try while (go && in.hasNext) {
       val line = in.next().trim
       if (line.isEmpty) go = false
-      else {
+      else try {
         val t0 = System.nanoTime()
         def ms = (System.nanoTime() - t0) / 1e6
         line.split("\\s+").toList match {
@@ -291,18 +300,19 @@ object IndexCli {
             out(f"[$ms%.1f ms] DELETED (${g.deleted.length} live tombstones)")
           case ":opt" :: Nil =>
             val compacted = Nsw.compact(spark, g)
-            val next0 = fusedModel match {
-              case Some(model) if compacted ne g =>
-                Nsw.attachPqWith(spark, compacted, model)
-              case _ => compacted
+            // nothing purged: the dir already holds this graph (and a
+            // loaded/appended graph's plan reads it — never save onto it)
+            if (compacted ne g) {
+              val next0 = fusedModel.fold(compacted)(Nsw.attachPqWith(spark, compacted, _))
+              // sever lineage before overwriting the dir the plan reads
+              // (same hazard saveTouched guards; full save here)
+              val next = next0.copy(adj = next0.adj.localCheckpoint(true))
+              next0.adj.unpersist()
+              Nsw.save(spark, next, dir)
+              g = next
+              hot.close()
+              hot = HotAnn(g)
             }
-            // sever lineage before overwriting the dir the plan reads
-            // (same hazard saveTouched guards; full save here)
-            val next = if (next0 ne g)
-              next0.copy(adj = next0.adj.localCheckpoint(true)) else next0
-            if (next0 ne g) next0.adj.unpersist()
-            Nsw.save(spark, next, dir)
-            if (next ne g) { g = next; hot.close(); hot = HotAnn(g) }
             out(f"[$ms%.1f ms] OPTIMIZED (${g.adj.count()} nodes, " +
               s"${g.deleted.length} tombstones)")
           case cmd =>
@@ -314,9 +324,11 @@ object IndexCli {
             out(f"[$ms%.1f ms] " + hits.map { case (key, s) =>
               f"$key:$s%.4f" }.mkString(" "))
         }
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          out(s"ERROR ${e.getClass.getSimpleName}: ${e.getMessage}")
       }
-    }
-    hot.close()
+    } finally hot.close()
   }
 
   private def usage(): Unit = System.err.println(

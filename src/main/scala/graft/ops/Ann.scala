@@ -113,13 +113,27 @@ object Ann {
     var bestD = Double.MaxValue
     var c = 0
     while (c < cs.length) {
-      var d = 0.0
-      var i = 0
-      while (i < v.length) { val t = v(i) - cs(c)(i); d += t * t; i += 1 }
+      val d = sqDist(v, cs(c))
       if (d < bestD) { bestD = d; best = c }
       c += 1
     }
     (best, bestD)
+  }
+
+  /** The probe router shared by every clustered search (IVF, NSW,
+    * HotAnn): the `nProbe` centroids nearest `q` by squared L2, nearest
+    * first; the sort is stable, so ties go to the smaller centroid index. */
+  private[ops] def probeOrder(cs: Array[Array[Double]], q: Array[Double],
+                              nProbe: Int): Array[Int] = {
+    val d = cs.map(sqDist(q, _))
+    cs.indices.toArray.sortBy(d(_)).take(nProbe)
+  }
+
+  private def sqDist(v: Array[Double], c: Array[Double]): Double = {
+    var d = 0.0
+    var i = 0
+    while (i < v.length) { val t = v(i) - c(i); d += t * t; i += 1 }
+    d
   }
 
   /** IVF index: corpus partitioned by nearest centroid. Vectors ride as
@@ -191,14 +205,8 @@ object Ann {
     * is file-level pruning). nProbe == kCenters degrades to exact. */
   def ivfTopK(ivf: Ivf, query: Seq[Float], k: Int, nProbe: Int): DataFrame = {
     val q = query.map(_.toDouble).toArray
-    val order = ivf.centroids.zipWithIndex.map { case (c, i) =>
-      var d = 0.0
-      var j = 0
-      while (j < q.length) { val t = q(j) - c(j); d += t * t; j += 1 }
-      (i, d)
-    }.sortBy(_._2).take(nProbe).map(_._1)
     val qc = typedlit(q.toSeq)
-    ivf.assigned.filter(col("c").isin(order.toSeq: _*))
+    ivf.assigned.filter(col("c").isin(probeOrder(ivf.centroids, q, nProbe).toSeq: _*))
       .select(col("key"), cosine(vd(col("v")), qc).as("sim"))
       .orderBy(col("sim").desc, col("key").asc)
       .limit(k)

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable
@@ -22,11 +21,12 @@ import scala.collection.mutable
   * shuffle, no scan, and unprobed clusters don't even get a task. The
   * driver merge is nProbe·k rows.
   *
-  * Results are identical to `Nsw.topK` at the same knobs (same beam
-  * kernel, same medioid entry, same tombstone traverse-through, same
-  * (sim desc, key asc) order) — NswSpec pins the parity. Like HotIndex,
-  * this is a deliberately non-declarative serving surface over the same
-  * persisted format the DataFrame path reads.
+  * Each probed partition runs the same per-cluster kernel as the
+  * DataFrame path (`Nsw.searchCluster` with the exact scorer), so results
+  * and visited counts are identical to `Nsw.topK`/`threshold`/
+  * `searchAfter` at the same knobs — NswSpec pins the parity. Like
+  * HotIndex, this is a deliberately non-declarative serving surface over
+  * the same persisted format the DataFrame path reads.
   */
 final class HotAnn private (
     sc: org.apache.spark.SparkContext,
@@ -39,37 +39,8 @@ final class HotAnn private (
     * (sim desc, key asc) top-k. Tombstoned keys traverse, never return.
     * @param metrics when non-null, receives the summed visitedCount. */
   def topK(query: Seq[Float], k: Int, nProbe: Int, ef: Int,
-           metrics: Nsw.SearchMetrics = null): Array[(Long, Double)] = {
-    val q = query.map(_.toDouble).toArray
-    val probes = centroids.zipWithIndex.map { case (c, i) =>
-      var d = 0.0
-      var j = 0
-      while (j < q.length) { val t = q(j) - c(j); d += t * t; j += 1 }
-      (i, d)
-    }.sortBy(_._2).take(nProbe).map(_._1)
-    val dead = deleted
-    val kk = k
-    val efq = ef
-    val perCluster: Array[(Array[(Long, Double)], Int)] =
-      sc.runJob(parts,
-        (it: Iterator[Nsw.ClusterArrays]) =>
-          if (!it.hasNext) (Array.empty[(Long, Double)], 0)
-          else {
-            val ca = it.next()
-            val accept: (Int, Double) => Boolean =
-              if (dead.isEmpty) null else (i, _) => !dead.contains(ca.keys(i))
-            val (hits, visited) = Nsw.beamSearch(q, ca.vecs, ca.adj,
-              ca.vecs.length, ca.entry, efq, accept)
-            (hits.take(kk).map { case (i, s) => (ca.keys(i), s) }, visited)
-          },
-        probes.toIndexedSeq)
-    if (metrics != null) metrics.visited = perCluster.map(_._2.toLong).sum
-    val all = perCluster.flatMap(_._1)
-    scala.util.Sorting.stableSort(all,
-      (x: (Long, Double), y: (Long, Double)) =>
-        x._2 > y._2 || (x._2 == y._2 && x._1 < y._1))
-    all.take(k)
-  }
+           metrics: Nsw.SearchMetrics = null): Array[(Long, Double)] =
+    search(query, nProbe, Nsw.Beam(k, ef), metrics)
 
   /** O(1) deny-set swap: a DELETE only changes the tombstone filter, so
     * the serving cache (pinned per-cluster arrays) is REUSED — the new
@@ -83,86 +54,48 @@ final class HotAnn private (
     new HotAnn(sc, parts, centroids, d)
   }
 
-  private def probesFor(q: Array[Double], nProbe: Int): Array[Int] =
-    centroids.zipWithIndex.map { case (c, i) =>
-      var d = 0.0
-      var j = 0
-      while (j < q.length) { val t = q(j) - c(j); d += t * t; j += 1 }
-      (i, d)
-    }.sortBy(_._2).take(nProbe).map(_._1)
-
   /** Serving twin of [[Nsw.threshold]]: all keys with cosine >= tau in
-    * the probed clusters, (sim desc, key asc). Same flood kernel, so
-    * results are identical at the same knobs (NswSpec parity). Results
-    * materialize on the DRIVER, so each probed cluster enforces the
-    * serving result cap (the `HotIndex.searchThreshold` guard): a tau
-    * that matches more than `Nsw.FilterSetCap` rows per cluster must use
-    * the distributed `Nsw.threshold` DataFrame path instead. */
+    * the probed clusters, (sim desc, key asc). Results are collected to
+    * the caller, so each probed cluster enforces the serving result cap (the
+    * `HotIndex.searchThreshold` guard): a tau that matches more than
+    * `Nsw.FilterSetCap` rows per cluster must use the distributed
+    * `Nsw.threshold` DataFrame path instead. */
   def threshold(query: Seq[Float], tau: Double, nProbe: Int,
                 maxVisit: Int = Int.MaxValue,
-                metrics: Nsw.SearchMetrics = null): Array[(Long, Double)] = {
-    val q = query.map(_.toDouble).toArray
-    val probes = probesFor(q, nProbe)
-    val dead = deleted
-    val tauq = tau
-    val mv = maxVisit
-    val perCluster: Array[(Array[(Long, Double)], Int)] =
-      sc.runJob(parts,
-        (it: Iterator[Nsw.ClusterArrays]) =>
-          if (!it.hasNext) (Array.empty[(Long, Double)], 0)
-          else {
-            val ca = it.next()
-            val accept: (Int, Double) => Boolean =
-              if (dead.isEmpty) null else (i, _) => !dead.contains(ca.keys(i))
-            val (hits, visited) = Nsw.thresholdFlood(
-              i => Nsw.cosineQF(q, ca.vecs(i)), ca.adj,
-              ca.vecs.length, ca.entry, tauq, mv, accept)
-            require(hits.length <= Nsw.FilterSetCap,
-              s"threshold tau=$tauq matched ${hits.length} rows in one cluster, " +
-              s"beyond the serving materialization cap (${Nsw.FilterSetCap}); " +
-              "use the Nsw.threshold DataFrame path for broad-range queries")
-            (hits.map { case (i, s) => (ca.keys(i), s) }, visited)
-          },
-        probes.toIndexedSeq)
-    if (metrics != null) metrics.visited = perCluster.map(_._2.toLong).sum
-    val all = perCluster.flatMap(_._1)
-    scala.util.Sorting.stableSort(all,
-      (x: (Long, Double), y: (Long, Double)) =>
-        x._2 > y._2 || (x._2 == y._2 && x._1 < y._1))
-    all
-  }
+                metrics: Nsw.SearchMetrics = null): Array[(Long, Double)] =
+    search(query, nProbe, Nsw.Flood(tau, maxVisit), metrics)
 
   /** Serving twin of [[Nsw.searchAfter]]: top-k strictly after `cursor`
     * in (sim desc, key asc) order — page 2+ without refetching page 1. */
   def searchAfter(query: Seq[Float], k: Int, cursor: (Double, Long),
                   nProbe: Int, ef: Int,
-                  metrics: Nsw.SearchMetrics = null): Array[(Long, Double)] = {
-    val q = query.map(_.toDouble).toArray
-    val probes = probesFor(q, nProbe)
-    val dead = deleted
-    val (cSim, cKey) = cursor
-    val kk = k
-    val efq = ef
+                  metrics: Nsw.SearchMetrics = null): Array[(Long, Double)] =
+    search(query, nProbe, Nsw.Beam(k, ef, Some(cursor)), metrics)
+
+  /** One `runJob` over the probed partitions, each running the shared
+    * per-cluster kernel, then the merge of their hits. */
+  private def search(query: Seq[Float], nProbe: Int, policy: Nsw.Policy,
+                     metrics: Nsw.SearchMetrics): Array[(Long, Double)] = {
+    val scorer = Nsw.Exact(Nsw.toQuery(query))
+    val deny = deleted
     val perCluster: Array[(Array[(Long, Double)], Int)] =
       sc.runJob(parts,
         (it: Iterator[Nsw.ClusterArrays]) =>
           if (!it.hasNext) (Array.empty[(Long, Double)], 0)
           else {
-            val ca = it.next()
-            val accept: (Int, Double) => Boolean = (i, s) =>
-              (s < cSim || (s == cSim && ca.keys(i) > cKey)) &&
-              (dead.isEmpty || !dead.contains(ca.keys(i)))
-            val (hits, visited) = Nsw.beamSearch(q, ca.vecs, ca.adj,
-              ca.vecs.length, ca.entry, efq, accept)
-            (hits.take(kk).map { case (i, s) => (ca.keys(i), s) }, visited)
+            val (hits, visited) = Nsw.searchCluster(it.next(), scorer, policy, deny)
+            policy match {
+              case Nsw.Flood(tau, _) => require(hits.length <= Nsw.FilterSetCap,
+                s"threshold tau=$tau matched ${hits.length} rows in one cluster, " +
+                s"beyond the serving materialization cap (${Nsw.FilterSetCap}); " +
+                "use the Nsw.threshold DataFrame path for broad-range queries")
+              case _ =>
+            }
+            (hits, visited)
           },
-        probes.toIndexedSeq)
+        Ann.probeOrder(centroids, scorer.q, nProbe).toIndexedSeq)
     if (metrics != null) metrics.visited = perCluster.map(_._2.toLong).sum
-    val all = perCluster.flatMap(_._1)
-    scala.util.Sorting.stableSort(all,
-      (x: (Long, Double), y: (Long, Double)) =>
-        x._2 > y._2 || (x._2 == y._2 && x._1 < y._1))
-    all.take(k)
+    Nsw.mergeHits(perCluster.flatMap(_._1), policy.limit)
   }
 
   def close(): Unit = parts.unpersist()
@@ -177,13 +110,8 @@ object HotAnn {
     require(graph.deleted.length <= Nsw.FilterSetCap,
       s"tombstone set of ${graph.deleted.length} keys exceeds the serving " +
       s"closure cap (${Nsw.FilterSetCap}); Nsw.compact before pinning")
-    val spark = graph.adj.sparkSession
-    import spark.implicits._
     val k = math.max(1, graph.centroids.length)
-    val parts = graph.adj
-      .select(col("c"), col("key"), col("v"), col("nbrs"), col("entry"))
-      .as[(Int, Long, Seq[Float], Seq[Long], Boolean)]
-      .rdd
+    val parts = Nsw.nodes(graph.adj).rdd
       .map { case (c, key, v, nbrs, e) => (c, (key, v, nbrs, e)) }
       // HashPartitioner(k) sends cluster c to partition c for c in [0, k)
       .partitionBy(new HashPartitioner(k))
@@ -197,6 +125,7 @@ object HotAnn {
       }, preservesPartitioning = true)
       .persist(StorageLevel.MEMORY_ONLY)
     parts.count() // materialize before first query
-    new HotAnn(spark.sparkContext, parts, graph.centroids, graph.deleted.toSet)
+    new HotAnn(graph.adj.sparkSession.sparkContext, parts, graph.centroids,
+      graph.deleted.toSet)
   }
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
@@ -36,7 +37,12 @@ import scala.collection.mutable
   *    medioid entry the same way, GraphIndexBuilder.java:552-576); global
   *    top-k is a tiny sorted merge of nProbe·k candidates. Searches
   *    report `visitedCount` (graph/SearchResult.java:22-53) so
-  *    recall-vs-cost curves measure WORK, not just knobs.
+  *    recall-vs-cost curves measure WORK, not just knobs. Every search
+  *    (and every `HotAnn` search) is ONE kernel, [[searchCluster]],
+  *    varied on two axes only: the Scorer (exact cosine, PQ-ADC or
+  *    LVQ-fused — the fused two rerank the beam's survivors exactly, the
+  *    reference's SearchScoreProvider split) and the Policy (top-k,
+  *    after-cursor, or threshold flood).
   *  - MUTATE incrementally (the reference's core contract —
   *    addGraphNode GraphIndexBuilder.java:314-362, markNodeDeleted /
   *    removeDeletedNodes :427-531): [[append]] inserts new vectors into
@@ -196,41 +202,15 @@ object Nsw {
     * traverses through rejected (tombstoned) nodes, exactly the
     * reference's `Bits acceptOrds` contract (GraphSearcher.java:191,258 —
     * deleted nodes keep routing until cleanup()). */
-  private[ops] def beamSearch(q: Array[Double], vecs: Array[Array[Float]],
-                              adj: Array[Array[Int]], n: Int, entry: Int,
-                              ef: Int, accept: (Int, Double) => Boolean = null)
-      : (Array[(Int, Double)], Int) =
-    beamSearchBy(i => cosineQF(q, vecs(i)), adj, n, entry, ef, accept)
-
-  /** The beam over an arbitrary node-scoring function — shared by the
-    * exact full-vector path and the PQ-fused ADC path ([[topKFused]]). */
   private[ops] def beamSearchBy(score: Int => Double,
                                 adj: Array[Array[Int]], n: Int, entry: Int,
                                 ef: Int, accept: (Int, Double) => Boolean = null)
       : (Array[(Int, Double)], Int) = {
     if (n <= 0) return (Array.empty, 0)
-    if (ef >= n) {
-      val all = Array.tabulate(n)(i => (i, score(i)))
-      val kept = if (accept == null) all else all.filter(p => accept(p._1, p._2))
-      java.util.Arrays.sort(kept, ResultOrder)
-      return (kept, n)
-    }
-    // max-heap: higher sim first, tie -> smaller idx first
-    val candOrd = new Ordering[(Double, Int)] {
-      def compare(a: (Double, Int), b: (Double, Int)): Int = {
-        val c = java.lang.Double.compare(a._1, b._1)
-        if (c != 0) c else Integer.compare(b._2, a._2)
-      }
-    }
+    if (ef >= n) return exactScan(score, n, accept)
+    val cand = mutable.PriorityQueue.empty[(Double, Int)](FrontierOrder)
     // dequeues the WORST kept result (lowest sim, tie -> larger idx)
-    val worstOrd = new Ordering[(Double, Int)] {
-      def compare(a: (Double, Int), b: (Double, Int)): Int = {
-        val c = java.lang.Double.compare(b._1, a._1)
-        if (c != 0) c else Integer.compare(a._2, b._2)
-      }
-    }
-    val cand = mutable.PriorityQueue.empty[(Double, Int)](candOrd)
-    val res = mutable.PriorityQueue.empty[(Double, Int)](worstOrd)
+    val res = mutable.PriorityQueue.empty[(Double, Int)](FrontierOrder.reverse)
     val visited = new java.util.BitSet(n)
     var visitedCount = 0
     def admit(s: Double, i: Int): Boolean = accept == null || accept(i, s)
@@ -267,6 +247,24 @@ object Nsw {
     val out = res.dequeueAll.toArray.map(p => (p._2, p._1))
     java.util.Arrays.sort(out, ResultOrder)
     (out, visitedCount)
+  }
+
+  /** The gate mode of both traversals: score every node once, keep the
+    * accepted ones, (sim desc, idx asc). */
+  private def exactScan(score: Int => Double, n: Int, accept: (Int, Double) => Boolean)
+      : (Array[(Int, Double)], Int) = {
+    val all = Array.tabulate(n)(i => (i, score(i)))
+    val kept = if (accept == null) all else all.filter(p => accept(p._1, p._2))
+    java.util.Arrays.sort(kept, ResultOrder)
+    (kept, n)
+  }
+
+  /** Frontier max-heap order: higher sim first, tie -> smaller idx first. */
+  private val FrontierOrder = new Ordering[(Double, Int)] {
+    def compare(a: (Double, Int), b: (Double, Int)): Int = {
+      val c = java.lang.Double.compare(a._1, b._1)
+      if (c != 0) c else Integer.compare(b._2, a._2)
+    }
   }
 
   private val ResultOrder = new java.util.Comparator[(Int, Double)] {
@@ -319,10 +317,8 @@ object Nsw {
       java.util.Arrays.sort(scored, ResultOrder)
       adj(j) = selectDiverse(scored, maxDeg, vecs)
     }
-    val qd = new Array[Double](vecs(i).length)
-    var d = 0
-    while (d < qd.length) { qd(d) = vecs(i)(d).toDouble; d += 1 }
-    val (cands, _) = beamSearch(qd, vecs, adj, i, 0, efC)
+    val qd = toDoubles(vecs(i))
+    val (cands, _) = beamSearchBy(x => cosineQF(qd, vecs(x)), adj, i, 0, efC)
     val nbrs = selectDiverse(cands, math.min(m, cands.length), vecs)
     var t = 0
     while (t < nbrs.length) {
@@ -368,19 +364,26 @@ object Nsw {
   }
 
   /** One cluster materialized for the per-partition kernels: keys sorted
-    * ascending, float32 vectors, index-based adjacency, medioid entry. */
+    * ascending, float32 vectors, index-based adjacency, medioid entry,
+    * and the per-node fused codes a [[Scorer]] reads (null when none). */
   private[ops] final case class ClusterArrays(keys: Array[Long],
                                               vecs: Array[Array[Float]],
                                               adj: Array[Array[Int]],
-                                              entry: Int)
+                                              entry: Int,
+                                              codes: Array[AnyRef] = null)
 
   /** Single-pass assembly of one cluster's rows (sorted by key; neighbor
     * KEYS remapped to local indices, cross-cluster strays dropped — they
     * cannot exist in a well-formed graph). Pre-sized, no groupBy/sortBy
     * intermediate copies (round-3 verdict: the old path buffered a
-    * partition ~3x). */
-  private[ops] def assemble(rows: mutable.ArrayBuffer[(Long, Array[Float], Array[Long], Boolean)])
+    * partition ~3x). `codes`, when non-empty, is parallel to `rows` and
+    * follows the same (stable) key permutation. */
+  private[ops] def assemble(rows: mutable.ArrayBuffer[(Long, Array[Float], Array[Long], Boolean)],
+                            codes: mutable.ArrayBuffer[AnyRef] = null)
       : ClusterArrays = {
+    val sortedCodes =
+      if (codes == null || codes.isEmpty) null
+      else rows.indices.sortBy(rows(_)._1).map(codes(_)).toArray
     val sorted = rows.sortInPlaceBy(_._1)
     val n = sorted.length
     val keys = new Array[Long](n)
@@ -407,10 +410,57 @@ object Nsw {
       if (sorted(i)._4) entry = i
       i += 1
     }
-    ClusterArrays(keys, vecs, adj, entry)
+    ClusterArrays(keys, vecs, adj, entry, sortedCodes)
+  }
+
+  private val BaseCols = Seq(col("c"), col("key"), col("v"), col("nbrs"), col("entry"))
+
+  /** The adjacency rows' base columns, typed (c, key, v, nbrs, entry). */
+  private[ops] def nodes(adj: DataFrame): Dataset[(Int, Long, Seq[Float], Seq[Long], Boolean)] = {
+    val spark = adj.sparkSession
+    import spark.implicits._
+    adj.select(BaseCols: _*).as[(Int, Long, Seq[Float], Seq[Long], Boolean)]
   }
 
   private def toFloatArray(s: Seq[Float]): Array[Float] = s.toArray
+
+  private def toDoubles(v: Array[Float]): Array[Double] = {
+    val out = new Array[Double](v.length)
+    var i = 0
+    while (i < v.length) { out(i) = v(i).toDouble; i += 1 }
+    out
+  }
+
+  /** (c, key, v) rows: each vector cast to float32 and routed to its
+    * nearest centroid — the one assignment build, append and compact share. */
+  private def route(spark: SparkSession, emb: DataFrame, keyCol: String, vecCol: String,
+                    cB: Broadcast[Array[Array[Double]]]): DataFrame = {
+    import spark.implicits._
+    emb.select(col(keyCol).cast("long").as("key"),
+        transform(col(vecCol), x => x.cast("float")).as("v"))
+      .as[(Long, Seq[Float])]
+      .map { case (k, v) => (Ann.nearestCentroid(toDoubles(toFloatArray(v)), cB.value), k, v) }
+      .toDF("c", "key", "v")
+  }
+
+  /** Build every cluster among one partition's (c, key, v) rows from
+    * scratch (a task may hold several clusters; each builds independently). */
+  private def buildClusters(it: Iterator[(Int, Long, Seq[Float])], m: Int, efC: Int,
+                            centroids: Array[Array[Double]])
+      : Iterator[(Int, Long, Seq[Float], Seq[Long], Boolean)] = {
+    val byCluster = new java.util.HashMap[Int,
+      mutable.ArrayBuffer[(Long, Array[Float], Array[Long], Boolean)]]()
+    it.foreach { case (c, k, v) =>
+      byCluster.computeIfAbsent(c, _ => new mutable.ArrayBuffer)
+        .append((k, toFloatArray(v), Array.emptyLongArray, false))
+    }
+    import scala.jdk.CollectionConverters._
+    byCluster.asScala.iterator.flatMap { case (c, rows) =>
+      val ca = assemble(rows)
+      emitRows(c, ca.keys, ca.vecs, buildCluster(ca.vecs, m, efC),
+        entryOf(ca.vecs, centroids(c)))
+    }
+  }
 
   /** Emit a built cluster back to rows. */
   private def emitRows(c: Int, keys: Array[Long], vecs: Array[Array[Float]],
@@ -443,38 +493,15 @@ object Nsw {
                          params: Params): Graph = {
     import spark.implicits._
     val cB = spark.sparkContext.broadcast(centroids)
-    val assigned = emb
-      .select(col(keyCol).cast("long").as("key"),
-        transform(col(vecCol), x => x.cast("float")).as("v"))
-      .as[(Long, Seq[Float])]
-      .map { case (k, v) =>
-        val arr = toFloatArray(v)
-        val vd = new Array[Double](arr.length)
-        var i = 0
-        while (i < arr.length) { vd(i) = arr(i).toDouble; i += 1 }
-        (Ann.nearestCentroid(vd, cB.value), k, v)
-      }
     // one shuffle keyed by cluster; a task may receive several clusters
     // (hash collisions) and builds each independently
     val m = params.m
     val efC = params.efConstruction
-    val adj = assigned.toDF("c", "key", "v")
+    val adj = route(spark, emb, keyCol, vecCol, cB)
       .repartition(params.kCenters, col("c"))
       .as[(Int, Long, Seq[Float])]
-      .mapPartitions { it =>
-        val byCluster = new java.util.HashMap[Int,
-          mutable.ArrayBuffer[(Long, Array[Float], Array[Long], Boolean)]]()
-        it.foreach { case (c, k, v) =>
-          byCluster.computeIfAbsent(c, _ => new mutable.ArrayBuffer)
-            .append((k, toFloatArray(v), Array.emptyLongArray, false))
-        }
-        import scala.jdk.CollectionConverters._
-        byCluster.asScala.iterator.flatMap { case (c, rows) =>
-          val ca = assemble(rows)
-          val a = buildCluster(ca.vecs, m, efC)
-          emitRows(c, ca.keys, ca.vecs, a, entryOf(ca.vecs, cB.value(c)))
-        }
-      }.toDF("c", "key", "v", "nbrs", "entry")
+      .mapPartitions(it => buildClusters(it, m, efC, cB.value))
+      .toDF("c", "key", "v", "nbrs", "entry")
     Graph(adj.persist(), centroids, params)
   }
 
@@ -505,17 +532,7 @@ object Nsw {
                     keyCol: String, vecCol: String): (Graph, Set[Int]) = {
     import spark.implicits._
     val cB = spark.sparkContext.broadcast(graph.centroids)
-    val fresh = emb
-      .select(col(keyCol).cast("long").as("key"),
-        transform(col(vecCol), x => x.cast("float")).as("v"))
-      .as[(Long, Seq[Float])]
-      .map { case (k, v) =>
-        val arr = toFloatArray(v)
-        val vd = new Array[Double](arr.length)
-        var i = 0
-        while (i < arr.length) { vd(i) = arr(i).toDouble; i += 1 }
-        (Ann.nearestCentroid(vd, cB.value), k, v)
-      }.toDF("c", "key", "v").persist()
+    val fresh = route(spark, emb, keyCol, vecCol, cB).persist()
     val touched = fresh.select("c").distinct().as[Int].collect().toSet
     if (touched.isEmpty) { fresh.unpersist(); return (graph, touched) }
     val m = graph.params.m
@@ -523,10 +540,8 @@ object Nsw {
     // appended/compacted graphs drop any fused PQ codes (new nodes have
     // none and the codebooks would be stale) — re-run attachPq if needed
     val untouchedRows = graph.adj.filter(!inIntSet(col("c"), touched))
-      .select(col("c"), col("key"), col("v"), col("nbrs"), col("entry"))
-    val existing = graph.adj.filter(inIntSet(col("c"), touched))
-      .select(col("c"), col("key"), col("v"), col("nbrs"), col("entry"))
-      .as[(Int, Long, Seq[Float], Seq[Long], Boolean)]
+      .select(BaseCols: _*)
+    val existing = nodes(graph.adj.filter(inIntSet(col("c"), touched)))
       .map { case (c, k, v, nb, e) => (c, k, v, nb, e, false) }
     val incoming = fresh.as[(Int, Long, Seq[Float])]
       .map { case (c, k, v) => (c, k, v, Seq.empty[Long], false, true) }
@@ -611,26 +626,13 @@ object Nsw {
       .select("c").distinct().as[Int].collect().toSet
     if (affected.isEmpty) return graph.copy(deleted = Array.emptyLongArray)
     val untouchedRows = graph.adj.filter(!inIntSet(col("c"), affected))
-      .select(col("c"), col("key"), col("v"), col("nbrs"), col("entry"))
+      .select(BaseCols: _*)
     val m = graph.params.m
     val efC = graph.params.efConstruction
-    val rebuilt = graph.adj.filter(inIntSet(col("c"), affected))
-      .select(col("c"), col("key"), col("v"), col("nbrs"), col("entry"))
-      .as[(Int, Long, Seq[Float], Seq[Long], Boolean)]
+    val rebuilt = nodes(graph.adj.filter(inIntSet(col("c"), affected)))
       .mapPartitions { it =>
-        val byCluster = new java.util.HashMap[Int,
-          mutable.ArrayBuffer[(Long, Array[Float], Array[Long], Boolean)]]()
-        it.foreach { case (c, k, v, _, _) =>
-          if (!deadB.value.contains(k))
-            byCluster.computeIfAbsent(c, _ => new mutable.ArrayBuffer)
-              .append((k, toFloatArray(v), Array.emptyLongArray, false))
-        }
-        import scala.jdk.CollectionConverters._
-        byCluster.asScala.iterator.flatMap { case (c, rows) =>
-          val ca = assemble(rows)
-          val a = buildCluster(ca.vecs, m, efC)
-          emitRows(c, ca.keys, ca.vecs, a, entryOf(ca.vecs, cB.value(c)))
-        }
+        val live = it.collect { case (c, k, v, _, _) if !deadB.value.contains(k) => (c, k, v) }
+        buildClusters(live, m, efC, cB.value)
       }.toDF("c", "key", "v", "nbrs", "entry")
     // affected clusters must reassemble into one task each: the graph may
     // be clusterLocal=false (post-append/loaded)
@@ -640,66 +642,210 @@ object Nsw {
     out
   }
 
+  // ---- search: one kernel, probe → assemble → beam/flood → rerank → merge.
+  // Every DataFrame search below and every HotAnn search runs
+  // [[searchCluster]]; they differ only in the Scorer and the Policy.
+
+  /** How a search scores nodes — the reference's SearchScoreProvider
+    * (GraphSearcher.java:116-120,330-348): `nav` drives the traversal.
+    * A scorer that navigates on fused codes is approximate, so the beam's
+    * survivors are rescored exactly on their full vectors before the cut
+    * (the extractScores step). */
+  private[ops] sealed abstract class Scorer(val reranks: Boolean) extends Serializable {
+    def q: Array[Double]
+    def nav(ca: ClusterArrays): Int => Double
+  }
+
+  /** Exact float cosine on the node vectors. */
+  private[ops] final case class Exact(q: Array[Double]) extends Scorer(reranks = false) {
+    def nav(ca: ClusterArrays): Int => Double = i => cosineQF(q, ca.vecs(i))
+  }
+
+  /** PQ-ADC over the inline m-byte codes: per-query tables of partial
+    * dots and partial centroid magnitudes, approxCos(code) =
+    * Σdot / (|q|·sqrt(Σmag)) — 2 lookups per subspace (the CosineDecoder
+    * shape, pq/PQDecoder.java). */
+  private[ops] final case class PqAdc(q: Array[Double], model: Pq.Model)
+      extends Scorer(reranks = true) {
+    private val dotT = model.dotTables(q)
+    private val magT = model.codebooks.map(_.map { c =>
+      var d = 0.0
+      var i = 0
+      while (i < c.length) { d += c(i) * c(i); i += 1 }
+      d
+    })
+    private val invQNorm = {
+      var qn = 0.0
+      q.foreach(x => qn += x * x)
+      if (qn == 0) 0.0 else 1.0 / math.sqrt(qn)
+    }
+    def nav(ca: ClusterArrays): Int => Double = { i =>
+      val code = ca.codes(i).asInstanceOf[Array[Byte]]
+      var dot = 0.0
+      var mag = 0.0
+      var s = 0
+      while (s < dotT.length) {
+        val ci = code(s) & 0xFF
+        dot += dotT(s)(ci); mag += magT(s)(ci); s += 1
+      }
+      if (mag == 0) 0.0 else dot * invQNorm / math.sqrt(mag)
+    }
+  }
+
+  /** LVQ fused-decomposition cosine over the per-node 1-byte/dim codes. */
+  private[ops] final case class LvqFused(q: Array[Double], model: Lvq.Model)
+      extends Scorer(reranks = true) {
+    private val (qMu, qSum, qn2) = model.queryParts(q)
+    private val invQNorm = if (qn2 == 0) 0.0 else 1.0 / math.sqrt(qn2)
+    def nav(ca: ClusterArrays): Int => Double = { i =>
+      val (u, bias, scale) = ca.codes(i).asInstanceOf[(Array[Byte], Float, Float)]
+      model.approxCos(q, qMu, qSum, invQNorm, u, bias, scale)
+    }
+  }
+
+  /** What a search keeps: the best `k` of a beam with frontier `ef`
+    * (strictly after `cursor` in (sim desc, key asc) order when set), or
+    * every node scoring >= tau via [[thresholdFlood]]. */
+  private[ops] sealed trait Policy extends Serializable { def limit: Int }
+  private[ops] final case class Beam(k: Int, ef: Int,
+                                     cursor: Option[(Double, Long)] = None) extends Policy {
+    def limit: Int = k
+  }
+  private[ops] final case class Flood(tau: Double, maxVisit: Int) extends Policy {
+    def limit: Int = Int.MaxValue
+  }
+
+  /** One cluster's search: traverse on `scorer.nav` from the medioid
+    * entry, admitting only keys outside `deny` (tombstones route, never
+    * return — GraphSearcher.java:191,258), rerank exactly when the scorer
+    * is approximate, cut to the policy. Returns ((key, sim) in (sim desc,
+    * key asc) order, visitedCount). */
+  private[ops] def searchCluster(ca: ClusterArrays, scorer: Scorer, policy: Policy,
+                                 deny: Set[Long]): (Array[(Long, Double)], Int) = {
+    val keys = ca.keys
+    val live: (Int, Double) => Boolean =
+      if (deny.isEmpty) null else (i, _) => !deny.contains(keys(i))
+    val (hits, visited) = policy match {
+      case Flood(tau, maxVisit) =>
+        require(!scorer.reranks, "threshold search scores exactly")
+        thresholdFlood(scorer.nav(ca), ca.adj, keys.length, ca.entry, tau, maxVisit, live)
+      case Beam(k, ef, cursor) =>
+        val accept: (Int, Double) => Boolean = cursor match {
+          case None => live
+          case Some((cSim, cKey)) => (i, s) =>
+            (s < cSim || (s == cSim && keys(i) > cKey)) && (live == null || live(i, s))
+        }
+        val (beam, v) = beamSearchBy(scorer.nav(ca), ca.adj, keys.length, ca.entry, ef, accept)
+        val ranked = if (!scorer.reranks) beam else {
+          val exact = beam.map { case (i, _) => (i, cosineQF(scorer.q, ca.vecs(i))) }
+          java.util.Arrays.sort(exact, ResultOrder)
+          exact
+        }
+        (ranked.take(k), v)
+    }
+    (hits.map { case (i, s) => (keys(i), s) }, visited)
+  }
+
+  /** Final merge of per-cluster hits: (sim desc, key asc), first `limit`. */
+  private[ops] def mergeHits(hits: Array[(Long, Double)],
+                             limit: Int): Array[(Long, Double)] = {
+    scala.util.Sorting.stableSort(hits, (x: (Long, Double), y: (Long, Double)) =>
+      x._2 > y._2 || (x._2 == y._2 && x._1 < y._1))
+    hits.take(limit)
+  }
+
+  /** The one per-partition body of the DataFrame search: group the
+    * partition's rows by cluster, assemble each (its codes follow the
+    * same key permutation), run [[searchCluster]]. */
+  private def searchRows[R](rows: Dataset[R], kB: Broadcast[(Scorer, Policy, Set[Long])],
+                            visitedAcc: LongAccumulator)
+                           (read: R => (Int, (Long, Array[Float], Array[Long], Boolean), AnyRef))
+      : DataFrame = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    rows.mapPartitions { it =>
+      val (sc, pol, deny) = kB.value
+      val byCluster = new java.util.HashMap[Int,
+        (mutable.ArrayBuffer[(Long, Array[Float], Array[Long], Boolean)],
+         mutable.ArrayBuffer[AnyRef])]()
+      it.foreach { r =>
+        val (c, row, code) = read(r)
+        val slot = byCluster.computeIfAbsent(c,
+          _ => (new mutable.ArrayBuffer, new mutable.ArrayBuffer))
+        slot._1.append(row)
+        if (code != null) slot._2.append(code)
+      }
+      import scala.jdk.CollectionConverters._
+      byCluster.asScala.iterator.flatMap { case (_, (members, codes)) =>
+        val (h, visited) = searchCluster(assemble(members, codes), sc, pol, deny)
+        if (visitedAcc != null) visitedAcc.add(visited.toLong)
+        h.iterator
+      }
+    }.toDF("key", "sim")
+  }
+
+  /** One read row: (cluster, its [[assemble]] row, its fused code or null). */
+  private def node(c: Int, k: Long, v: Seq[Float], nb: Seq[Long], e: Boolean, code: AnyRef) =
+    (c, (k, toFloatArray(v), nb.toArray, e), code)
+
+  /** The DataFrame path of every `Nsw` search: probe the nProbe nearest
+    * clusters, reassemble them when the layout is fragmented, run
+    * [[searchCluster]] on each, order (sim desc, key asc) and cut.
+    * @param metrics when non-null, receives the summed visitedCount; the
+    *   per-cluster hits are then collected once (so the count is exact)
+    *   and merged locally. */
+  private def search(graph: Graph, nProbe: Int, scorer: Scorer, policy: Policy,
+                     metrics: SearchMetrics): DataFrame = {
+    requireDenyCapped(graph.deleted)
+    val spark = graph.adj.sparkSession
+    import spark.implicits._
+    val probes = Ann.probeOrder(graph.centroids, scorer.q, nProbe).toSeq
+    val kB = spark.sparkContext.broadcast((scorer, policy, graph.deleted.toSet))
+    val visitedAcc: LongAccumulator =
+      if (metrics == null) null else spark.sparkContext.longAccumulator("nswVisited")
+    val probed0 = graph.adj.filter(col("c").isin(probes: _*))
+    // a loaded/appended graph's clusters may be split across partitions:
+    // reassemble each probed cluster into one partition so the search sees
+    // the WHOLE adjacency (the probe filter pushes below this exchange, so
+    // partition-dir pruning still applies and only probed rows shuffle)
+    val probed = if (graph.clusterLocal) probed0
+                 else probed0.repartition(math.max(1, probes.size), col("c"))
+    // each scorer reads only its own columns (the exact one none of the
+    // fused codes); the rows then meet in the one per-partition body
+    val hits = scorer match {
+      case _: Exact =>
+        searchRows(nodes(probed), kB, visitedAcc) {
+          case (c, k, v, nb, e) => node(c, k, v, nb, e, null) }
+      case _: PqAdc =>
+        searchRows(probed.select(BaseCols :+ col("code"): _*)
+          .as[(Int, Long, Seq[Float], Seq[Long], Boolean, Array[Byte])], kB, visitedAcc) {
+          case (c, k, v, nb, e, code) => node(c, k, v, nb, e, code) }
+      case _: LvqFused =>
+        searchRows(probed.select(BaseCols ++ Seq(col("lu"), col("lbias"), col("lscale")): _*)
+          .as[(Int, Long, Seq[Float], Seq[Long], Boolean, Array[Byte], Float, Float)],
+          kB, visitedAcc) {
+          case (c, k, v, nb, e, u, bias, scale) => node(c, k, v, nb, e, (u, bias, scale)) }
+    }
+    if (metrics != null) {
+      val rows = hits.as[(Long, Double)].collect()
+      metrics.visited = visitedAcc.value
+      mergeHits(rows, policy.limit).toSeq.toDF("key", "sim")
+    } else {
+      val ordered = hits.orderBy(col("sim").desc, col("key").asc)
+      policy match { case b: Beam => ordered.limit(b.k); case _: Flood => ordered }
+    }
+  }
+
+  private[ops] def toQuery(query: Seq[Float]): Array[Double] =
+    query.map(_.toDouble).toArray
+
   /** Probe the nProbe nearest clusters; beam-search each from its medioid
     * entry; merge top-k. nProbe == kCenters && ef >= cluster size == exact
     * (gate mode). Tombstoned keys are traversed through, never returned.
     * @param metrics when non-null, receives the summed visitedCount. */
   def topK(graph: Graph, query: Seq[Float], k: Int, nProbe: Int,
-           ef: Int, metrics: SearchMetrics = null): DataFrame = {
-    requireDenyCapped(graph.deleted)
-    val spark = graph.adj.sparkSession
-    import spark.implicits._
-    val q = query.map(_.toDouble).toArray
-    val probes = graph.centroids.zipWithIndex.map { case (c, i) =>
-      var d = 0.0
-      var j = 0
-      while (j < q.length) { val t = q(j) - c(j); d += t * t; j += 1 }
-      (i, d)
-    }.sortBy(_._2).take(nProbe).map(_._1).toSeq
-    val qB = spark.sparkContext.broadcast(q)
-    val deadB = spark.sparkContext.broadcast(graph.deleted.toSet)
-    val kk = k
-    val efq = ef
-    val visitedAcc: LongAccumulator =
-      if (metrics == null) null else spark.sparkContext.longAccumulator("nswVisited")
-    val probed0 = graph.adj.filter(col("c").isin(probes: _*))
-    // a loaded/appended graph's clusters may be split across partitions:
-    // reassemble each probed cluster into one partition so beamSearch sees
-    // the WHOLE adjacency (the probe filter pushes below this exchange, so
-    // partition-dir pruning still applies and only probed rows shuffle)
-    val probed = if (graph.clusterLocal) probed0
-                 else probed0.repartition(math.max(1, probes.size), col("c"))
-    val out = probed
-      .select(col("c"), col("key"), col("v"), col("nbrs"), col("entry"))
-      .as[(Int, Long, Seq[Float], Seq[Long], Boolean)]
-      .mapPartitions { it =>
-        val byCluster = new java.util.HashMap[Int,
-          mutable.ArrayBuffer[(Long, Array[Float], Array[Long], Boolean)]]()
-        it.foreach { case (c, k, v, nb, e) =>
-          byCluster.computeIfAbsent(c, _ => new mutable.ArrayBuffer)
-            .append((k, toFloatArray(v), nb.toArray, e))
-        }
-        import scala.jdk.CollectionConverters._
-        byCluster.asScala.iterator.flatMap { case (_, rows) =>
-          val ca = assemble(rows)
-          val dead = deadB.value
-          val accept: (Int, Double) => Boolean =
-            if (dead.isEmpty) null else (i, _) => !dead.contains(ca.keys(i))
-          val (hits, visited) = beamSearch(qB.value, ca.vecs, ca.adj,
-            ca.vecs.length, ca.entry, efq, accept)
-          if (visitedAcc != null) visitedAcc.add(visited.toLong)
-          hits.take(kk).iterator.map { case (i, s) => (ca.keys(i), s) }
-        }
-      }.toDF("key", "sim")
-      .orderBy(col("sim").desc, col("key").asc)
-      .limit(k)
-    if (metrics != null) {
-      val rows = out.collect() // materialize so the accumulator is final
-      metrics.visited = visitedAcc.value
-      spark.createDataFrame(spark.sparkContext.parallelize(rows.toIndexedSeq, 1),
-        out.schema)
-    } else out
-  }
+           ef: Int, metrics: SearchMetrics = null): DataFrame =
+    search(graph, nProbe, Exact(toQuery(query)), Beam(k, ef), metrics)
 
   /** Threshold (range) search kernel — all nodes with score >= tau,
     * jvector's threshold query re-expressed (GraphSearcher.java:112-115
@@ -727,20 +873,9 @@ object Nsw {
                                   accept: (Int, Double) => Boolean = null)
       : (Array[(Int, Double)], Int) = {
     if (n <= 0) return (Array.empty, 0)
-    if (maxVisit >= n) {
-      val all = Array.tabulate(n)(i => (i, score(i)))
-      val kept = all.filter(p => p._2 >= tau &&
-        (accept == null || accept(p._1, p._2)))
-      java.util.Arrays.sort(kept, ResultOrder)
-      return (kept, n)
-    }
-    val candOrd = new Ordering[(Double, Int)] {
-      def compare(a: (Double, Int), b: (Double, Int)): Int = {
-        val c = java.lang.Double.compare(a._1, b._1)
-        if (c != 0) c else Integer.compare(b._2, a._2)
-      }
-    }
-    val cand = mutable.PriorityQueue.empty[(Double, Int)](candOrd)
+    if (maxVisit >= n)
+      return exactScan(score, n, (i, s) => s >= tau && (accept == null || accept(i, s)))
+    val cand = mutable.PriorityQueue.empty[(Double, Int)](FrontierOrder)
     val res = new mutable.ArrayBuffer[(Int, Double)]()
     val visited = new java.util.BitSet(n)
     var visitedCount = 0
@@ -789,56 +924,8 @@ object Nsw {
     * Tombstoned keys are traversed through, never returned. */
   def threshold(graph: Graph, query: Seq[Float], tau: Double, nProbe: Int,
                 maxVisit: Int = Int.MaxValue,
-                metrics: SearchMetrics = null): DataFrame = {
-    requireDenyCapped(graph.deleted)
-    val spark = graph.adj.sparkSession
-    import spark.implicits._
-    val q = query.map(_.toDouble).toArray
-    val probes = graph.centroids.zipWithIndex.map { case (c, i) =>
-      var d = 0.0
-      var j = 0
-      while (j < q.length) { val t = q(j) - c(j); d += t * t; j += 1 }
-      (i, d)
-    }.sortBy(_._2).take(nProbe).map(_._1).toSeq
-    val qB = spark.sparkContext.broadcast(q)
-    val deadB = spark.sparkContext.broadcast(graph.deleted.toSet)
-    val tauq = tau
-    val mv = maxVisit
-    val visitedAcc: LongAccumulator =
-      if (metrics == null) null else spark.sparkContext.longAccumulator("nswThreshVisited")
-    val probed0 = graph.adj.filter(col("c").isin(probes: _*))
-    val probed = if (graph.clusterLocal) probed0
-                 else probed0.repartition(math.max(1, probes.size), col("c"))
-    val out = probed
-      .select(col("c"), col("key"), col("v"), col("nbrs"), col("entry"))
-      .as[(Int, Long, Seq[Float], Seq[Long], Boolean)]
-      .mapPartitions { it =>
-        val byCluster = new java.util.HashMap[Int,
-          mutable.ArrayBuffer[(Long, Array[Float], Array[Long], Boolean)]]()
-        it.foreach { case (c, k, v, nb, e) =>
-          byCluster.computeIfAbsent(c, _ => new mutable.ArrayBuffer)
-            .append((k, toFloatArray(v), nb.toArray, e))
-        }
-        import scala.jdk.CollectionConverters._
-        byCluster.asScala.iterator.flatMap { case (_, rows) =>
-          val ca = assemble(rows)
-          val dead = deadB.value
-          val accept: (Int, Double) => Boolean =
-            if (dead.isEmpty) null else (i, _) => !dead.contains(ca.keys(i))
-          val (hits, visited) = thresholdFlood(i => cosineQF(qB.value, ca.vecs(i)),
-            ca.adj, ca.vecs.length, ca.entry, tauq, mv, accept)
-          if (visitedAcc != null) visitedAcc.add(visited.toLong)
-          hits.iterator.map { case (i, s) => (ca.keys(i), s) }
-        }
-      }.toDF("key", "sim")
-      .orderBy(col("sim").desc, col("key").asc)
-    if (metrics != null) {
-      val rows = out.collect()
-      metrics.visited = visitedAcc.value
-      spark.createDataFrame(spark.sparkContext.parallelize(rows.toIndexedSeq, 1),
-        out.schema)
-    } else out
-  }
+                metrics: SearchMetrics = null): DataFrame =
+    search(graph, nProbe, Exact(toQuery(query)), Flood(tau, maxVisit), metrics)
 
   /** Page 2 and beyond: top-k results strictly AFTER `cursor` = (sim,
     * key) in the (sim desc, key asc) result order — the vector twin of
@@ -851,62 +938,8 @@ object Nsw {
     * reach (page n needs the beam to have kept n*k candidates). */
   def searchAfter(graph: Graph, query: Seq[Float], k: Int,
                   cursor: (Double, Long), nProbe: Int, ef: Int,
-                  metrics: SearchMetrics = null): DataFrame = {
-    requireDenyCapped(graph.deleted)
-    val spark = graph.adj.sparkSession
-    import spark.implicits._
-    val q = query.map(_.toDouble).toArray
-    val probes = graph.centroids.zipWithIndex.map { case (c, i) =>
-      var d = 0.0
-      var j = 0
-      while (j < q.length) { val t = q(j) - c(j); d += t * t; j += 1 }
-      (i, d)
-    }.sortBy(_._2).take(nProbe).map(_._1).toSeq
-    val qB = spark.sparkContext.broadcast(q)
-    val deadB = spark.sparkContext.broadcast(graph.deleted.toSet)
-    val (cSim, cKey) = cursor
-    val kk = k
-    val efq = ef
-    val visitedAcc: LongAccumulator =
-      if (metrics == null) null else spark.sparkContext.longAccumulator("nswAfterVisited")
-    val probed0 = graph.adj.filter(col("c").isin(probes: _*))
-    val probed = if (graph.clusterLocal) probed0
-                 else probed0.repartition(math.max(1, probes.size), col("c"))
-    val out = probed
-      .select(col("c"), col("key"), col("v"), col("nbrs"), col("entry"))
-      .as[(Int, Long, Seq[Float], Seq[Long], Boolean)]
-      .mapPartitions { it =>
-        val byCluster = new java.util.HashMap[Int,
-          mutable.ArrayBuffer[(Long, Array[Float], Array[Long], Boolean)]]()
-        it.foreach { case (c, k, v, nb, e) =>
-          byCluster.computeIfAbsent(c, _ => new mutable.ArrayBuffer)
-            .append((k, toFloatArray(v), nb.toArray, e))
-        }
-        import scala.jdk.CollectionConverters._
-        byCluster.asScala.iterator.flatMap { case (_, rows) =>
-          val ca = assemble(rows)
-          val dead = deadB.value
-          // admission = strictly after the cursor in (sim desc, key asc)
-          // order, AND not tombstoned; traversal unrestricted
-          val accept: (Int, Double) => Boolean = (i, s) =>
-            (s < cSim || (s == cSim && ca.keys(i) > cKey)) &&
-            (dead.isEmpty || !dead.contains(ca.keys(i)))
-          val (hits, visited) = beamSearch(qB.value, ca.vecs, ca.adj,
-            ca.vecs.length, ca.entry, efq, accept)
-          if (visitedAcc != null) visitedAcc.add(visited.toLong)
-          hits.take(kk).iterator.map { case (i, s) => (ca.keys(i), s) }
-        }
-      }.toDF("key", "sim")
-      .orderBy(col("sim").desc, col("key").asc)
-      .limit(k)
-    if (metrics != null) {
-      val rows = out.collect()
-      metrics.visited = visitedAcc.value
-      spark.createDataFrame(spark.sparkContext.parallelize(rows.toIndexedSeq, 1),
-        out.schema)
-    } else out
-  }
-
+                  metrics: SearchMetrics = null): DataFrame =
+    search(graph, nProbe, Exact(toQuery(query)), Beam(k, ef, Some(cursor)), metrics)
   /** Attach PQ codes to the graph: train codebooks on the graph's own
     * vectors (bounded deterministic sample, Pq.train contract) and store
     * an m-byte code INLINE with each node's adjacency row — the
@@ -935,13 +968,9 @@ object Nsw {
     val pcm = if (anisotropicThreshold > 0)
       Pq.parallelCostMultiplier(anisotropicThreshold, model.dim) else 0.0
     val mB = spark.sparkContext.broadcast(model)
-    val adj2 = graph.adj
-      .select(col("c"), col("key"), col("v"), col("nbrs"), col("entry"))
-      .as[(Int, Long, Seq[Float], Seq[Long], Boolean)]
+    val adj2 = nodes(graph.adj)
       .map { case (c, k, v, nb, e) =>
-        val arr = new Array[Double](v.length)
-        var i = 0
-        while (i < v.length) { arr(i) = v(i).toDouble; i += 1 }
+        val arr = toDoubles(toFloatArray(v))
         val code = if (pcm > 0) mB.value.encodeOneAnisotropic(arr, pcm)
                    else mB.value.encodeOne(arr)
         (c, k, v, nb, e, code)
@@ -956,10 +985,8 @@ object Nsw {
 
   /** PQ-fused search (reference GraphSearcher.java:330-348 approximate
     * traversal + exact rerank, with FusedADC's inline codes): the beam
-    * scores nodes by ADC cosine over their m-byte codes (2 table lookups
-    * per subspace: query·centroid partial dots + centroid partial
-    * magnitudes — the CosineDecoder shape, pq/PQDecoder.java), then the
-    * surviving <= ef candidates are rescored EXACTLY on their full
+    * scores nodes by ADC cosine over their m-byte codes ([[PqAdc]]), then
+    * the surviving <= ef candidates are rescored EXACTLY on their full
     * vectors before the top-k cut. Navigation is approximate, results are
     * exact-scored — result quality depends only on whether the true
     * top-k survive the beam, which NswSpec pins against the exact-vector
@@ -968,95 +995,8 @@ object Nsw {
                 ef: Int, metrics: SearchMetrics = null): DataFrame = {
     val model = graph.pq.getOrElse(
       throw new IllegalArgumentException("attachPq first: graph carries no codes"))
-    requireDenyCapped(graph.deleted)
-    val spark = graph.adj.sparkSession
-    import spark.implicits._
-    val q = query.map(_.toDouble).toArray
-    val probes = graph.centroids.zipWithIndex.map { case (c, i) =>
-      var d = 0.0
-      var j = 0
-      while (j < q.length) { val t = q(j) - c(j); d += t * t; j += 1 }
-      (i, d)
-    }.sortBy(_._2).take(nProbe).map(_._1).toSeq
-    // per-query ADC tables (driver, broadcast): partial dots + partial
-    // centroid magnitudes; approxCos(code) = Σdot / (|q|·sqrt(Σmag))
-    val dotT = model.dotTables(q)
-    val magT = Array.tabulate(model.m) { s =>
-      val cb = model.codebooks(s)
-      Array.tabulate(cb.length) { c =>
-        var d = 0.0
-        var i = 0
-        while (i < cb(c).length) { d += cb(c)(i) * cb(c)(i); i += 1 }
-        d
-      }
-    }
-    var qn = 0.0
-    q.foreach(x => qn += x * x)
-    val invQNorm = if (qn == 0) 0.0 else 1.0 / math.sqrt(qn)
-    val qB = spark.sparkContext.broadcast(q)
-    val tB = spark.sparkContext.broadcast((dotT, magT))
-    val deadB = spark.sparkContext.broadcast(graph.deleted.toSet)
-    val kk = k
-    val efq = ef
-    val mSub = model.m
-    val visitedAcc: LongAccumulator =
-      if (metrics == null) null else spark.sparkContext.longAccumulator("nswFusedVisited")
-    val probed0 = graph.adj.filter(col("c").isin(probes: _*))
-    val probed = if (graph.clusterLocal) probed0
-                 else probed0.repartition(math.max(1, probes.size), col("c"))
-    val out = probed
-      .select(col("c"), col("key"), col("v"), col("nbrs"), col("entry"), col("code"))
-      .as[(Int, Long, Seq[Float], Seq[Long], Boolean, Array[Byte])]
-      .mapPartitions { it =>
-        val byCluster = new java.util.HashMap[Int,
-          (mutable.ArrayBuffer[(Long, Array[Float], Array[Long], Boolean)],
-           mutable.ArrayBuffer[Array[Byte]])]()
-        it.foreach { case (c, k, v, nb, e, code) =>
-          val slot = byCluster.computeIfAbsent(c,
-            _ => (new mutable.ArrayBuffer, new mutable.ArrayBuffer))
-          slot._1.append((k, toFloatArray(v), nb.toArray, e))
-          slot._2.append(code)
-        }
-        import scala.jdk.CollectionConverters._
-        byCluster.asScala.iterator.flatMap { case (_, (rows, codesUnsorted)) =>
-          // assemble() sorts by key: apply the same permutation to codes
-          val order = rows.indices.sortBy(rows(_)._1)
-          val codes = order.map(codesUnsorted(_)).toArray
-          val ca = assemble(rows)
-          val (dt, mt) = tB.value
-          def approxCos(i: Int): Double = {
-            val code = codes(i)
-            var dot = 0.0
-            var mag = 0.0
-            var s = 0
-            while (s < mSub) {
-              val ci = code(s) & 0xFF
-              dot += dt(s)(ci); mag += mt(s)(ci); s += 1
-            }
-            if (mag == 0) 0.0 else dot * invQNorm / math.sqrt(mag)
-          }
-          val dead = deadB.value
-          val accept: (Int, Double) => Boolean =
-            if (dead.isEmpty) null else (i, _) => !dead.contains(ca.keys(i))
-          val (approx, visited) = beamSearchBy(approxCos, ca.adj,
-            ca.vecs.length, ca.entry, efq, accept)
-          if (visitedAcc != null) visitedAcc.add(visited.toLong)
-          // exact rerank of the beam's survivors (extractScores analog)
-          val exact = approx.map { case (i, _) => (i, cosineQF(qB.value, ca.vecs(i))) }
-          java.util.Arrays.sort(exact, ResultOrder)
-          exact.take(kk).iterator.map { case (i, s) => (ca.keys(i), s) }
-        }
-      }.toDF("key", "sim")
-      .orderBy(col("sim").desc, col("key").asc)
-      .limit(k)
-    if (metrics != null) {
-      val rows = out.collect()
-      metrics.visited = visitedAcc.value
-      spark.createDataFrame(spark.sparkContext.parallelize(rows.toIndexedSeq, 1),
-        out.schema)
-    } else out
+    search(graph, nProbe, PqAdc(toQuery(query), model), Beam(k, ef), metrics)
   }
-
   /** Attach LVQ codes to the graph: train the (tiny — one mean vector)
     * model on the graph's own vectors and store each node's per-vector
     * uint8 code + (bias, scale) INLINE with its adjacency row — the
@@ -1076,14 +1016,9 @@ object Nsw {
   def attachLvqWith(spark: SparkSession, graph: Graph, model: Lvq.Model): Graph = {
     import spark.implicits._
     val mB = spark.sparkContext.broadcast(model)
-    val adj2 = graph.adj
-      .select(col("c"), col("key"), col("v"), col("nbrs"), col("entry"))
-      .as[(Int, Long, Seq[Float], Seq[Long], Boolean)]
+    val adj2 = nodes(graph.adj)
       .map { case (c, k, v, nb, e) =>
-        val arr = new Array[Double](v.length)
-        var i = 0
-        while (i < v.length) { arr(i) = v(i).toDouble; i += 1 }
-        val (u, bias, scale) = mB.value.encodeOne(arr)
+        val (u, bias, scale) = mB.value.encodeOne(toDoubles(toFloatArray(v)))
         (c, k, v, nb, e, u, bias, scale)
       }.toDF("c", "key", "v", "nbrs", "entry", "lu", "lbias", "lscale")
     val out = Graph(adj2.persist(), graph.centroids, graph.params,
@@ -1103,72 +1038,7 @@ object Nsw {
                    ef: Int, metrics: SearchMetrics = null): DataFrame = {
     val model = graph.lvq.getOrElse(
       throw new IllegalArgumentException("attachLvq first: graph carries no LVQ codes"))
-    requireDenyCapped(graph.deleted)
-    val spark = graph.adj.sparkSession
-    import spark.implicits._
-    val q = query.map(_.toDouble).toArray
-    val probes = graph.centroids.zipWithIndex.map { case (c, i) =>
-      var d = 0.0
-      var j = 0
-      while (j < q.length) { val t = q(j) - c(j); d += t * t; j += 1 }
-      (i, d)
-    }.sortBy(_._2).take(nProbe).map(_._1).toSeq
-    val (qMu, qSum, qn2) = model.queryParts(q)
-    val invQNorm = if (qn2 == 0) 0.0 else 1.0 / math.sqrt(qn2)
-    val qB = spark.sparkContext.broadcast(q)
-    val mB = spark.sparkContext.broadcast(model)
-    val deadB = spark.sparkContext.broadcast(graph.deleted.toSet)
-    val kk = k
-    val efq = ef
-    val visitedAcc: LongAccumulator =
-      if (metrics == null) null else spark.sparkContext.longAccumulator("nswLvqVisited")
-    val probed0 = graph.adj.filter(col("c").isin(probes: _*))
-    val probed = if (graph.clusterLocal) probed0
-                 else probed0.repartition(math.max(1, probes.size), col("c"))
-    val out = probed
-      .select(col("c"), col("key"), col("v"), col("nbrs"), col("entry"),
-        col("lu"), col("lbias"), col("lscale"))
-      .as[(Int, Long, Seq[Float], Seq[Long], Boolean, Array[Byte], Float, Float)]
-      .mapPartitions { it =>
-        val byCluster = new java.util.HashMap[Int,
-          (mutable.ArrayBuffer[(Long, Array[Float], Array[Long], Boolean)],
-           mutable.ArrayBuffer[(Array[Byte], Float, Float)])]()
-        it.foreach { case (c, k, v, nb, e, u, bias, scale) =>
-          val slot = byCluster.computeIfAbsent(c,
-            _ => (new mutable.ArrayBuffer, new mutable.ArrayBuffer))
-          slot._1.append((k, toFloatArray(v), nb.toArray, e))
-          slot._2.append((u, bias, scale))
-        }
-        import scala.jdk.CollectionConverters._
-        byCluster.asScala.iterator.flatMap { case (_, (rows, codesUnsorted)) =>
-          // assemble() sorts by key: apply the same permutation to codes
-          val order = rows.indices.sortBy(rows(_)._1)
-          val codes = order.map(codesUnsorted(_)).toArray
-          val ca = assemble(rows)
-          val m = mB.value
-          def approxCos(i: Int): Double = {
-            val (u, bias, scale) = codes(i)
-            m.approxCos(qB.value, qMu, qSum, invQNorm, u, bias, scale)
-          }
-          val dead = deadB.value
-          val accept: (Int, Double) => Boolean =
-            if (dead.isEmpty) null else (i, _) => !dead.contains(ca.keys(i))
-          val (approx, visited) = beamSearchBy(approxCos, ca.adj,
-            ca.vecs.length, ca.entry, efq, accept)
-          if (visitedAcc != null) visitedAcc.add(visited.toLong)
-          val exact = approx.map { case (i, _) => (i, cosineQF(qB.value, ca.vecs(i))) }
-          java.util.Arrays.sort(exact, ResultOrder)
-          exact.take(kk).iterator.map { case (i, s) => (ca.keys(i), s) }
-        }
-      }.toDF("key", "sim")
-      .orderBy(col("sim").desc, col("key").asc)
-      .limit(k)
-    if (metrics != null) {
-      val rows = out.collect()
-      metrics.visited = visitedAcc.value
-      spark.createDataFrame(spark.sparkContext.parallelize(rows.toIndexedSeq, 1),
-        out.schema)
-    } else out
+    search(graph, nProbe, LvqFused(toQuery(query), model), Beam(k, ef), metrics)
   }
 
   /** Persist: centroid/param/tombstone meta as format-versioned JSON,
@@ -1232,13 +1102,17 @@ object Nsw {
 
   /** The replay mark of a saved graph (-1 when none recorded). */
   def loadStreamBatch(spark: SparkSession, dir: String): Long = {
+    val m = readMeta(spark, dir)
+    if (m.has("maxStreamBatch")) m.get("maxStreamBatch").asLong() else -1L
+  }
+
+  private def readMeta(spark: SparkSession, dir: String): com.fasterxml.jackson.databind.JsonNode = {
     val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
       spark.sparkContext.hadoopConfiguration)
     val in = fs.open(new org.apache.hadoop.fs.Path(s"$dir/meta.json"))
     val json = try new String(
       org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-    val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-    if (m.has("maxStreamBatch")) m.get("maxStreamBatch").asLong() else -1L
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
   }
 
   private def publishMeta(spark: SparkSession, graph: Graph, dir: String,
@@ -1270,12 +1144,7 @@ object Nsw {
   }
 
   def load(spark: SparkSession, dir: String): Graph = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
-      spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(s"$dir/meta.json"))
-    val json = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-    val mNode = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    val mNode = readMeta(spark, dir)
     val v = if (mNode.has("formatVersion")) mNode.get("formatVersion").asLong() else 0L
     require(v <= FormatVersion, s"unsupported NSW graph format v$v")
     val cn = mNode.get("centroids")

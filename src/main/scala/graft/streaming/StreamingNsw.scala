@@ -101,8 +101,7 @@ object StreamingNsw {
             graph = if (batchId % 16 == 15) {
               next.unpersist()
               val g = Nsw.load(s, dir)
-              Nsw.Graph(g.adj.persist(), g.centroids, g.params,
-                clusterLocal = false, deleted = g.deleted, pq = g.pq)
+              g.copy(adj = g.adj.persist())
             } else next
             onCommit(graph) // serving refresh hook (after the commit)
           } // else: empty batch — nothing appended, the mark still advances

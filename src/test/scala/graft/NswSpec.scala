@@ -570,6 +570,56 @@ class NswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q2 = randVec(new scala.util.Random(3), 8)
     assert(Nsw.topK(reloaded, q2, 10, nProbe = 4, ef = Int.MaxValue)
       .select($"key").as[Long].collect().toSeq == bruteTop(emb, q2, 10))
+    // OPTIMIZE with nothing to purge — on the loaded graph, after a WRITE
+    // (whose graph still reads the dir) before any DELETE, and twice in a
+    // row — is a no-op: it must not rewrite the dir from a plan reading it
+    val w = Seq.fill(8)(rnd.nextGaussian().toFloat).mkString(",")
+    val outs2 = scala.collection.mutable.ArrayBuffer[String]()
+    graft.IndexCli.annServeLoop(spark, dir, 5,
+      Iterator(":opt", s":w 8888 $w", ":opt", ":opt", s":p 4 2000000000 $w"), outs2 += _)
+    assert(outs2.size == 6, outs2.mkString("\n"))
+    assert(outs2(1).contains("OPTIMIZED (600 nodes") &&
+      Seq(3, 4).forall(outs2(_).contains("OPTIMIZED (601 nodes")), outs2.mkString("\n"))
+    assert(outs2(2).contains("WROTE 8888") && outs2(5).contains("8888:1.0000"))
+    val reloaded2 = Nsw.load(spark, dir)
+    assert(reloaded2.adj.count() == 601 && reloaded2.adj.filter($"key" === 8888L).count() == 1)
+  }
+
+  test("annserve loop: malformed lines answer ERROR and the loop goes on; cache released") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(51)
+    val emb = clustered(rnd, 300, 8, 2).toDF("vec_id", "embedding")
+    val g = Nsw.build(spark, emb, "vec_id", "embedding",
+      Nsw.Params(m = 4, efConstruction = 16, kCenters = 2, iters = 1))
+    val dir = java.nio.file.Files.createTempDirectory("graft-annserve-bad").toString
+    Nsw.save(spark, g, dir)
+    g.unpersist()
+    val q = randVec(new scala.util.Random(4), 8)
+    val qs = q.mkString(",")
+    val pinned = spark.sparkContext.getPersistentRDDs.size
+    val outs = scala.collection.mutable.ArrayBuffer[String]()
+    graft.IndexCli.annServeLoop(spark, dir, 5, Iterator(
+      ":w abc 1,2,3,4,5,6,7,8", // key is not a number
+      "1,x,3,4,5,6,7,8",        // bad float
+      ":del",                   // DELETE without keys
+      ":w 77 1,2",              // wrong dimension: must not write
+      ":t notatau " + qs,
+      s":p 2 2000000000 $qs"), outs += _)
+    assert(outs.size == 7, outs.mkString("\n"))
+    assert(outs.slice(1, 6).forall(_.startsWith("ERROR")), outs.mkString("\n"))
+    assert(outs(6).split("] ")(1).split(" ").toSeq.map(_.split(":")(0).toLong) ==
+      bruteTop(emb, q, 5), s"search after bad lines: ${outs(6)}")
+    assert(Nsw.load(spark, dir).adj.count() == 300, "a failed write changed the graph")
+    assert(spark.sparkContext.getPersistentRDDs.size == pinned, "serving cache leaked")
+    // the cache is released even when the input itself fails
+    val failing = Iterator(qs) ++ new Iterator[String] {
+      def hasNext = true
+      def next() = throw new java.io.UncheckedIOException(new java.io.IOException("input closed"))
+    }
+    intercept[java.io.UncheckedIOException] {
+      graft.IndexCli.annServeLoop(spark, dir, 5, failing, _ => ())
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size == pinned, "serving cache leaked on a failing input")
   }
 
   test("LVQ-fused traversal: near-lossless beam, exact scores, round-trips, re-attach") {
@@ -657,6 +707,111 @@ class NswSpec extends AnyFunSuite with BeforeAndAfterAll {
         .as[(Long, Double)].collect().toSeq
       assert(got == want, s"fragmented graph diverged (seed $seed)")
     }
+    // every scorer and policy must reassemble the same way: the fused
+    // codes ride through the same key permutation as the vectors, and
+    // tombstones hit the same keys on both layouts
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
+      df.as[(Long, Double)].collect().toSeq
+    def frag(x: Nsw.Graph): Nsw.Graph =
+      x.copy(adj = x.adj.repartition(13), clusterLocal = false)
+    val gDel = Nsw.delete(g, Seq(3L, 77L, 401L))
+    val fragDel = frag(gDel)
+    for (seed <- 1 to 3) {
+      val q = randVec(new scala.util.Random(seed), 16)
+      val page1 = rows(Nsw.topK(gDel, q, 10, nProbe = 3, ef = 32))
+      assert(rows(Nsw.topK(fragDel, q, 10, nProbe = 3, ef = 32)) == page1)
+      val cursor = (page1.last._2, page1.last._1)
+      assert(rows(Nsw.searchAfter(fragDel, q, 10, cursor, nProbe = 3, ef = 32)) ==
+        rows(Nsw.searchAfter(gDel, q, 10, cursor, nProbe = 3, ef = 32)),
+        s"fragmented searchAfter diverged (seed $seed)")
+      val tau = page1(4)._2
+      val th = rows(Nsw.threshold(gDel, q, tau, nProbe = 3, maxVisit = 150))
+      assert(th.nonEmpty)
+      assert(rows(Nsw.threshold(fragDel, q, tau, nProbe = 3, maxVisit = 150)) == th,
+        s"fragmented threshold diverged (seed $seed)")
+    }
+    val gPq = Nsw.delete(Nsw.attachPq(spark, g, m = 4), Seq(3L, 77L, 401L))
+    val fragPq = frag(gPq)
+    for (seed <- 1 to 3) {
+      val q = randVec(new scala.util.Random(seed), 16)
+      assert(rows(Nsw.topKFused(fragPq, q, 10, nProbe = 3, ef = 32)) ==
+        rows(Nsw.topKFused(gPq, q, 10, nProbe = 3, ef = 32)),
+        s"fragmented PQ-fused graph diverged (seed $seed)")
+    }
+    val gLvq = Nsw.delete(Nsw.attachLvq(spark, gPq), Seq(3L, 77L, 401L))
+    val fragLvq = frag(gLvq)
+    for (seed <- 1 to 3) {
+      val q = randVec(new scala.util.Random(seed), 16)
+      assert(rows(Nsw.topKFusedLvq(fragLvq, q, 10, nProbe = 3, ef = 32)) ==
+        rows(Nsw.topKFusedLvq(gLvq, q, 10, nProbe = 3, ef = 32)),
+        s"fragmented LVQ-fused graph diverged (seed $seed)")
+    }
+    gLvq.unpersist()
+    g.unpersist()
+  }
+
+  test("search kernel axes: scorers agree at gate mode; HotAnn visited parity per policy") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(49)
+    val emb = clustered(rnd, 1200, 16, 4).toDF("vec_id", "embedding")
+    val g0 = Nsw.build(spark, emb, "vec_id", "embedding",
+      Nsw.Params(m = 6, efConstruction = 32, kCenters = 4, iters = 2))
+    val g = Nsw.delete(g0, Seq(20L, 21L))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
+      df.as[(Long, Double)].collect().toSeq
+    // gate mode (every cluster, unbounded frontier): the approximate
+    // scorers only steer the beam, the exact rerank decides — so all
+    // three scorers return the exact top-k, rank for rank and score for score
+    val gPq = Nsw.attachPq(spark, g, m = 4)
+    val gLvq = Nsw.attachLvq(spark, gPq)
+    for (seed <- 1 to 3) {
+      val q = randVec(new scala.util.Random(seed), 16)
+      val exact = rows(Nsw.topK(gLvq, q, 10, nProbe = 4, ef = Int.MaxValue))
+      assert(exact.size == 10 && !exact.exists(r => r._1 == 20L || r._1 == 21L))
+      assert(rows(Nsw.topKFused(gPq, q, 10, nProbe = 4, ef = Int.MaxValue)) == exact,
+        s"PQ-fused != exact at gate mode (seed $seed)")
+      assert(rows(Nsw.topKFusedLvq(gLvq, q, 10, nProbe = 4, ef = Int.MaxValue)) == exact,
+        s"LVQ-fused != exact at gate mode (seed $seed)")
+    }
+    // the serving twin runs the same kernel: equal visited for every policy
+    val hot = HotAnn(gLvq)
+    val q = randVec(new scala.util.Random(5), 16)
+    val page1 = hot.topK(q, 10, 3, 24)
+    val cursor = (page1.last._2, page1.last._1)
+    val (mHot, mDf) = (new Nsw.SearchMetrics, new Nsw.SearchMetrics)
+    val hotAfter = hot.searchAfter(q, 10, cursor, 3, 24, metrics = mHot).toSeq
+    assert(rows(Nsw.searchAfter(gLvq, q, 10, cursor, 3, 24, metrics = mDf)) == hotAfter)
+    assert(mHot.visited == mDf.visited && mHot.visited > 0,
+      s"searchAfter visited: HotAnn ${mHot.visited} vs DataFrame ${mDf.visited}")
+    val tau = page1(4)._2
+    assert(rows(Nsw.threshold(gLvq, q, tau, 3, maxVisit = 120)) ==
+      hot.threshold(q, tau, 3, maxVisit = 120).toSeq)
+    hot.close()
+    gLvq.unpersist()
+    g0.unpersist()
+  }
+
+  test("threshold metrics count each flood once: DataFrame visited == HotAnn visited") {
+    import spark.implicits._
+    // the DataFrame threshold is an unlimited sort, whose range-partition
+    // sampling job re-runs the per-cluster search — the visited count
+    // must come from one execution of it, not from both
+    val rnd = new scala.util.Random(50)
+    val emb = clustered(rnd, 1200, 16, 4).toDF("vec_id", "embedding")
+    val g = Nsw.delete(Nsw.build(spark, emb, "vec_id", "embedding",
+      Nsw.Params(m = 6, efConstruction = 32, kCenters = 4, iters = 2)), Seq(20L))
+    val hot = HotAnn(g)
+    for ((nProbe, maxVisit) <- Seq((3, 120), (4, Int.MaxValue))) {
+      val q = randVec(new scala.util.Random(nProbe), 16)
+      val tau = hot.topK(q, 10, nProbe, Int.MaxValue).last._2
+      val (mHot, mDf) = (new Nsw.SearchMetrics, new Nsw.SearchMetrics)
+      val hotTh = hot.threshold(q, tau, nProbe, maxVisit, metrics = mHot).toSeq
+      assert(Nsw.threshold(g, q, tau, nProbe, maxVisit, metrics = mDf)
+        .as[(Long, Double)].collect().toSeq == hotTh)
+      assert(mHot.visited == mDf.visited && mHot.visited > 0,
+        s"threshold visited: HotAnn ${mHot.visited} vs DataFrame ${mDf.visited}")
+    }
+    hot.close()
     g.unpersist()
   }
 }
