@@ -52,18 +52,14 @@ object ScaleProbe {
         val nDocs = ix.stats.numDocs
         val avgdl = ix.stats.avgdl
         val plan = ix.dict.filter($"term".isin(terms: _*)).collect().map { e =>
-          val idf = Text.idf(e.df, nDocs)
-          e.term -> (idf, idf * Text.tfPartial(e.maxTf, e.minDl.toLong, avgdl))
+          e.term -> InvertedIndex.idfUb(e.df, e.maxTf, e.minDl, nDocs, avgdl)
         }.toMap
         val byShard = ix.blocks.filter($"term".isin(terms: _*)).collect()
-          .groupBy(_.shard)
+          .groupBy(_.shard).values.toSeq
+          .map(bs => Searcher.planBlocks(plan, Searcher.termMap(bs.iterator)))
         val st = new Wand.SearchStats
         var top10 = List.empty[ScoredDoc]
-        byShard.foreach { case (_, bs) =>
-          val termBlocks = bs.groupBy(_.term).toSeq.sortBy(_._1)
-            .flatMap { case (t, arr) =>
-              plan.get(t).map { case (idf, ub) => (idf, ub, arr.sortBy(_.firstDocId)) }
-            }
+        byShard.foreach { termBlocks =>
           top10 = (top10 ++ Wand.topK(termBlocks, 10, avgdl, stats = st))
             .sortBy(sd => (-sd.score, sd.docId)).take(10)
         }
@@ -72,21 +68,12 @@ object ScaleProbe {
         // threshold query at τ = the global 10th score — the workload the
         // block-max machinery exists for; its skip ratio is the scale story
         val tau = top10.lastOption.map(_.score).getOrElse(0.0)
-        var thDecoded = 0L
-        var thTotal = 0L
-        byShard.foreach { case (_, bs) =>
-          val termBlocks = bs.groupBy(_.term).toSeq.sortBy(_._1)
-            .flatMap { case (t, arr) =>
-              plan.get(t).map { case (idf, ub) => (idf, ub, arr.sortBy(_.firstDocId)) }
-            }
-          val ts = new Wand.SearchStats
-          Wand.threshold(termBlocks, tau, avgdl, stats = ts).length
-          thDecoded += ts.decodedBlocks; thTotal += ts.totalBlocks
-        }
+        val ts = new Wand.SearchStats
+        byShard.foreach(Wand.threshold(_, tau, avgdl, stats = ts))
         val lat = (0 until 7).map { _ =>
           val s = System.nanoTime(); hot.search(q, 10); (System.nanoTime() - s) / 1e6
         }.sorted
-        (q, st.decodedBlocks, st.totalBlocks, lat(3), thDecoded, thTotal)
+        (q, st.decodedBlocks, st.totalBlocks, lat(3), ts.decodedBlocks, ts.totalBlocks)
       }
       hot.close()
       val thD = perQ.map(_._5).sum

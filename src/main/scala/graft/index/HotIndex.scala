@@ -3,7 +3,7 @@ package graft.index
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.storage.StorageLevel
-import graft.core.{DoubleTopK, Text}
+import graft.core.DoubleTopK
 
 /** Long-lived serving handle over a built index — the engine's analog of
   * the reference's resident query service (jvector
@@ -20,6 +20,8 @@ import graft.core.{DoubleTopK, Text}
   * per-term O(1) lookup + the WAND kernel + a driver-side k-way merge, no
   * per-query planning, shuffle, or scan. The query plan itself (idf +
   * upper bound per term) comes from the driver-resident hot dictionary.
+  * The term maps and the kernel inputs come from [[Searcher]], the same
+  * code the DataFrame path runs, so both paths score bit-identically.
   *
   * This is the one deliberately non-declarative surface of the engine
   * (SURVEY §2.4 P5): serving latency is a per-partition imperative
@@ -82,8 +84,8 @@ final class HotIndex private (
       ScoredDoc(afterDocId, afterScore)).headOption.map(_._2).getOrElse(Array.empty)
 
   /** Threshold serving twin of [[InvertedIndex.searchThreshold]]: ALL docs
-    * with score >= tau, (score desc, docId asc). Same block-max skip
-    * machinery with θ pinned to τ.
+    * with score >= tau, (score desc, docId asc) — the one WAND loop with
+    * its threshold sink.
     *
     * Result-size guard (mirror of [[HotIndex.FilterSetCap]]): the serving
     * path materializes the full result set on the DRIVER, so a low τ on a
@@ -99,20 +101,15 @@ final class HotIndex private (
     val filter = mkFilter(null, deny)
     val avgdl = ix.stats.avgdl
     val cap = maxResults
-    val perPart: Array[Array[ScoredDoc]] =
-      ix.spark.sparkContext.runJob(parts,
-        (it: Iterator[java.util.HashMap[String, Array[Block]]]) =>
-          if (!it.hasNext) Array.empty[ScoredDoc]
-          else {
-            val termBlocks = HotIndex.planBlocks(plan, it.next())
-            val hits = Wand.threshold(termBlocks, tau, avgdl, filter)
-            require(hits.size <= cap,
-              s"threshold query matched ${hits.size} docs in one partition, " +
-              s"over the serving result cap ($cap); run bulk threshold scans " +
-              "on the DataFrame path (InvertedIndex.searchThreshold)")
-            hits.toArray
-          })
-    val all = perPart.flatten
+    val perPart = runJob { m =>
+      val hits = Wand.threshold(Searcher.planBlocks(plan, m), tau, avgdl, filter).toArray
+      require(hits.length <= cap,
+        s"threshold query matched ${hits.length} docs in one partition, " +
+        s"over the serving result cap ($cap); run bulk threshold scans " +
+        "on the DataFrame path (InvertedIndex.searchThreshold)")
+      hits
+    }
+    val all = perPart.flatten.toArray
     require(all.length <= cap,
       s"threshold query matched ${all.length} docs, over the serving result " +
       s"cap ($cap); run bulk threshold scans on the DataFrame path " +
@@ -137,17 +134,11 @@ final class HotIndex private (
     if (k <= 0 || plans.forall(_._2.isEmpty)) return plans.map(p => (p._1, Array.empty[ScoredDoc]))
     val avgdl = ix.stats.avgdl
     val kk = k
-    val perPart: Array[Seq[(Int, Array[ScoredDoc])]] =
-      ix.spark.sparkContext.runJob(parts,
-        (it: Iterator[java.util.HashMap[String, Array[Block]]]) =>
-          if (!it.hasNext) Seq.empty[(Int, Array[ScoredDoc])]
-          else {
-            val m = it.next()
-            plans.map { case (qid, plan) =>
-              (qid, Wand.topK(HotIndex.planBlocks(plan, m), kk, avgdl, filter,
-                after = after))
-            }
-          })
+    val perPart = runJob { m =>
+      plans.map { case (qid, plan) =>
+        (qid, Wand.topK(Searcher.planBlocks(plan, m), kk, avgdl, filter, after = after))
+      }
+    }
     // tiny driver merge: numPartitions × k candidates per query, grouped
     // once so the merge is O(Q·P), not O(Q²·P)
     val byQid = new java.util.HashMap[Int, DoubleTopK]()
@@ -161,6 +152,11 @@ final class HotIndex private (
     }
   }
 
+  /** The one serving job: `f` over every partition's term map. */
+  private def runJob[T](f: java.util.HashMap[String, Array[Block]] => T): Seq[T] =
+    ix.spark.sparkContext.runJob(parts,
+      (it: Iterator[java.util.HashMap[String, Array[Block]]]) => it.map(f).toList).toSeq.flatten
+
   def close(): Unit = parts.unpersist()
 }
 
@@ -173,14 +169,6 @@ object HotIndex {
   /** Max rows a serving-path threshold query may return: results land in
     * ONE driver array, so unbounded τ-scans must use the DataFrame path. */
   val ThresholdResultCap = 1000000
-
-  /** One query's (idf, ub, blocks) list from a partition's term map —
-    * shared by every serving kernel. */
-  private[index] def planBlocks(plan: Map[String, (Double, Double)],
-      m: java.util.HashMap[String, Array[Block]]): Seq[(Double, Double, Array[Block])] =
-    plan.toSeq.sortBy(_._1).flatMap { case (t, (idf, ub)) =>
-      Option(m.get(t)).map(bs => (idf, ub, bs))
-    }
 
   /** Materialize the serving cache: one `term -> firstDocId-sorted blocks`
     * map per partition, built from the shard-partitioned block Dataset and
@@ -196,16 +184,8 @@ object HotIndex {
     val parts = ix.blocks.rdd
       .map(b => (b.shard, b))
       .partitionBy(new HashPartitioner(p))
-      .mapPartitions({ it =>
-        val m = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[Block]]()
-        it.foreach { case (_, b) =>
-          m.computeIfAbsent(b.term,
-            _ => new scala.collection.mutable.ArrayBuffer[Block]()) += b
-        }
-        val out = new java.util.HashMap[String, Array[Block]](m.size() * 2)
-        m.forEach((t, bs) => out.put(t, bs.sortBy(_.firstDocId).toArray))
-        Iterator(out)
-      }, preservesPartitioning = true)
+      .mapPartitions(it => Iterator(Searcher.termMap(it.map(_._2))),
+        preservesPartitioning = true)
       .persist(StorageLevel.MEMORY_ONLY)
     parts.count() // materialize before first query
     new HotIndex(ix, parts)

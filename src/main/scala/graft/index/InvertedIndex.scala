@@ -1,7 +1,7 @@
 package graft.index
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Text
 
@@ -26,10 +26,8 @@ final case class InvertedIndex(
 
   import spark.implicits._
 
-  private def planEntry(e: DictEntry): (String, (Double, Double)) = {
-    val idf = Text.idf(e.df, stats.numDocs)
-    e.term -> (idf, idf * Text.tfPartial(e.maxTf, e.minDl.toLong, stats.avgdl))
-  }
+  private def planEntry(e: DictEntry): (String, (Double, Double)) =
+    e.term -> InvertedIndex.idfUb(e.df, e.maxTf, e.minDl, stats.numDocs, stats.avgdl)
 
   /** Driver-side per-query constants: idf + upper bound per term — the
     * ADC-style precompute (jvector pq/PQDecoder.java:38-60): all per-posting
@@ -106,34 +104,52 @@ final case class InvertedIndex(
     blocks.filter($"bucket".isin(buckets: _*) && $"term".isin(terms: _*))
   }
 
+  /** Run `f` once per doc-shard over its candidate blocks: a prepared
+    * (shard-co-located) index needs no exchange — one call per partition
+    * (blocks of one term from several shards concatenate validly: shards
+    * are disjoint increasing docId ranges); otherwise group by shard. */
+  private def perShard[T: Encoder](cand: Dataset[Block])(
+      f: Iterator[Block] => Iterator[T]): Dataset[T] =
+    if (sharded) cand.mapPartitions(f)
+    else cand.groupByKey(_.shard).flatMapGroups((_, it) => f(it))
+
   /** Exact top-k BM25 (k1=1.2, b=0.75), rank-identical to brute force:
     * (score desc, docId asc). Optional metadata filter (docs predicate) and
     * tombstone set (deleted docIds, jvector markNodeDeleted analog:
     * candidates anti-joined at query time until compaction). */
   def search(query: String, k: Int,
              docFilter: Option[Column] = None,
-             tombstones: Option[Dataset[Long]] = None): DataFrame = {
+             tombstones: Option[Dataset[Long]] = None): DataFrame =
+    topK(query, k, docFilter, tombstones, null)
+
+  /** Page after a previous hit: exact top-k among docs ranking strictly
+    * after `(afterScore, afterDocId)` in (score desc, docId asc) order —
+    * true result-set pagination (jvector GraphSearcher.resume:223-311,
+    * stateless re-expression): page1 = search(q, k); page2 =
+    * searchAfter(q, k, page1.last). No k′ over-fetch: the WAND heap simply
+    * rejects hits at-or-before the cursor, and θ-pruning works off the
+    * post-cursor heap, so each page costs one normal top-k pass. */
+  def searchAfter(query: String, k: Int,
+                  afterScore: Double, afterDocId: Long): DataFrame =
+    topK(query, k, None, None, ScoredDoc(afterDocId, afterScore))
+
+  private def topK(query: String, k: Int, docFilter: Option[Column],
+                   tombstones: Option[Dataset[Long]], after: ScoredDoc): DataFrame = {
     val plan = queryPlan(query)
     if (plan.isEmpty || k <= 0) return emptyResult
     val planB = spark.sparkContext.broadcast(plan)
     val avgdl = stats.avgdl
     val kk = k
+    val wand = (it: Iterator[Block], f: Wand.DocFilter) => Wand.topK(
+      Searcher.planBlocks(planB.value, Searcher.termMap(it)), kk, avgdl, f,
+      after = after).iterator
 
     val cand = candidateBlocks(plan.keys.toSeq)
 
-    val localTopK: Dataset[ScoredDoc] = (docFilter, tombstones) match {
-      case (None, None) if sharded =>
-        // shard-co-located blocks: no exchange, one WAND per partition
-        // (blocks of one term from several shards concatenate validly —
-        // shards are disjoint increasing docId ranges)
-        cand.mapPartitions { it =>
-          Searcher.wandOnBlocks(it, planB.value, kk, avgdl, Wand.DocFilter.All)
-        }
-      case (None, None) =>
-        cand.groupByKey(_.shard).flatMapGroups { (_, it) =>
-          Searcher.wandOnBlocks(it, planB.value, kk, avgdl, Wand.DocFilter.All)
-        }
-      case _ =>
+    val localTopK: Dataset[ScoredDoc] =
+      if (docFilter.isEmpty && tombstones.isEmpty)
+        perShard(cand)(wand(_, Wand.DocFilter.All))
+      else {
         // co-locate the accept/deny doc sets with their shard's blocks so
         // the filter bitmap is built executor-side, never on the driver
         val allowAll = docFilter.isEmpty
@@ -154,10 +170,9 @@ final case class InvertedIndex(
           aIt.foreach { case (_, d, isDeny) =>
             if (isDeny) denySet.add(d) else allowSet.add(d)
           }
-          val f = new Wand.DocFilter(allowAll, allowSet, denySet)
-          Searcher.wandOnBlocks(bIt, planB.value, kk, avgdl, f)
+          wand(bIt, new Wand.DocFilter(allowAll, allowSet, denySet))
         }
-    }
+      }
     // global merge: tiny (numShards × k rows) — TakeOrderedAndProject
     localTopK.toDF().orderBy($"score".desc, $"docId".asc).limit(k)
   }
@@ -169,18 +184,15 @@ final case class InvertedIndex(
     if (plan.isEmpty) return emptyResult
     val planB = spark.sparkContext.broadcast(plan)
     val avgdl = stats.avgdl
-    val cand = candidateBlocks(plan.keys.toSeq)
-    (if (sharded)
-       cand.mapPartitions(it => Searcher.thresholdOnBlocks(it, planB.value, tau, avgdl))
-     else
-       cand.groupByKey(_.shard).flatMapGroups { (_, it) =>
-         Searcher.thresholdOnBlocks(it, planB.value, tau, avgdl)
-       }).toDF()
+    perShard(candidateBlocks(plan.keys.toSeq)) { it =>
+      Wand.threshold(Searcher.planBlocks(planB.value, Searcher.termMap(it)), tau, avgdl)
+    }.toDF()
   }
 
   /** Batch search: one shared pass over the candidate blocks scores every
     * query (jvector's parallel batch driver, SiftSmall.java:92-113, as a
-    * shared-scan: terms of all queries broadcast together). */
+    * shared-scan: terms of all queries broadcast together; each shard's
+    * term map is built once and serves every query). */
   def searchAll(queries: Seq[(Int, String)], k: Int): DataFrame = {
     val plans = queries.map { case (qid, q) => (qid, queryPlan(q)) }
       .filter(_._2.nonEmpty)
@@ -190,48 +202,16 @@ final case class InvertedIndex(
     val allTerms = plans.flatMap(_._2.keys).distinct
     val avgdl = stats.avgdl
     val kk = k
-    val candAll = candidateBlocks(allTerms)
-    def scoreAll(it: Iterator[Block]): Iterator[(Int, Long, Double)] = {
-      val bs = it.toArray
+    val local = perShard(candidateBlocks(allTerms)) { it =>
+      val m = Searcher.termMap(it)
       plansB.value.iterator.flatMap { case (qid, plan) =>
-        Searcher.wandOnBlocks(bs.iterator, plan, kk, avgdl, Wand.DocFilter.All)
-          .map(sd => (qid, sd.docId, sd.score))
+        Wand.topK(Searcher.planBlocks(plan, m), kk, avgdl)
+          .iterator.map(sd => (qid, sd.docId, sd.score))
       }
-    }
-    val local = (if (sharded) candAll.mapPartitions(scoreAll _)
-                 else candAll.groupByKey(_.shard)
-                   .flatMapGroups((_: Int, it: Iterator[Block]) => scoreAll(it)))
-      .toDF("queryId", "docId", "score")
+    }.toDF("queryId", "docId", "score")
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy($"queryId").orderBy($"score".desc, $"docId".asc)
     local.withColumn("rank", row_number().over(w)).filter($"rank" <= k)
-  }
-
-  /** Page after a previous hit: exact top-k among docs ranking strictly
-    * after `(afterScore, afterDocId)` in (score desc, docId asc) order —
-    * true result-set pagination (jvector GraphSearcher.resume:223-311,
-    * stateless re-expression): page1 = search(q, k); page2 =
-    * searchAfter(q, k, page1.last). No k′ over-fetch: the WAND heap simply
-    * rejects hits at-or-before the cursor, and θ-pruning works off the
-    * post-cursor heap, so each page costs one normal top-k pass. */
-  def searchAfter(query: String, k: Int,
-                  afterScore: Double, afterDocId: Long): DataFrame = {
-    val plan = queryPlan(query)
-    if (plan.isEmpty || k <= 0) return emptyResult
-    val planB = spark.sparkContext.broadcast(plan)
-    val avgdl = stats.avgdl
-    val kk = k
-    val cursor = ScoredDoc(afterDocId, afterScore)
-    val cand = candidateBlocks(plan.keys.toSeq)
-    val local =
-      if (sharded)
-        cand.mapPartitions(it =>
-          Searcher.wandOnBlocks(it, planB.value, kk, avgdl, Wand.DocFilter.All, cursor))
-      else
-        cand.groupByKey(_.shard).flatMapGroups { (_, it) =>
-          Searcher.wandOnBlocks(it, planB.value, kk, avgdl, Wand.DocFilter.All, cursor)
-        }
-    local.toDF().orderBy($"score".desc, $"docId".asc).limit(k)
   }
 
   /** Batch search over a DATASET of queries — the query-log-scale driver
@@ -269,8 +249,8 @@ final case class InvertedIndex(
       .select($"queryId", $"term", $"df", $"maxTf", $"minDl")
       .as[(Int, String, Long, Int, Int)]
       .map { case (qid, t, df, maxTf, minDl) =>
-        val idf = Text.idf(df, n)
-        (qid, t, idf, idf * Text.tfPartial(maxTf, minDl.toLong, avgdl))
+        val (idf, ub) = InvertedIndex.idfUb(df, maxTf, minDl, n, avgdl)
+        (qid, t, idf, ub)
       }.toDF("queryId", "term", "idf", "ub")
     val qplanSide = if (small) broadcast(qplan) else qplan
     val cand = blocksSrc.joinWith(qplanSide.as[(Int, String, Double, Double)],
@@ -281,8 +261,8 @@ final case class InvertedIndex(
         val qid = key._1
         val rows = it.toArray
         val plan = rows.map { case (_, (_, t, idf, ub)) => t -> (idf, ub) }.toMap
-        Searcher.wandOnBlocks(rows.iterator.map(_._1), plan, kk, avgdl,
-          Wand.DocFilter.All).map(sd => (qid, sd.docId, sd.score))
+        Wand.topK(Searcher.planBlocks(plan, Searcher.termMap(rows.iterator.map(_._1))),
+          kk, avgdl).iterator.map(sd => (qid, sd.docId, sd.score))
       }
       .toDF("queryId", "docId", "score")
       .withColumn("rank", row_number().over(
@@ -416,6 +396,16 @@ object InvertedIndex {
     * cogrouping the whole block table by shard. */
   val CompactBroadcastCap = 1000000
 
+  /** A term's query-plan constants: (idf, idf · tf-part bound at the
+    * term's global (maxTf, minDl)) — the ADC-style precompute every BM25
+    * plan uses, driver-side ([[InvertedIndex.queryPlanFor]]) and
+    * executor-side ([[InvertedIndex.searchMany]]). */
+  private[graft] def idfUb(df: Long, maxTf: Int, minDl: Int,
+                           numDocs: Long, avgdl: Double): (Double, Double) = {
+    val idf = Text.idf(df, numDocs)
+    (idf, idf * Text.tfPartial(maxTf, minDl.toLong, avgdl))
+  }
+
   /** Rewrite one block against a SORTED dead-id array: pass it through
     * untouched (no decode) unless its [firstDocId, lastDocId] range
     * intersects a dead id. Static so both compact paths share it without
@@ -456,35 +446,29 @@ object InvertedIndex {
     SegmentCatalog.load(spark, dir, version)
 }
 
-/** Executor-side glue between Dataset groups and the WAND kernel. */
-object Searcher {
-  /** Group this shard's candidate blocks by term and run BMW. */
-  def wandOnBlocks(it: Iterator[Block], plan: Map[String, (Double, Double)],
-                   k: Int, avgdl: Double, filter: Wand.DocFilter,
-                   after: ScoredDoc = null): Iterator[ScoredDoc] = {
-    val byTerm = it.toArray.groupBy(_.term)
-    if (byTerm.isEmpty) Iterator.empty
-    else {
-      val termBlocks = byTerm.toSeq.sortBy(_._1).flatMap { case (t, bs) =>
-        // shared-scan batches pass the union of all queries' terms; skip
-        // blocks of terms this particular query does not contain
-        plan.get(t).map { case (idf, ub) => (idf, ub, bs.sortBy(_.firstDocId)) }
-      }
-      Wand.topK(termBlocks, k, avgdl, filter, after = after).iterator
+/** Executor-side glue between block sets and the WAND kernel: every BM25
+  * search — DataFrame shard groups and [[HotIndex]] partitions alike —
+  * feeds [[Wand]] through these two, so the term set and the term-sorted
+  * cursor order (which fixes the fp summation order, hence bit-identical
+  * scores across paths) are decided in one place. */
+private[graft] object Searcher {
+  /** One shard's (or partition's) blocks by term, each term's blocks
+    * sorted by firstDocId. */
+  def termMap(it: Iterator[Block]): java.util.HashMap[String, Array[Block]] = {
+    val m = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[Block]]()
+    it.foreach { b =>
+      m.computeIfAbsent(b.term, _ => new scala.collection.mutable.ArrayBuffer[Block]()) += b
     }
+    val out = new java.util.HashMap[String, Array[Block]](m.size() * 2)
+    m.forEach((t, bs) => out.put(t, bs.sortBy(_.firstDocId).toArray))
+    out
   }
 
-  def thresholdOnBlocks(it: Iterator[Block], plan: Map[String, (Double, Double)],
-                        tau: Double, avgdl: Double): Iterator[ScoredDoc] = {
-    val byTerm = it.toArray.groupBy(_.term)
-    if (byTerm.isEmpty) Iterator.empty
-    else {
-      val termBlocks = byTerm.toSeq.sortBy(_._1).flatMap { case (t, bs) =>
-        // shared-scan batches pass the union of all queries' terms; skip
-        // blocks of terms this particular query does not contain
-        plan.get(t).map { case (idf, ub) => (idf, ub, bs.sortBy(_.firstDocId)) }
-      }
-      Wand.threshold(termBlocks, tau, avgdl)
+  /** One query's (idf, ub, blocks) cursor inputs from a term map, in term
+    * order; a shared-scan map may hold terms the query does not contain. */
+  def planBlocks(plan: Map[String, (Double, Double)],
+                 m: java.util.HashMap[String, Array[Block]]): Seq[(Double, Double, Array[Block])] =
+    plan.toSeq.sortBy(_._1).flatMap { case (t, (idf, ub)) =>
+      Option(m.get(t)).map(bs => (idf, ub, bs))
     }
-  }
 }

@@ -8,20 +8,21 @@ import graft.core.{Codec, DoubleTopK, Text}
   * bounded result heap, stop when best-possible < current-kth). Here the
   * same "upper bound vs θ" logic drives exact block skipping: a block is
   * decoded only if the idf·tf-part bound of the blocks covering the pivot can
-  * still beat the heap threshold, so payload bytes for skipped blocks are
-  * never read (the locality idea of jvector's FusedADC layout,
-  * graph/disk/FusedADC.java:87-106, as metadata/payload column split).
+  * still beat θ, so payload bytes for skipped blocks are never read (the
+  * locality idea of jvector's FusedADC layout, graph/disk/FusedADC.java:
+  * 87-106, as metadata/payload column split).
+  *
+  * Every BM25 search runs ONE pivot/skip loop; only its sink differs
+  * (one loop, like jvector's GraphSearcher.search serving top-k, threshold
+  * and resume): [[topK]] keeps a bounded heap whose k-th score is θ and
+  * applies the pagination cursor on offer; [[threshold]] pins θ just below
+  * τ and keeps every doc scoring >= τ.
   *
   * All scores are exact doubles; pruning uses true upper bounds, so the
   * result is rank-identical to brute force (no approximate stop needed —
   * unlike the reference's probabilistic ScoreTracker.java:80-96).
   */
 object Wand {
-
-  /** Debug tracing (-Dwand.trace at JVM start). Read ONCE at class load
-    * into a static final — a per-iteration sys.props lookup inside the
-    * skip loop would defeat JIT hoisting on the hot path. */
-  private final val Trace = sys.props.contains("wand.trace")
 
   /** Per-term cursor over score-sorted blocks (firstDocId ascending).
     * Block payloads decode lazily: `shallowTo` moves over block metadata
@@ -107,26 +108,76 @@ object Wand {
     val All = new DocFilter(true, new java.util.HashSet(), new java.util.HashSet())
   }
 
+  /** Block-decode counters, ADDED TO by every [[topK]] / [[threshold]]
+    * call that receives them — lets callers (and tests) assert that
+    * block-max pruning actually skipped payloads. */
+  final class SearchStats { var decodedBlocks = 0L; var totalBlocks = 0L }
+
   /** Exact top-k BM25 over one shard.
-    * @param termBlocks per query term: (idf, blocks sorted by firstDocId)
-    * @return hits (score desc, docId asc), at most k
-    */
-  /** @param after pagination cursor (jvector GraphSearcher.resume:223-311
+    * @param termBlocks per query term: (idf, ub, blocks sorted by firstDocId)
+    * @param after pagination cursor (jvector GraphSearcher.resume:223-311
     *   analog, stateless): only docs ranking strictly AFTER (score desc,
     *   docId asc) this hit enter the heap — searchAfter(page-N-last) is
     *   exactly page N+1. Pruning stays exact: θ comes from the heap of
-    *   post-cursor hits only, so no qualifying doc is ever skipped. */
+    *   post-cursor hits only, so no qualifying doc is ever skipped.
+    * @return hits (score desc, docId asc), at most k
+    */
   def topK(termBlocks: Seq[(Double, Double, Array[Block])], k: Int,
            avgdl: Double, filter: DocFilter = DocFilter.All,
-           seedThreshold: Double = Double.NegativeInfinity,
            after: ScoredDoc = null,
            stats: SearchStats = null): Array[ScoredDoc] = {
+    val top = new Top(k, after)
+    run(termBlocks, avgdl, filter, stats, top)
+    top.heap.drain().map { case (s, d) => ScoredDoc(d, s) }
+  }
+
+  /** All docs with BM25 score >= tau over one shard, in docId order
+    * (threshold query, the analog of jvector's similarity-threshold search
+    * GraphSearcher.java:112-115 — but exact here): any run of blocks whose
+    * Σ blockMax < τ is jumped over without decoding its payload bytes, so
+    * threshold queries over frequent terms touch only blocks that can
+    * reach τ. */
+  def threshold(termBlocks: Seq[(Double, Double, Array[Block])], tau: Double,
+                avgdl: Double, filter: DocFilter = DocFilter.All,
+                stats: SearchStats = null): Iterator[ScoredDoc] = {
+    val atLeast = new AtLeast(tau)
+    run(termBlocks, avgdl, filter, stats, atLeast)
+    atLeast.out.iterator
+  }
+
+  /** Where the loop puts a scored doc, and the bar θ a doc's upper bound
+    * must strictly beat to be worth scoring. */
+  private sealed abstract class Sink {
+    def theta: Double
+    def offer(s: Double, d: Long): Unit
+  }
+
+  /** Top-k: θ rises with the heap's k-th score. */
+  private final class Top(k: Int, after: ScoredDoc) extends Sink {
+    val heap = new DoubleTopK(k)
+    def theta: Double = heap.threshold
+    def offer(s: Double, d: Long): Unit =
+      if (after == null || s < after.score || (s == after.score && d > after.docId))
+        heap.offer(s, d)
+  }
+
+  /** Threshold: θ fixed at nextDown(τ), since for doubles
+    * x > nextDown(τ) ⇔ x >= τ — a bound that can REACH τ qualifies. */
+  private final class AtLeast(tau: Double) extends Sink {
+    val out = scala.collection.mutable.ArrayBuffer[ScoredDoc]()
+    val theta: Double = Math.nextDown(tau)
+    def offer(s: Double, d: Long): Unit = if (s >= tau) out += ScoredDoc(d, s)
+  }
+
+  /** The pivot/skip loop. Pivot: first doc-sorted cursor prefix whose Σ ub
+    * beats θ (strict: for top-k a later candidate has a larger docId, so
+    * a score tie loses the tie-break). Skip: when the block maxima at the
+    * pivot cannot beat θ, jump past the nearest block end undecoded. */
+  private def run(termBlocks: Seq[(Double, Double, Array[Block])], avgdl: Double,
+                  filter: DocFilter, stats: SearchStats, sink: Sink): Unit = {
     val cursors = termBlocks
       .map { case (idf, ub, bs) => new TermCursor(idf, ub, bs, avgdl) }
       .toArray
-    val heap = new DoubleTopK(k)
-    var theta = seedThreshold
-
     val order = cursors.indices.toArray // sorted by curDoc each round
     var done = cursors.isEmpty
 
@@ -143,10 +194,7 @@ object Wand {
         si += 1
       }
 
-      theta = math.max(theta, heap.threshold)
-
-      // pivot: first prefix whose Σ ub can beat θ (strict: later candidate
-      // docs always have larger docIds, so a score tie loses the tie-break)
+      val theta = sink.theta
       var acc = 0.0
       var pivotIdx = -1
       var i = 0
@@ -174,7 +222,7 @@ object Wand {
           if (c.curDoc <= pivotDoc) bmSum += c.blockMax
           j += 1
         }
-        if (bmSum <= theta && theta != Double.NegativeInfinity) {
+        if (bmSum <= theta) {
           // no doc in these blocks can beat θ: jump past the nearest block
           // end (payloads of skipped blocks are never decoded)
           var d = Long.MaxValue
@@ -197,8 +245,6 @@ object Wand {
           }
           // advance everything below target (the pivot cursor is < target,
           // so at least one cursor moves: guaranteed progress)
-          if (Trace)
-            println(s"SKIP pivot=$pivotDoc target=$target bmSum=$bmSum theta=$theta curDocs=${cursors.map(_.curDoc).mkString(",")}")
           var j3 = 0
           while (j3 < order.length) {
             val c = cursors(order(j3))
@@ -229,11 +275,7 @@ object Wand {
                 if (cursors(j5).curDoc == pivotDoc) s += cursors(j5).score
                 j5 += 1
               }
-              if (Trace)
-                println(s"SCORE doc=$pivotDoc s=$s theta=$theta")
-              if (after == null || s < after.score ||
-                  (s == after.score && pivotDoc > after.docId))
-                heap.offer(s, pivotDoc)
+              sink.offer(s, pivotDoc)
             }
             var j6 = 0
             while (j6 < order.length) {
@@ -248,121 +290,5 @@ object Wand {
       stats.decodedBlocks += cursors.map(_.decodedBlocks).sum
       stats.totalBlocks += termBlocks.map(_._3.length.toLong).sum
     }
-    heap.drain().map { case (s, d) => ScoredDoc(d, s) }
-  }
-
-  /** Block-decode counters for a threshold/topK run — lets callers (and
-    * tests) assert that block-max pruning actually skipped payloads. */
-  final class SearchStats { var decodedBlocks = 0L; var totalBlocks = 0L }
-
-  /** All docs with BM25 score >= tau over one shard (threshold query, the
-    * analog of jvector's similarity-threshold search GraphSearcher.java:112-115
-    * — but exact here). Same pivot/skip machinery as [[topK]] with θ pinned
-    * to τ (no heap): any run of blocks whose Σ blockMax < τ is jumped over
-    * without decoding its payload bytes, so threshold queries over frequent
-    * terms touch only blocks that can reach τ. */
-  def threshold(termBlocks: Seq[(Double, Double, Array[Block])], tau: Double,
-                avgdl: Double, filter: DocFilter = DocFilter.All,
-                stats: SearchStats = null): Iterator[ScoredDoc] = {
-    val cursors = termBlocks
-      .map { case (idf, ub, bs) => new TermCursor(idf, ub, bs, avgdl) }
-      .toArray
-    def fillStats(): Unit = if (stats != null) {
-      stats.decodedBlocks = cursors.map(_.decodedBlocks).sum
-      stats.totalBlocks = termBlocks.map(_._3.length.toLong).sum
-    }
-    val sumUb = cursors.map(_.ub).sum
-    if (cursors.isEmpty || sumUb < tau) { fillStats(); return Iterator.empty }
-    val out = scala.collection.mutable.ArrayBuffer[ScoredDoc]()
-    val order = cursors.indices.toArray // sorted by curDoc each round
-    var done = false
-    while (!done) {
-      var si = 1
-      while (si < order.length) {
-        val v = order(si); val vd = cursors(v).curDoc
-        var sj = si - 1
-        while (sj >= 0 && cursors(order(sj)).curDoc > vd) {
-          order(sj + 1) = order(sj); sj -= 1
-        }
-        order(sj + 1) = v
-        si += 1
-      }
-      // pivot: first prefix whose Σ ub can REACH τ (>= — equality qualifies)
-      var acc = 0.0
-      var pivotIdx = -1
-      var i = 0
-      while (i < order.length && pivotIdx == -1) {
-        acc += cursors(order(i)).ub
-        if (acc >= tau) pivotIdx = i
-        i += 1
-      }
-      if (pivotIdx == -1 || cursors(order(pivotIdx)).curDoc == Long.MaxValue) {
-        done = true
-      } else {
-        val pivotDoc = cursors(order(pivotIdx)).curDoc
-        while (pivotIdx + 1 < order.length &&
-               cursors(order(pivotIdx + 1)).curDoc == pivotDoc) pivotIdx += 1
-        // block-max refinement at pivotDoc (see topK for the shallow-drift
-        // caveats — identical structure, θ := τ with >= acceptance)
-        var bmSum = 0.0
-        var j = 0
-        while (j <= pivotIdx) {
-          val c = cursors(order(j)); c.shallowTo(pivotDoc)
-          if (c.curDoc <= pivotDoc) bmSum += c.blockMax
-          j += 1
-        }
-        if (bmSum < tau) {
-          // no doc covered by these blocks can reach τ: jump past the
-          // nearest block end, capped by every cursor past the pivot
-          var d = Long.MaxValue
-          var j2 = 0
-          while (j2 <= pivotIdx) {
-            val c = cursors(order(j2))
-            if (c.curDoc <= pivotDoc) d = math.min(d, c.blockLast)
-            j2 += 1
-          }
-          var target = if (d == Long.MaxValue) pivotDoc + 1 else d + 1
-          var jn = 0
-          while (jn < order.length) {
-            val cd = cursors(order(jn)).curDoc
-            if (cd > pivotDoc && cd < target) target = cd
-            jn += 1
-          }
-          var j3 = 0
-          while (j3 < order.length) {
-            val c = cursors(order(j3))
-            if (c.curDoc < target) c.advanceTo(target)
-            j3 += 1
-          }
-        } else {
-          var moved = false
-          var j4 = 0
-          while (j4 < order.length) {
-            val c = cursors(order(j4))
-            if (c.curDoc < pivotDoc) { c.advanceTo(pivotDoc); moved = true }
-            j4 += 1
-          }
-          if (!moved) {
-            if (filter.accepts(pivotDoc)) {
-              // term-order summation for reproducible fp (see topK)
-              var s = 0.0
-              var j5 = 0
-              while (j5 < cursors.length) {
-                if (cursors(j5).curDoc == pivotDoc) s += cursors(j5).score
-                j5 += 1
-              }
-              if (s >= tau) out += ScoredDoc(pivotDoc, s)
-            }
-            var j6 = 0
-            while (j6 < order.length) {
-              if (cursors(order(j6)).curDoc == pivotDoc) cursors(order(j6)).next()
-              j6 += 1
-            }
-          }
-        }
-      }
-    }
-    fillStats()
-    out.iterator
   }
 }

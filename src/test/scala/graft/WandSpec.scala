@@ -186,15 +186,81 @@ class WandSpec extends AnyFunSuite with TimeLimits {
   }
 
   test("wand decodes fewer blocks than exist when k is small (skipping works)") {
-    val rnd = new Random(7)
-    // one strong rare term + one weak common term
-    val (termBlocks, _, avgdl) = makeCorpus(rnd, 2000, 3)
-    val cursorsTotalBlocks = termBlocks.map(_._3.length).sum
-    assert(cursorsTotalBlocks > 20)
-    // run with k=1: after the heap fills, block-max pruning should skip
-    Wand.topK(termBlocks, 1, avgdl)
-    // (decodedBlocks metric is internal to cursors created in topK; this
-    // test asserts termination + correctness is covered above. Skipping
-    // efficiency is asserted in EngineSpec via timing at bench scale.)
+    // top-k twin of "threshold skips blocks that cannot reach tau": once
+    // the k=1 heap holds a planted strong posting, no weak block and no
+    // later strong block (equal score, larger docId) can beat θ
+    val n = 2000L
+    val strong = Set(37L, 555L, 1203L, 1800L)
+    val ps = (0L until n).map { d =>
+      if (strong(d)) (d, 9, 8) else (d, 1, 120)
+    }
+    val avgdl = ps.map(_._3).sum.toDouble / n
+    val idf = Text.idf(n, n)
+    val blocks = ps.grouped(4).map { g =>
+      IndexBuilder.encodeBlock("t", 0, g.map(_._1).toArray, g.map(_._2).toArray,
+        g.map(_._3).toArray)
+    }.toArray
+    val ub = idf * blocks.map(b => Text.tfPartial(b.maxTf, b.minDl.toLong, avgdl)).max
+    val stats = new Wand.SearchStats
+    val got = Wand.topK(Seq((idf, ub, blocks)), 1, avgdl, stats = stats).toSeq
+    assert(got.map(_.docId) == Seq(strong.min))
+    assert(stats.totalBlocks == blocks.length.toLong)
+    assert(stats.decodedBlocks <= strong.size + 2,
+      s"decoded ${stats.decodedBlocks} of ${stats.totalBlocks}")
+  }
+
+  test("kernel axes: {all, deny 1/3, allow-list} x {topK, topK+after, threshold} == naive (150 random corpora)") {
+    failAfter(Span(120, Seconds)) {
+      val rnd = new Random(4242)
+      def set(ds: Iterable[Long]) = {
+        val s = new java.util.HashSet[java.lang.Long](); ds.foreach(d => s.add(d)); s
+      }
+      (0 until 150).foreach { iter =>
+        val (termBlocks, naive, avgdl) = makeCorpus(rnd, 20 + rnd.nextInt(300), 2 + rnd.nextInt(30))
+        val ranked = naive.toSeq.sortBy { case (d, s) => (-s, d) }
+        val allowed = ranked.map(_._1).filter(_ => rnd.nextBoolean()).toSet
+        val filters = Seq[(String, Long => Boolean, Wand.DocFilter)](
+          ("all", _ => true, Wand.DocFilter.All),
+          ("deny", _ % 3 != 0,
+            new Wand.DocFilter(true, set(Nil), set(ranked.map(_._1).filter(_ % 3 == 0)))),
+          ("allow", allowed, new Wand.DocFilter(false, set(allowed), set(Nil))))
+        filters.foreach { case (fname, keep, f) =>
+          val kept = ranked.filter(h => keep(h._1))
+          def check(policy: String, got: Seq[ScoredDoc], want: Seq[(Long, Double)]): Unit = {
+            val ctx = s"iter=$iter filter=$fname policy=$policy"
+            assert(got.map(_.docId) == want.map(_._1), ctx)
+            got.zip(want).foreach { case (g, (_, s)) => assert(math.abs(g.score - s) < 1e-12, ctx) }
+          }
+          val k = 1 + rnd.nextInt(15)
+          check("topK", Wand.topK(termBlocks, k, avgdl, f).toSeq, kept.take(k))
+          if (ranked.nonEmpty) {
+            val (cd, cs) = ranked(rnd.nextInt(ranked.size))
+            check("topK+after", Wand.topK(termBlocks, k, avgdl, f, after = ScoredDoc(cd, cs)).toSeq,
+              kept.filter { case (d, s) => s < cs || (s == cs && d > cd) }.take(k))
+          }
+          val tau = 0.2 + rnd.nextDouble() * 2
+          check("threshold", Wand.threshold(termBlocks, tau, avgdl, f).toSeq.sortBy(_.docId),
+            kept.filter(_._2 >= tau).sortBy(_._1))
+        }
+      }
+    }
+  }
+
+  test("SearchStats accumulates across calls of both policies") {
+    val (termBlocks, _, avgdl) = makeCorpus(new Random(11), 400, 4)
+    val total = termBlocks.map(_._3.length.toLong).sum
+    def decoded(search: Wand.SearchStats => Unit): Long = {
+      val st = new Wand.SearchStats; search(st); st.decodedBlocks
+    }
+    val dTop = decoded(st => Wand.topK(termBlocks, 3, avgdl, stats = st))
+    val dTau = decoded(st => Wand.threshold(termBlocks, 0.5, avgdl, stats = st))
+    assert(total > 0 && dTop > 0 && dTau > 0)
+    val st = new Wand.SearchStats
+    Wand.threshold(termBlocks, 0.5, avgdl, stats = st)
+    Wand.threshold(termBlocks, 0.5, avgdl, stats = st)
+    assert(st.totalBlocks == 2 * total && st.decodedBlocks == 2 * dTau,
+      s"${st.decodedBlocks}/${st.totalBlocks} after two threshold calls")
+    Wand.topK(termBlocks, 3, avgdl, stats = st)
+    assert(st.totalBlocks == 3 * total && st.decodedBlocks == 2 * dTau + dTop)
   }
 }
