@@ -1,37 +1,42 @@
 package graft.index
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Codec, Text}
 
-/** SPIMI-style index build over typed Datasets (SURVEY.md §3.2 "our
-  * equivalent"): the Spark re-architecture of jvector's parallel bulk
-  * build (GraphIndexBuilder.build, graph/GraphIndexBuilder.java:156-166) —
-  * Spark stage boundaries replace its ForkJoinPool + lock-free CAS
-  * machinery; each capability maps to a declarative stage:
+/** The BM25 write pipeline — one pipeline behind every build, whose three
+  * sinks differ only in where the output goes: [[build]] keeps it in
+  * memory, [[ResumableBuild.build]] writes docId-range chunks a restart
+  * can skip, and [[graft.streaming.StreamingIndex.appendBatch]] writes
+  * one micro-batch chunk. It is the Spark re-architecture of jvector's
+  * bulk build (GraphIndexBuilder.build, graph/GraphIndexBuilder.java:
+  * 156-166), which is a parallel loop over the same insert its
+  * incremental writes call — Spark stage boundaries replace its
+  * ForkJoinPool + lock-free CAS machinery:
   *
-  *  1. dense docId assignment: repartitionByRange(url) + per-partition
-  *     counts + prefix-sum offsets (NOT row_number over a single partition,
-  *     NOT monotonically_increasing_id — ordinal renumbering, jvector
-  *     OnDiskGraphIndexWriter.getSequentialRenumbering:163-176);
-  *  2. tokenize + per-doc tf: narrow mapPartitions, no shuffle (tf is
-  *     doc-local by definition — the SPIMI insight);
-  *  3. global stats (N, avgdl): one tiny aggregate (the medioid/centroid
-  *     refresh analog, GraphIndexBuilder.approximateMedioid:552-576);
-  *  4. posting merge: repartitionByRange(term, shard, docId) — the range
-  *     partitioner's sampled split points cut head terms (Zipf skew) across
-  *     partitions at docId boundaries, which is the salting: the docId
-  *     subrange is the salt key, and no second-level merge is needed
-  *     because blocks are self-contained docId runs;
-  *  5. block encode: delta-gap + varbyte (Codec) with exact block-max
-  *     metadata; dictionary aggregate (map-side partial combine).
+  *  1. [[number]]: dense docIds — sort by [[orderCols]] (range shuffle, or
+  *     the table's own partitions when assumeSorted) + per-partition
+  *     counts + prefix-sum offsets from a docId base (NOT row_number over
+  *     a single partition, NOT monotonically_increasing_id — ordinal
+  *     renumbering, jvector OnDiskGraphIndexWriter
+  *     .getSequentialRenumbering:163-176);
+  *  2. [[docMeta]]: one narrow pass to DocMeta rows; the sinks that write
+  *     them observe the token total on the write (global stats N, avgdl);
+  *  3. [[spimiBlocks]]: tokenize + per-partition compressed partial runs
+  *     (tf is doc-local — the SPIMI insight), one compact shuffle, and a
+  *     merge that cuts each (term, shard) run into 128-posting blocks with
+  *     exact block-max metadata;
+  *  4. dictionary: [[dictFromBlocks]] (map-side combined aggregate).
   *
-  * The chunked variant (buildResumable) writes one segment dir + manifest
-  * row per docId-range chunk; a restart skips committed chunks — the
-  * incremental-write / resume protocol of jvector's on-disk writer
-  * (OnDiskGraphIndexWriter.writeInline:62-84, proven incremental ≡ bulk in
-  * TestOnDiskGraphIndex.java:215-262, which our resume test mirrors).
+  * A shard function maps docIds to shards: contiguous docId ranges for a
+  * build, one fresh shard per streaming micro-batch. The on-disk sinks
+  * write each blocks chunk with its manifest row through one writer
+  * ([[ResumableBuild.writeChunk]]), so the one-shot, resumed and streamed
+  * layouts are the same code (jvector proves inline ≡ bulk writes,
+  * OnDiskGraphIndexWriter.writeInline:62-84, TestOnDiskGraphIndex.java:
+  * 215-262; our resume and equivalence tests mirror it).
   */
 object IndexBuilder {
 
@@ -62,13 +67,19 @@ object IndexBuilder {
     *    Results stay score-identical per url: scores depend on (tf, df,
     *    dl), never on docId; only tie ORDER among equal scores can differ.
     */
-  private[graft] def orderCols(opts: Options): Seq[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions.{col, lit, pmod, udf, xxhash64}
+  private[graft] def orderCols(opts: Options): Seq[Column] =
     if (opts.docOrder == "length")
-      Seq(pmod(xxhash64(col("url")), lit(opts.numShards.toLong)),
-        udf((t: String) => Text.countTokens(t)).apply(col("text")), col("url"))
+      pmod(xxhash64(col("url")), lit(opts.numShards.toLong)) +: withinShardCols(opts)
+    else withinShardCols(opts)
+
+  /** The order within one shard: (docLen, url) for "length", url otherwise.
+    * Used where docIds cannot be spread over hash buckets — an
+    * assumeSorted build keeps the table's own partitions, and a
+    * micro-batch is a single shard. */
+  private[graft] def withinShardCols(opts: Options): Seq[Column] =
+    if (opts.docOrder == "length")
+      Seq(udf((t: String) => Text.countTokens(t)).apply(col("text")), col("url"))
     else Seq(col("url"))
-  }
 
   /** Lossy-but-admissible block-bound quantization (the C5 uint8 option;
     * reference analog: jvector pq/LocallyAdaptiveVectorQuantization
@@ -125,56 +136,78 @@ object IndexBuilder {
             opts: Options = Options()): InvertedIndex = {
     import spark.implicits._
     val in = normalize(spark, webpages).as[(String, String, String)]
-
-    // --- stage 1: deterministic dense docIds ---
-    val parts = opts.rangePartitions
-    val oc = orderCols(opts)
-    val sorted = in.repartitionByRange(parts, oc: _*).sortWithinPartitions(oc: _*)
-      .persist()
-    val counts = sorted.mapPartitions { it =>
-      Iterator((TaskContext.getPartitionId(), it.size.toLong))
-    }.collect().toMap
-    val offsets = new Array[Long](parts + 1)
-    (0 until parts).foreach { p =>
-      offsets(p + 1) = offsets(p) + counts.getOrElse(p, 0L)
-    }
-    val numDocs = offsets(parts)
-    val nShards = opts.numShards
-    val offB = spark.sparkContext.broadcast(offsets)
-    @inline def shardOf(docId: Long): Int =
-      if (numDocs == 0) 0
-      else math.min(nShards - 1, (docId * nShards / numDocs).toInt)
-
-    // --- stage 2a: doc metadata (docLen) — narrow ---
-    val docs = sorted.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      var i = offB.value(pid)
-      it.map { case (url, text, lang) =>
-        val d = DocMeta(i, shardOf(i), url, Text.countTokens(text), lang)
-        i += 1
-        d
-      }
-    }.persist()
-
-    // --- stage 3: global stats (tiny agg) ---
-    val (totTok) = if (numDocs == 0) 0L
-      else docs.agg(sum($"docLen")).as[Long].head()
-    val avgdl = if (numDocs == 0) 0.0 else totTok.toDouble / numDocs
-    val stats = IndexStats(numDocs, totTok, avgdl, nShards)
-
-    // --- stages 2b+4+5: SPIMI partial-run inversion + compact merge ---
-    val blocks = spimiBlocks(sorted, offB, numDocs, nShards,
-      (0L, Long.MaxValue), opts).persist()
-
-    // --- dictionary: df/cf/bound inputs per term (map-side combined agg) ---
+    val nb = number(in, orderCols(opts), opts.rangePartitions, assumeSorted = false, base = 0L)
+    val shardOf = rangeShards(nb.numDocs, opts.numShards)
+    val docs = docMeta(nb, shardOf).persist()
+    // the docs cache must be filled anyway: its one aggregate fills it
+    val totTok = if (nb.numDocs == 0) 0L else docs.agg(sum($"docLen")).as[Long].head()
+    val blocks = spimiBlocks(nb.sorted, nb.offsets, shardOf, opts = opts).persist()
     val dict = dictFromBlocks(spark, blocks).persist()
-
     // force caches before dropping the sorted input: repartitionByRange
     // re-samples on recompute, so lineage replay must never re-run it
     blocks.count(); dict.count()
-    sorted.unpersist()
-    InvertedIndex(spark, docs, blocks, dict, stats)
+    nb.release()
+    InvertedIndex(spark, docs, blocks, dict, statsOf(nb.numDocs, totTok, opts.numShards))
   }
+
+  /** Stage 1 output: the input in docId order, and each partition's first
+    * absolute docId (`offsets(p)`; the last entry is one past the last
+    * doc). `cached` when the range shuffle's output is persisted. */
+  private[graft] final case class Numbered(
+      sorted: Dataset[(String, String, String)],
+      offsets: Broadcast[Array[Long]], cached: Boolean) {
+    def numDocs: Long = offsets.value.last - offsets.value.head
+    def release(): Unit = if (cached) sorted.unpersist()
+  }
+
+  /** Stage 1, shared by every build: sort the normalized input by `order`,
+    * count each partition, and prefix-sum the counts from `base` (0 for a
+    * build, the snapshot's nextDocId for an append).
+    *
+    * Range mode shuffles into `parts` range partitions and caches the
+    * result: the range partitioner resamples on recompute, so the docIds
+    * would not be stable otherwise. assumeSorted keeps the table's own
+    * partitions (docIds are positional — still dense and deterministic,
+    * SURVEY.md §7.3) and does not cache: recomputation is deterministic,
+    * and at corpus scale you stream from the table instead of caching it.
+    * Its counts come from the SOURCE partitioning projected to zero
+    * columns (file-split planning depends on file sizes, not on the read
+    * schema), so the parquet reader serves them from row-group metadata. */
+  private[graft] def number(in: Dataset[(String, String, String)], order: Seq[Column],
+                            parts: Int, assumeSorted: Boolean, base: Long): Numbered = {
+    import in.sparkSession.implicits._
+    val sorted =
+      if (assumeSorted) in.sortWithinPartitions(order: _*)
+      else in.repartitionByRange(parts, order: _*).sortWithinPartitions(order: _*).persist()
+    val counts = (if (assumeSorted) in else sorted).toDF().select()
+      .mapPartitions(it => Iterator((TaskContext.getPartitionId(), it.size.toLong)))
+      .collect().toMap
+    val n = counts.keys.maxOption.fold(1)(_ + 1)
+    val offsets = new Array[Long](n + 1)
+    offsets(0) = base
+    (0 until n).foreach(p => offsets(p + 1) = offsets(p) + counts.getOrElse(p, 0L))
+    Numbered(sorted, in.sparkSession.sparkContext.broadcast(offsets), cached = !assumeSorted)
+  }
+
+  /** Range shards of a build: `nShards` contiguous docId ranges over [0, numDocs). */
+  private[graft] def rangeShards(numDocs: Long, nShards: Int): Long => Int =
+    docId => if (numDocs == 0) 0 else math.min(nShards - 1, (docId * nShards / numDocs).toInt)
+
+  /** Stage 2: one DocMeta row per doc (docLen via the allocation-free
+    * token counter), narrow over the numbered input. */
+  private[graft] def docMeta(nb: Numbered, shardOf: Long => Int): Dataset[DocMeta] = {
+    import nb.sorted.sparkSession.implicits._
+    val offB = nb.offsets
+    nb.sorted.mapPartitions { it =>
+      var i = offB.value(TaskContext.getPartitionId())
+      it.map { case (url, text, lang) =>
+        val d = DocMeta(i, shardOf(i), url, Text.countTokens(text), lang); i += 1; d
+      }
+    }
+  }
+
+  private[graft] def statsOf(numDocs: Long, totTok: Long, nShards: Int): IndexStats =
+    IndexStats(numDocs, totTok, if (numDocs == 0) 0.0 else totTok.toDouble / numDocs, nShards)
 
   /** Dictionary from blocks: df = Σ block n (one posting per doc), cf from
     * decoded tfs, (maxTf, minDl) = global tf-part bound inputs. Map-side
@@ -187,29 +220,6 @@ object IndexBuilder {
       max($"maxTf").as("maxTf"),
       min($"minDl").as("minDl"))
       .as[DictEntry]
-  }
-
-  /** Stages 4+5 shared by the small/streaming build paths: sort-merge raw
-    * posting rows into self-contained compressed blocks.
-    *
-    * Hash-partitioned on (term, shard): a (term, shard) posting run never
-    * splits across partitions, so the block decomposition is a pure
-    * function of the run content — the resumable build's "incremental ≡
-    * bulk" byte-equality depends on this. Head-term (Zipf) skew is handled
-    * because `shard` acts as the salt: the heaviest term spreads over
-    * numShards partitions (the explicit salted merge of SURVEY.md §7.1.4;
-    * jvector merge analog NodeArray.merge:52-132). */
-  private[graft] def encodeBlocks(spark: SparkSession, postings: Dataset[Posting],
-                                  opts: Options): Dataset[Block] = {
-    import spark.implicits._
-    val bs = opts.blockSize
-    val cut = postings
-      .repartition(opts.rangePartitions, $"term", $"shard")
-      .sortWithinPartitions($"term", $"shard", $"docId")
-      .mapPartitions { it =>
-        new BlockCutter(it, bs)
-      }
-    if (opts.quantizedBounds) cut.map(quantizeBlock) else cut
   }
 
   /** SPIMI proper, the bulk path: invert each input partition into
@@ -226,12 +236,14 @@ object IndexBuilder {
     * is concatenation-after-sort-by-firstDocId; the final block layout is
     * a pure function of each (term, shard)'s full posting run —
     * independent of partitioning, chunking, and spill points — which is
-    * what makes resumed ≡ one-shot byte-identical. */
+    * what makes resumed ≡ one-shot byte-identical, and a micro-batch's
+    * blocks the same 128-posting cut of its (term, shard) runs.
+    * `keepRange` restricts the output to one chunk's docId range. */
   private[graft] def spimiBlocks(
       sorted: Dataset[(String, String, String)],
-      offsets: org.apache.spark.broadcast.Broadcast[Array[Long]],
-      numDocs: Long, nShards: Int,
-      keepRange: (Long, Long), opts: Options,
+      offsets: Broadcast[Array[Long]],
+      shardOf: Long => Int,
+      keepRange: (Long, Long) = (0L, Long.MaxValue), opts: Options,
       spillBudget: Int = 1000000): Dataset[Block] = {
     import sorted.sparkSession.implicits._
     val bs = opts.blockSize
@@ -244,14 +256,14 @@ object IndexBuilder {
       if (pid + 1 < offsets.value.length &&
           (offsets.value(pid + 1) <= dLo || offsets.value(pid) >= dHi)) {
         Iterator.empty
-      } else spimiPartition(it, offsets.value(pid), dLo, dHi, numDocs, nShards, spillBudget)
+      } else spimiPartition(it, offsets.value(pid), dLo, dHi, shardOf, spillBudget)
     }
     val merged = mergeRuns(partial, bs)
     if (opts.quantizedBounds) merged.map(quantizeBlock) else merged
   }
 
   private def spimiPartition(it: Iterator[(String, String, String)], base: Long,
-                             dLo: Long, dHi: Long, numDocs: Long, nShards: Int,
+                             dLo: Long, dHi: Long, shardOf: Long => Int,
                              spillBudget: Int): Iterator[Block] = {
       var i = base
       val map = new TermMap
@@ -282,9 +294,7 @@ object IndexBuilder {
       it.foreach { case (_, text, _) =>
         val docId = i; i += 1
         if (docId >= dLo && docId < dHi) {
-          val shard =
-            if (numDocs == 0) 0
-            else math.min(nShards - 1, (docId * nShards / numDocs).toInt)
+          val shard = shardOf(docId)
           sink.shard = shard; sink.docId = docId
           sink.dl = Text.countTokens(text)
           if (Text.tokenizeInto(text, sink) < 0) {
@@ -455,25 +465,6 @@ object IndexBuilder {
           java.util.Arrays.copyOfRange(dls, lo, hi))
         lo = hi
       }
-    }
-  }
-
-  /** Streaming block cutter over (term, shard, docId)-sorted postings. */
-  private final class BlockCutter(it: Iterator[Posting], blockSize: Int)
-      extends Iterator[Block] {
-    private val buf = new scala.collection.mutable.ArrayBuffer[Posting](blockSize)
-    private var pending: Posting = if (it.hasNext) it.next() else null
-    override def hasNext: Boolean = pending != null
-    override def next(): Block = {
-      val t = pending.term; val s = pending.shard
-      buf.clear()
-      while (pending != null && pending.term == t && pending.shard == s &&
-             buf.length < blockSize) {
-        buf += pending
-        pending = if (it.hasNext) it.next() else null
-      }
-      encodeBlock(t, s, buf.map(_.docId).toArray, buf.map(_.tf).toArray,
-        buf.map(_.docLen).toArray)
     }
   }
 

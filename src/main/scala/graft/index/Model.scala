@@ -15,9 +15,6 @@ package graft.index
   * prefix sums, NOT monotonically_increasing_id (not dense). */
 final case class DocMeta(docId: Long, shard: Int, url: String, docLen: Int, lang: String)
 
-/** One (term, docId, tf, docLen) occurrence — the SPIMI intermediate. */
-final case class Posting(term: String, shard: Int, docId: Long, tf: Int, docLen: Int)
-
 /** One compressed posting block: <= Codec.BlockSize postings of one
   * (term, shard), docIds strictly increasing, self-contained encoding.
   * `(maxTf, minDl)` are the block-max metadata WAND uses for exact

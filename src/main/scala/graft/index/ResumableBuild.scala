@@ -1,26 +1,30 @@
 package graft.index
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Text
 
-/** Checkpointed, resumable index build (jvector's incremental on-disk
-  * write + resume: OnDiskGraphIndexWriter.writeInline:62-84 and
+/** The chunked, on-disk sink of the BM25 write pipeline (see
+  * [[IndexBuilder]]): the same numbering, DocMeta pass and SPIMI blocks
+  * as a one-shot build, written as checkpointed chunks a restart can skip
+  * (jvector's incremental on-disk write + resume:
+  * OnDiskGraphIndexWriter.writeInline:62-84 and
   * GraphIndexBuilder.load:684-706, with the metamorphic guarantee
   * "incremental ≡ bulk" of TestOnDiskGraphIndex.java:215-262).
   *
-  * The corpus is cut into `numChunks` groups of input range-partitions —
-  * each chunk is a contiguous docId range, so its compressed blocks are
-  * globally valid as-is (blocks are self-contained docId runs; a
-  * (term, shard) posting list is just its blocks ordered by firstDocId,
-  * regardless of which chunk wrote them — the same reason jvector can
-  * write node payloads out of order at precomputed offsets).
+  * The corpus is cut into `numChunks` groups of whole shards — each chunk
+  * is a contiguous docId range, so its compressed blocks are globally
+  * valid as-is (blocks are self-contained docId runs; a (term, shard)
+  * posting list is just its blocks ordered by firstDocId, regardless of
+  * which chunk wrote them — the same reason jvector can write node
+  * payloads out of order at precomputed offsets).
   *
-  * Per chunk: one Spark job → parquet segment dir `blocks/chunk=c` +
-  * one manifest JSON with lineage + metrics (rows, postings, blocks,
-  * bytes, ms, docs/sec). Restart skips chunks whose manifest row exists
+  * Per chunk: one Spark job → parquet segment dir `blocks/chunk=<id>` +
+  * one manifest JSON with lineage + metrics (docs, postings, blocks,
+  * bytes, ms, docs/sec), both via [[writeChunk]], the writer streaming
+  * micro-batches share. Restart skips chunks whose manifest row exists
   * and whose segment dir committed (_SUCCESS). Dictionary + stats are
   * recomputed from the union of segments at finalize, so a resumed build
   * is segment-identical AND dictionary-identical to a one-shot build.
@@ -33,19 +37,21 @@ object ResumableBuild {
     * driver-recorded BENCH file carries the per-phase evidence needed to
     * tell host noise (spiky totals, flat phase interiors) from serial
     * fraction (one phase growing with parallelism). Keys: "sort+count",
-    * "docs-write", "chunkN-write", "dict-write", "total". */
+    * "docs-write", "chunkN-write", "dictpartN", "dict-write", "total". */
   val lastPhaseSecs = new java.util.concurrent.ConcurrentHashMap[String, Double]()
 
-  /** @param failAfterChunks test hook: throw after k chunks committed
-    *   (the kill-and-resume metamorphic test's injection point).
+  /** @param failAfterChunks test hook: throw after the k-th chunk commits
+    *   and start no later chunk (the kill-and-resume metamorphic test's
+    *   injection point); needs `parallelChunks == 1`.
     * @param assumeSorted the corpus is already partitioned + url-sorted at
     *   rest (the realistic 10^12-doc layout: a crawl table is ingested
     *   once, never re-sorted per build). Skips the global range shuffle;
     *   docIds are positional over the table's own partition layout —
     *   still dense + deterministic, per SURVEY.md §7.3.
-    * @param parallelChunks chunk jobs submitted concurrently (they are
-    *   independent; resume granularity is unchanged). Overlapping jobs
-    *   hides per-stage scheduling barriers on big executors. */
+    * @param parallelChunks threads running the docs write and the chunk
+    *   jobs (they are independent; resume granularity is unchanged); 1
+    *   runs them one after another, docs first. Overlapping jobs hides
+    *   per-stage scheduling barriers on big executors. */
   def build(spark: SparkSession, webpages: DataFrame, dir: String,
             opts: IndexBuilder.Options = IndexBuilder.Options(),
             numChunks: Int = 8,
@@ -53,27 +59,19 @@ object ResumableBuild {
             assumeSorted: Boolean = false,
             parallelChunks: Int = 1): InvertedIndex = {
     import spark.implicits._
+    require(failAfterChunks.isEmpty || parallelChunks == 1,
+      "failAfterChunks needs parallelChunks = 1")
     val fs = FileSystem.get(new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
     val in = IndexBuilder.normalize(spark, webpages).as[(String, String, String)]
-
-    // stage 1 (always recomputed — deterministic given the input): global
-    // sort + per-partition counts -> dense docId offsets
-    val parts = opts.rangePartitions
     lastPhaseSecs.clear()
     val buildT0 = System.nanoTime()
     def phase[A](name: String)(f: => A): A = {
       val t0 = System.nanoTime()
       val r = f
-      val secs = (System.nanoTime() - t0) / 1e9
-      lastPhaseSecs.put(name, secs)
-      if (sys.props.get("graft.phaseTiming").isDefined)
-        println(f"[phase] $name: $secs%.2f s")
+      lastPhaseSecs.put(name, (System.nanoTime() - t0) / 1e9)
       r
     }
-    // assumeSorted: no cache — recomputation is deterministic (no range
-    // sampling involved) and at corpus scale you stream from the table
-    // instead of caching it; the range-shuffled path MUST cache because
-    // the range partitioner resamples on recompute.
+    // stage 1 (always recomputed — deterministic given the input).
     // assumeSorted keeps the table's own partition layout (docIds are
     // positional), so docOrder can only reorder WITHIN partitions: the
     // "length" layout drops its hash-bucket leading key (positional
@@ -81,34 +79,14 @@ object ResumableBuild {
     // within-shard length gradient block-max pruning needs still appears,
     // partition-by-partition. Silently ignoring docOrder here was a
     // round-3 bug (url sort regardless of the option).
-    val oc = IndexBuilder.orderCols(opts)
-    val sortedWithin: Seq[org.apache.spark.sql.Column] =
-      if (opts.docOrder == "length")
-        Seq(udf((t: String) => Text.countTokens(t)).apply($"text"), $"url")
-      else Seq($"url")
-    val sorted0 = if (assumeSorted) in.sortWithinPartitions(sortedWithin: _*)
-                  else in.repartitionByRange(parts, oc: _*).sortWithinPartitions(oc: _*)
-    val sorted = if (assumeSorted) sorted0 else sorted0.persist()
-    // per-partition row counts. assumeSorted: counts come from the SOURCE
-    // partitioning (identical to sorted's: file-split planning depends on
-    // file sizes, not on the read schema), projected to ZERO columns so the
-    // parquet reader serves row counts straight from row-group metadata —
-    // no column is decoded at all; range mode: counts must come from the
-    // shuffled+cached layout itself.
-    val counts = phase("sort+count") {
-      val base = if (assumeSorted) in.toDF().select()
-                 else sorted.toDF().select()
-      base.mapPartitions { it =>
-        Iterator((TaskContext.getPartitionId(), it.size.toLong))
-      }.collect().toMap }
-    val nparts = if (assumeSorted) counts.keys.maxOption.map(_ + 1).getOrElse(0).max(1) else parts
-    val offsets = new Array[Long](nparts + 1)
-    (0 until nparts).foreach(p => offsets(p + 1) = offsets(p) + counts.getOrElse(p, 0L))
-    val numDocs = offsets(nparts)
+    val nb = phase("sort+count") {
+      IndexBuilder.number(in,
+        if (assumeSorted) IndexBuilder.withinShardCols(opts) else IndexBuilder.orderCols(opts),
+        opts.rangePartitions, assumeSorted, base = 0L)
+    }
+    val numDocs = nb.numDocs
     val nShards = opts.numShards
-    val offB = spark.sparkContext.broadcast(offsets)
-    def shardOf(docId: Long): Int =
-      if (numDocs == 0) 0 else math.min(nShards - 1, (docId * nShards / numDocs).toInt)
+    val shardOf = IndexBuilder.rangeShards(numDocs, nShards)
 
     // Chunk ids are scoped by the version this build WILL commit, so a
     // re-build into an existing catalog writes fresh dirs and can never
@@ -120,34 +98,20 @@ object ResumableBuild {
     val buildVersion = prevSnap.map(_.version).getOrElse(0L) + 1
     def chunkId(c: Int): String = s"v$buildVersion-$c"
 
-    // doc metadata pass (docLen via the allocation-free token counter);
-    // runs CONCURRENTLY with the chunk jobs below — stats are derived
-    // from the written table at finalize, nothing downstream of the
-    // chunks needs them. One docs chunk dir per build, published by the
-    // final snapshot commit. The global token count (the only stat the
-    // finalize step needs) rides on the write itself via observe() — no
-    // read-back aggregation job over the doc table.
+    // One docs chunk dir per build, published by the final snapshot
+    // commit; it runs alongside the chunk jobs, since nothing downstream
+    // of the chunks needs it. The global token count (the only stat the
+    // finalize step needs) rides on the write itself.
     val docsChunkId = s"v$buildVersion-docs"
-    @volatile var totTokObserved = 0L
-    def writeDocs(): Unit = phase("docs-write") {
-      val obs = org.apache.spark.sql.Observation(
-        s"graft-docs-$docsChunkId-${System.nanoTime()}")
-      SegmentCatalog.writeDocsChunk(
-        sorted.mapPartitions { it =>
-          val pid = TaskContext.getPartitionId()
-          var i = offB.value(pid)
-          it.map { case (url, text, lang) =>
-            val d = DocMeta(i, shardOf(i), url, Text.countTokens(text), lang); i += 1; d
-          }
-        }.observe(obs, coalesce(sum($"docLen"), lit(0L)).as("totTok")),
-        dir, docsChunkId)
-      totTokObserved = obs.get("totTok").asInstanceOf[Long]
+    @volatile var totTok = 0L
+    def docsWrite(): Unit = phase("docs-write") {
+      totTok = writeDocs(IndexBuilder.docMeta(nb, shardOf), dir, docsChunkId)
     }
 
     // chunk c = a group of whole shards (contiguous docId range). Chunks
     // align to shard boundaries so a (term, shard) posting run is never
-    // split across chunks — with the hash-partitioned block encoder this
-    // makes the chunked block layout byte-identical to the one-shot one.
+    // split across chunks — which makes the chunked block layout
+    // byte-identical to the one-shot one.
     def chunkOfShard(s: Int): Int = s * numChunks / nShards
     // shard s starts at the smallest docId with docId*nShards/numDocs == s
     def shardLoDoc(s: Int): Long =
@@ -157,12 +121,6 @@ object ResumableBuild {
       if (ss.isEmpty) (0L, 0L) else (shardLoDoc(ss.min), shardLoDoc(ss.max + 1))
     }
     val chunks = (0 until numChunks).filter(c => (0 until nShards).exists(chunkOfShard(_) == c))
-
-    var doneCount = 0
-    val pool =
-      if (parallelChunks > 1)
-        Some(java.util.concurrent.Executors.newFixedThreadPool(parallelChunks))
-      else None
 
     // dictionary partials, pipelined: as each chunk commits, its (tiny)
     // per-term stats aggregate runs while the REMAINING chunks are still
@@ -192,85 +150,51 @@ object ResumableBuild {
         def run(): Unit = writeDictPartial(c)
       }))
     def runChunk(c: Int): Unit = {
-      val segDir = new Path(SegmentCatalog.blocksChunkPath(dir, chunkId(c)))
-      val maniPath = new Path(s"$dir/manifest/v$buildVersion-chunk-$c.json")
-      val committed = fs.exists(maniPath) && fs.exists(new Path(segDir, "_SUCCESS"))
-      val (dLo, dHi) = chunkDocRange(c)
-      if (!committed) {
+      val maniPath = s"$dir/manifest/v$buildVersion-chunk-$c.json"
+      val segDir = SegmentCatalog.blocksChunkPath(dir, chunkId(c))
+      if (!(fs.exists(new Path(maniPath)) && fs.exists(new Path(segDir, "_SUCCESS")))) {
         val t0 = System.nanoTime()
+        val (dLo, dHi) = chunkDocRange(c)
         // SPIMI over the chunk's docId range; rows outside it are skipped
         // BEFORE tokenization (cheap row skip). At cluster scale the
         // corpus would be a sorted table and this filter prunes whole
         // files by url range; the docId math is identical.
-        // SINGLE pass: spimi -> parquet, with the manifest's lineage
-        // metrics (block/posting counts, metadata bytes) observed ON the
-        // write itself — the chunk's wall time contains exactly one job,
-        // no read-back aggregation. This driver-scheduled follow-up work
-        // was a per-chunk serial fraction that Amdahl-limited the build's
-        // N -> 4N scaling (it costs the same at every parallelism level).
-        val blocks = IndexBuilder.spimiBlocks(sorted, offB, numDocs, nShards,
-          (dLo, dHi), opts)
-        // varbyte encoded length, as a codegen'd CASE chain (== Codec.vlen
-        // for the non-negative ints block metadata holds)
-        def vlenC(cc: org.apache.spark.sql.Column) =
-          when(cc < 128, 1L).when(cc < (1 << 14), 2L).when(cc < (1 << 21), 3L)
-            .when(cc < (1 << 28), 4L).otherwise(5L)
-        val obs = org.apache.spark.sql.Observation(
-          s"graft-${chunkId(c)}-${System.nanoTime()}")
         phase(s"chunk$c-write") {
-          SegmentCatalog.writeBlocksChunk(
-            blocks.observe(obs,
-              count(lit(1)).as("nBlocks"),
-              coalesce(sum($"n").cast("long"), lit(0L)).as("nPostings"),
-              coalesce(sum(vlenC($"maxTf") + vlenC($"minDl")), lit(0L))
-                .as("metaBytes")),
-            dir, chunkId(c)) }
-        val m = obs.get
-        val (nBlocks, nPostings, metaBytes) =
-          (m("nBlocks").asInstanceOf[Long], m("nPostings").asInstanceOf[Long],
-           m("metaBytes").asInstanceOf[Long])
-        val ms = (System.nanoTime() - t0) / 1000000
-        val chunkDocs = dHi - dLo
-        val bytes = fs.getContentSummary(segDir).getLength
-        val row = ManifestRow(c, "done", chunkDocs, nPostings, nBlocks, bytes, ms,
-          if (ms == 0) 0.0 else chunkDocs * 1000.0 / ms, metaBytes)
-        writeManifest(fs, maniPath, row)
+          writeChunk(spark, IndexBuilder.spimiBlocks(nb.sorted, nb.offsets, shardOf,
+            (dLo, dHi), opts), dir, chunkId(c), maniPath, c, dHi - dLo, t0)
+        }
       }
+    }
+    // one scheduler: the docs write and the chunks on `parallelChunks`
+    // threads; the first failure stops every chunk not yet started
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelChunks)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val abort = new java.util.concurrent.atomic.AtomicBoolean(false)
+    def task(body: => Unit): Future[Unit] = Future {
+      if (!abort.get) try body catch { case e: Throwable => abort.set(true); throw e }
     }
     try {
-      pool match {
-        case Some(p) =>
-          implicit val ec = scala.concurrent.ExecutionContext.fromExecutor(p)
-          val futs = scala.concurrent.Future(writeDocs()) +:
-            chunks.map(c => scala.concurrent.Future {
-              runChunk(c); submitDictPartial(c)
-            })
-          futs.foreach(f => scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-          p.shutdown()
-        case None =>
-          writeDocs()
-          chunks.foreach { c =>
-            runChunk(c)
-            submitDictPartial(c)
-            doneCount += 1
-            failAfterChunks.foreach { k =>
-              if (doneCount >= k && doneCount < chunks.size)
-                throw new RuntimeException(s"injected failure after $doneCount chunks")
-            }
-          }
+      val tasks = task(docsWrite()) +: chunks.zipWithIndex.map { case (c, i) =>
+        task {
+          runChunk(c)
+          submitDictPartial(c)
+          if (failAfterChunks.contains(i + 1) && i + 1 < chunks.size)
+            throw new RuntimeException(s"injected failure after ${i + 1} chunks")
+        }
       }
+      tasks.foreach(Await.result(_, Duration.Inf))
     } finally {
-      // drain in-flight partial jobs even on the failure path: a same-JVM
-      // resume must never race a background write to the same partial dir
-      dictPool.shutdown()
-      dictPool.awaitTermination(1, java.util.concurrent.TimeUnit.HOURS)
+      // drain in-flight chunk and partial jobs even on the failure path: a
+      // same-JVM resume must never race a background write to the same dir
+      Seq(pool, dictPool).foreach { p =>
+        p.shutdown()
+        p.awaitTermination(1, java.util.concurrent.TimeUnit.HOURS)
+      }
+      nb.release()
     }
     dictFutures.forEach(_.get()) // surface any partial-write failure
-    // stats ride on the docs write (observe) — no read-back agg job
     val docs = SegmentCatalog.readDocChunks(spark, dir, Seq(docsChunkId))
-    val totTok = if (numDocs == 0) 0L else totTokObserved
-    val avgdl = if (numDocs == 0) 0.0 else totTok.toDouble / numDocs
-    val stats = IndexStats(numDocs, totTok, avgdl, nShards)
+    val stats = IndexBuilder.statsOf(numDocs, totTok, nShards)
 
     // finalize: merge the pipelined per-chunk dictionary partials (each a
     // tiny per-term stats table computed while LATER chunks were still
@@ -286,7 +210,6 @@ object ResumableBuild {
     val version = buildVersion
     val dict = phase("dict-write") {
       chunks.foreach(writeDictPartial) // no-op when committed
-      import spark.implicits._
       val merged = spark.read
         .parquet(chunks.map(dictPartPath): _*)
         .groupBy($"term").agg(
@@ -306,9 +229,47 @@ object ResumableBuild {
       dictVersion = version, stats = stats,
       maxStreamBatch = prevSnap.map(_.maxStreamBatch).getOrElse(-1L),
       nextDocId = math.max(numDocs, prevSnap.map(_.nextDocId).getOrElse(0L))))
-    if (!assumeSorted) sorted.unpersist()
     lastPhaseSecs.put("total", (System.nanoTime() - buildT0) / 1e9)
     InvertedIndex(spark, docs, SegmentCatalog.readBlocks(spark, dir, snap), dict, stats)
+  }
+
+  /** Write a docs chunk; returns its token total, observed on the write
+    * (no read-back aggregate over the doc table). */
+  private[graft] def writeDocs(docs: Dataset[DocMeta], dir: String, cid: String): Long = {
+    val obs = Observation(s"graft-docs-$cid-${System.nanoTime()}")
+    SegmentCatalog.writeDocsChunk(
+      docs.observe(obs, coalesce(sum(col("docLen")), lit(0L)).as("totTok")), dir, cid)
+    obs.get("totTok").asInstanceOf[Long]
+  }
+
+  /** Write one blocks chunk and publish its manifest row at `maniPath`
+    * (the chunk's lineage + metrics; `t0` starts its elapsed time). The
+    * row's block/posting/metadata-byte counts are observed on the write
+    * itself: a read-back aggregate per chunk was a driver-scheduled serial
+    * fraction that Amdahl-limited the build's N -> 4N scaling. */
+  private[graft] def writeChunk(spark: SparkSession, blocks: Dataset[Block], dir: String,
+                                cid: String, maniPath: String, chunk: Int, docs: Long,
+                                t0: Long): Unit = {
+    // varbyte encoded length, as a codegen'd CASE chain (== Codec.vlen
+    // for the non-negative ints block metadata holds)
+    def vlen(c: Column) = when(c < 128, 1L).when(c < (1 << 14), 2L)
+      .when(c < (1 << 21), 3L).when(c < (1 << 28), 4L).otherwise(5L)
+    val obs = Observation(s"graft-$cid-${System.nanoTime()}")
+    SegmentCatalog.writeBlocksChunk(blocks.observe(obs,
+      count(lit(1)).as("blocks"),
+      coalesce(sum(col("n")).cast("long"), lit(0L)).as("postings"),
+      coalesce(sum(vlen(col("maxTf")) + vlen(col("minDl"))), lit(0L)).as("metaBytes")),
+      dir, cid)
+    val m = obs.get
+    val ms = (System.nanoTime() - t0) / 1000000
+    val fs = FileSystem.get(new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
+    val bytes = fs.getContentSummary(new Path(SegmentCatalog.blocksChunkPath(dir, cid))).getLength
+    val json =
+      s"""{"chunk":$chunk,"status":"done","docs":$docs,""" +
+      s""""postings":${m("postings")},"blocks":${m("blocks")},"bytes":$bytes,""" +
+      s""""elapsedMs":$ms,"docsPerSec":${if (ms == 0) 0.0 else docs * 1000.0 / ms},""" +
+      s""""metaBytes":${m("metaBytes")}}"""
+    SegmentCatalog.publishJson(spark, maniPath, json.getBytes("UTF-8"))
   }
 
   def readBlocks(spark: SparkSession, dir: String): Dataset[Block] =
@@ -332,18 +293,5 @@ object ResumableBuild {
           "cast(docsPerSec as double) docsPerSec", "cast(metaBytes as long) metaBytes")
         .as[ManifestRow].collect().toSeq.sortBy(_.chunk)
     }
-  }
-
-  private def writeManifest(fs: FileSystem, path: Path, row: ManifestRow): Unit = {
-    val json =
-      s"""{"chunk":${row.chunk},"status":"${row.status}","docs":${row.docs},""" +
-      s""""postings":${row.postings},"blocks":${row.blocks},"bytes":${row.bytes},""" +
-      s""""elapsedMs":${row.elapsedMs},"docsPerSec":${row.docsPerSec},""" +
-      s""""metaBytes":${row.metaBytes}}"""
-    val tmp = new Path(path.getParent, path.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    out.write(json.getBytes("UTF-8"))
-    out.close()
-    fs.rename(tmp, path) // atomic commit of the chunk's lineage row
   }
 }

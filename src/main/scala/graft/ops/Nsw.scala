@@ -1070,19 +1070,21 @@ object Nsw {
       // but THIS graph carries none (append/compact drop them), write
       // explicit null columns so the dir never mixes schemas (whose union
       // would depend on which footer the reader samples); load() trusts
-      // meta.json's pq/lvq nodes, not the file schema, so nulls are inert
+      // meta.json's pq/lvq nodes, not the file schema, so nulls are inert.
+      // The reverse — fused columns the dir's files lack — cannot be
+      // patched by a partial write: refuse it before writing anything.
       val fusedCols = Seq("code" -> "binary", "lu" -> "binary",
         "lbias" -> "float", "lscale" -> "float")
-      if (fusedCols.exists { case (c2, _) => !rows.columns.contains(c2) }) {
-        val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
-          spark.sparkContext.hadoopConfiguration)
-        val adjPath = new org.apache.hadoop.fs.Path(s"$dir/adj")
-        if (fs.exists(adjPath)) {
-          val existing = spark.read.parquet(s"$dir/adj").columns.toSet
-          fusedCols.foreach { case (c2, tpe) =>
-            if (existing.contains(c2) && !rows.columns.contains(c2))
-              rows = rows.withColumn(c2, lit(null).cast(tpe))
-          }
+      val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
+        spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/adj"))) {
+        val existing = spark.read.parquet(s"$dir/adj").columns.toSet
+        val extra = fusedCols.map(_._1).filter(c2 => rows.columns.contains(c2) && !existing(c2))
+        require(extra.isEmpty, s"saveTouched: the graph carries ${extra.mkString(", ")} but " +
+          s"$dir/adj does not; a partial write would mix schemas — use Nsw.save")
+        fusedCols.foreach { case (c2, tpe) =>
+          if (existing(c2) && !rows.columns.contains(c2))
+            rows = rows.withColumn(c2, lit(null).cast(tpe))
         }
       }
       // sever lineage from the destination before the dynamic-partition

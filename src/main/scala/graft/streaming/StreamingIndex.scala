@@ -1,27 +1,27 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.core.Text
 import graft.index._
 
-/** Incremental index ingestion via Structured Streaming — the engine's
-  * analog of jvector's concurrent incremental insert + OPTIMIZE
+/** Incremental index ingestion via Structured Streaming — the streaming
+  * sink of the BM25 write pipeline (see [[IndexBuilder]]) and the
+  * engine's analog of jvector's concurrent incremental insert + OPTIMIZE
   * (GraphIndexBuilder.addGraphNode:314-362, IPCService OPTIMIZE:215-230),
   * re-expressed as the idiomatic Spark pattern from SURVEY.md §2.1 B2:
   * `writeStream.foreachBatch` appends micro-segments; `refresh` is the
   * OPTIMIZE step that recomputes dictionary + stats; full compaction
   * (InvertedIndex.compact + save / a rebuild) merges micro-segments away.
   *
-  * Each micro-batch becomes its own shard id (numShards + batchId), so its
-  * (term, shard) posting runs are self-contained and globally valid next
-  * to the bulk segments — no rewrite of existing data, exactly like
-  * jvector's out-of-order inline node writes. Because block-max metadata
-  * is integer (maxTf, minDl), the avgdl drift caused by appends never
-  * invalidates stored segments (see Model.Block).
+  * A micro-batch runs the same numbering, DocMeta pass, SPIMI encoder and
+  * chunk writer as a bulk build. Each becomes its own shard id
+  * (numShards + batchId), so its (term, shard) posting runs are
+  * self-contained and globally valid next to the bulk segments — no
+  * rewrite of existing data, exactly like jvector's out-of-order inline
+  * node writes. Within the batch, docIds follow the options' within-shard
+  * order (url, or (docLen, url) for docOrder "length"). Because
+  * block-max metadata is integer (maxTf, minDl), the avgdl drift caused
+  * by appends never invalidates stored segments (see Model.Block).
   *
   * Exactly-once: every per-batch write is an idempotent overwrite of a
   * batch-owned, version-scoped chunk dir (`chunk=v<V>-s<batchId>`), docIds
@@ -31,7 +31,8 @@ import graft.index._
   * stats + the batch high-water mark. A crash anywhere before the commit
   * leaves the table at its previous snapshot; the replayed batch recomputes
   * the identical chunk, overwrites it, and commits once (round-1 ADVICE #1:
-  * no duplicate DocMeta rows, no double-counted stats, ever). */
+  * no duplicate DocMeta rows, no double-counted stats, ever). The batch's
+  * manifest row is atomically published bookkeeping, not the commit. */
 object StreamingIndex {
 
   /** Start ingesting a streaming DataFrame of pages (url, text, lang)
@@ -69,79 +70,30 @@ object StreamingIndex {
     // the monotone nextDocId high-water mark, so two chunks sharing a
     // shard id still have disjoint, sorted block docId ranges.
     if (streamId == snap.streamId && batchId <= snap.maxStreamBatch) return
-    val fs = FileSystem.get(new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
     // version-scoped chunk id: a replayed batch recomputes the SAME id
     // (same parent snapshot), while chunks referenced by other snapshots
     // (e.g. a restarted stream after compaction) can never be clobbered
     val cid = s"v${snap.version + 1}-s$batchId"
 
     val t0 = System.nanoTime()
+    val in = IndexBuilder.normalize(spark, batch).as[(String, String, String)]
     // allocate docIds from the snapshot's high-water mark, NOT numDocs:
     // a compaction shrinks numDocs but surviving docs keep their ids, so
     // only nextDocId (monotone) can never re-issue a live id
-    val baseDocs = snap.nextDocId
+    val nb = IndexBuilder.number(in, IndexBuilder.withinShardCols(opts),
+      math.max(1, math.min(opts.rangePartitions, 8)), assumeSorted = false, base = snap.nextDocId)
     val shard = snap.stats.numShards + batchId.toInt // one shard per micro-batch
-
-    val in = IndexBuilder.normalize(spark, batch).as[(String, String, String)]
-    val parts = math.max(1, math.min(opts.rangePartitions, 8))
-    val sorted = in.repartitionByRange(parts, $"url").sortWithinPartitions($"url").persist()
-    val counts = sorted.mapPartitions { it =>
-      Iterator((TaskContext.getPartitionId(), it.size.toLong))
-    }.collect().toMap
-    val offsets = new Array[Long](parts + 1)
-    (0 until parts).foreach(p => offsets(p + 1) = offsets(p) + counts.getOrElse(p, 0L))
-    val offB = spark.sparkContext.broadcast(offsets)
-
-    val docs = sorted.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      var i = baseDocs + offB.value(pid)
-      it.map { case (url, text, lang) =>
-        val d = DocMeta(i, shard, url, Text.countTokens(text), lang); i += 1; d
-      }
-    }.persist()
-    val batchTokens = docs.agg(sum($"docLen")).as[Long].head()
-    SegmentCatalog.writeDocsChunk(docs, dir, cid)
-
-    val postings = sorted.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      var i = baseDocs + offB.value(pid)
-      it.flatMap { case (_, text, _) =>
-        val docId = i; i += 1
-        val (tfs, len) = Text.termFreqs(text)
-        tfs.iterator.map { case (t, tf) => Posting(t, shard, docId, tf, len) }
-      }
-    }
-    val blocks = IndexBuilder.encodeBlocks(spark, postings, opts).persist()
-    val vlen = udf((v: Int) => graft.core.Codec.vlen(v.toLong).toLong)
-    val (nBlocks, nPostings, metaBytes) = blocks.agg(count(lit(1)),
-      coalesce(sum($"n"), lit(0L)),
-      coalesce(sum(vlen($"maxTf") + vlen($"minDl")), lit(0L)))
-      .as[(Long, Long, Long)].head()
-    SegmentCatalog.writeBlocksChunk(blocks, dir, cid)
-    blocks.unpersist()
-
-    val batchDocs = offsets(parts)
-    docs.unpersist()
-    sorted.unpersist()
-    val newDocs = snap.stats.numDocs + batchDocs
-    val newTokens = snap.stats.totalTokens + batchTokens
-    val newStats = IndexStats(newDocs, newTokens,
-      if (newDocs == 0) 0.0 else newTokens.toDouble / newDocs, snap.stats.numShards)
-
-    // lineage/metrics row (bookkeeping, not the commit point)
-    val segDir = new Path(SegmentCatalog.blocksChunkPath(dir, cid))
-    val ms = (System.nanoTime() - t0) / 1000000
-    val json =
-      s"""{"chunk":${100000 + batchId},"status":"done","docs":$batchDocs,""" +
-      s""""postings":$nPostings,"blocks":$nBlocks,""" +
-      s""""bytes":${fs.getContentSummary(segDir).getLength},""" +
-      s""""elapsedMs":$ms,"docsPerSec":${if (ms == 0) 0.0 else batchDocs * 1000.0 / ms},""" +
-      s""""metaBytes":$metaBytes}"""
-    val maniPath = new Path(s"$dir/manifest/chunk-$cid.json")
-    val tmp = new Path(maniPath.getParent, maniPath.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    out.write(json.getBytes("UTF-8")); out.close()
-    fs.rename(tmp, maniPath)
+    val batchShard: Long => Int = _ => shard
+    val batchDocs = nb.numDocs
+    val batchTokens = try {
+      val tokens = ResumableBuild.writeDocs(IndexBuilder.docMeta(nb, batchShard), dir, cid)
+      ResumableBuild.writeChunk(spark,
+        IndexBuilder.spimiBlocks(nb.sorted, nb.offsets, batchShard, opts = opts),
+        dir, cid, s"$dir/manifest/chunk-$cid.json", 100000 + batchId.toInt, batchDocs, t0)
+      tokens
+    } finally nb.release()
+    val newStats = IndexBuilder.statsOf(snap.stats.numDocs + batchDocs,
+      snap.stats.totalTokens + batchTokens, snap.stats.numShards)
 
     if (failBeforeCommit)
       throw new RuntimeException(s"injected crash before commit of batch $batchId")
@@ -153,7 +105,7 @@ object StreamingIndex {
       blockChunks = snap.blockChunks :+ cid,
       docChunks = snap.docChunks :+ cid,
       stats = newStats, maxStreamBatch = batchId,
-      nextDocId = baseDocs + batchDocs, streamId = streamId))
+      nextDocId = snap.nextDocId + batchDocs, streamId = streamId))
     // invalidate this session's cached listings of the (reused) table roots
     Seq("blocks", "docs").foreach(p => spark.catalog.refreshByPath(s"$dir/$p"))
   }

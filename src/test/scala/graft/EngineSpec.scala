@@ -332,6 +332,29 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(manifest.forall(_.docsPerSec >= 0))
   }
 
+  test("one-shot build ≡ resumable build (range mode, 1 and 4 chunks)") {
+    // corpus small enough that range sampling sees every row, so both
+    // builds cut the same range partitions and number docs identically
+    val opts = IndexBuilder.Options(numShards = 8, rangePartitions = 8)
+    val small = WebCorpus.generate(spark, 400, seed = 7L, partitions = 8)
+    def blockSet(ix: InvertedIndex) = ix.blocks.collect()
+      .map(b => (b.term, b.bucket, b.shard, b.firstDocId, b.lastDocId, b.n,
+        b.docBytes.toSeq, b.tfBytes.toSeq, b.dlBytes.toSeq, b.maxTf, b.minDl, b.tfSum))
+      .toSet
+    val oneShot = IndexBuilder.build(spark, small, opts)
+    val (blocks, dict, docs) =
+      (blockSet(oneShot), oneShot.dict.collect().toSet, oneShot.docs.collect().toSet)
+    assert(docs.size == 400 && docs.map(_.docId) == (0L until 400L).toSet)
+    for (numChunks <- Seq(1, 4)) {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-eq$numChunks").toString
+      val chunked = ResumableBuild.build(spark, small, dir, opts, numChunks = numChunks)
+      assert(blockSet(chunked) == blocks, s"block set differs at numChunks=$numChunks")
+      assert(chunked.dict.collect().toSet == dict, s"dict differs at numChunks=$numChunks")
+      assert(chunked.stats == oneShot.stats, s"stats differ at numChunks=$numChunks")
+      assert(chunked.docs.collect().toSet == docs, s"docs differ at numChunks=$numChunks")
+    }
+  }
+
   test("save/load round-trip preserves search results") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-save").toString

@@ -814,4 +814,30 @@ class NswSpec extends AnyFunSuite with BeforeAndAfterAll {
     hot.close()
     g.unpersist()
   }
+
+  test("saveTouched refuses fused columns the dir's adj files lack; dir unchanged") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(53)
+    val emb = clustered(rnd, 300, 8, 4).toDF("vec_id", "embedding")
+    val g = Nsw.build(spark, emb, "vec_id", "embedding",
+      Nsw.Params(m = 4, efConstruction = 16, kCenters = 4, iters = 2))
+    val dir = java.nio.file.Files.createTempDirectory("graft-touched-guard").toString
+    Nsw.save(spark, g, dir)
+    def listing(): Map[String, (Long, Long)] = {
+      import scala.jdk.CollectionConverters._
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => p.toString -> (p.toFile.length, p.toFile.lastModified)).toMap
+      finally files.close()
+    }
+    val before = listing()
+    val fused = Nsw.attachLvq(spark, g)
+    val e = intercept[IllegalArgumentException] {
+      Nsw.saveTouched(spark, fused, dir, Set(0))
+    }
+    assert(e.getMessage.contains("lu"), e.getMessage)
+    assert(listing() == before, "a refused saveTouched must write nothing")
+    assert(Nsw.load(spark, dir).lvq.isEmpty)
+    fused.unpersist()
+  }
 }

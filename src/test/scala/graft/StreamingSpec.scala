@@ -245,6 +245,72 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       "docId collision after compaction+append")
   }
 
+  test("micro-batch blocks == naive termFreqs postings cut into 128-runs; manifest counts them") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-microblocks").toString
+    val opts = IndexBuilder.Options(numShards = 4, rangePartitions = 4)
+    val all = (0L until 500L).map(i => WebCorpus.page(29L, i))
+    def toDf(ps: Seq[WebCorpus.Page]) =
+      ps.map(p => (p.url, p.text, p.lang)).toDF("url", "text", "lang")
+    ResumableBuild.build(spark, toDf(all.take(200)), dir, opts, numChunks = 2)
+    val batch = all.drop(200)
+    val batchId = 3L
+    StreamingIndex.appendBatch(spark, toDf(batch), dir, opts, batchId)
+    val cid = SegmentCatalog.current(spark, dir).blockChunks.last
+    val shard = opts.numShards + batchId.toInt
+    // naive pass: url order from the parent's nextDocId (200), one
+    // Text.termFreqs per doc, each term's postings cut every 128 docIds
+    val byUrl = batch.sortBy(_.url).zipWithIndex.map { case (p, i) => (p, 200L + i) }
+    val want = byUrl
+      .flatMap { case (p, docId) =>
+        val (tfs, len) = core.Text.termFreqs(p.text)
+        tfs.map { case (t, tf) => (t, docId, tf, len) }
+      }
+      .groupBy(_._1).toSeq.flatMap { case (t, ps) =>
+        ps.sortBy(_._2).grouped(128).map(run => IndexBuilder.encodeBlock(t, shard,
+          run.map(_._2).toArray, run.map(_._3).toArray, run.map(_._4).toArray))
+      }
+    assert(want.exists(_.n == 128), "precondition: some term occurs in > 128 batch docs")
+    def key(b: Block) = (b.term, b.bucket, b.shard, b.firstDocId, b.lastDocId, b.n,
+      b.docBytes.toSeq, b.tfBytes.toSeq, b.dlBytes.toSeq, b.maxTf, b.minDl, b.tfSum)
+    val got = SegmentCatalog.readBlockChunks(spark, dir, Seq(cid)).collect()
+    assert(got.length == want.length)
+    assert(got.map(key).toSet == want.map(key).toSet)
+    val docs = SegmentCatalog.readDocChunks(spark, dir, Seq(cid)).collect()
+      .map(d => (d.docId, d.url, d.shard)).sorted.toSeq
+    assert(docs == byUrl.map { case (p, docId) => (docId, p.url, shard) })
+    // the batch's manifest row reports exactly what its blocks hold
+    val row = ResumableBuild.readManifest(spark, dir).find(_.chunk == 100000 + batchId)
+    assert(row.exists(r => r.status == "done" && r.docs == batch.size &&
+      r.postings == got.map(_.n.toLong).sum && r.blocks == got.length &&
+      r.metaBytes == got.map(b => core.Codec.vlen(b.maxTf) + core.Codec.vlen(b.minDl)).sum),
+      s"manifest row $row")
+  }
+
+  test("micro-batches honour docOrder=length: docLen non-decreasing in docId, same scores") {
+    import spark.implicits._
+    val all = (0L until 320L).map(i => WebCorpus.page(31L, i))
+    def toDf(ps: Seq[WebCorpus.Page]) =
+      ps.map(p => (p.url, p.text, p.lang)).toDF("url", "text", "lang")
+    def appended(order: String): InvertedIndex = {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-order-$order").toString
+      val opts = IndexBuilder.Options(numShards = 4, rangePartitions = 4, docOrder = order)
+      ResumableBuild.build(spark, toDf(all.take(200)), dir, opts, numChunks = 2)
+      StreamingIndex.appendBatch(spark, toDf(all.drop(200)), dir, opts, 0L)
+      StreamingIndex.refresh(spark, dir)
+    }
+    val (byUrl, byLen) = (appended("url"), appended("length"))
+    val lens = byLen.docs.filter($"docId" >= 200L).select($"docId", $"docLen")
+      .as[(Long, Int)].collect().sortBy(_._1).map(_._2).toSeq
+    val inversions = lens.indices.drop(1).count(i => lens(i - 1) > lens(i))
+    assert(lens.size == 120 && inversions == 0,
+      s"appended docs ignore docOrder=length: $inversions docLen inversions")
+    for (q <- Seq("t0 t1", "t7", "t5 t100 t2000")) {
+      def scores(ix: InvertedIndex) = ix.search(q, 20).as[(Long, Double)].collect().map(_._2).toSeq
+      assert(scores(byUrl) == scores(byLen), s"score sequence differs for '$q'")
+    }
+  }
+
   test("streaming hourly window agg == batch equivalent") {
     import spark.implicits._
     val events = (0 until 500).map { i =>
