@@ -236,8 +236,8 @@ object IndexCli {
     *   (empty line / EOF)           quit
     *
     * A line that fails (malformed key or vector, bad arity) answers
-    * `ERROR <reason>` and the loop goes on; the pinned cache is released
-    * however the loop ends.
+    * `ERROR <reason>` and the loop goes on; the pinned cache, the cached
+    * graph and the `:opt` checkpoint are released however the loop ends.
     *
     * Refresh protocol: a WRITE or OPTIMIZE changes cluster contents, so
     * the per-cluster serving cache rebuilds (close + re-pin); DELETE only
@@ -254,6 +254,10 @@ object IndexCli {
     // compact (append/compact drop codes by contract)
     val fusedModel: Option[Pq.Model] = g.pq
     var hot = HotAnn(g)
+    // the live `:opt` generation's localCheckpoint: the graphs after it
+    // (`:w` appends) read it, so it is released only when the next `:opt`
+    // replaces it or the loop ends
+    var ckpt: Option[org.apache.spark.sql.DataFrame] = None
     out(s"ready: ${g.centroids.length} clusters, k=$kAnn " +
       "(SEARCH 'v1,v2,...' | ':p <nProbe> <ef> v...' | ':t <tau> v...' " +
       "threshold | ':a <sim> <key> v...' next page | WRITE ':w <key> v...' " +
@@ -309,6 +313,11 @@ object IndexCli {
               val next = next0.copy(adj = next0.adj.localCheckpoint(true))
               next0.adj.unpersist()
               Nsw.save(spark, next, dir)
+              // the new generation reads only its own checkpoint: release
+              // the one it replaces (and any cache of that generation)
+              g.adj.unpersist()
+              ckpt.foreach(Nsw.releaseCheckpoint)
+              ckpt = Some(next.adj)
               g = next
               hot.close()
               hot = HotAnn(g)
@@ -328,7 +337,11 @@ object IndexCli {
         case scala.util.control.NonFatal(e) =>
           out(s"ERROR ${e.getClass.getSimpleName}: ${e.getMessage}")
       }
-    } finally hot.close()
+    } finally {
+      hot.close()
+      g.adj.unpersist()
+      ckpt.foreach(Nsw.releaseCheckpoint)
+    }
   }
 
   private def usage(): Unit = System.err.println(

@@ -15,7 +15,7 @@ import graft.index._
   * Prints one JSON line per size; results recorded in BASELINE.md.
   *
   * Skip ratios come from a driver-side run of the SAME Wand.topK kernel
-  * over the collected candidate blocks, per shard — identical work to
+  * over the collected candidate blocks, packed per shard — identical work to
   * the distributed path (per-shard heaps from a fresh θ), instrumented
   * via Wand.SearchStats.
   */
@@ -56,11 +56,11 @@ object ScaleProbe {
         }.toMap
         val byShard = ix.blocks.filter($"term".isin(terms: _*)).collect()
           .groupBy(_.shard).values.toSeq
-          .map(bs => Searcher.planBlocks(plan, Searcher.termMap(bs.iterator)))
+          .map(bs => Searcher.pack(bs.iterator))
         val st = new Wand.SearchStats
         var top10 = List.empty[ScoredDoc]
-        byShard.foreach { termBlocks =>
-          top10 = (top10 ++ Wand.topK(termBlocks, 10, avgdl, stats = st))
+        byShard.foreach { s =>
+          top10 = (top10 ++ Wand.topK(s, plan, 10, avgdl, Wand.DocFilter.All, null, st))
             .sortBy(sd => (-sd.score, sd.docId)).take(10)
         }
         decoded += st.decodedBlocks
@@ -69,7 +69,7 @@ object ScaleProbe {
         // block-max machinery exists for; its skip ratio is the scale story
         val tau = top10.lastOption.map(_.score).getOrElse(0.0)
         val ts = new Wand.SearchStats
-        byShard.foreach(Wand.threshold(_, tau, avgdl, stats = ts))
+        byShard.foreach(Wand.threshold(_, plan, tau, avgdl, Wand.DocFilter.All, ts))
         val lat = (0 until 7).map { _ =>
           val s = System.nanoTime(); hot.search(q, 10); (System.nanoTime() - s) / 1e6
         }.sorted

@@ -42,19 +42,51 @@ object Codec {
     buf.write(v.toInt)
   }
 
-  /** Decode all varbyte longs from bytes. */
-  def readVLongs(bytes: Array[Byte]): Array[Long] = {
-    val out = new scala.collection.mutable.ArrayBuffer[Long](BlockSize)
-    var i = 0
-    while (i < bytes.length) {
+  /** Decode `n` varbyte values from `bytes` at `off` into `out(0 until n)`;
+    * returns the offset just past the last value. The one varbyte reader:
+    * every decode goes through it, primitive end to end (no boxing, no
+    * intermediate buffer), so a caller can decode a block in place into
+    * arrays it reuses. */
+  def readVLongs(bytes: Array[Byte], off: Int, n: Int, out: Array[Long]): Int = {
+    var i = off
+    var j = 0
+    while (j < n) {
       var v = 0L; var shift = 0; var b = 0
       do {
         b = bytes(i) & 0xFF; i += 1
         v |= (b & 0x7FL) << shift; shift += 7
       } while ((b & 0x80) != 0)
-      out += v
+      out(j) = v
+      j += 1
     }
-    out.toArray
+    i
+  }
+
+  /** Number of varbyte values in `bytes` (one terminal byte each). */
+  private def count(bytes: Array[Byte]): Int = {
+    var c = 0
+    var i = 0
+    while (i < bytes.length) { if (bytes(i) >= 0) c += 1; i += 1 }
+    c
+  }
+
+  /** `n` delta-gap docIds from `bytes` at `off` into `out`, gaps undone from
+    * `base` (see [[encodeDocIds]]); returns the end offset. */
+  def readDocIds(bytes: Array[Byte], off: Int, n: Int, base: Long, out: Array[Long]): Int = {
+    val end = readVLongs(bytes, off, n, out)
+    var prev = base
+    var i = 0
+    while (i < n) { prev = prev + out(i) + 1; out(i) = prev; i += 1 }
+    end
+  }
+
+  /** `n` term frequencies (or doc lengths, same coding) from `bytes` at
+    * `off` into `out`; returns the end offset. */
+  def readTfs(bytes: Array[Byte], off: Int, n: Int, out: Array[Long]): Int = {
+    val end = readVLongs(bytes, off, n, out)
+    var i = 0
+    while (i < n) { out(i) += 1; i += 1 }
+    end
   }
 
   /** Delta-gap + varbyte encode a strictly-increasing docId run.
@@ -75,15 +107,8 @@ object Codec {
   }
 
   def decodeDocIds(bytes: Array[Byte], base: Long): Array[Long] = {
-    val gaps = readVLongs(bytes)
-    val out = new Array[Long](gaps.length)
-    var prev = base
-    var i = 0
-    while (i < gaps.length) {
-      prev = prev + gaps(i) + 1
-      out(i) = prev
-      i += 1
-    }
+    val out = new Array[Long](count(bytes))
+    readDocIds(bytes, 0, out.length, base, out)
     out
   }
 
@@ -100,10 +125,11 @@ object Codec {
   }
 
   def decodeTfs(bytes: Array[Byte]): Array[Int] = {
-    val vs = readVLongs(bytes)
+    val vs = new Array[Long](count(bytes))
+    readTfs(bytes, 0, vs.length, vs)
     val out = new Array[Int](vs.length)
     var i = 0
-    while (i < vs.length) { out(i) = (vs(i) + 1).toInt; i += 1 }
+    while (i < vs.length) { out(i) = vs(i).toInt; i += 1 }
     out
   }
 }

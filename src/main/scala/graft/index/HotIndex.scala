@@ -13,15 +13,20 @@ import graft.core.DoubleTopK
   *
   * The batch/search DataFrame path re-plans through Catalyst per query —
   * right for throughput, wrong for a serving loop where planning dominates
-  * (~100 ms/query). Here the index is materialized ONCE as a cached RDD of
-  * per-partition `term -> blocks` hash maps (shard-co-located, so one WAND
-  * run per partition is valid: shards are disjoint increasing docId
-  * ranges); a query is then a single `sc.runJob` over those cached maps —
-  * per-term O(1) lookup + the WAND kernel + a driver-side k-way merge, no
-  * per-query planning, shuffle, or scan. The query plan itself (idf +
-  * upper bound per term) comes from the driver-resident hot dictionary.
-  * The term maps and the kernel inputs come from [[Searcher]], the same
-  * code the DataFrame path runs, so both paths score bit-identically.
+  * (~100 ms/query). Here the index is materialized ONCE as a cached RDD
+  * holding one packed [[Searcher.Store]] per partition (shard-co-located,
+  * so one WAND run per partition is valid: shards are disjoint increasing
+  * docId ranges): the partition's blocks grouped by term, block metadata
+  * in primitive arrays and all payload bytes in one array, so the pinned
+  * cache costs the blocks' varbyte payload, ~32 B of metadata per block
+  * and one string per term. A query is
+  * then a single `sc.runJob` over those stores — a binary-search term
+  * lookup + the WAND kernel decoding in place + a driver-side k-way
+  * merge, no per-query planning, shuffle, or scan. The query plan itself
+  * (idf + upper bound per term) comes from the driver-resident hot
+  * dictionary. The stores and the kernel inputs come from [[Searcher]],
+  * the same code the DataFrame path runs, so both paths score
+  * bit-identically.
   *
   * This is the one deliberately non-declarative surface of the engine
   * (SURVEY §2.4 P5): serving latency is a per-partition imperative
@@ -30,9 +35,12 @@ import graft.core.DoubleTopK
   */
 final class HotIndex private (
     ix: InvertedIndex,
-    parts: RDD[java.util.HashMap[String, Array[Block]]]) {
+    parts: RDD[Searcher.Store]) {
 
   def stats: IndexStats = ix.stats
+
+  /** Id of the pinned RDD: the key of its `getRDDStorageInfo` entry. */
+  private[graft] def rddId: Int = parts.id
 
   /** Build the kernel filter from serving-side id sets, enforcing the
     * closure-size guard: these arrays ship with EVERY job closure, so they
@@ -101,19 +109,14 @@ final class HotIndex private (
     val filter = mkFilter(null, deny)
     val avgdl = ix.stats.avgdl
     val cap = maxResults
-    val perPart = runJob { m =>
-      val hits = Wand.threshold(Searcher.planBlocks(plan, m), tau, avgdl, filter).toArray
-      require(hits.length <= cap,
-        s"threshold query matched ${hits.length} docs in one partition, " +
-        s"over the serving result cap ($cap); run bulk threshold scans " +
-        "on the DataFrame path (InvertedIndex.searchThreshold)")
+    val perPart = runJob { s =>
+      val hits = Wand.threshold(s, plan, tau, avgdl, filter, null).toArray
+      HotIndex.requireUnderCap(hits.length, cap, "in one partition",
+        "InvertedIndex.searchThreshold")
       hits
     }
     val all = perPart.flatten.toArray
-    require(all.length <= cap,
-      s"threshold query matched ${all.length} docs, over the serving result " +
-      s"cap ($cap); run bulk threshold scans on the DataFrame path " +
-      "(InvertedIndex.searchThreshold)")
+    HotIndex.requireUnderCap(all.length, cap, "in total", "InvertedIndex.searchThreshold")
     scala.util.Sorting.stableSort(all,
       (x: ScoredDoc, y: ScoredDoc) =>
         x.score > y.score || (x.score == y.score && x.docId < y.docId))
@@ -121,7 +124,7 @@ final class HotIndex private (
   }
 
   /** Batch serving: ONE job scores every query against each partition's
-    * term map (shared scan, jvector SiftSmall.java:92-113 parallel batch
+    * store (shared scan, jvector SiftSmall.java:92-113 parallel batch
     * analog); returns per-query exact top-k. */
   def searchAll(queries: Seq[(Int, String)], k: Int,
                 deny: Array[Long] = Array.emptyLongArray): Seq[(Int, Array[ScoredDoc])] =
@@ -134,10 +137,8 @@ final class HotIndex private (
     if (k <= 0 || plans.forall(_._2.isEmpty)) return plans.map(p => (p._1, Array.empty[ScoredDoc]))
     val avgdl = ix.stats.avgdl
     val kk = k
-    val perPart = runJob { m =>
-      plans.map { case (qid, plan) =>
-        (qid, Wand.topK(Searcher.planBlocks(plan, m), kk, avgdl, filter, after = after))
-      }
+    val perPart = runJob { s =>
+      plans.map { case (qid, plan) => (qid, Wand.topK(s, plan, kk, avgdl, filter, after, null)) }
     }
     // tiny driver merge: numPartitions × k candidates per query, grouped
     // once so the merge is O(Q·P), not O(Q²·P)
@@ -152,10 +153,10 @@ final class HotIndex private (
     }
   }
 
-  /** The one serving job: `f` over every partition's term map. */
-  private def runJob[T](f: java.util.HashMap[String, Array[Block]] => T): Seq[T] =
+  /** The one serving job: `f` over every partition's store. */
+  private def runJob[T](f: Searcher.Store => T): Seq[T] =
     ix.spark.sparkContext.runJob(parts,
-      (it: Iterator[java.util.HashMap[String, Array[Block]]]) => it.map(f).toList).toSeq.flatten
+      (it: Iterator[Searcher.Store]) => it.map(f).toList).toSeq.flatten
 
   def close(): Unit = parts.unpersist()
 }
@@ -170,9 +171,18 @@ object HotIndex {
     * ONE driver array, so unbounded τ-scans must use the DataFrame path. */
   val ThresholdResultCap = 1000000
 
-  /** Materialize the serving cache: one `term -> firstDocId-sorted blocks`
-    * map per partition, built from the shard-partitioned block Dataset and
-    * pinned in executor memory. */
+  /** The serving result cap of a threshold query, checked on each
+    * partition's (or cluster's) hits before they ship and again on the
+    * merged result, since both land in driver memory. `dfPath` names the
+    * distributed twin that has no cap. */
+  private[graft] def requireUnderCap(n: Int, cap: Int, scope: String, dfPath: String): Unit =
+    require(n <= cap,
+      s"threshold query matched $n rows $scope, over the serving result cap " +
+      s"($cap); run bulk threshold scans on the DataFrame path ($dfPath)")
+
+  /** Materialize the serving cache: one packed [[Searcher.Store]] per
+    * partition, built from the shard-partitioned block Dataset and pinned
+    * in executor memory. */
   def apply(ix0: InvertedIndex, numPartitions: Int = 0): HotIndex = {
     val ix = if (ix0.hotDict != null) ix0 else ix0.withHotDict()
     val sc = ix.spark.sparkContext
@@ -184,7 +194,7 @@ object HotIndex {
     val parts = ix.blocks.rdd
       .map(b => (b.shard, b))
       .partitionBy(new HashPartitioner(p))
-      .mapPartitions(it => Iterator(Searcher.termMap(it.map(_._2))),
+      .mapPartitions(it => Iterator(Searcher.pack(it.map(_._2))),
         preservesPartitioning = true)
       .persist(StorageLevel.MEMORY_ONLY)
     parts.count() // materialize before first query

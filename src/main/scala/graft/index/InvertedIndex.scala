@@ -140,9 +140,8 @@ final case class InvertedIndex(
     val planB = spark.sparkContext.broadcast(plan)
     val avgdl = stats.avgdl
     val kk = k
-    val wand = (it: Iterator[Block], f: Wand.DocFilter) => Wand.topK(
-      Searcher.planBlocks(planB.value, Searcher.termMap(it)), kk, avgdl, f,
-      after = after).iterator
+    val wand = (it: Iterator[Block], f: Wand.DocFilter) =>
+      Wand.topK(Searcher.pack(it), planB.value, kk, avgdl, f, after, null).iterator
 
     val cand = candidateBlocks(plan.keys.toSeq)
 
@@ -185,7 +184,7 @@ final case class InvertedIndex(
     val planB = spark.sparkContext.broadcast(plan)
     val avgdl = stats.avgdl
     perShard(candidateBlocks(plan.keys.toSeq)) { it =>
-      Wand.threshold(Searcher.planBlocks(planB.value, Searcher.termMap(it)), tau, avgdl)
+      Wand.threshold(Searcher.pack(it), planB.value, tau, avgdl, Wand.DocFilter.All, null)
     }.toDF()
   }
 
@@ -203,9 +202,9 @@ final case class InvertedIndex(
     val avgdl = stats.avgdl
     val kk = k
     val local = perShard(candidateBlocks(allTerms)) { it =>
-      val m = Searcher.termMap(it)
+      val store = Searcher.pack(it)
       plansB.value.iterator.flatMap { case (qid, plan) =>
-        Wand.topK(Searcher.planBlocks(plan, m), kk, avgdl)
+        Wand.topK(store, plan, kk, avgdl, Wand.DocFilter.All, null, null)
           .iterator.map(sd => (qid, sd.docId, sd.score))
       }
     }.toDF("queryId", "docId", "score")
@@ -261,8 +260,8 @@ final case class InvertedIndex(
         val qid = key._1
         val rows = it.toArray
         val plan = rows.map { case (_, (_, t, idf, ub)) => t -> (idf, ub) }.toMap
-        Wand.topK(Searcher.planBlocks(plan, Searcher.termMap(rows.iterator.map(_._1))),
-          kk, avgdl).iterator.map(sd => (qid, sd.docId, sd.score))
+        Wand.topK(Searcher.pack(rows.iterator.map(_._1)), plan, kk, avgdl,
+          Wand.DocFilter.All, null, null).iterator.map(sd => (qid, sd.docId, sd.score))
       }
       .toDF("queryId", "docId", "score")
       .withColumn("rank", row_number().over(
@@ -447,28 +446,101 @@ object InvertedIndex {
 }
 
 /** Executor-side glue between block sets and the WAND kernel: every BM25
-  * search — DataFrame shard groups and [[HotIndex]] partitions alike —
-  * feeds [[Wand]] through these two, so the term set and the term-sorted
-  * cursor order (which fixes the fp summation order, hence bit-identical
-  * scores across paths) are decided in one place. */
+  * search — [[HotIndex]] partitions and DataFrame shard groups alike —
+  * packs its blocks with [[pack]] and resolves its plan with [[plan]], so
+  * the pinned layout, the term set and the term-sorted cursor order (which
+  * fixes the fp summation order, hence bit-identical scores across paths)
+  * are decided in one place. */
 private[graft] object Searcher {
-  /** One shard's (or partition's) blocks by term, each term's blocks
-    * sorted by firstDocId. */
-  def termMap(it: Iterator[Block]): java.util.HashMap[String, Array[Block]] = {
-    val m = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[Block]]()
-    it.foreach { b =>
-      m.computeIfAbsent(b.term, _ => new scala.collection.mutable.ArrayBuffer[Block]()) += b
-    }
-    val out = new java.util.HashMap[String, Array[Block]](m.size() * 2)
-    m.forEach((t, bs) => out.put(t, bs.sortBy(_.firstDocId).toArray))
-    out
+
+  /** One partition's (or shard group's) blocks as one immutable column
+    * store: blocks grouped by term, each term's run sorted by firstDocId,
+    * block metadata in primitive arrays and every payload byte in one
+    * array. Pinned, a block costs its ~32 B of metadata plus its payload,
+    * not a `Block` object with three byte arrays and a term string.
+    * @param terms sorted term index: term `terms(r)` owns range r (empty
+    *   for a ranges-only store, addressed by position)
+    * @param start range r is blocks `start(r) until start(r + 1)`
+    * @param off block i's `docBytes ++ tfBytes ++ dlBytes` start at
+    *   `payload(off(i))`; each section holds `n(i)` varbytes, so decoding
+    *   needs no per-section offsets */
+  final class Store private[Searcher] (
+      terms: Array[String],
+      val start: Array[Int],
+      val first: Array[Long],
+      val last: Array[Long],
+      val maxTf: Array[Int],
+      val minDl: Array[Int],
+      val n: Array[Int],
+      val off: Array[Int],
+      val payload: Array[Byte]) {
+    /** The range holding `term`'s blocks, or -1 when there are none. */
+    def range(term: String): Int =
+      math.max(-1, java.util.Arrays.binarySearch(terms.asInstanceOf[Array[AnyRef]], term))
   }
 
-  /** One query's (idf, ub, blocks) cursor inputs from a term map, in term
-    * order; a shared-scan map may hold terms the query does not contain. */
-  def planBlocks(plan: Map[String, (Double, Double)],
-                 m: java.util.HashMap[String, Array[Block]]): Seq[(Double, Double, Array[Block])] =
-    plan.toSeq.sortBy(_._1).flatMap { case (t, (idf, ub)) =>
-      Option(m.get(t)).map(bs => (idf, ub, bs))
+  /** Largest payload one store can address (an `Array[Byte]` index). */
+  private val MaxPayload = Int.MaxValue - 8
+
+  private val byFirstDocId: java.util.Comparator[Block] =
+    (a: Block, b: Block) => java.lang.Long.compare(a.firstDocId, b.firstDocId)
+
+  /** Pack one partition's blocks: one grouping pass by term, the term keys
+    * sorted once, each term's blocks sorted by firstDocId, then one copy. */
+  def pack(it: Iterator[Block]): Store = {
+    val byTerm = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[Block]]()
+    it.foreach { b =>
+      byTerm.computeIfAbsent(b.term, _ => new scala.collection.mutable.ArrayBuffer[Block](2)) += b
+    }
+    val terms = byTerm.keySet.toArray(new Array[String](0))
+    java.util.Arrays.sort(terms.asInstanceOf[Array[AnyRef]])
+    copy(terms, terms.map { t =>
+      val bs = byTerm.get(t).toArray
+      if (bs.length > 1) java.util.Arrays.sort(bs, byFirstDocId)
+      bs
+    })
+  }
+
+  /** Pack runs already sorted by firstDocId as ranges, range r = `runs(r)`,
+    * with no term index: the `Array[Block]` entry points of [[Wand]]. */
+  def pack(runs: Seq[Array[Block]]): Store = copy(Array.empty[String], runs.toArray)
+
+  private def copy(terms: Array[String], runs: Array[Array[Block]]): Store = {
+    val start = new Array[Int](runs.length + 1)
+    var bytes = 0L
+    var r = 0
+    while (r < runs.length) {
+      start(r + 1) = start(r) + runs(r).length
+      runs(r).foreach(b => bytes += b.docBytes.length + b.tfBytes.length + b.dlBytes.length)
+      r += 1
+    }
+    require(bytes <= MaxPayload,
+      s"one partition holds $bytes bytes of postings, over the 2 GiB a packed " +
+      "store can address; pin the index with more partitions")
+    val nb = start(runs.length)
+    val first, last = new Array[Long](nb)
+    val maxTf, minDl, n, off = new Array[Int](nb)
+    val payload = new Array[Byte](bytes.toInt)
+    var i = 0
+    var o = 0
+    def put(bs: Array[Byte]): Unit = {
+      System.arraycopy(bs, 0, payload, o, bs.length); o += bs.length
+    }
+    runs.foreach(_.foreach { b =>
+      first(i) = b.firstDocId; last(i) = b.lastDocId
+      maxTf(i) = b.maxTf; minDl(i) = b.minDl; n(i) = b.n; off(i) = o
+      put(b.docBytes); put(b.tfBytes); put(b.dlBytes)
+      i += 1
+    })
+    new Store(terms, start, first, last, maxTf, minDl, n, off, payload)
+  }
+
+  /** One query's (idf, ub, range) cursor inputs from a store, in term
+    * order; a shared-scan store may hold terms the query does not contain,
+    * and a query term the store lacks drops out. */
+  def plan(q: Map[String, (Double, Double)], s: Store): Seq[(Double, Double, Int)] =
+    q.toSeq.sortBy(_._1).flatMap { case (t, (idf, ub)) =>
+      val r = s.range(t)
+      if (r < 0) None else Some((idf, ub, r))
     }
 }

@@ -8,9 +8,16 @@ import graft.core.{Codec, DoubleTopK, Text}
   * bounded result heap, stop when best-possible < current-kth). Here the
   * same "upper bound vs θ" logic drives exact block skipping: a block is
   * decoded only if the idf·tf-part bound of the blocks covering the pivot can
-  * still beat θ, so payload bytes for skipped blocks are never read (the
-  * locality idea of jvector's FusedADC layout, graph/disk/FusedADC.java:
-  * 87-106, as metadata/payload column split).
+  * still beat θ, so payload bytes for skipped blocks are never read. The
+  * cursors run over a packed [[Searcher.Store]]: block metadata in
+  * primitive columns, apart from one payload array (the locality idea of
+  * jvector's FusedADC layout, graph/disk/FusedADC.java:87-106), so a skip
+  * touches only the metadata columns.
+  *
+  * Two kinds of entry point share the loop: the store ones (every engine
+  * path: [[HotIndex]] partitions, DataFrame shard groups) and the
+  * `Seq[(idf, ub, Array[Block])]` ones, which pack their input as ranges
+  * in the order given and run the same cursors.
   *
   * Every BM25 search runs ONE pivot/skip loop; only its sink differs
   * (one loop, like jvector's GraphSearcher.search serving top-k, threshold
@@ -24,26 +31,42 @@ import graft.core.{Codec, DoubleTopK, Text}
   */
 object Wand {
 
-  /** Per-term cursor over score-sorted blocks (firstDocId ascending).
-    * Block payloads decode lazily: `shallowTo` moves over block metadata
-    * only; decode happens on first deep access. */
+  /** Per-term cursor over one range of a packed [[Searcher.Store]] (the
+    * term's blocks, firstDocId ascending). Block metadata is read from the
+    * store's primitive columns; `shallowTo` moves over it only. A block's
+    * payload decodes lazily, on first deep access, in place into three
+    * buffers reused for every block — nothing is allocated per block. The
+    * buffers are sized to the term's largest block on the first decode, so
+    * a cursor that decodes nothing allocates nothing. */
   final class TermCursor(val idf: Double, val ub: Double,
-                         blocks: Array[Block], avgdl: Double) {
-    private var bi = 0
+                         s: Searcher.Store, range: Int, avgdl: Double) {
+    private val begin = s.start(range)
+    private val end = s.start(range + 1)
+    private var bi = begin
     private var pi = 0
+    private var pn = 0 // postings in the decoded block
     private var decodedBi = -1
+    private var bmBi = -1
+    private var bm = 0.0
     private var ids: Array[Long] = null
-    private var tfs: Array[Int] = null
-    private var dls: Array[Int] = null
+    private var tfs: Array[Long] = null
+    private var dls: Array[Long] = null
     var decodedBlocks = 0L // metric: blocks actually decoded (vs skipped)
 
-    @inline private def exhausted: Boolean = bi >= blocks.length
+    def blocks: Int = end - begin
+
+    @inline private def exhausted: Boolean = bi >= end
 
     private def decode(): Unit = if (decodedBi != bi) {
-      val b = blocks(bi)
-      ids = Codec.decodeDocIds(b.docBytes, -1L)
-      tfs = Codec.decodeTfs(b.tfBytes)
-      dls = Codec.decodeTfs(b.dlBytes)
+      if (ids == null) {
+        var m = 0
+        var i = begin
+        while (i < end) { m = math.max(m, s.n(i)); i += 1 }
+        ids = new Array[Long](m); tfs = new Array[Long](m); dls = new Array[Long](m)
+      }
+      pn = s.n(bi)
+      val o = Codec.readDocIds(s.payload, s.off(bi), pn, -1L, ids)
+      Codec.readTfs(s.payload, Codec.readTfs(s.payload, o, pn, tfs), pn, dls)
       decodedBi = bi
       decodedBlocks += 1
       pi = 0
@@ -52,22 +75,28 @@ object Wand {
     def curDoc: Long =
       if (exhausted) Long.MaxValue
       else if (decodedBi == bi) ids(pi)
-      else blocks(bi).firstDocId
+      else s.first(bi)
 
     /** Upper bound of this term's contribution for any doc in the current
       * block (exact block-max, evaluated under the CURRENT avgdl from the
-      * stored (maxTf, minDl) integers). */
+      * stored (maxTf, minDl) integers), computed once per block. */
     def blockMax: Double =
       if (exhausted) 0.0
-      else idf * Text.tfPartial(blocks(bi).maxTf, blocks(bi).minDl.toLong, avgdl)
+      else {
+        if (bmBi != bi) {
+          bm = idf * Text.tfPartial(s.maxTf(bi), s.minDl(bi).toLong, avgdl)
+          bmBi = bi
+        }
+        bm
+      }
 
-    def blockLast: Long = if (exhausted) Long.MaxValue else blocks(bi).lastDocId
+    def blockLast: Long = if (exhausted) Long.MaxValue else s.last(bi)
 
-    def score: Double = { decode(); idf * Text.tfPartial(tfs(pi), dls(pi), avgdl) }
+    def score: Double = { decode(); idf * Text.tfPartial(tfs(pi).toInt, dls(pi), avgdl) }
 
     /** Advance block pointer so blockLast >= target; metadata only. */
     def shallowTo(target: Long): Unit =
-      while (!exhausted && blocks(bi).lastDocId < target) { bi += 1 }
+      while (!exhausted && s.last(bi) < target) { bi += 1 }
 
     /** Advance to first posting with docId >= target. Stays metadata-only
       * when the landing block's firstDocId already satisfies the target —
@@ -76,16 +105,16 @@ object Wand {
       * touch only block headers. */
     def advanceTo(target: Long): Unit = {
       shallowTo(target)
-      if (!exhausted && !(decodedBi != bi && blocks(bi).firstDocId >= target)) {
+      if (!exhausted && !(decodedBi != bi && s.first(bi) >= target)) {
         decode()
         if (ids(pi) < target) {
-          var lo = pi; var hi = ids.length
+          var lo = pi; var hi = pn
           while (lo < hi) { // first index with ids >= target
             val mid = (lo + hi) >>> 1
             if (ids(mid) < target) lo = mid + 1 else hi = mid
           }
           pi = lo
-          if (pi >= ids.length) { bi += 1; advanceTo(target) }
+          if (pi >= pn) { bi += 1; advanceTo(target) }
         }
       }
     }
@@ -93,7 +122,7 @@ object Wand {
     def next(): Unit = {
       decode()
       pi += 1
-      if (pi >= ids.length) { bi += 1; pi = 0 }
+      if (pi >= pn) { bi += 1; pi = 0 }
     }
   }
 
@@ -127,8 +156,18 @@ object Wand {
            after: ScoredDoc = null,
            stats: SearchStats = null): Array[ScoredDoc] = {
     val top = new Top(k, after)
-    run(termBlocks, avgdl, filter, stats, top)
-    top.heap.drain().map { case (s, d) => ScoredDoc(d, s) }
+    run(Searcher.pack(termBlocks.map(_._3)), ranges(termBlocks), avgdl, filter, stats, top)
+    top.drain()
+  }
+
+  /** [[topK]] over a packed store: `plan` (term -> (idf, ub)) resolves to
+    * the store's term ranges through [[Searcher.plan]]. */
+  private[graft] def topK(s: Searcher.Store, plan: Map[String, (Double, Double)], k: Int,
+                          avgdl: Double, filter: DocFilter, after: ScoredDoc,
+                          stats: SearchStats): Array[ScoredDoc] = {
+    val top = new Top(k, after)
+    run(s, Searcher.plan(plan, s), avgdl, filter, stats, top)
+    top.drain()
   }
 
   /** All docs with BM25 score >= tau over one shard, in docId order
@@ -141,9 +180,23 @@ object Wand {
                 avgdl: Double, filter: DocFilter = DocFilter.All,
                 stats: SearchStats = null): Iterator[ScoredDoc] = {
     val atLeast = new AtLeast(tau)
-    run(termBlocks, avgdl, filter, stats, atLeast)
+    run(Searcher.pack(termBlocks.map(_._3)), ranges(termBlocks), avgdl, filter, stats, atLeast)
     atLeast.out.iterator
   }
+
+  /** [[threshold]] over a packed store (see the store [[topK]]). */
+  private[graft] def threshold(s: Searcher.Store, plan: Map[String, (Double, Double)],
+                               tau: Double, avgdl: Double, filter: DocFilter,
+                               stats: SearchStats): Iterator[ScoredDoc] = {
+    val atLeast = new AtLeast(tau)
+    run(s, Searcher.plan(plan, s), avgdl, filter, stats, atLeast)
+    atLeast.out.iterator
+  }
+
+  /** The `Array[Block]` entries' cursor inputs: range i of the store they
+    * pack is their i-th term, in the order given. */
+  private def ranges(termBlocks: Seq[(Double, Double, Array[Block])]): Seq[(Double, Double, Int)] =
+    termBlocks.indices.map(i => (termBlocks(i)._1, termBlocks(i)._2, i))
 
   /** Where the loop puts a scored doc, and the bar θ a doc's upper bound
     * must strictly beat to be worth scoring. */
@@ -159,6 +212,7 @@ object Wand {
     def offer(s: Double, d: Long): Unit =
       if (after == null || s < after.score || (s == after.score && d > after.docId))
         heap.offer(s, d)
+    def drain(): Array[ScoredDoc] = heap.drain().map { case (s, d) => ScoredDoc(d, s) }
   }
 
   /** Threshold: θ fixed at nextDown(τ), since for doubles
@@ -173,10 +227,10 @@ object Wand {
     * beats θ (strict: for top-k a later candidate has a larger docId, so
     * a score tie loses the tie-break). Skip: when the block maxima at the
     * pivot cannot beat θ, jump past the nearest block end undecoded. */
-  private def run(termBlocks: Seq[(Double, Double, Array[Block])], avgdl: Double,
+  private def run(store: Searcher.Store, terms: Seq[(Double, Double, Int)], avgdl: Double,
                   filter: DocFilter, stats: SearchStats, sink: Sink): Unit = {
-    val cursors = termBlocks
-      .map { case (idf, ub, bs) => new TermCursor(idf, ub, bs, avgdl) }
+    val cursors = terms
+      .map { case (idf, ub, r) => new TermCursor(idf, ub, store, r, avgdl) }
       .toArray
     val order = cursors.indices.toArray // sorted by curDoc each round
     var done = cursors.isEmpty
@@ -288,7 +342,7 @@ object Wand {
     }
     if (stats != null) {
       stats.decodedBlocks += cursors.map(_.decodedBlocks).sum
-      stats.totalBlocks += termBlocks.map(_._3.length.toLong).sum
+      stats.totalBlocks += cursors.map(_.blocks.toLong).sum
     }
   }
 }

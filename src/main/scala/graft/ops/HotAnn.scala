@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.storage.StorageLevel
+import graft.index.HotIndex
 
 import scala.collection.mutable
 
@@ -56,14 +57,19 @@ final class HotAnn private (
 
   /** Serving twin of [[Nsw.threshold]]: all keys with cosine >= tau in
     * the probed clusters, (sim desc, key asc). Results are collected to
-    * the caller, so each probed cluster enforces the serving result cap (the
-    * `HotIndex.searchThreshold` guard): a tau that matches more than
-    * `Nsw.FilterSetCap` rows per cluster must use the distributed
-    * `Nsw.threshold` DataFrame path instead. */
+    * the caller, so the serving result cap (`Nsw.FilterSetCap`, the
+    * `HotIndex.searchThreshold` guard) holds on each probed cluster and on
+    * the merged result: a tau that matches more rows must use the
+    * distributed `Nsw.threshold` DataFrame path instead. */
   def threshold(query: Seq[Float], tau: Double, nProbe: Int,
                 maxVisit: Int = Int.MaxValue,
                 metrics: Nsw.SearchMetrics = null): Array[(Long, Double)] =
-    search(query, nProbe, Nsw.Flood(tau, maxVisit), metrics)
+    threshold(query, tau, nProbe, maxVisit, metrics, Nsw.FilterSetCap)
+
+  /** [[threshold]] under a given result cap. */
+  private[graft] def threshold(query: Seq[Float], tau: Double, nProbe: Int, maxVisit: Int,
+                               metrics: Nsw.SearchMetrics, cap: Int): Array[(Long, Double)] =
+    search(query, nProbe, Nsw.Flood(tau, maxVisit), metrics, cap)
 
   /** Serving twin of [[Nsw.searchAfter]]: top-k strictly after `cursor`
     * in (sim desc, key asc) order — page 2+ without refetching page 1. */
@@ -73,29 +79,28 @@ final class HotAnn private (
     search(query, nProbe, Nsw.Beam(k, ef, Some(cursor)), metrics)
 
   /** One `runJob` over the probed partitions, each running the shared
-    * per-cluster kernel, then the merge of their hits. */
+    * per-cluster kernel, then the merge of their hits. A flood's hits are
+    * held to `cap` per cluster and in total. */
   private def search(query: Seq[Float], nProbe: Int, policy: Nsw.Policy,
-                     metrics: Nsw.SearchMetrics): Array[(Long, Double)] = {
+                     metrics: Nsw.SearchMetrics,
+                     cap: Int = Nsw.FilterSetCap): Array[(Long, Double)] = {
     val scorer = Nsw.Exact(Nsw.toQuery(query))
     val deny = deleted
+    val flood = policy.isInstanceOf[Nsw.Flood]
     val perCluster: Array[(Array[(Long, Double)], Int)] =
       sc.runJob(parts,
         (it: Iterator[Nsw.ClusterArrays]) =>
           if (!it.hasNext) (Array.empty[(Long, Double)], 0)
           else {
             val (hits, visited) = Nsw.searchCluster(it.next(), scorer, policy, deny)
-            policy match {
-              case Nsw.Flood(tau, _) => require(hits.length <= Nsw.FilterSetCap,
-                s"threshold tau=$tau matched ${hits.length} rows in one cluster, " +
-                s"beyond the serving materialization cap (${Nsw.FilterSetCap}); " +
-                "use the Nsw.threshold DataFrame path for broad-range queries")
-              case _ =>
-            }
+            if (flood) HotIndex.requireUnderCap(hits.length, cap, "in one cluster", "Nsw.threshold")
             (hits, visited)
           },
         Ann.probeOrder(centroids, scorer.q, nProbe).toIndexedSeq)
     if (metrics != null) metrics.visited = perCluster.map(_._2.toLong).sum
-    Nsw.mergeHits(perCluster.flatMap(_._1), policy.limit)
+    val all = perCluster.flatMap(_._1)
+    if (flood) HotIndex.requireUnderCap(all.length, cap, "across the probed clusters", "Nsw.threshold")
+    Nsw.mergeHits(all, policy.limit)
   }
 
   def close(): Unit = parts.unpersist()

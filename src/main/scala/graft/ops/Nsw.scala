@@ -1097,10 +1097,20 @@ object Nsw {
       staged.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("c").parquet(s"$dir/adj")
-      staged.unpersist()
+      releaseCheckpoint(staged)
     }
     publishMeta(spark, graph, dir, maxStreamBatch)
   }
+
+  /** Drop the blocks of a `localCheckpoint`ed Dataset. `Dataset.unpersist`
+    * does not: the checkpoint RDD stays persistent until the GC collects
+    * the Dataset. Call it only once nothing reads the Dataset again — the
+    * checkpoint has no lineage to recompute from. */
+  private[graft] def releaseCheckpoint(ds: Dataset[_]): Unit =
+    ds.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist()
+      case _ =>
+    }
 
   /** The replay mark of a saved graph (-1 when none recorded). */
   def loadStreamBatch(spark: SparkSession, dir: String): Long = {

@@ -64,12 +64,41 @@ class CoreSpec extends AnyFunSuite {
       val enc = Codec.encodeDocIds(ids, -1L)
       assert(Codec.decodeDocIds(enc, -1L).toSeq == ids.toSeq)
     }
+    // three runs concatenated in one buffer, each decoded in place from
+    // its offset into a reused array; every end offset is exact
+    forAllSeeded() { rnd =>
+      val runs = Array.fill(3)(Array.fill(rnd.nextInt(200))(rnd.nextLong(1L << 40)).distinct.sorted)
+      val encs = runs.map(Codec.encodeDocIds(_, -1L))
+      val buf = encs.flatten
+      val out = new Array[Long](200)
+      var off = 0
+      runs.zip(encs).foreach { case (ids, enc) =>
+        val end = Codec.readDocIds(buf, off, ids.length, -1L, out)
+        assert(end == off + enc.length)
+        assert(out.take(ids.length).toSeq == ids.toSeq)
+        off = end
+      }
+    }
   }
 
   test("codec: tf varbyte round-trips (property)") {
     forAllSeeded() { rnd =>
       val tfs = Array.fill(rnd.nextInt(300))(1 + rnd.nextInt(1 << 20))
       assert(Codec.decodeTfs(Codec.encodeTfs(tfs)).toSeq == tfs.toSeq)
+    }
+    // three runs concatenated in one buffer, decoded from their offsets
+    forAllSeeded() { rnd =>
+      val runs = Array.fill(3)(Array.fill(rnd.nextInt(300))(1 + rnd.nextInt(1 << 20)))
+      val encs = runs.map(Codec.encodeTfs)
+      val buf = encs.flatten
+      val out = new Array[Long](300)
+      var off = 0
+      runs.zip(encs).foreach { case (tfs, enc) =>
+        val end = Codec.readTfs(buf, off, tfs.length, out)
+        assert(end == off + enc.length)
+        assert(out.take(tfs.length).toSeq == tfs.toSeq.map(_.toLong))
+        off = end
+      }
     }
   }
 

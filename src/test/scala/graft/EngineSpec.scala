@@ -542,6 +542,62 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (t == null) "" else t.getMessage + " | " + msgChain(t.getCause)
     assert(msgChain(capped).contains("serving result cap"), msgChain(capped))
     hot.close()
+
+    // one partition holding several bulk shards plus an appended
+    // micro-batch shard, with terms of exactly 128 and 129 postings in one
+    // shard (one full block; a full block plus one)
+    val dir = java.nio.file.Files.createTempDirectory("graft-hot-packed").toString
+    val opts = IndexBuilder.Options(numShards = 3, rangePartitions = 3)
+    val rnd = new scala.util.Random(128)
+    val pages = (0 until 540).map { i =>
+      val words = Seq.fill(5 + rnd.nextInt(30))(s"w${rnd.nextInt(12)}") ++
+        (if (i < 128 || i >= 510) Seq.fill(1 + rnd.nextInt(3))("p128") else Nil) ++
+        (if (i < 129 || i >= 520) Seq.fill(1 + rnd.nextInt(3))("p129") else Nil)
+      (f"https://packed.example/$i%04d", rnd.shuffle(words).mkString(" "), "en")
+    }
+    ResumableBuild.build(spark, pages.take(500).toDF("url", "text", "lang"), dir, opts, numChunks = 1)
+    graft.streaming.StreamingIndex.appendBatch(spark, pages.drop(500).toDF("url", "text", "lang"),
+      dir, opts, 0L, streamId = "packed")
+    val live = graft.streaming.StreamingIndex.refresh(spark, dir)
+    def runs(t: String, shard: Int) = live.blocks.filter($"term" === t && $"shard" === shard)
+      .select($"n").as[Int].collect().sorted.toSeq
+    assert(runs("p128", 0) == Seq(128) && runs("p129", 0) == Seq(1, 128))
+    assert(live.blocks.select($"shard").distinct().count() == 4) // 3 bulk + the micro-batch
+    val one = HotIndex(live, numPartitions = 1)
+    def dfRows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"docId", $"score").as[(Long, Double)].collect().toSeq
+    def rows(h: Array[ScoredDoc]) = h.map(sd => (sd.docId, sd.score)).toSeq
+    Seq("p128", "p129", "p128 p129", "p128 w3", "p129 w0 w7").foreach { q =>
+      Seq(10, 200).foreach { k =>
+        assert(rows(one.search(q, k)) == dfRows(live.search(q, k)), s"packed search '$q' k=$k")
+      }
+      val top = dfRows(live.search(q, 20))
+      val tauP = top(9)._2
+      assert(rows(one.searchThreshold(q, tauP)) ==
+        dfRows(live.searchThreshold(q, tauP)).sortBy(r => (-r._2, r._1)), s"packed threshold '$q'")
+      assert(rows(one.searchAfter(q, 10, top(9)._2, top(9)._1)) == top.drop(10),
+        s"packed searchAfter '$q'")
+    }
+    one.close()
+  }
+
+  test("HotIndex pins packed stores: cache memSize <= half the same blocks as term -> Array[Block] maps") {
+    val hot = HotIndex(index)
+    val st = spark.sparkContext.getRDDStorageInfo.filter(_.id == hot.rddId)
+    assert(st.length == 1 && st(0).numCachedPartitions == st(0).numPartitions)
+    val pinned = st(0).memSize
+    // the layout a pinned partition replaced: one Block object per block
+    // in a term -> firstDocId-sorted blocks map per partition
+    val part = new org.apache.spark.HashPartitioner(st(0).numPartitions)
+    val maps = index.blocks.collect().groupBy(b => part.getPartition(b.shard)).values.map { bs =>
+      val m = new java.util.HashMap[String, Array[Block]]()
+      bs.groupBy(_.term).foreach { case (t, tb) => m.put(t, tb.sortBy(_.firstDocId)) }
+      m
+    }.toArray
+    val asMaps = org.apache.spark.util.SizeEstimator.estimate(maps)
+    info(f"pinned ${pinned / 1e6}%.2f MB vs ${asMaps / 1e6}%.2f MB as Block maps")
+    assert(pinned > 0 && pinned * 2 <= asMaps, s"pinned $pinned B vs $asMaps B as Block maps")
+    hot.close()
   }
 
   test("empty and degenerate queries") {

@@ -840,4 +840,58 @@ class NswSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Nsw.load(spark, dir).lvq.isEmpty)
     fused.unpersist()
   }
+
+  test("annserve loop: a :w + :del + :opt session leaves none of its RDDs persistent") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(54)
+    val emb = clustered(rnd, 300, 8, 3).toDF("vec_id", "embedding")
+    val g = Nsw.build(spark, emb, "vec_id", "embedding",
+      Nsw.Params(m = 4, efConstruction = 16, kCenters = 3, iters = 1))
+    val dir = java.nio.file.Files.createTempDirectory("graft-annserve-release").toString
+    Nsw.save(spark, g, dir)
+    g.unpersist()
+    val v = Seq.fill(8)(rnd.nextGaussian().toFloat).mkString(",")
+    // every RDD the session creates gets an id above this one
+    val mark = spark.sparkContext.emptyRDD[Int].id
+    val outs = scala.collection.mutable.ArrayBuffer[String]()
+    graft.IndexCli.annServeLoop(spark, dir, 5, Iterator(
+      s":w 7777 $v", ":del 7777,3", ":opt", s":w 7778 $v", ":del 7778", ":opt",
+      s":p 3 2000000000 $v"), outs += _)
+    assert(outs.size == 8 && !outs.exists(_.startsWith("ERROR")), outs.mkString("\n"))
+    assert(outs(3).contains("OPTIMIZED (299 nodes") && outs(6).contains("OPTIMIZED (299 nodes"),
+      outs.mkString("\n"))
+    val left = spark.sparkContext.getPersistentRDDs.keys.filter(_ > mark).toSeq.sorted
+    assert(left.isEmpty, s"RDDs the session left persistent: ${left.mkString(", ")}")
+    assert(Nsw.load(spark, dir).adj.count() == 299)
+  }
+
+  test("HotAnn.threshold caps the merged result, not only each cluster") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(55)
+    val rows = clustered(rnd, 400, 8, 4)
+    val g = Nsw.build(spark, rows.toDF("vec_id", "embedding"), "vec_id", "embedding",
+      Nsw.Params(m = 6, efConstruction = 24, kCenters = 4, iters = 2))
+    val hot = HotAnn(g)
+    val q = rows(0)._2
+    // tau = -1 matches every node: each cluster returns its members
+    val all = hot.threshold(q, -1.0, nProbe = 4)
+    assert(all.length == 400)
+    val sizes = g.adj.groupBy($"c").count().select($"count").as[Long].collect()
+    assert(sizes.length == 4 && sizes.max < 400)
+    def msgChain(t: Throwable): String =
+      if (t == null) "" else t.getMessage + " | " + msgChain(t.getCause)
+    // every cluster fits the cap, the merged result does not
+    val total = intercept[IllegalArgumentException] {
+      hot.threshold(q, -1.0, 4, Int.MaxValue, null, sizes.max.toInt)
+    }
+    assert(msgChain(total).contains("across the probed clusters"), msgChain(total))
+    // a cluster over the cap fails in its task, before its rows ship
+    val one = intercept[Exception] {
+      hot.threshold(q, -1.0, 4, Int.MaxValue, null, sizes.max.toInt - 1)
+    }
+    assert(msgChain(one).contains("in one cluster"), msgChain(one))
+    assert(hot.threshold(q, -1.0, 4, Int.MaxValue, null, 400).toSeq == all.toSeq)
+    hot.close()
+    g.unpersist()
+  }
 }

@@ -3,8 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.concurrent.TimeLimits
 import org.scalatest.time.{Span, Seconds}
-import graft.core.Text
-import graft.index.{Block, IndexBuilder, ScoredDoc, Wand}
+import graft.core.{Codec, Text}
+import graft.index.{Block, IndexBuilder, ScoredDoc, Searcher, Wand}
 import scala.util.Random
 
 /** Randomized equivalence: Block-Max WAND vs naive exact scoring, pure
@@ -50,6 +50,56 @@ class WandSpec extends AnyFunSuite with TimeLimits {
       }
     }
     (termBlocks, naive.toMap, avgdl)
+  }
+
+  /** One serving partition's blocks: `bulk` range shards of `perShard`
+    * docs plus an appended micro-batch shard of `batch` docs after them,
+    * every (term, shard) run cut into [[Codec.BlockSize]] blocks. Shard 0
+    * holds exactly 128 postings of `p128` and 129 of `p129` (one full
+    * block; a full block plus one), and the micro-batch holds both again.
+    * @return the query's term-sorted (idf, ub, blocks), the naive scores,
+    *   avgdl, every block of the partition and the query plan */
+  def makePartition(rnd: Random, bulk: Int = 3, perShard: Int = 150, batch: Int = 40):
+      (Seq[(Double, Double, Array[Block])], Map[Long, Double], Double, Array[Block],
+        Map[String, (Double, Double)]) = {
+    val nDocs = bulk * perShard + batch
+    val vocab = 4 + rnd.nextInt(30)
+    val docs = (0 until nDocs).map { d =>
+      val planted =
+        (if (d < 128 || d >= bulk * perShard + batch / 2) Seq.fill(1 + rnd.nextInt(3))("p128") else Nil) ++
+        (if (d < 129 || d >= bulk * perShard + batch / 4) Seq.fill(1 + rnd.nextInt(3))("p129") else Nil)
+      Array.fill(1 + rnd.nextInt(30))(s"w${rnd.nextInt(vocab)}") ++ planted
+    }
+    def shardOf(d: Long): Int = math.min(bulk, (d / perShard).toInt)
+    val avgdl = docs.map(_.length).sum.toDouble / nDocs
+    val byTerm = scala.collection.mutable.Map[String, Vector[(Long, Int, Int)]]()
+    docs.zipWithIndex.foreach { case (toks, d) =>
+      toks.groupBy(identity).foreach { case (t, occ) =>
+        byTerm(t) = byTerm.getOrElse(t, Vector.empty) :+ ((d.toLong, occ.length, toks.length))
+      }
+    }
+    val blocksOf = byTerm.map { case (t, ps) =>
+      t -> ps.sortBy(_._1).groupBy(p => shardOf(p._1)).toSeq.sortBy(_._1).flatMap { case (sh, run) =>
+        run.grouped(Codec.BlockSize).map { g =>
+          IndexBuilder.encodeBlock(t, sh, g.map(_._1).toArray, g.map(_._2).toArray, g.map(_._3).toArray)
+        }
+      }.toArray
+    }
+    val query = (Seq("p128", "p129") ++ Seq.fill(rnd.nextInt(3))(s"w${rnd.nextInt(vocab)}"))
+      .distinct.filter(byTerm.contains).sorted
+    val plan = query.map { t =>
+      val idf = Text.idf(byTerm(t).length.toLong, nDocs.toLong)
+      t -> (idf, idf * blocksOf(t).map(b => Text.tfPartial(b.maxTf, b.minDl.toLong, avgdl)).max)
+    }.toMap
+    val naive = scala.collection.mutable.Map[Long, Double]()
+    query.foreach { t =>
+      val idf = plan(t)._1
+      byTerm(t).foreach { case (d, tf, dl) =>
+        naive(d) = naive.getOrElse(d, 0.0) + idf * Text.tfPartial(tf, dl, avgdl)
+      }
+    }
+    (query.map(t => (plan(t)._1, plan(t)._2, blocksOf(t))), naive.toMap, avgdl,
+      blocksOf.values.flatten.toArray, plan)
   }
 
   test("wand topK == naive exact topK (500 random corpora)") {
@@ -215,8 +265,8 @@ class WandSpec extends AnyFunSuite with TimeLimits {
       def set(ds: Iterable[Long]) = {
         val s = new java.util.HashSet[java.lang.Long](); ds.foreach(d => s.add(d)); s
       }
-      (0 until 150).foreach { iter =>
-        val (termBlocks, naive, avgdl) = makeCorpus(rnd, 20 + rnd.nextInt(300), 2 + rnd.nextInt(30))
+      def axes(ctx0: String, rnd: Random, termBlocks: Seq[(Double, Double, Array[Block])],
+               naive: Map[Long, Double], avgdl: Double): Unit = {
         val ranked = naive.toSeq.sortBy { case (d, s) => (-s, d) }
         val allowed = ranked.map(_._1).filter(_ => rnd.nextBoolean()).toSet
         val filters = Seq[(String, Long => Boolean, Wand.DocFilter)](
@@ -227,7 +277,7 @@ class WandSpec extends AnyFunSuite with TimeLimits {
         filters.foreach { case (fname, keep, f) =>
           val kept = ranked.filter(h => keep(h._1))
           def check(policy: String, got: Seq[ScoredDoc], want: Seq[(Long, Double)]): Unit = {
-            val ctx = s"iter=$iter filter=$fname policy=$policy"
+            val ctx = s"$ctx0 filter=$fname policy=$policy"
             assert(got.map(_.docId) == want.map(_._1), ctx)
             got.zip(want).foreach { case (g, (_, s)) => assert(math.abs(g.score - s) < 1e-12, ctx) }
           }
@@ -242,6 +292,17 @@ class WandSpec extends AnyFunSuite with TimeLimits {
           check("threshold", Wand.threshold(termBlocks, tau, avgdl, f).toSeq.sortBy(_.docId),
             kept.filter(_._2 >= tau).sortBy(_._1))
         }
+      }
+      (0 until 150).foreach { iter =>
+        val (termBlocks, naive, avgdl) = makeCorpus(rnd, 20 + rnd.nextInt(300), 2 + rnd.nextInt(30))
+        axes(s"iter=$iter", rnd, termBlocks, naive, avgdl)
+      }
+      // a partition of several bulk shards plus a micro-batch shard, with
+      // runs of exactly 128 and 129 postings in one shard
+      val prnd = new Random(4343)
+      (0 until 20).foreach { iter =>
+        val (termBlocks, naive, avgdl, _, _) = makePartition(prnd)
+        axes(s"partition=$iter", prnd, termBlocks, naive, avgdl)
       }
     }
   }
@@ -262,5 +323,27 @@ class WandSpec extends AnyFunSuite with TimeLimits {
       s"${st.decodedBlocks}/${st.totalBlocks} after two threshold calls")
     Wand.topK(termBlocks, 3, avgdl, stats = st)
     assert(st.totalBlocks == 3 * total && st.decodedBlocks == 2 * dTau + dTop)
+  }
+
+  test("packed store: a whole partition packed once ≡ the Array[Block] entry, equal block counts") {
+    val rnd = new Random(31)
+    (0 until 20).foreach { iter =>
+      val (termBlocks, _, avgdl, all, plan) = makePartition(rnd)
+      def shard0(t: String) = all.filter(b => b.term == t && b.shard == 0).sortBy(_.firstDocId).map(_.n).toSeq
+      assert(shard0("p128") == Seq(128) && shard0("p129") == Seq(128, 1))
+      assert(all.map(_.shard).distinct.length == 4) // 3 bulk shards + the micro-batch
+      // a shared-scan store: every term of the partition, blocks in any order
+      val store = Searcher.pack(rnd.shuffle(all.toSeq).iterator)
+      assert(store.range("nosuchterm") == -1)
+      val k = 1 + rnd.nextInt(15)
+      val tau = 0.2 + rnd.nextDouble() * 2
+      val (sa, sb) = (new Wand.SearchStats, new Wand.SearchStats)
+      assert(Wand.topK(termBlocks, k, avgdl, stats = sa).toSeq ==
+        Wand.topK(store, plan, k, avgdl, Wand.DocFilter.All, null, sb).toSeq, s"iter=$iter")
+      assert(Wand.threshold(termBlocks, tau, avgdl, stats = sa).toSeq ==
+        Wand.threshold(store, plan, tau, avgdl, Wand.DocFilter.All, sb).toSeq, s"iter=$iter")
+      assert(sa.totalBlocks > 0 && sa.decodedBlocks > 0)
+      assert((sa.decodedBlocks, sa.totalBlocks) == (sb.decodedBlocks, sb.totalBlocks), s"iter=$iter")
+    }
   }
 }
