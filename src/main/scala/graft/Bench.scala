@@ -130,8 +130,9 @@ object Bench {
         name -> t
       }
       // warm query latency, both access paths:
-      //  - serving path (HotIndex: cached per-partition term maps + runJob,
-      //    no per-query planning) — the number a long-lived service sees;
+      //  - serving path (HotIndex: pinned per-partition packed stores, one
+      //    job per query through HotIndex.serve, no per-query planning) —
+      //    the number a long-lived service sees;
       //  - DataFrame path (per-query Catalyst plan over the prepared cache)
       //    — the number a batch job sees per ad-hoc query.
       val ix = Gate.index(spark, sfDir)
@@ -145,7 +146,7 @@ object Bench {
       }).sorted
       hot.close()
       // warm ANN serving latency (HotAnn — the vector twin of HotIndex):
-      // cached per-cluster graphs + probe-pruned runJob, production knobs
+      // cached per-cluster graphs + one probe-pruned job, production knobs
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       val gAnn = graft.ops.Nsw.build(spark, emb, "vec_id", "embedding",
         graft.ops.Nsw.Params(m = 8, efConstruction = 32, kCenters = 8, iters = 2))

@@ -188,8 +188,9 @@ object IndexCli {
         // service protocol (jvector IPCService.java:84-97,107-230: SEARCH
         // plus the WRITE/DELETE/OPTIMIZE mutation commands over a resident
         // graph): load a saved NSW graph once, pin per-cluster arrays hot
-        // (HotAnn), answer searches from the cache (~10 ms warm) and apply
-        // mutations with a durable write + cache refresh.
+        // (HotAnn), answer searches from the cache (one job each, about
+        // 8 ms warm on a 4-core machine) and apply mutations with a
+        // durable write + cache refresh.
         if (args.length < 2) { usage(); sys.exit(2) }
         val spark = session(cpus)
         spark.sparkContext.setLogLevel("WARN")

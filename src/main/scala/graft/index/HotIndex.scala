@@ -5,6 +5,10 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.storage.StorageLevel
 import graft.core.DoubleTopK
 
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+import scala.util.control.NonFatal
+
 /** Long-lived serving handle over a built index — the engine's analog of
   * the reference's resident query service (jvector
   * jvector-examples/.../IPCService.java:325-368 serves from a graph held
@@ -20,7 +24,7 @@ import graft.core.DoubleTopK
   * in primitive arrays and all payload bytes in one array, so the pinned
   * cache costs the blocks' varbyte payload, ~32 B of metadata per block
   * and one string per term. A query is
-  * then a single `sc.runJob` over those stores — a binary-search term
+  * then one Spark job over those stores — a binary-search term
   * lookup + the WAND kernel decoding in place + a driver-side k-way
   * merge, no per-query planning, shuffle, or scan. The query plan itself
   * (idf + upper bound per term) comes from the driver-resident hot
@@ -109,7 +113,7 @@ final class HotIndex private (
     val filter = mkFilter(null, deny)
     val avgdl = ix.stats.avgdl
     val cap = maxResults
-    val perPart = runJob { s =>
+    val perPart = everyPartition { s =>
       val hits = Wand.threshold(s, plan, tau, avgdl, filter, null).toArray
       HotIndex.requireUnderCap(hits.length, cap, "in one partition",
         "InvertedIndex.searchThreshold")
@@ -137,7 +141,7 @@ final class HotIndex private (
     if (k <= 0 || plans.forall(_._2.isEmpty)) return plans.map(p => (p._1, Array.empty[ScoredDoc]))
     val avgdl = ix.stats.avgdl
     val kk = k
-    val perPart = runJob { s =>
+    val perPart = everyPartition { s =>
       plans.map { case (qid, plan) => (qid, Wand.topK(s, plan, kk, avgdl, filter, after, null)) }
     }
     // tiny driver merge: numPartitions × k candidates per query, grouped
@@ -154,9 +158,8 @@ final class HotIndex private (
   }
 
   /** The one serving job: `f` over every partition's store. */
-  private def runJob[T](f: Searcher.Store => T): Seq[T] =
-    ix.spark.sparkContext.runJob(parts,
-      (it: Iterator[Searcher.Store]) => it.map(f).toList).toSeq.flatten
+  private def everyPartition[T](f: Searcher.Store => T): Seq[T] =
+    HotIndex.serve(parts, parts.partitions.indices)(_.map(f).toList).flatten
 
   def close(): Unit = parts.unpersist()
 }
@@ -180,6 +183,44 @@ object HotIndex {
       s"threshold query matched $n rows $scope, over the serving result cap " +
       s"($cap); run bulk threshold scans on the DataFrame path ($dfPath)")
 
+  /** The one way a serving handle runs a job: `f` over each of
+    * `partitions` of `rdd`, results in the order of `partitions`, as
+    * `SparkContext.runJob` returns them.
+    *
+    * `runJob` would hand `f`, wrapped in a lambda of its own, to
+    * `SparkContext.clean`, whose `ClosureCleaner` reads and parses that
+    * lambda's class bytecode from the spark-core jar on every call. Here
+    * `f` travels inside the named class [[ServeTask]], on which `clean`
+    * returns at once, and `submitJob` hands its own wrapper to the
+    * scheduler uncleaned. The scheduler still serializes the task binary,
+    * so a task capturing something unserializable still fails its job.
+    *
+    * A failed job rethrows the scheduler's exception, whose message
+    * carries the task's reason, with the caller's stack appended (as
+    * `runJob` does), not the `awaitResult` wrapper of
+    * `SimpleFutureAction.get`. The result handler fills `out` on the
+    * scheduler's thread before the job's future completes, and awaiting
+    * that completion makes the writes visible here. */
+  private[graft] def serve[T, U](rdd: RDD[T], partitions: Seq[Int])(
+      f: Iterator[T] => U): IndexedSeq[U] = {
+    val out = new Array[Any](partitions.size)
+    val job = rdd.sparkContext.submitJob(rdd, new ServeTask(f), partitions,
+      (i: Int, r: U) => out(i) = r, ())
+    try Await.result(job, Duration.Inf)
+    catch {
+      case NonFatal(e) =>
+        e.setStackTrace(e.getStackTrace ++ Thread.currentThread.getStackTrace.tail)
+        throw e
+    }
+    out.toIndexedSeq.asInstanceOf[IndexedSeq[U]]
+  }
+
+  /** The partition function of every serving job; see [[serve]]. */
+  private final class ServeTask[T, U](f: Iterator[T] => U)
+      extends (Iterator[T] => U) with Serializable {
+    def apply(it: Iterator[T]): U = f(it)
+  }
+
   /** Materialize the serving cache: one packed [[Searcher.Store]] per
     * partition, built from the shard-partitioned block Dataset and pinned
     * in executor memory. */
@@ -188,7 +229,7 @@ object HotIndex {
     val sc = ix.spark.sparkContext
     // never exceed the shard count: blocks hash-partition by shard, so
     // partitions beyond numShards are structurally EMPTY yet still cost a
-    // scheduled task in every runJob — pure per-query latency overhead
+    // scheduled task in every serving job — pure per-query latency overhead
     val p = if (numPartitions > 0) numPartitions
             else math.max(1, math.min(sc.defaultParallelism, ix.stats.numShards))
     val parts = ix.blocks.rdd

@@ -123,8 +123,8 @@ object Ann {
   /** The probe router shared by every clustered search (IVF, NSW,
     * HotAnn): the `nProbe` centroids nearest `q` by squared L2, nearest
     * first; the sort is stable, so ties go to the smaller centroid index. */
-  private[ops] def probeOrder(cs: Array[Array[Double]], q: Array[Double],
-                              nProbe: Int): Array[Int] = {
+  private[graft] def probeOrder(cs: Array[Array[Double]], q: Array[Double],
+                                nProbe: Int): Array[Int] = {
     val d = cs.map(sqDist(q, _))
     cs.indices.toArray.sortBy(d(_)).take(nProbe)
   }

@@ -18,7 +18,7 @@ import scala.collection.mutable
   * materialized ONCE as assembled arrays (keys, float32 vectors, index
   * adjacency, medioid entry) in a cached RDD whose partition index IS the
   * cluster id; a query then ranks centroids on the driver and issues one
-  * `sc.runJob` over ONLY the nProbe probed partitions — no planning, no
+  * Spark job over ONLY the nProbe probed partitions — no planning, no
   * shuffle, no scan, and unprobed clusters don't even get a task. The
   * driver merge is nProbe·k rows.
   *
@@ -30,7 +30,6 @@ import scala.collection.mutable
   * the same persisted format the DataFrame path reads.
   */
 final class HotAnn private (
-    sc: org.apache.spark.SparkContext,
     parts: RDD[Nsw.ClusterArrays],
     centroids: Array[Array[Double]],
     deleted: Set[Long]) {
@@ -52,7 +51,7 @@ final class HotAnn private (
     require(d.size <= Nsw.FilterSetCap,
       s"tombstone set of ${d.size} keys exceeds the serving closure cap " +
       s"(${Nsw.FilterSetCap}); Nsw.compact the graph and re-pin instead")
-    new HotAnn(sc, parts, centroids, d)
+    new HotAnn(parts, centroids, d)
   }
 
   /** Serving twin of [[Nsw.threshold]]: all keys with cosine >= tau in
@@ -78,7 +77,7 @@ final class HotAnn private (
                   metrics: Nsw.SearchMetrics = null): Array[(Long, Double)] =
     search(query, nProbe, Nsw.Beam(k, ef, Some(cursor)), metrics)
 
-  /** One `runJob` over the probed partitions, each running the shared
+  /** One serving job over the probed partitions, each running the shared
     * per-cluster kernel, then the merge of their hits. A flood's hits are
     * held to `cap` per cluster and in total. */
   private def search(query: Seq[Float], nProbe: Int, policy: Nsw.Policy,
@@ -87,18 +86,17 @@ final class HotAnn private (
     val scorer = Nsw.Exact(Nsw.toQuery(query))
     val deny = deleted
     val flood = policy.isInstanceOf[Nsw.Flood]
-    val perCluster: Array[(Array[(Long, Double)], Int)] =
-      sc.runJob(parts,
-        (it: Iterator[Nsw.ClusterArrays]) =>
-          if (!it.hasNext) (Array.empty[(Long, Double)], 0)
-          else {
-            val (hits, visited) = Nsw.searchCluster(it.next(), scorer, policy, deny)
-            if (flood) HotIndex.requireUnderCap(hits.length, cap, "in one cluster", "Nsw.threshold")
-            (hits, visited)
-          },
-        Ann.probeOrder(centroids, scorer.q, nProbe).toIndexedSeq)
+    val perCluster = HotIndex.serve(parts,
+        Ann.probeOrder(centroids, scorer.q, nProbe).toIndexedSeq) { it =>
+      if (!it.hasNext) (Array.empty[(Long, Double)], 0)
+      else {
+        val (hits, visited) = Nsw.searchCluster(it.next(), scorer, policy, deny)
+        if (flood) HotIndex.requireUnderCap(hits.length, cap, "in one cluster", "Nsw.threshold")
+        (hits, visited)
+      }
+    }
     if (metrics != null) metrics.visited = perCluster.map(_._2.toLong).sum
-    val all = perCluster.flatMap(_._1)
+    val all = perCluster.flatMap(_._1).toArray
     if (flood) HotIndex.requireUnderCap(all.length, cap, "across the probed clusters", "Nsw.threshold")
     Nsw.mergeHits(all, policy.limit)
   }
@@ -130,7 +128,6 @@ object HotAnn {
       }, preservesPartitioning = true)
       .persist(StorageLevel.MEMORY_ONLY)
     parts.count() // materialize before first query
-    new HotAnn(graph.adj.sparkSession.sparkContext, parts, graph.centroids,
-      graph.deleted.toSet)
+    new HotAnn(parts, graph.centroids, graph.deleted.toSet)
   }
 }

@@ -600,6 +600,61 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     hot.close()
   }
 
+  test("HotIndex failures carry their reason at the top level; a failed job leaves the handle serving") {
+    val hot = HotIndex(index)
+    // the per-partition result cap fails inside a task: the message the
+    // caller sees first (what `annserve` prints) must name the reason
+    val capped = intercept[Exception] {
+      hot.searchThreshold("t0 t1", 0.0001, maxResults = 1)
+    }
+    assert(capped.getMessage.contains("in one partition"), capped.getMessage)
+    // a serving task that captures something unserializable fails its
+    // job with a SparkException naming the class; the pinned RDD answers
+    // the next call unchanged
+    val before = hot.search("t0 t1", 10).toSeq
+    val pinned = spark.sparkContext.getPersistentRDDs(hot.rddId)
+    final class NotShippable(val n: Int)
+    val held = new NotShippable(3)
+    val bad = intercept[org.apache.spark.SparkException] {
+      HotIndex.serve(pinned, pinned.partitions.indices)(it => it.size + held.n)
+    }
+    assert(bad.getMessage.contains("NotShippable"), bad.getMessage)
+    assert(HotIndex.serve(pinned, pinned.partitions.indices)(_.size).sum ==
+      pinned.getNumPartitions)
+    assert(hot.search("t0 t1", 10).toSeq == before)
+    hot.close()
+  }
+
+  test("HotIndex job shape: search, searchThreshold and a 50-query searchAll each run one job, one task per pinned partition") {
+    val hot = HotIndex(index)
+    val sc = spark.sparkContext
+    val every = 0 until sc.getPersistentRDDs(hot.rddId).getNumPartitions
+    val qs = (0 until 50).map(i => (i, s"t$i t${i * 37}"))
+    val calls = Seq[(String, () => Int)](
+      "search" -> (() => hot.search("t0 t1", 10).length),
+      "searchThreshold" -> (() => hot.searchThreshold("t5 t100 t2000", 1.0).length),
+      "searchAll" -> (() => hot.searchAll(qs, 10).count(_._2.nonEmpty)))
+    calls.foreach { case (name, call) =>
+      val (hits, shape) = ServingProbes.jobShape(sc)(call())
+      assert(hits > 0, s"$name: premise, the call finds something")
+      assert(shape == ServingProbes.Shape(1, every), s"$name: $shape")
+    }
+    hot.close()
+  }
+
+  test("HotIndex concurrent callers: 4 threads x 25 queries answer bit-identically to one thread") {
+    val hot = HotIndex(index)
+    val qs = (0 until 25).map(i => s"t$i t${i * 41} t${i * 997}")
+    def bits(h: Array[ScoredDoc]) =
+      h.map(sd => (sd.docId, java.lang.Double.doubleToRawLongBits(sd.score))).toSeq
+    val want = qs.map(q => bits(hot.search(q, 10)))
+    assert(want.count(_.nonEmpty) > 20, "premise: the queries find documents")
+    val got = ServingProbes.concurrently(4, qs.size)(i => bits(hot.search(qs(i), 10)))
+    assert(got.size == 100)
+    got.foreach { case (i, g) => assert(g == want(i), s"query '${qs(i)}' differs under concurrency") }
+    hot.close()
+  }
+
   test("empty and degenerate queries") {
     assert(engineTopK("", 10).isEmpty)
     assert(engineTopK("zzzznope", 10).isEmpty)

@@ -300,7 +300,7 @@ class NswSpec extends AnyFunSuite with BeforeAndAfterAll {
     Nsw.topK(g, q, 10, 4, 32, metrics = mDf).collect()
     assert(mHot.visited == mDf.visited && mHot.visited > 0)
     // warm serving is planning-free: after the first call, a query is a
-    // single runJob over probed partitions — sanity-bound the latency
+    // single job over probed partitions — sanity-bound the latency
     hot.topK(q, 10, 2, 48)
     val t0 = System.nanoTime()
     (0 until 5).foreach(_ => hot.topK(q, 10, 2, 48))
@@ -891,6 +891,64 @@ class NswSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(msgChain(one).contains("in one cluster"), msgChain(one))
     assert(hot.threshold(q, -1.0, 4, Int.MaxValue, null, 400).toSeq == all.toSeq)
+    hot.close()
+    g.unpersist()
+  }
+
+  test("HotAnn failures carry their reason at the top level") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(56)
+    val rows = clustered(rnd, 400, 8, 4)
+    val g = Nsw.build(spark, rows.toDF("vec_id", "embedding"), "vec_id", "embedding",
+      Nsw.Params(m = 6, efConstruction = 24, kCenters = 4, iters = 2))
+    val hot = HotAnn(g)
+    val q = rows(0)._2
+    val before = hot.topK(q, 10, 4, 32).toSeq
+    // tau = -1 matches every node, so every cluster is over a cap of 1
+    val one = intercept[Exception] {
+      hot.threshold(q, -1.0, 4, Int.MaxValue, null, 1)
+    }
+    assert(one.getMessage.contains("in one cluster"), one.getMessage)
+    assert(hot.topK(q, 10, 4, 32).toSeq == before)
+    hot.close()
+    g.unpersist()
+  }
+
+  test("HotAnn job shape: topK(nProbe = 2) runs one job with a task on each probed cluster only") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(57)
+    val rows = clustered(rnd, 600, 8, 6)
+    val g = Nsw.build(spark, rows.toDF("vec_id", "embedding"), "vec_id", "embedding",
+      Nsw.Params(m = 6, efConstruction = 24, kCenters = 6, iters = 2))
+    val hot = HotAnn(g)
+    val probedSets = (0 until 6).map { i =>
+      val q = rows(i * 97)._2
+      val (hits, shape) = ServingProbes.jobShape(spark.sparkContext)(hot.topK(q, 10, nProbe = 2, ef = 32))
+      val probed = Ann.probeOrder(g.centroids, q.map(_.toDouble).toArray, 2).toSeq.sorted
+      assert(hits.length == 10)
+      assert(shape == ServingProbes.Shape(1, probed), s"query $i: $shape, probes $probed")
+      probed
+    }
+    assert(probedSets.flatten.distinct.size > 2, "premise: the queries probe different clusters")
+    hot.close()
+    g.unpersist()
+  }
+
+  test("HotAnn concurrent callers: 4 threads x 25 queries answer bit-identically to one thread") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(58)
+    val rows = clustered(rnd, 800, 8, 4)
+    val g = Nsw.build(spark, rows.toDF("vec_id", "embedding"), "vec_id", "embedding",
+      Nsw.Params(m = 6, efConstruction = 24, kCenters = 4, iters = 2))
+    val hot = HotAnn(g)
+    val qs = (0 until 25).map(i => randVec(new scala.util.Random(100 + i), 8))
+    def bits(h: Array[(Long, Double)]) =
+      h.map { case (key, sim) => (key, java.lang.Double.doubleToRawLongBits(sim)) }.toSeq
+    val want = qs.map(q => bits(hot.topK(q, 10, 2, 32)))
+    assert(want.forall(_.size == 10))
+    val got = ServingProbes.concurrently(4, qs.size)(i => bits(hot.topK(qs(i), 10, 2, 32)))
+    assert(got.size == 100)
+    got.foreach { case (i, a) => assert(a == want(i), s"query $i differs under concurrency") }
     hot.close()
     g.unpersist()
   }
