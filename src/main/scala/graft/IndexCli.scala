@@ -231,17 +231,19 @@ object IndexCli {
     *                                touched cluster partitions + meta)
     *   :del <key>[,<key>...]        DELETE — tombstone keys (meta only)
     *   :opt                         OPTIMIZE — compact tombstones away,
-    *                                re-attach PQ codes if the graph was
-    *                                fused, full durable save (a no-op
-    *                                when there is nothing to purge)
+    *                                re-attach the PQ or LVQ codes the
+    *                                graph was loaded with, full durable
+    *                                save (a no-op when there is nothing
+    *                                to purge)
     *   (empty line / EOF)           quit
     *
     * A line that fails (malformed key or vector, bad arity) answers
-    * `ERROR <reason>` and the loop goes on; the pinned cache, the cached
-    * graph and the `:opt` checkpoint are released however the loop ends.
+    * `ERROR <reason>` and the loop goes on; the pinned cache and the live
+    * generation are released however the loop ends.
     *
     * Refresh protocol: a WRITE or OPTIMIZE changes cluster contents, so
-    * the per-cluster serving cache rebuilds (close + re-pin); DELETE only
+    * the per-cluster serving cache rebuilds (close + re-pin) and the
+    * generation it replaces retires; DELETE only
     * changes the deny set, so the cache is REUSED via HotAnn.withDeleted
     * (O(1) — same pinned arrays, new filter). Searches between commands
     * always see the latest committed state. */
@@ -249,16 +251,18 @@ object IndexCli {
                                   dir: String, kAnn: Int,
                                   in: Iterator[String],
                                   out: String => Unit): Unit = {
-    import graft.ops.{HotAnn, Nsw, Pq}
+    import graft.ops.{HotAnn, Nsw}
     var g = Nsw.load(spark, dir)
-    // remember the fused model (if any) so OPTIMIZE can re-attach after
+    // the codes the graph was loaded with: OPTIMIZE re-attaches them after
     // compact (append/compact drop codes by contract)
-    val fusedModel: Option[Pq.Model] = g.pq
+    val (pq, lvq) = (g.pq, g.lvq)
     var hot = HotAnn(g)
-    // the live `:opt` generation's localCheckpoint: the graphs after it
-    // (`:w` appends) read it, so it is released only when the next `:opt`
-    // replaces it or the loop ends
-    var ckpt: Option[org.apache.spark.sql.DataFrame] = None
+    def advance(next: Nsw.Graph): Unit = {
+      hot.close()
+      hot = HotAnn(next) // membership changed: re-pin
+      g.unpersist()
+      g = next
+    }
     out(s"ready: ${g.centroids.length} clusters, k=$kAnn " +
       "(SEARCH 'v1,v2,...' | ':p <nProbe> <ef> v...' | ':t <tau> v...' " +
       "threshold | ':a <sim> <key> v...' next page | WRITE ':w <key> v...' " +
@@ -283,9 +287,7 @@ object IndexCli {
               .toDF("key", "v")
             val (next, touched) = Nsw.appendTouched(spark, g, batch, "key", "v")
             Nsw.saveTouched(spark, next, dir, touched)
-            g = next
-            hot.close()
-            hot = HotAnn(g) // membership changed: re-pin touched arrays
+            if (next ne g) advance(next)
             out(f"[$ms%.1f ms] WROTE $key (clusters ${touched.mkString(",")})")
           case ":t" :: tau :: rest =>
             val hits = hot.threshold(parseVec(rest.mkString), tau.toDouble,
@@ -305,23 +307,15 @@ object IndexCli {
             out(f"[$ms%.1f ms] DELETED (${g.deleted.length} live tombstones)")
           case ":opt" :: Nil =>
             val compacted = Nsw.compact(spark, g)
-            // nothing purged: the dir already holds this graph (and a
-            // loaded/appended graph's plan reads it — never save onto it)
+            // nothing purged: the dir already holds this graph
             if (compacted ne g) {
-              val next0 = fusedModel.fold(compacted)(Nsw.attachPqWith(spark, compacted, _))
-              // sever lineage before overwriting the dir the plan reads
-              // (same hazard saveTouched guards; full save here)
-              val next = next0.copy(adj = next0.adj.localCheckpoint(true))
-              next0.adj.unpersist()
+              val next = pq.map(Nsw.attachPqWith(spark, compacted, _))
+                .orElse(lvq.map(Nsw.attachLvqWith(spark, compacted, _)))
+                .getOrElse(compacted)
+              if (next ne compacted) compacted.unpersist()
+              // every generation owns its rows: the save reads none of the dir
               Nsw.save(spark, next, dir)
-              // the new generation reads only its own checkpoint: release
-              // the one it replaces (and any cache of that generation)
-              g.adj.unpersist()
-              ckpt.foreach(Nsw.releaseCheckpoint)
-              ckpt = Some(next.adj)
-              g = next
-              hot.close()
-              hot = HotAnn(g)
+              advance(next)
             }
             out(f"[$ms%.1f ms] OPTIMIZED (${g.adj.count()} nodes, " +
               s"${g.deleted.length} tombstones)")
@@ -340,8 +334,7 @@ object IndexCli {
       }
     } finally {
       hot.close()
-      g.adj.unpersist()
-      ckpt.foreach(Nsw.releaseCheckpoint)
+      g.unpersist()
     }
   }
 

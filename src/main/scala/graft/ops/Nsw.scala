@@ -45,11 +45,12 @@ import scala.collection.mutable
   *    after-cursor, or threshold flood).
   *  - MUTATE incrementally (the reference's core contract —
   *    addGraphNode GraphIndexBuilder.java:314-362, markNodeDeleted /
-  *    removeDeletedNodes :427-531): [[append]] inserts new vectors into
-  *    only the touched clusters' graphs; [[delete]] tombstones keys that
-  *    search then traverses THROUGH but never returns (the `Bits
-  *    acceptOrds` pattern, GraphSearcher.java:191,258); [[compact]]
-  *    purges tombstones by rebuilding only the affected clusters.
+  *    removeDeletedNodes :427-531): [[append]] upserts vectors and
+  *    [[compact]] purges tombstones through one write step that rewrites
+  *    only the touched clusters' graphs and returns a generation owning
+  *    its own checkpoint; [[delete]] tombstones keys that search then
+  *    traverses THROUGH but never returns (the `Bits acceptOrds` pattern,
+  *    GraphSearcher.java:191,258).
   *
   * Vectors are stored float32 (what the reference stores,
   * vector/types/VectorFloat.java) and widened to double inside every
@@ -149,13 +150,29 @@ object Nsw {
     *   near-lossless 4x representation — the reference's LVQ-in-graph
     *   layout (graph/disk/LVQ.java wraps the adjacency the same way).
     *   At most one of pq/lvq is attached at a time (each attach re-maps
-    *   the rows and drops the other's columns). */
+    *   the rows and drops the other's columns).
+    *
+    * Ownership: a mutation's result (append, compact, attach) holds its
+    * rows in an eager `localCheckpoint` of its own; its plan never reads
+    * the parent's plan or a loaded dir's files. [[delete]] returns a copy
+    * sharing its parent's rows: retire one of the two. */
   final case class Graph(adj: DataFrame, centroids: Array[Array[Double]],
                          params: Params, clusterLocal: Boolean = true,
                          deleted: Array[Long] = Array.emptyLongArray,
                          pq: Option[Pq.Model] = None,
                          lvq: Option[Lvq.Model] = None) {
-    def unpersist(): Unit = adj.unpersist()
+    /** Retire this generation: release its cache and its own checkpoint,
+      * never what its plan merely reads (a parent, a caller's input). */
+    def unpersist(): Unit = { adj.unpersist(); dropCheckpoint(adj) }
+  }
+
+  /** Drop a `localCheckpoint`ed Dataset's RDD (its plan's root), which
+    * `Dataset.unpersist` leaves persistent until the GC collects it. Only
+    * once nothing reads it again: a checkpoint cannot be recomputed. */
+  private def dropCheckpoint(ds: Dataset[_]): Unit = ds.queryExecution.logical match {
+    case r: org.apache.spark.sql.execution.LogicalRDD if r.rdd.isCheckpointed =>
+      r.rdd.unpersist()
+    case _ =>
   }
 
   /** Per-query work metrics (jvector SearchResult.java:22-53): nodes
@@ -306,9 +323,9 @@ object Nsw {
     * for natural candidates, diversity-prune, link bidirectionally, prune
     * overflowing neighbor lists (GraphIndexBuilder.addGraphNode:314-362,
     * re-expressed single-threaded per cluster — Spark's task isolation
-    * replaces its concurrent-insert protocol). Shared verbatim by the
-    * bulk build and [[append]], which is what makes "append ≡ the build
-    * having seen those nodes" literal. */
+    * replaces its concurrent-insert protocol). Every build, append and
+    * compact runs it from [[rewriteClusters]], which is what makes "append
+    * ≡ the build having seen those nodes" literal. */
   private def insertNode(vecs: Array[Array[Float]], adj: Array[Array[Int]],
                          i: Int, m: Int, efC: Int): Unit = {
     val maxDeg = 2 * m
@@ -329,21 +346,6 @@ object Nsw {
       t += 1
     }
     prune(i)
-  }
-
-  /** One cluster's NSW adjacency (insert in index order; callers pass
-    * vectors sorted by key so the result depends only on the cluster's
-    * membership, not on task scheduling). */
-  private[ops] def buildCluster(vecs: Array[Array[Float]],
-                                m: Int, efC: Int): Array[Array[Int]] = {
-    val n = vecs.length
-    val adj = Array.fill(n)(Array.empty[Int])
-    var i = 1
-    while (i < n) {
-      insertNode(vecs, adj, i, m, efC)
-      i += 1
-    }
-    adj
   }
 
   /** The cluster's medioid: node most similar to the routing centroid
@@ -432,7 +434,7 @@ object Nsw {
   }
 
   /** (c, key, v) rows: each vector cast to float32 and routed to its
-    * nearest centroid — the one assignment build, append and compact share. */
+    * nearest centroid — the one assignment build and append share. */
   private def route(spark: SparkSession, emb: DataFrame, keyCol: String, vecCol: String,
                     cB: Broadcast[Array[Array[Double]]]): DataFrame = {
     import spark.implicits._
@@ -443,32 +445,60 @@ object Nsw {
       .toDF("c", "key", "v")
   }
 
-  /** Build every cluster among one partition's (c, key, v) rows from
-    * scratch (a task may hold several clusters; each builds independently). */
-  private def buildClusters(it: Iterator[(Int, Long, Seq[Float])], m: Int, efC: Int,
-                            centroids: Array[Array[Double]])
+  /** Row kinds of the rewrite: stored, leaving its cluster, joining it. */
+  private val Kept: Byte = 0
+  private val Gone: Byte = 1
+  private val Added: Byte = 2
+
+  /** The one per-cluster rewrite body behind build, append and compact (a
+    * task may hold several clusters). A cluster that loses members is
+    * rebuilt from its survivors (they re-insert in key order from an empty
+    * adjacency: exactly a fresh build of that membership); one that loses
+    * none keeps its adjacency. Joining rows then insert in key order (the
+    * addGraphNode loop) and the medioid entry is refreshed. */
+  private def rewriteClusters(it: Iterator[(Int, Long, Seq[Float], Seq[Long], Boolean, Byte)],
+                              m: Int, efC: Int, centroids: Array[Array[Double]])
       : Iterator[(Int, Long, Seq[Float], Seq[Long], Boolean)] = {
-    val byCluster = new java.util.HashMap[Int,
-      mutable.ArrayBuffer[(Long, Array[Float], Array[Long], Boolean)]]()
-    it.foreach { case (c, k, v) =>
-      byCluster.computeIfAbsent(c, _ => new mutable.ArrayBuffer)
-        .append((k, toFloatArray(v), Array.emptyLongArray, false))
+    final class Slot {
+      val kept = new mutable.ArrayBuffer[(Long, Array[Float], Array[Long], Boolean)]
+      val gone = new mutable.HashSet[Long]
+      val added = new mutable.ArrayBuffer[(Long, Array[Float])]
+    }
+    val byCluster = new java.util.HashMap[Int, Slot]()
+    it.foreach { case (c, k, v, nb, e, kind) =>
+      val slot = byCluster.computeIfAbsent(c, _ => new Slot)
+      if (kind == Kept) slot.kept.append((k, toFloatArray(v), nb.toArray, e))
+      else if (kind == Gone) slot.gone += k
+      else slot.added.append((k, toFloatArray(v)))
     }
     import scala.jdk.CollectionConverters._
-    byCluster.asScala.iterator.flatMap { case (c, rows) =>
-      val ca = assemble(rows)
-      emitRows(c, ca.keys, ca.vecs, buildCluster(ca.vecs, m, efC),
-        entryOf(ca.vecs, centroids(c)))
+    byCluster.asScala.iterator.flatMap { case (c, slot) =>
+      val live = slot.kept.filterNot(r => slot.gone.contains(r._1))
+      val rebuild = live.length < slot.kept.length
+      val ca = assemble(
+        if (rebuild) live.map(r => (r._1, r._2, Array.emptyLongArray, false)) else live)
+      val add = slot.added.sortInPlaceBy(_._1)
+      val n0 = ca.keys.length
+      val n = n0 + add.length
+      val keys = java.util.Arrays.copyOf(ca.keys, n)
+      val vecs = java.util.Arrays.copyOf(ca.vecs, n)
+      val adj = java.util.Arrays.copyOf(ca.adj, n)
+      var i = 0
+      while (i < add.length) {
+        keys(n0 + i) = add(i)._1
+        vecs(n0 + i) = add(i)._2
+        adj(n0 + i) = Array.emptyIntArray
+        i += 1
+      }
+      // node 0 of an empty adjacency has nothing to link to
+      i = if (rebuild) 1 else math.max(1, n0)
+      while (i < n) { insertNode(vecs, adj, i, m, efC); i += 1 }
+      val entry = entryOf(vecs, centroids(c))
+      keys.indices.iterator.map { j =>
+        (c, keys(j), vecs(j).toSeq, adj(j).map(keys(_)).toSeq, j == entry)
+      }
     }
   }
-
-  /** Emit a built cluster back to rows. */
-  private def emitRows(c: Int, keys: Array[Long], vecs: Array[Array[Float]],
-                       adj: Array[Array[Int]], entry: Int)
-      : Iterator[(Int, Long, Seq[Float], Seq[Long], Boolean)] =
-    keys.indices.iterator.map { i =>
-      (c, keys(i), vecs(i).toSeq, adj(i).map(keys(_)).toSeq, i == entry)
-    }
 
   /** NOTE on precision (public contract, shared by build/append/save):
     * vectors are STORED float32 (the reference's storage type). For
@@ -493,153 +523,139 @@ object Nsw {
                          params: Params): Graph = {
     import spark.implicits._
     val cB = spark.sparkContext.broadcast(centroids)
-    // one shuffle keyed by cluster; a task may receive several clusters
-    // (hash collisions) and builds each independently
+    // one shuffle keyed by cluster; every row joins an empty cluster
     val m = params.m
     val efC = params.efConstruction
     val adj = route(spark, emb, keyCol, vecCol, cB)
       .repartition(params.kCenters, col("c"))
       .as[(Int, Long, Seq[Float])]
-      .mapPartitions(it => buildClusters(it, m, efC, cB.value))
+      .mapPartitions { it =>
+        rewriteClusters(it.map { case (c, k, v) => (c, k, v, Seq.empty[Long], false, Added) },
+          m, efC, cB.value)
+      }
       .toDF("c", "key", "v", "nbrs", "entry")
     Graph(adj.persist(), centroids, params)
   }
 
-  /** Incremental insert (reference addGraphNode,
+  /** Incremental write (reference addGraphNode,
     * GraphIndexBuilder.java:314-362 — B2 applied to the vector side):
-    * route the new vectors to their clusters and insert them into ONLY
-    * the touched clusters' graphs; untouched clusters' rows pass through
-    * unread. Insertion order within a batch is key order, so the result
-    * is a pure function of (existing graph, batch membership). The
-    * entry medioid is refreshed per touched cluster. Centroids stay
-    * FIXED (the router is the stable part, same as the BM25 side's
-    * shards; re-clustering is a rebuild).
+    * route the batch's vectors to their clusters and rewrite ONLY the
+    * clusters whose rows change; the others pass through unread.
+    * Insertion order within a batch is key order, so the result is a pure
+    * function of (existing graph, batch membership). The entry medioid is
+    * refreshed per touched cluster. Centroids stay FIXED (the router is
+    * the stable part, same as the BM25 side's shards; re-clustering is a
+    * rebuild).
     *
-    * The parent graph's cache is RELEASED once the appended graph is
-    * materialized (same contract as [[attachPqWith]]) — chaining appends
-    * holds one cached generation, not one per call. Callers that still
-    * need the parent afterwards recompute it from lineage (deterministic:
-    * the adjacency is a pure function of membership + batch history). */
+    * A write is an UPSERT: a key stored with another float32 vector, or
+    * tombstoned, loses its old row (that cluster is rebuilt, also when the
+    * new vector routes elsewhere) and its tombstone, so it lives in exactly
+    * one row. A live key written with an equal float32 vector (elementwise
+    * SQL equality: bit-identical, or -0.0 for 0.0) is a no-op, so a
+    * replayed batch reproduces the identical graph. The later batch wins;
+    * a batch repeating a key with differing vectors is rejected before
+    * anything is written (a DataFrame has no arrival order to pick the
+    * last by). The result owns its rows (see [[Graph]]); the parent is
+    * left as it was for callers still reading it. */
   def append(spark: SparkSession, graph: Graph, emb: DataFrame,
              keyCol: String, vecCol: String): Graph =
     appendTouched(spark, graph, emb, keyCol, vecCol)._1
 
-  /** [[append]] + the set of cluster ids the batch touched — computed from
-    * the routing pass append does anyway, so callers that need it for an
-    * incremental persist ([[saveTouched]], [[graft.streaming.StreamingNsw]])
-    * don't route the batch a second time. */
+  /** [[append]] + the clusters whose rows changed — exactly the partitions
+    * [[saveTouched]] must rewrite — from the routing pass append does
+    * anyway, so callers ([[saveTouched]],
+    * [[graft.streaming.StreamingNsw]]) don't route the batch a second
+    * time. A batch that changes nothing returns the parent itself and no
+    * cluster. */
   def appendTouched(spark: SparkSession, graph: Graph, emb: DataFrame,
                     keyCol: String, vecCol: String): (Graph, Set[Int]) = {
     import spark.implicits._
     val cB = spark.sparkContext.broadcast(graph.centroids)
-    val fresh = route(spark, emb, keyCol, vecCol, cB).persist()
-    val touched = fresh.select("c").distinct().as[Int].collect().toSet
-    if (touched.isEmpty) { fresh.unpersist(); return (graph, touched) }
-    val m = graph.params.m
-    val efC = graph.params.efConstruction
-    // appended/compacted graphs drop any fused PQ codes (new nodes have
-    // none and the codebooks would be stale) — re-run attachPq if needed
-    val untouchedRows = graph.adj.filter(!inIntSet(col("c"), touched))
-      .select(BaseCols: _*)
-    val existing = nodes(graph.adj.filter(inIntSet(col("c"), touched)))
-      .map { case (c, k, v, nb, e) => (c, k, v, nb, e, false) }
-    val incoming = fresh.as[(Int, Long, Seq[Float])]
-      .map { case (c, k, v) => (c, k, v, Seq.empty[Long], false, true) }
-    val rebuilt = existing.union(incoming)
-      .repartition(math.max(1, touched.size), col("_1"))
-      .mapPartitions { it =>
-        // existing rows keep their adjacency; new rows (flagged) insert
-        // one at a time in key order — the literal addGraphNode loop
-        val byCluster = new java.util.HashMap[Int,
-          (mutable.ArrayBuffer[(Long, Array[Float], Array[Long], Boolean)],
-           mutable.ArrayBuffer[(Long, Array[Float])])]()
-        it.foreach { case (c, k, v, nb, e, isNew) =>
-          val slot = byCluster.computeIfAbsent(c,
-            _ => (new mutable.ArrayBuffer, new mutable.ArrayBuffer))
-          if (isNew) slot._2.append((k, toFloatArray(v)))
-          else slot._1.append((k, toFloatArray(v), nb.toArray, e))
-        }
-        import scala.jdk.CollectionConverters._
-        byCluster.asScala.iterator.flatMap { case (c, (old, news)) =>
-          val ca = assemble(old)
-          val n0 = ca.keys.length
-          // IDEMPOTENT on duplicate keys: a key already in the cluster is
-          // skipped (re-adding a vector is a no-op, and a replayed
-          // streaming batch — StreamingNsw's exactly-once story — must
-          // reproduce the identical graph, not duplicate nodes)
-          val present = new java.util.HashSet[java.lang.Long](n0 * 2)
-          var p = 0
-          while (p < n0) { present.add(ca.keys(p)); p += 1 }
-          val add0 = news.filter(kv => !present.contains(kv._1))
-            .sortInPlaceBy(_._1)
-          val add = new mutable.ArrayBuffer[(Long, Array[Float])](add0.length)
-          add0.foreach { kv => // within-batch duplicates: first one wins
-            if (add.isEmpty || add.last._1 != kv._1) add += kv
-          }
-          val n = n0 + add.length
-          val keys = java.util.Arrays.copyOf(ca.keys, n)
-          val vecs = java.util.Arrays.copyOf(ca.vecs, n)
-          val adj = java.util.Arrays.copyOf(ca.adj, n)
-          var i = 0
-          while (i < add.length) {
-            keys(n0 + i) = add(i)._1
-            vecs(n0 + i) = add(i)._2
-            adj(n0 + i) = Array.empty[Int]
-            i += 1
-          }
-          i = n0
-          while (i < n) {
-            if (i == 0) () else insertNode(vecs, adj, i, m, efC)
-            i += 1
-          }
-          emitRows(c, keys, vecs, adj, entryOf(vecs, cB.value(c)))
-        }
-      }.toDF("c", "key", "v", "nbrs", "entry")
-    val merged = untouchedRows.union(rebuilt)
-    val out = Graph(merged.persist(), graph.centroids, graph.params,
-      clusterLocal = false, deleted = graph.deleted)
-    out.adj.count() // materialize before dropping the inputs
-    fresh.unpersist()
-    graph.adj.unpersist() // release the parent generation (no-op if unpersisted)
-    (out, touched)
+    val dead = graph.deleted.toSet
+    val fresh = route(spark, emb, keyCol, vecCol, cB)
+      .groupBy("key").agg(min(struct(col("v"), col("c"))).as("w"), max(col("v")).as("hi"))
+      .select(col("w.c").as("c"), col("key"), col("w.v").as("v"),
+        (col("w.v") =!= col("hi")).as("clash"))
+      .persist()
+    try {
+      // the batch keys the driver must see: repeated with differing
+      // vectors (rejected), or tombstoned (their tombstones clear)
+      val flagged = fresh.filter(col("clash") || inLongSet(col("key"), dead))
+        .select("key", "clash").as[(Long, Boolean)].collect()
+      val clash = flagged.collect { case (k, true) => k }.sorted
+      require(clash.isEmpty, "append: differing vectors for one key in one batch: " +
+        clash.take(5).mkString(", "))
+      // the batch's keys already stored (at most the batch), each flagged
+      // whether its write repeats the row: a live key, an equal vector
+      val stored = graph.adj.select(col("c").as("oc"), col("key"), col("v").as("ov"))
+        .join(fresh, "key")
+        .select(col("oc"), col("key"), !inLongSet(col("key"), dead) && col("ov") === col("v"))
+        .as[(Int, Long, Boolean)].collect()
+      val same = stored.collect { case (_, k, true) => k }.toSet
+      rewrite(spark, graph,
+        gone = stored.collect { case (oc, k, false) => (oc, k) }.toSeq.toDF("c", "key"),
+        added = fresh.filter(!inLongSet(col("key"), same)),
+        deleted = graph.deleted.filterNot(flagged.map(_._1).toSet))
+    } finally fresh.unpersist()
   }
 
   /** Tombstone keys (reference markNodeDeleted,
     * GraphIndexBuilder.java:427-453): search traverses through them but
-    * never returns them; [[compact]] is the purge. */
+    * never returns them; [[compact]] is the purge. The result shares its
+    * parent's rows. */
   def delete(graph: Graph, keys: Seq[Long]): Graph =
     graph.copy(deleted = (graph.deleted.toSet ++ keys).toArray.sorted)
 
   /** Purge tombstones (reference removeDeletedNodes,
-    * GraphIndexBuilder.java:427-531): clusters holding a tombstoned key
-    * are REBUILT from their live members (per-cluster rebuild = exactly
-    * the graph a fresh buildWithCentroids would produce for that
-    * membership — NswSpec asserts the equivalence); untouched clusters
-    * pass through unread. */
+    * GraphIndexBuilder.java:427-531): the rows of tombstoned keys leave,
+    * each cluster that held one is REBUILT from its live members
+    * (per-cluster rebuild = exactly the graph a fresh buildWithCentroids
+    * would produce for that membership — NswSpec asserts the
+    * equivalence), untouched clusters pass through unread, and the
+    * tombstone list clears. The result owns its rows (see [[Graph]]) even
+    * when no tombstoned key is stored, so saving it onto the dir it was
+    * loaded from is safe; a graph without tombstones comes back as it is. */
   def compact(spark: SparkSession, graph: Graph): Graph = {
     import spark.implicits._
     if (graph.deleted.isEmpty) return graph
-    val deadB = spark.sparkContext.broadcast(graph.deleted.toSet)
+    val gone = graph.adj.filter(inLongSet(col("key"), graph.deleted.toSet)).select("c", "key")
+    rewrite(spark, graph, gone, Seq.empty[(Int, Long, Seq[Float])].toDF("c", "key", "v"),
+      deleted = Array.emptyLongArray)._1
+  }
+
+  /** The one write step behind [[appendTouched]] and [[compact]]: `gone`
+    * (c, key) rows leave their clusters and `added` (c, key, v) rows join
+    * theirs via [[rewriteClusters]] on the touched clusters only. The next
+    * generation owns its rows as an eager `localCheckpoint`, so chained
+    * mutations never recompute their history; the parent is not released.
+    * @param deleted the next generation's tombstones (a subset of the parent's)
+    * @return the next generation and the clusters whose rows changed (the
+    *   parent itself and none when nothing changes) */
+  private def rewrite(spark: SparkSession, graph: Graph, gone: DataFrame, added: DataFrame,
+                      deleted: Array[Long]): (Graph, Set[Int]) = {
+    import spark.implicits._
+    val touched = gone.select("c").union(added.select("c")).distinct().as[Int].collect().toSet
+    if (touched.isEmpty && deleted.sameElements(graph.deleted)) return (graph, touched)
     val cB = spark.sparkContext.broadcast(graph.centroids)
-    val affected = graph.adj
-      .filter(inLongSet(col("key"), deadB.value))
-      .select("c").distinct().as[Int].collect().toSet
-    if (affected.isEmpty) return graph.copy(deleted = Array.emptyLongArray)
-    val untouchedRows = graph.adj.filter(!inIntSet(col("c"), affected))
-      .select(BaseCols: _*)
     val m = graph.params.m
     val efC = graph.params.efConstruction
-    val rebuilt = nodes(graph.adj.filter(inIntSet(col("c"), affected)))
-      .mapPartitions { it =>
-        val live = it.collect { case (c, k, v, _, _) if !deadB.value.contains(k) => (c, k, v) }
-        buildClusters(live, m, efC, cB.value)
-      }.toDF("c", "key", "v", "nbrs", "entry")
-    // affected clusters must reassemble into one task each: the graph may
-    // be clusterLocal=false (post-append/loaded)
-    val out = Graph(untouchedRows.union(rebuilt).persist(), graph.centroids,
-      graph.params, clusterLocal = false)
-    out.adj.count()
-    out
+    val noVec = lit(null).cast("array<float>")
+    val noNbrs = lit(null).cast("array<bigint>")
+    // touched clusters reassemble into one task each (the parent may be
+    // clusterLocal=false); fused codes drop (re-attach them if needed)
+    val rebuilt = graph.adj.filter(inIntSet(col("c"), touched)).select(BaseCols :+ lit(Kept): _*)
+      .union(gone.select(col("c"), col("key"), noVec, noNbrs, lit(false), lit(Gone)))
+      .union(added.select(col("c"), col("key"), col("v"), noNbrs, lit(false), lit(Added)))
+      .repartition(math.max(1, touched.size), col("c"))
+      .as[(Int, Long, Seq[Float], Seq[Long], Boolean, Byte)]
+      .mapPartitions(it => rewriteClusters(it, m, efC, cB.value))
+      .toDF("c", "key", "v", "nbrs", "entry")
+    // untouched clusters pass through a narrow coalesce: a generation has at
+    // most max(kCenters, |touched| + 1) partitions, however many writes came before
+    val kept = graph.adj.filter(!inIntSet(col("c"), touched)).select(BaseCols: _*)
+      .coalesce(math.max(1, graph.params.kCenters - touched.size))
+    val adj = kept.union(rebuilt).localCheckpoint(eager = true)
+    (Graph(adj, graph.centroids, graph.params, clusterLocal = false, deleted = deleted), touched)
   }
 
   // ---- search: one kernel, probe → assemble → beam/flood → rerank → merge.
@@ -961,7 +977,9 @@ object Nsw {
     * pure function of (model, vector)), while only the re-encode map —
     * one narrow pass — is paid. The reference's incremental writer
     * re-encodes the same way (PQVectors are rebuilt from the same
-    * ProductQuantization when vectors are added). */
+    * ProductQuantization when vectors are added). Like every mutation,
+    * the result owns its rows and leaves the parent as it was (see
+    * [[Graph]]). */
   def attachPqWith(spark: SparkSession, graph: Graph, model: Pq.Model,
                    anisotropicThreshold: Double = 0.0): Graph = {
     import spark.implicits._
@@ -976,11 +994,8 @@ object Nsw {
         (c, k, v, nb, e, code)
       }.toDF("c", "key", "v", "nbrs", "entry", "code")
     // narrow map: the cluster layout is preserved
-    val out = Graph(adj2.persist(), graph.centroids, graph.params,
+    Graph(adj2.localCheckpoint(eager = true), graph.centroids, graph.params,
       graph.clusterLocal, graph.deleted, Some(model))
-    out.adj.count()
-    graph.adj.unpersist()
-    out
   }
 
   /** PQ-fused search (reference GraphSearcher.java:330-348 approximate
@@ -1012,7 +1027,8 @@ object Nsw {
 
   /** Re-encode against an EXISTING LVQ model (no retrain) — the
     * [[attachPqWith]] twin: unchanged nodes get byte-identical codes
-    * back (encode is a pure function of (model, vector)). */
+    * back (encode is a pure function of (model, vector)), and the result
+    * owns its rows. */
   def attachLvqWith(spark: SparkSession, graph: Graph, model: Lvq.Model): Graph = {
     import spark.implicits._
     val mB = spark.sparkContext.broadcast(model)
@@ -1021,11 +1037,8 @@ object Nsw {
         val (u, bias, scale) = mB.value.encodeOne(toDoubles(toFloatArray(v)))
         (c, k, v, nb, e, u, bias, scale)
       }.toDF("c", "key", "v", "nbrs", "entry", "lu", "lbias", "lscale")
-    val out = Graph(adj2.persist(), graph.centroids, graph.params,
+    Graph(adj2.localCheckpoint(eager = true), graph.centroids, graph.params,
       graph.clusterLocal, graph.deleted, pq = None, lvq = Some(model))
-    out.adj.count()
-    graph.adj.unpersist()
-    out
   }
 
   /** LVQ-fused search: the beam scores nodes by the fused-decomposition
@@ -1088,29 +1101,23 @@ object Nsw {
         }
       }
       // sever lineage from the destination before the dynamic-partition
-      // overwrite: an appended graph's plan READS $dir/adj (untouched rows
-      // pass through from the loaded parent), so if its cached blocks were
-      // evicted mid-write Spark would recompute touched partitions from
-      // the very files being overwritten — localCheckpoint materializes
-      // the rows first, making the write input self-contained
+      // overwrite: a loaded graph's plan (or a delete copy of one) READS
+      // $dir/adj, so Spark would recompute touched partitions from the very
+      // files being overwritten — localCheckpoint materializes the rows
+      // first, making the write input self-contained (a mutation's result
+      // already owns its rows; for it this is a copy of the touched ones)
       val staged = rows.localCheckpoint(true)
+      // a dynamic overwrite keeps the files of a partition it writes no row
+      // to: drop the dir of each touched cluster an upsert left empty
+      val left = staged.select("c").distinct().collect().map(_.getInt(0)).toSet
+      (touched -- left).foreach(c => fs.delete(new org.apache.hadoop.fs.Path(s"$dir/adj/c=$c"), true))
       staged.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("c").parquet(s"$dir/adj")
-      releaseCheckpoint(staged)
+      dropCheckpoint(staged)
     }
     publishMeta(spark, graph, dir, maxStreamBatch)
   }
-
-  /** Drop the blocks of a `localCheckpoint`ed Dataset. `Dataset.unpersist`
-    * does not: the checkpoint RDD stays persistent until the GC collects
-    * the Dataset. Call it only once nothing reads the Dataset again — the
-    * checkpoint has no lineage to recompute from. */
-  private[graft] def releaseCheckpoint(ds: Dataset[_]): Unit =
-    ds.queryExecution.logical.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist()
-      case _ =>
-    }
 
   /** The replay mark of a saved graph (-1 when none recorded). */
   def loadStreamBatch(spark: SparkSession, dir: String): Long = {

@@ -19,15 +19,21 @@ import graft.ops.Nsw
   *    same atomic meta publish that commits the batch's partitions, and
   *    batches at-or-under the mark are skipped on replay;
   *  - a crash BETWEEN the adj write and the meta publish is healed by
-  *    idempotence, not bookkeeping: `Nsw.append` skips keys already
-  *    present in a cluster, so the replayed batch rebuilds byte-identical
-  *    partitions and then advances the mark.
+  *    idempotence, not bookkeeping: `Nsw.append` treats a live key
+  *    written with the same vector as a no-op, so the replayed batch finds
+  *    its rows written and then advances the mark (a key it un-tombstoned
+  *    is rewritten once more, since the old meta still tombstones it).
+  * A batch repeating a key with differing vectors is rejected by
+  * `Nsw.append` before anything is written, which stops the query.
   * The checkpoint dir is the stream identity (same contract as
   * StreamingIndex): resuming with the same checkpoint continues the
   * batchId sequence the mark was written against.
   *
   * The coarse router (centroids) stays FIXED across appends — the same
   * stable-router contract as `Nsw.append`; re-clustering is a rebuild.
+  * Each committed batch's graph owns its rows (`Nsw.Graph`), so the
+  * resident graph never stacks a plan on its predecessors; the one it
+  * replaces is retired.
   * Fused PQ codes, if present, are dropped by the first append (new nodes
   * have none) — re-attach offline with `Nsw.attachPqWith`. */
 object StreamingNsw {
@@ -94,17 +100,10 @@ object StreamingNsw {
           val (next, touched) = Nsw.appendTouched(s, graph, batch, keyCol, vecCol)
           Nsw.saveTouched(s, next, dir, touched, maxStreamBatch = batchId)
           if (next ne graph) {
-            graph.unpersist() // no-op: appendTouched already released it
-            // each append stacks a DAG on its parent; re-anchor the
-            // resident lineage on the just-persisted parquet periodically
-            // so a long-lived stream can't grow an unbounded plan
-            graph = if (batchId % 16 == 15) {
-              next.unpersist()
-              val g = Nsw.load(s, dir)
-              g.copy(adj = g.adj.persist())
-            } else next
+            graph.unpersist()
+            graph = next
             onCommit(graph) // serving refresh hook (after the commit)
-          } // else: empty batch — nothing appended, the mark still advances
+          } // else: nothing changed (an empty or replayed batch) — the mark still advances
           mark = batchId
         }
       }

@@ -952,4 +952,259 @@ class NswSpec extends AnyFunSuite with BeforeAndAfterAll {
     hot.close()
     g.unpersist()
   }
+
+  /** (c, key, nbrs, entry) rows, by key: what a mutation leaves behind. */
+  private def graphRows(g: Nsw.Graph): Seq[(Int, Long, Seq[Long], Boolean)] = {
+    import spark.implicits._
+    g.adj.select($"c", $"key", $"nbrs", $"entry").as[(Int, Long, Seq[Long], Boolean)]
+      .collect().sortBy(_._2).toSeq
+  }
+
+  /** The (cluster, vector) rows that store `key`. */
+  private def stored(g: Nsw.Graph, key: Long): Seq[(Int, Seq[Float])] = {
+    import spark.implicits._
+    g.adj.filter($"key" === key).select($"c", $"v").as[(Int, Seq[Float])].collect().toSeq
+  }
+
+  /** The graph a write must equal: the API's replace-by-hand path of
+    * tombstoning the keys, compacting and inserting the batch. */
+  private def viaCompact(g: Nsw.Graph, batch: org.apache.spark.sql.DataFrame,
+                         keys: Seq[Long]): Nsw.Graph =
+    Nsw.append(spark, Nsw.compact(spark, Nsw.delete(g, keys)), batch, "vec_id", "embedding")
+
+  /** Exact mode over every cluster: the top hit of `v` is `key` at sim 1. */
+  private def answersWith(g: Nsw.Graph, key: Long, v: Seq[Float]): Boolean = {
+    import spark.implicits._
+    val top = Nsw.topK(g, v, 1, nProbe = g.centroids.length, ef = Int.MaxValue)
+      .as[(Long, Double)].collect()
+    top.headOption.exists(h => h._1 == key && h._2 > 1 - 1e-6)
+  }
+
+  private def upsertFixture(seed: Int) = {
+    import spark.implicits._
+    val rows = clustered(new scala.util.Random(seed), 400, 8, 4)
+    val g = Nsw.build(spark, rows.toDF("vec_id", "embedding"), "vec_id", "embedding",
+      Nsw.Params(m = 6, efConstruction = 24, kCenters = 4, iters = 2))
+    (rows, g)
+  }
+
+  test("upsert within the same cluster replaces the stored vector") {
+    import spark.implicits._
+    val (rows, g) = upsertFixture(60)
+    val (key, old) = rows(17)
+    val oc = stored(g, key).head._1
+    val v = old.map(x => x + 0.02f)
+    val batch = Seq((key, v)).toDF("vec_id", "embedding")
+    val (g1, touched) = Nsw.appendTouched(spark, g, batch, "vec_id", "embedding")
+    assert(stored(g1, key) == Seq((oc, v)), "the key must hold the new vector, in its cluster")
+    assert(touched == Set(oc))
+    assert(g1.adj.count() == 400)
+    assert(answersWith(g1, key, v) && !answersWith(g1, key, old))
+    // the upsert builds exactly the graph the tombstone + compact + insert path does
+    val want = viaCompact(g, batch, Seq(key))
+    assert(graphRows(g1) == graphRows(want))
+    Seq(g1, want, g).foreach(_.unpersist())
+  }
+
+  test("upsert whose new vector routes to another cluster leaves the key in exactly one row") {
+    import spark.implicits._
+    val (rows, g) = upsertFixture(61)
+    val (key, old) = rows(5)
+    val oc = stored(g, key).head._1
+    // a vector next to a member of another cluster
+    val other = rows.find(r => stored(g, r._1).head._1 != oc).get
+    val v = other._2.map(x => x + 0.001f)
+    val batch = Seq((key, v)).toDF("vec_id", "embedding")
+    val (g1, touched) = Nsw.appendTouched(spark, g, batch, "vec_id", "embedding")
+    val now = stored(g1, key)
+    assert(now.size == 1 && now.head._2 == v, s"rows of key $key: $now")
+    assert(now.head._1 != oc, "premise: the new vector routes to another cluster")
+    assert(touched == Set(oc, now.head._1))
+    assert(g1.adj.count() == 400)
+    assert(answersWith(g1, key, v) && !answersWith(g1, key, old))
+    val want = viaCompact(g, batch, Seq(key))
+    assert(graphRows(g1) == graphRows(want))
+    Seq(g1, want, g).foreach(_.unpersist())
+  }
+
+  test("a write after delete clears that key's tombstone and stores the written vector") {
+    import spark.implicits._
+    val (rows, g) = upsertFixture(62)
+    val (key, v) = rows(9) // written back bit-identically: a tombstoned key is no no-op
+    val other = rows(10)._1
+    val gDel = Nsw.delete(g, Seq(key, other))
+    val batch = Seq((key, v)).toDF("vec_id", "embedding")
+    val (g1, touched) = Nsw.appendTouched(spark, gDel, batch, "vec_id", "embedding")
+    assert(g1.deleted.toSeq == Seq(other), "only the written key's tombstone clears")
+    assert(stored(g1, key).map(_._2) == Seq(v))
+    assert(touched == stored(g1, key).map(_._1).toSet)
+    assert(answersWith(g1, key, v))
+    assert(stored(g1, other).nonEmpty, "an append purges no other tombstoned row")
+    val gOne = Nsw.delete(g, Seq(key)) // its only tombstone is the written key
+    val want = viaCompact(gOne, batch, Seq(key))
+    assert(graphRows(Nsw.append(spark, gOne, batch, "vec_id", "embedding")) == graphRows(want))
+    Seq(g1, want, g).foreach(_.unpersist())
+  }
+
+  test("metamorphic: appendTouched(g, batch) == appendTouched(compact(delete(g, keys)), batch)") {
+    import spark.implicits._
+    val (_, g) = upsertFixture(63)
+    // tombstoned keys the graph does not store, and keys it has never seen
+    val rnd = new scala.util.Random(64)
+    val batchRows = (9001L to 9010L).map(k => (k, randVec(rnd, 8)))
+    val keys = batchRows.map(_._1)
+    val gDead = Nsw.delete(g, keys.take(3))
+    val batch = batchRows.toDF("vec_id", "embedding")
+    val (g1, touched) = Nsw.appendTouched(spark, gDead, batch, "vec_id", "embedding")
+    val want = viaCompact(gDead, batch, keys)
+    assert(graphRows(g1) == graphRows(want))
+    assert(touched == graphRows(g1).filter(_._2 >= 9001L).map(_._1).toSet)
+    Seq(g1, want, g).foreach(_.unpersist())
+  }
+
+  test("a replayed batch is a no-op: no cluster touched, identical rows") {
+    import spark.implicits._
+    val (rows, g) = upsertFixture(65)
+    val rnd = new scala.util.Random(66)
+    // new keys, an upsert and a key twice with one vector
+    val fresh = (9001L to 9006L).map(k => (k, randVec(rnd, 8)))
+    val batch = (fresh ++ Seq((rows(3)._1, randVec(rnd, 8)), fresh.head))
+      .toDF("vec_id", "embedding")
+    val (g1, t1) = Nsw.appendTouched(spark, g, batch, "vec_id", "embedding")
+    assert(t1.nonEmpty && g1.adj.count() == 406)
+    val (g2, t2) = Nsw.appendTouched(spark, g1, batch, "vec_id", "embedding")
+    assert(t2.isEmpty, s"a replay touched clusters $t2")
+    assert(graphRows(g2) == graphRows(g1))
+    Seq(g1, g).foreach(_.unpersist())
+  }
+
+  test("5 chained append -> delete -> compact cycles: flat plans, no earlier generation, owned RDDs") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType))))
+    def fromRdd(rows: Seq[(Long, Seq[Float])]) =
+      spark.createDataFrame(spark.sparkContext.parallelize(rows.map(r => Row(r._1, r._2)), 4), schema)
+    val rnd = new scala.util.Random(67)
+    val emb = fromRdd(clustered(rnd, 400, 8, 4)).persist()
+    emb.count()
+    // every RDD the chain creates gets an id above this one
+    val mark = spark.sparkContext.emptyRDD[Int].id
+    val g0 = Nsw.build(spark, emb, "vec_id", "embedding",
+      Nsw.Params(m = 6, efConstruction = 24, kCenters = 4, iters = 2))
+    def plan(g: Nsw.Graph) = g.adj.queryExecution.logical
+    def rddIds(g: Nsw.Graph) = plan(g).collect { case r: LogicalRDD => r.rdd.id }.toSet
+    val outputs = scala.collection.mutable.ArrayBuffer[Nsw.Graph]()
+    var g = g0
+    for (cycle <- 0 until 5) {
+      val base = 10000L + 10 * cycle
+      val appended = Nsw.append(spark, g, fromRdd((base until base + 5).map(k => (k, randVec(rnd, 8)))),
+        "vec_id", "embedding")
+      val compacted = Nsw.compact(spark, Nsw.delete(appended, Seq(base, cycle.toLong)))
+      for (out <- Seq(appended, compacted)) {
+        assert(plan(out).collect { case p => p }.size == plan(outputs.headOption.getOrElse(out))
+          .collect { case p => p }.size, s"cycle $cycle: the plan grew\n${plan(out)}")
+        val earlier = outputs.flatMap(rddIds).toSet ++ rddIds(g0)
+        assert((rddIds(out) & earlier).isEmpty, s"cycle $cycle reads an earlier generation")
+        // at most max(kCenters, |touched| + 1) partitions, however many writes came before
+        assert(out.adj.rdd.getNumPartitions <= 4 + 1,
+          s"cycle $cycle: ${out.adj.rdd.getNumPartitions} partitions")
+        outputs += out
+      }
+      assert(compacted.deleted.isEmpty && compacted.adj.count() == 400 + 3 * (cycle + 1))
+      g = compacted
+    }
+    (g0 +: outputs).foreach(_.unpersist())
+    val left = spark.sparkContext.getPersistentRDDs.keys.filter(_ > mark).toSeq.sorted
+    assert(left.isEmpty, s"RDDs the chain left persistent: ${left.mkString(", ")}")
+    assert(emb.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "a caller's cached input must stay cached")
+    emb.unpersist()
+  }
+
+  test("a batch repeating a key with differing vectors is rejected; the graph is unchanged") {
+    import spark.implicits._
+    val (rows, g) = upsertFixture(70)
+    val (key, old) = rows(21)
+    val before = graphRows(g)
+    val batch = Seq((9001L, old), (key, old.map(_ + 0.5f)), (key, old.map(_ - 0.5f)))
+      .toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException] {
+      Nsw.appendTouched(spark, g, batch, "vec_id", "embedding")
+    }
+    assert(e.getMessage.endsWith(s"in one batch: $key"), e.getMessage)
+    assert(graphRows(g) == before && stored(g, key).map(_._2) == Seq(old))
+    g.unpersist()
+  }
+
+  test("annserve :w moving a cluster's only member: the reloaded dir stores the key in one row") {
+    import spark.implicits._
+    // three fixed routing centroids; cluster 2 holds exactly one key
+    val axis = (i: Int, x: Double) => Array.tabulate(8)(j => if (j == i) x else 0.0)
+    val rnd = new scala.util.Random(71)
+    def near(i: Int) = axis(i, 10.0).map(x => (x + rnd.nextGaussian()).toFloat).toSeq
+    val lone = 500L
+    val rows = (0L until 200L).map(k => (k, near((k % 2).toInt))) :+ (lone -> near(2))
+    val g = Nsw.buildWithCentroids(spark, rows.toDF("vec_id", "embedding"), "vec_id",
+      "embedding", Array.tabulate(3)(axis(_, 10.0)),
+      Nsw.Params(m = 4, efConstruction = 16, kCenters = 3, iters = 1))
+    assert(stored(g, lone).map(_._1) == Seq(2) && g.adj.filter($"c" === 2).count() == 1)
+    val dir = java.nio.file.Files.createTempDirectory("graft-annserve-move").toString
+    Nsw.save(spark, g, dir)
+    g.unpersist()
+    val v = near(0)
+    val outs = scala.collection.mutable.ArrayBuffer[String]()
+    graft.IndexCli.annServeLoop(spark, dir, 5, Iterator(s":w $lone ${v.mkString(",")}"), outs += _)
+    assert(outs.size == 2 && outs(1).contains(s"WROTE $lone"), outs.mkString("\n"))
+    val reloaded = Nsw.load(spark, dir)
+    assert(stored(reloaded, lone) == Seq((0, v)), "the key must live in exactly one row")
+    assert(reloaded.adj.count() == 201 && reloaded.adj.filter($"c" === 2).isEmpty)
+    assert(answersWith(reloaded, lone, v) && !answersWith(reloaded, lone, rows.last._2))
+  }
+
+  test("annserve :opt keeps LVQ codes: reloaded dir is fused and answers as before") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(68)
+    val emb = clustered(rnd, 300, 8, 3).toDF("vec_id", "embedding")
+    val g = Nsw.build(spark, emb, "vec_id", "embedding",
+      Nsw.Params(m = 4, efConstruction = 16, kCenters = 3, iters = 1))
+    val fused = Nsw.attachLvq(spark, g)
+    val dir = java.nio.file.Files.createTempDirectory("graft-annserve-lvq").toString
+    Nsw.save(spark, fused, dir)
+    Seq(fused, g).foreach(_.unpersist())
+    val q = randVec(new scala.util.Random(5), 8)
+    def answer(x: Nsw.Graph) = Nsw.topKFusedLvq(x, q, 5, nProbe = 3, ef = Int.MaxValue)
+      .as[(Long, Double)].collect().toSeq
+    val before = answer(Nsw.load(spark, dir))
+    val dead = (0L until 300L).find(k => !before.exists(_._1 == k)).get
+    val outs = scala.collection.mutable.ArrayBuffer[String]()
+    graft.IndexCli.annServeLoop(spark, dir, 5, Iterator(s":del $dead", ":opt"), outs += _)
+    assert(outs.size == 3 && outs(2).contains("OPTIMIZED (299 nodes"), outs.mkString("\n"))
+    val reloaded = Nsw.load(spark, dir)
+    assert(reloaded.lvq.isDefined, "OPTIMIZE saved the graph without its LVQ model")
+    assert(reloaded.adj.columns.contains("lu"))
+    assert(answer(reloaded) == before)
+  }
+
+  test("annserve :del of an absent key then :opt keeps the dir loadable, same rows, no tombstones") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(69)
+    val emb = clustered(rnd, 300, 8, 3).toDF("vec_id", "embedding")
+    val g = Nsw.build(spark, emb, "vec_id", "embedding",
+      Nsw.Params(m = 4, efConstruction = 16, kCenters = 3, iters = 1))
+    val dir = java.nio.file.Files.createTempDirectory("graft-annserve-absent").toString
+    Nsw.save(spark, g, dir)
+    g.unpersist()
+    def rowsOf(x: Nsw.Graph) = x.adj.select($"c", $"key", $"v", $"nbrs", $"entry")
+      .as[(Int, Long, Seq[Float], Seq[Long], Boolean)].collect().sortBy(_._2).toSeq
+    val before = rowsOf(Nsw.load(spark, dir))
+    val outs = scala.collection.mutable.ArrayBuffer[String]()
+    graft.IndexCli.annServeLoop(spark, dir, 5, Iterator(":del 123456789", ":opt"), outs += _)
+    assert(outs.size == 3 && outs(2).contains("OPTIMIZED (300 nodes, 0 tombstones)"),
+      outs.mkString("\n"))
+    val reloaded = Nsw.load(spark, dir)
+    assert(reloaded.deleted.isEmpty)
+    assert(rowsOf(reloaded) == before)
+  }
 }
