@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import graft.corpus.WebCorpus
 
-/** Driver-run benchmark: ONE JSON line with
+/** Driver-run benchmark: ONE short JSON line on stdout, and the evidence
+  * file it names (see [[report]]), with
   *  - per-gate-query seconds at SPARK_GRAFT_SF_DIR (local[cpus]),
   *  - warm BM25 top-10 latency over the built index,
   *  - index-build throughput on the seeded synthetic corpus (written to
@@ -19,7 +20,7 @@ import graft.corpus.WebCorpus
   *    so each round's ratio is measured inside one short host-noise
   *    window; the official n2_to_n8 is [[n2ToN8]] over those pairs, with
   *    every sample, floor, median, spread and per-phase decomposition
-  *    riding in the JSON as evidence.
+  *    riding in the evidence file.
   */
 object Bench {
 
@@ -64,6 +65,103 @@ object Bench {
       val m = ok.size / 2
       Some(if (ok.size % 2 == 1) ok(m) else (ok(m - 1) + ok(m)) / 2)
     } else Some(floorEff).filter(_ <= 1.0)
+  }
+
+  /** One parallelism level of the build-scaling phase: its tag ("c8"),
+    * every build time in seconds, and the per-phase JSON of its fastest
+    * build. */
+  private[graft] final case class Level(tag: String, samples: Seq[Double], phasesAtFloor: String) {
+    def floor: Double = if (samples.isEmpty) Double.NaN else samples.min
+    def median: Double = if (samples.isEmpty) Double.NaN else samples.sorted.apply(samples.size / 2)
+  }
+
+  /** A JSON number with `digits` decimals, or `null` when `x` is not finite. */
+  private def num(x: Double, digits: Int): String =
+    if (x.isNaN || x.isInfinite) "null"
+    else String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(x))
+
+  private def obj(kvs: Seq[(String, String)]): String =
+    kvs.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+
+  /** Each gate query's seconds at 10x data over its seconds at sfDir; the
+    * denominators clamp to 50 ms so fixed overheads on sub-100ms queries
+    * don't read as scale blowups. */
+  private[graft] def sf1Ratios(queryTimes: Seq[(String, Double)],
+                               sf1Times: Seq[(String, Double)]): Seq[(String, Double)] = {
+    val base = queryTimes.toMap
+    sf1Times.map { case (k, v) => k -> (v / math.max(base.getOrElse(k, 0.05), 0.05)) }
+  }
+
+  /** The scaling evidence of each level: every sample, floor, median,
+    * spread, and the floor run's per-phase wall times — enough to tell
+    * host noise (spread >> 1, phases flat at the floor) from engine
+    * serial fraction (a phase that refuses to shrink with cores). */
+  private[graft] def scalingEvidence(rounds: Int, levels: Seq[Level]): String = {
+    def perLevel(f: Level => String): String = obj(levels.map(l => l.tag -> f(l)))
+    s""""rounds":$rounds,""" +
+      s""""samples":${perLevel(_.samples.map(num(_, 1)).mkString("[", ",", "]"))},""" +
+      s""""floor_secs":${perLevel(l => num(l.floor, 1))},""" +
+      s""""median_secs":${perLevel(l => num(l.median, 1))},""" +
+      s""""noise_spread":${perLevel(l => num(if (l.samples.isEmpty) Double.NaN else l.samples.max / l.floor, 2))},""" +
+      s""""phases_at_floor":${perLevel(_.phasesAtFloor)}"""
+  }
+
+  /** The bench's result: one JSON line for stdout and the evidence JSON
+    * for `evidencePath`. A log tail of 2,000 characters holds the line
+    * whole: the per-query tables, every sample, the floor runs' phases
+    * and the estimator's description go to the evidence file, and the
+    * line keeps the totals, the slowest queries, the throughputs and
+    * the scaling estimators. `levels` are the 2-, 8- and 32-core levels. */
+  private[graft] def report(sfDir: String, queryTimes: Seq[(String, Double)],
+                            sf1Times: Seq[(String, Double)], warmMs: Double, warmDfMs: Double,
+                            warmAnnMs: Double, scaleDocs: Long, rounds: Int, levels: Seq[Level],
+                            pairEff28: Seq[Double], evidencePath: String): (String, String) = {
+    val Seq(t2, t8, t32) = levels.map(_.floor)
+    val thr = (t: Double) => scaleDocs / t
+    // 2->8 OFFICIAL estimator: the median of the valid same-round pairs —
+    // a max over noisy ratios picks the noisiest one (BENCH_r05 published
+    // an impossible 1.112). Floor-of-floors mixes windows, so it is only
+    // the fallback.
+    val floorEff28 = (thr(t8) / thr(t2)) / 4.0
+    val eff28 = n2ToN8(pairEff28, floorEff28).map(num(_, 3)).getOrElse("null")
+    val eff832 = (thr(t32) / thr(t8)) / 4.0
+    def table(ts: Seq[(String, Double)], digits: Int) = obj(ts.map { case (k, v) => k -> num(v, digits) })
+    val slowest =
+      if (queryTimes.isEmpty) "null"
+      else { val (k, v) = queryTimes.maxBy(_._2); s"""{"query":"$k","value":${num(v, 3)}}""" }
+    val ratios = sf1Ratios(queryTimes, sf1Times)
+    val sf1Line =
+      if (sf1Times.isEmpty) ""
+      else s""""sf1":{"total":${num(sf1Times.map(_._2).sum, 3)},""" +
+        s""""max_ratio":${num(ratios.map(_._2).max, 2)},"max_ratio_query":"${ratios.maxBy(_._2)._1}"},"""
+    val pairLine =
+      if (pairEff28.isEmpty) s""""pairing":"none","""
+      else s""""pairing":"adjacent_same_round",""" +
+        s""""pair_eff_n2_to_n8":${pairEff28.map(num(_, 3)).mkString("[", ",", "]")},""" +
+        s""""pair_eff_n2_to_n8_median":${num(pairEff28.sorted.apply(pairEff28.size / 2), 3)},""" +
+        s""""floor_eff_n2_to_n8":${num(floorEff28, 3)},"""
+    val line =
+      s"""{"metric":"total","value":${num(queryTimes.map(_._2).sum, 3)},"unit":"sec",""" +
+        s""""sf":"$sfDir","queries":${queryTimes.size},"slowest_query":$slowest,""" +
+        sf1Line +
+        s""""warm_query_ms":${num(warmMs, 1)},"warm_df_query_ms":${num(warmDfMs, 1)},""" +
+        s""""warm_ann_ms":${num(warmAnnMs, 1)},""" +
+        s""""build":{"docs":$scaleDocs,"pinned_jvm_per_level":true,""" +
+        s""""throughput_docs_per_sec":{"local2":${num(thr(t2), 0)},"local8":${num(thr(t8), 0)},""" +
+        s""""local32":${num(thr(t32), 0)}},""" +
+        s""""scaling_efficiency":{"n2_to_n8":$eff28,"n8_to_n32":${num(eff832, 3)}},""" +
+        pairLine +
+        s""""rounds":$rounds,"floor_secs":${obj(levels.map(l => l.tag -> num(l.floor, 1)))}},""" +
+        s""""evidence":"$evidencePath"}"""
+    val evidence =
+      s"""{"sf":"$sfDir","queries":${table(queryTimes, 3)},""" +
+        (if (sf1Times.isEmpty) ""
+         else s""""sf1":{"queries":${table(sf1Times, 3)},"ratio_vs_sf":${table(ratios, 2)}},""") +
+        s""""estimator":"n2_to_n8 = median of the same-round pairs <= 1.0 (c2 and c8 back-to-back, """ +
+        s"""one noise regime), else floor-of-floors, else null; n8_to_n32 = floor-of-floors (c32 """ +
+        s"""needs all cores, single-box memory-bus caveat stands)",""" +
+        s"""${scalingEvidence(rounds, levels)}}"""
+    (line, evidence)
   }
 
   /** Spawn one pinned build JVM; returns (build seconds, per-phase JSON). */
@@ -294,93 +392,33 @@ object Bench {
       }
       round += 1
     }
-    def arr(s: Seq[Double]): String = s.map(t => f"$t%.1f").mkString("[", ",", "]")
-    def perLevel(f: Int => String): String =
-      levels.zipWithIndex.map { case ((_, tag), i) => s""""$tag":${f(i)}""" }
-        .mkString("{", ",", "}")
-    // structured scaling evidence: every sample, per-level floor/median/
-    // spread, and the floor run's per-phase wall times — enough for a
-    // BENCH reader to distinguish host noise (spread >> 1, phases flat
-    // at the floor) from engine serial fraction (a phase that refuses to
-    // shrink with cores) without any side-channel logs
-    val evidence =
-      s""""rounds":$round,"samples":${perLevel(i => arr(samples(i).toSeq))},""" +
-      s""""floor_secs":${perLevel(i => f"${mins(i)}%.1f")},""" +
-      s""""median_secs":${perLevel { i =>
-            val ok = samples(i).sorted; f"${if (ok.isEmpty) Double.NaN else ok(ok.size / 2)}%.1f"
-          }},""" +
-      s""""noise_spread":${perLevel { i =>
-            val ok = samples(i).sorted
-            f"${if (ok.isEmpty) Double.NaN else ok.last / ok.head}%.2f"
-          }},""" +
-      s""""phases_at_floor":${perLevel(i => floorPhases(i))}"""
-    if (mins.length != 3) { // probe mode: raw floors + evidence only
-      println(s"{$evidence}")
-      scala.reflect.io.Path(tmpBase).deleteRecursively()
-      return
-    }
-    val Array(t2, t8, t32) = mins
-    val thr = (t: Double) => scaleDocs / t
-    // 2->8 OFFICIAL estimator: the median of the valid same-round pairs —
-    // a max over noisy ratios picks the noisiest one (BENCH_r05 published
-    // an impossible 1.112). Floor-of-floors mixes windows, so it is only
-    // the fallback.
-    val floorEff28 = (thr(t8) / thr(t2)) / 4.0
-    val eff28 = n2ToN8(pairEff28.toSeq, floorEff28).map(e => f"$e%.3f").getOrElse("null")
-    val eff832 = (thr(t32) / thr(t8)) / 4.0
-
     // free the tmpfs working set (corpus + throwaway indexes)
     scala.reflect.io.Path(tmpBase).deleteRecursively()
-
-    val total = queryTimes.map(_._2).sum
-    val qs = queryTimes.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-    // sf1 standing gate: per-query seconds at 10x data + ratio vs sfDir
-    // (ratios clamp tiny denominators to 50 ms so fixed overheads on
-    // sub-100ms queries don't read as scale blowups)
-    val base = queryTimes.toMap
-    val sf1Block =
-      if (sf1Times.isEmpty) ""
-      else {
-        val q1 = sf1Times.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-        val ratios = sf1Times.map { case (k, v) =>
-          k -> (v / math.max(base.getOrElse(k, 0.05), 0.05))
-        }
-        val rs = ratios.map { case (k, r) => f""""$k":$r%.2f""" }.mkString("{", ",", "}")
-        val worst = ratios.maxBy(_._2)
-        f""""sf1":{"total":${sf1Times.map(_._2).sum}%.3f,"queries":$q1,""" +
-          f""""ratio_vs_sf":$rs,"max_ratio":${worst._2}%.2f,""" +
-          f""""max_ratio_query":"${worst._1}"},"""
-      }
-    val pairBlock =
-      if (pairEff28.isEmpty) s""""pairing":"none","""
-      else {
-        val sortedP = pairEff28.sorted
-        s""""pairing":"adjacent_same_round",""" +
-        s""""pair_eff_n2_to_n8":${pairEff28.map(e => f"$e%.3f").mkString("[", ",", "]")},""" +
-        f""""pair_eff_n2_to_n8_median":${sortedP(sortedP.size / 2)}%.3f,""" +
-        f""""floor_eff_n2_to_n8":$floorEff28%.3f,""" +
-        s""""estimator":"n2_to_n8 = median of the same-round pairs <= 1.0 (c2 and c8 back-to-back, one noise regime), else floor-of-floors, else null; n8_to_n32 = floor-of-floors (c32 needs all cores, single-box memory-bus caveat stands)","""
-      }
-    println(
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir",$sf1Block"""
-        + f""""warm_query_ms":$warmMs%.1f,"warm_df_query_ms":$warmDfMs%.1f,"""
-        + f""""warm_ann_ms":$warmAnnMs%.1f,"""
-        + f""""build":{"docs":$scaleDocs,"pinned_jvm_per_level":true,"""
-        + f""""throughput_docs_per_sec":{"local2":${thr(t2)}%.0f,"local8":${thr(t8)}%.0f,"local32":${thr(t32)}%.0f},"""
-        + f""""scaling_efficiency":{"n2_to_n8":$eff28,"n8_to_n32":$eff832%.3f},"""
-        + s"""$pairBlock$evidence}}""")
+    val levelEvidence = levels.zipWithIndex.map { case ((_, tag), i) =>
+      Level(tag, samples(i).toSeq, floorPhases(i))
+    }
+    if (levels.size != 3) { // probe mode: raw floors + evidence only
+      println(s"{${scalingEvidence(round, levelEvidence)}}")
+      return
+    }
+    val evidenceFile = new java.io.File("target/graft-bench",
+      s"evidence-${System.currentTimeMillis()}.json").getAbsoluteFile
+    val (line, evidence) = report(sfDir, queryTimes, sf1Times, warmMs, warmDfMs, warmAnnMs,
+      scaleDocs, round, levelEvidence, pairEff28.toSeq, evidenceFile.toString)
+    evidenceFile.getParentFile.mkdirs()
+    java.nio.file.Files.write(evidenceFile.toPath,
+      evidence.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    println(line)
     // standing sf1 gate, enforced IN-PROCESS (round-4 verdict #10): a
     // future scale-killer (any gate query whose 10x-data cost blows past
     // ~linear) fails the bench run itself, loudly, after the evidence
     // JSON is already on stdout for the post-mortem.
     if (sf1Times.nonEmpty) {
-      val worst = sf1Times.map { case (k, v) =>
-        k -> (v / math.max(base.getOrElse(k, 0.05), 0.05))
-      }.maxBy(_._2)
+      val worst = sf1Ratios(queryTimes, sf1Times).maxBy(_._2)
       if (worst._2 >= 10.0) {
         System.err.println(f"[bench] SCALE GATE FAILED: ${worst._1} ran " +
           f"${worst._2}%.1fx slower at 10x data (bar < 10x) — super-linear " +
-          "cost growth; see the sf1 ratio table in the JSON above")
+          "cost growth; see the sf1 ratio table in the evidence file named above")
         sys.exit(1)
       }
     }

@@ -189,8 +189,9 @@ object IndexCli {
         // plus the WRITE/DELETE/OPTIMIZE mutation commands over a resident
         // graph): load a saved NSW graph once, pin per-cluster arrays hot
         // (HotAnn), answer searches from the cache (one job each, about
-        // 8 ms warm on a 4-core machine) and apply mutations with a
-        // durable write + cache refresh.
+        // 7 ms warm on a 4-core machine; the loop reads one line at a
+        // time, so it never fills a coalesced batch) and apply mutations
+        // with a durable write + cache refresh.
         if (args.length < 2) { usage(); sys.exit(2) }
         val spark = session(cpus)
         spark.sparkContext.setLogLevel("WARN")

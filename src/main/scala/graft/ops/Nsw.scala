@@ -722,12 +722,12 @@ object Nsw {
   /** What a search keeps: the best `k` of a beam with frontier `ef`
     * (strictly after `cursor` in (sim desc, key asc) order when set), or
     * every node scoring >= tau via [[thresholdFlood]]. */
-  private[ops] sealed trait Policy extends Serializable { def limit: Int }
-  private[ops] final case class Beam(k: Int, ef: Int,
+  private[graft] sealed trait Policy extends Serializable { def limit: Int }
+  private[graft] final case class Beam(k: Int, ef: Int,
                                      cursor: Option[(Double, Long)] = None) extends Policy {
     def limit: Int = k
   }
-  private[ops] final case class Flood(tau: Double, maxVisit: Int) extends Policy {
+  private[graft] final case class Flood(tau: Double, maxVisit: Int) extends Policy {
     def limit: Int = Int.MaxValue
   }
 

@@ -180,4 +180,36 @@ class CoreSpec extends AnyFunSuite {
       assert(Text.score(tf, 100, df, n, 100.0) >= Text.score(tf, 100, df.min(n - 50) + 50, n, 100.0))
     }
   }
+
+  test("bench report: 6 rounds of 3 levels print one JSON line under 2,000 characters") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    val rnd = new Random(7)
+    // every gate query slow enough to print three integer digits
+    val qt = names.map(_ -> (100 + rnd.nextDouble() * 800))
+    val sf1 = names.map(_ -> (1000 + rnd.nextDouble() * 8000))
+    val phases = """{"sort_count_s":41.2,"chunk_write_s":55.3,"dict_s":3.1,"docs_write_s":12.7}"""
+    def level(tag: String, n: Int, base: Double) =
+      Bench.Level(tag, Seq.fill(n)(base * (1 + rnd.nextDouble())), phases)
+    val levels = Seq(level("c2", 6, 140), level("c8", 6, 38), level("c32", 3, 22))
+    val pairs = Seq(0.513, 0.850, 0.593, 0.349, 1.112, 0.565)
+    val path = "/a/fairly/long/checkout/path/target/graft-bench/evidence-1790000000000.json"
+    def check(levels: Seq[Bench.Level], pairs: Seq[Double]): Unit = {
+      val (line, evidence) = Bench.report("/data/sf0.1", qt, sf1, 12.3, 140.5, 7.9,
+        1080000L, 6, levels, pairs, path)
+      assert(line.length < 2000, s"${line.length} characters: $line")
+      assert(!line.contains("\n"))
+      val j = mapper.readTree(line)
+      assert(j.get("evidence").asText == path)
+      val eff = j.get("build").get("scaling_efficiency").get("n2_to_n8")
+      assert(eff.isNull || (eff.asDouble >= 0 && eff.asDouble <= 1), line)
+      val ev = mapper.readTree(evidence)
+      assert(ev.get("queries").size == names.size && ev.get("sf1").get("ratio_vs_sf").size == names.size)
+      assert(ev.get("samples").get("c2").size == levels.head.samples.size)
+      assert(ev.get("phases_at_floor").get("c2").get("chunk_write_s").asDouble == 55.3)
+    }
+    check(levels, pairs)
+    // every build of a level failed and no pair is possible: nulls, still JSON
+    check(levels.updated(1, Bench.Level("c8", Nil, "{}")), Seq(1.2, 1.3))
+  }
 }

@@ -921,12 +921,16 @@ class NswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val g = Nsw.build(spark, rows.toDF("vec_id", "embedding"), "vec_id", "embedding",
       Nsw.Params(m = 6, efConstruction = 24, kCenters = 6, iters = 2))
     val hot = HotAnn(g)
+    // six clusters on four cores: cluster c lives on partition c mod P
+    val p = hot.numPartitions
+    assert(p == math.min(6, spark.sparkContext.defaultParallelism))
     val probedSets = (0 until 6).map { i =>
       val q = rows(i * 97)._2
       val (hits, shape) = ServingProbes.jobShape(spark.sparkContext)(hot.topK(q, 10, nProbe = 2, ef = 32))
       val probed = Ann.probeOrder(g.centroids, q.map(_.toDouble).toArray, 2).toSeq.sorted
       assert(hits.length == 10)
-      assert(shape == ServingProbes.Shape(1, probed), s"query $i: $shape, probes $probed")
+      assert(shape == ServingProbes.Shape(1, probed.map(_ % p).distinct.sorted),
+        s"query $i: $shape, probes $probed")
       probed
     }
     assert(probedSets.flatten.distinct.size > 2, "premise: the queries probe different clusters")
@@ -949,8 +953,162 @@ class NswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val got = ServingProbes.concurrently(4, qs.size)(i => bits(hot.topK(qs(i), 10, 2, 32)))
     assert(got.size == 100)
     got.foreach { case (i, a) => assert(a == want(i), s"query $i differs under concurrency") }
+    // mixed kinds and probe counts, so coalesced batches mix them too:
+    // call i is topK, threshold or searchAfter by i mod 3 and probes
+    // 1 + i mod 4 clusters; its visited count must match as well
+    val cursors = qs.map { q => val h = hot.topK(q, 10, 2, 32); (h(4)._2, h(4)._1) }
+    def call(i: Int): (Seq[(Long, Long)], Long) = {
+      val m = new Nsw.SearchMetrics
+      val nProbe = 1 + i % 4
+      val h = i % 3 match {
+        case 0 => hot.topK(qs(i), 10, nProbe, 32, m)
+        case 1 => hot.threshold(qs(i), 0.5, nProbe, 150, m)
+        case _ => hot.searchAfter(qs(i), 10, cursors(i), nProbe, 32, m)
+      }
+      (bits(h), m.visited)
+    }
+    val wantMixed = qs.indices.map(call)
+    assert(wantMixed.forall(_._2 > 0) && qs.indices.exists(i => i % 3 == 1 && wantMixed(i)._1.size > 10))
+    ServingProbes.concurrently(4, qs.size)(call).foreach { case (i, a) =>
+      assert(a == wantMixed(i), s"mixed call $i differs under concurrency")
+    }
+    // a lone caller runs exactly one job, on its own thread
+    val sc = spark.sparkContext
+    assert(ServingProbes.jobShape(sc)(hot.topK(qs(0), 10, 2, 32))._2.jobs == 1)
+    // the batch runner: one job, at most one task per pinned partition,
+    // and each answer is that query's own topK
+    val (all, shape) = ServingProbes.jobShape(sc)(hot.searchAll(qs, 10, 2, 32))
+    assert(shape.jobs == 1 && shape.taskPartitions.size <= hot.numPartitions &&
+      shape.taskPartitions.distinct == shape.taskPartitions, s"$shape")
+    assert(all.map(bits) == want)
     hot.close()
     g.unpersist()
+  }
+
+  test("HotAnn withDeleted during an in-flight batch: the batch keeps the old deny set") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+    import spark.implicits._
+    val rnd = new scala.util.Random(59)
+    val rows = clustered(rnd, 800, 8, 4)
+    val g = Nsw.build(spark, rows.toDF("vec_id", "embedding"), "vec_id", "embedding",
+      Nsw.Params(m = 6, efConstruction = 24, kCenters = 4, iters = 2))
+    val hot = HotAnn(g)
+    val qs = (0 until 25).map(i => randVec(new scala.util.Random(200 + i), 8))
+    val want = qs.map(q => hot.topK(q, 10, 2, 32).toSeq)
+    val gone = want.flatMap(_.take(2).map(_._1)).toSet
+    val sc = spark.sparkContext
+    val (key, tag) = ("graft.test.swap", java.util.UUID.randomUUID.toString)
+    val submitted = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) == tag)) submitted.countDown()
+    }
+    sc.addSparkListener(listener)
+    val pool = Executors.newSingleThreadExecutor()
+    try {
+      // every task slot is held, so the old handle's batch job is submitted
+      // but cannot finish before the swap
+      val (inFlight, swapped) = ServingProbes.withSlotsHeld(sc) {
+        val f = pool.submit(new Callable[Seq[Seq[(Long, Double)]]] {
+          def call(): Seq[Seq[(Long, Double)]] = {
+            sc.setLocalProperty(key, tag)
+            hot.searchAll(qs, 10, 2, 32).map(_.toSeq)
+          }
+        })
+        assert(submitted.await(60, TimeUnit.SECONDS), "the old handle's batch never started")
+        assert(!f.isDone)
+        (f, hot.withDeleted(gone))
+      }
+      assert(inFlight.get(120, TimeUnit.SECONDS) == want, "the swap reached the in-flight batch")
+      val fresh = swapped.searchAll(qs, 10, 2, 32)
+      assert(fresh.forall(_.forall(h => !gone(h._1))))
+      val gDel = Nsw.delete(g, gone.toSeq)
+      (0 until 3).foreach { i =>
+        assert(fresh(i).toSeq == Nsw.topK(gDel, qs(i), 10, 2, 32).as[(Long, Double)].collect().toSeq)
+      }
+    } finally {
+      pool.shutdownNow()
+      sc.removeSparkListener(listener)
+    }
+    hot.close()
+    g.unpersist()
+  }
+
+  test("HotAnn batch: an over-cap threshold request fails alone; its batch mates answer as single calls") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(60)
+    val rows = clustered(rnd, 400, 8, 4)
+    val g = Nsw.build(spark, rows.toDF("vec_id", "embedding"), "vec_id", "embedding",
+      Nsw.Params(m = 6, efConstruction = 24, kCenters = 4, iters = 2))
+    val hot = HotAnn(g)
+    val maxCluster = g.adj.groupBy($"c").count().select($"count").as[Long].collect().max.toInt
+    val (q0, q1, q2) = (rows(0)._2, rows(101)._2, rows(202)._2)
+    val page = hot.topK(q2, 10, 2, 32)
+    val cursor = (page.last._2, page.last._1)
+    val reqs = Seq(
+      HotAnn.Request(q0, 4, Nsw.Beam(10, 32)),
+      // tau = -1 matches every node: over the cap in one cluster ...
+      HotAnn.Request(q1, 4, Nsw.Flood(-1.0, Int.MaxValue), maxCluster - 1),
+      HotAnn.Request(q2, 2, Nsw.Beam(10, 32, Some(cursor))),
+      // ... and here only across the probed clusters
+      HotAnn.Request(q0, 4, Nsw.Flood(-1.0, Int.MaxValue), maxCluster),
+      HotAnn.Request(q1, 3, Nsw.Flood(0.9, Int.MaxValue)))
+    val (out, shape) = ServingProbes.jobShape(spark.sparkContext)(hot.run(reqs))
+    assert(shape.jobs == 1, s"$shape")
+    def failure(i: Int): String = {
+      val e = out(i).failed.get
+      assert(e.isInstanceOf[IllegalArgumentException], s"request $i: $e")
+      e.getMessage
+    }
+    assert(failure(1).contains("in one cluster"), failure(1))
+    assert(failure(3).contains("across the probed clusters"), failure(3))
+    val singles = Seq[Nsw.SearchMetrics => Array[(Long, Double)]](
+      m => hot.topK(q0, 10, 4, 32, m),
+      m => hot.searchAfter(q2, 10, cursor, 2, 32, m),
+      m => hot.threshold(q1, 0.9, 3, metrics = m))
+    Seq(0, 2, 4).zip(singles).foreach { case (i, single) =>
+      val m = new Nsw.SearchMetrics
+      val want = single(m).toSeq
+      assert(want.nonEmpty)
+      assert(out(i).get._1.toSeq == want && out(i).get._2 == m.visited, s"request $i")
+    }
+    hot.close()
+    g.unpersist()
+  }
+
+  test("HotAnn pins min(kCenters, cores) partitions; kCenters < cores or an empty cluster answers like Nsw.topK") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(61)
+    val emb = clustered(rnd, 900, 8, 6).toDF("vec_id", "embedding")
+    val cores = spark.sparkContext.defaultParallelism
+    def servesLikeNsw(g: Nsw.Graph, kCenters: Int): Unit = {
+      val hot = HotAnn(g)
+      assert(hot.numPartitions == math.min(kCenters, cores))
+      for (seed <- 1 to 3; nProbe <- Seq(1, 2, kCenters)) {
+        val q = randVec(new scala.util.Random(seed), 8)
+        assert(hot.topK(q, 10, nProbe, 32).toSeq ==
+          Nsw.topK(g, q, 10, nProbe, 32).as[(Long, Double)].collect().toSeq,
+          s"kCenters=$kCenters nProbe=$nProbe seed=$seed")
+      }
+      hot.close()
+    }
+    def build(kCenters: Int) = Nsw.build(spark, emb, "vec_id", "embedding",
+      Nsw.Params(m = 6, efConstruction = 24, kCenters = kCenters, iters = 2))
+    assert(cores > 2, "premise: kCenters = 2 is fewer than the cores")
+    val g2 = build(2)
+    servesLikeNsw(g2, 2)
+    g2.unpersist()
+    // compaction leaves cluster 0 without a row: its shelf holds nothing
+    val g8 = build(8)
+    val members = g8.adj.filter($"c" === 0).select($"key").as[Long].collect()
+    assert(members.nonEmpty)
+    val g8e = Nsw.compact(spark, Nsw.delete(g8, members.toSeq))
+    assert(g8e.adj.filter($"c" === 0).count() == 0 && g8e.centroids.length == 8)
+    servesLikeNsw(g8, 8)
+    servesLikeNsw(g8e, 8)
+    g8e.unpersist()
+    g8.unpersist()
   }
 
   /** (c, key, nbrs, entry) rows, by key: what a mutation leaves behind. */

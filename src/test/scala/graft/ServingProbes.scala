@@ -60,6 +60,34 @@ object ServingProbes {
     }
   }
 
+  /** The (started, release) latches of each [[withSlotsHeld]] call, by id:
+    * its tasks run in this JVM and find them here. */
+  private val holds = new ConcurrentHashMap[String, (CountDownLatch, CountDownLatch)]()
+
+  /** Runs `body` while a job holds every task slot of a local master, so
+    * a job submitted inside `body` cannot run a task until `body` returns. */
+  def withSlotsHeld[A](sc: SparkContext)(body: => A): A = {
+    val slots = sc.defaultParallelism
+    val id = java.util.UUID.randomUUID.toString
+    val started = new CountDownLatch(slots)
+    val release = new CountDownLatch(1)
+    holds.put(id, (started, release))
+    val holder = new Thread(() => sc.parallelize(0 until slots, slots).foreach { _ =>
+      val (s, r) = holds.get(id)
+      s.countDown()
+      r.await(120, TimeUnit.SECONDS)
+    })
+    holder.start()
+    try {
+      assert(started.await(60, TimeUnit.SECONDS), "the slot-holding job never filled the slots")
+      body
+    } finally {
+      release.countDown()
+      holder.join(120000)
+      holds.remove(id)
+    }
+  }
+
   /** Runs `f(i)` for every i in [0, n) on each of `threads` threads at
     * once, each thread in its own rotation of the indices; returns every
     * (i, answer) pair, threads × n of them. */
