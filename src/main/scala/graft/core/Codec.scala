@@ -62,13 +62,38 @@ object Codec {
     i
   }
 
-  /** Number of varbyte values in `bytes` (one terminal byte each). */
-  private def count(bytes: Array[Byte]): Int = {
+  /** Number of varbyte values in `bytes` (one terminal byte each): a
+    * block's posting count, from its docBytes or its tfBytes. */
+  def count(bytes: Array[Byte]): Int = {
     var c = 0
     var i = 0
     while (i < bytes.length) { if (bytes(i) >= 0) c += 1; i += 1 }
     c
   }
+
+  /** Σ (v + 1) over the varbyte values in `bytes`, without decoding into
+    * an array. Both gap-1 docIds and tf-1 store "value minus one", so this
+    * is a tf section's tf total, and one more than the last docId of a
+    * docId section encoded from base -1 (see [[lastDocId]]). */
+  private def sumPlusOne(bytes: Array[Byte]): Long = {
+    var total = 0L
+    var v = 0L; var shift = 0
+    var i = 0
+    while (i < bytes.length) {
+      val b = bytes(i)
+      v |= (b & 0x7FL) << shift; shift += 7
+      if (b >= 0) { total += v + 1; v = 0L; shift = 0 }
+      i += 1
+    }
+    total
+  }
+
+  /** Last docId of a block's docBytes (encoded from base -1, as every
+    * stored block is). */
+  def lastDocId(docBytes: Array[Byte]): Long = sumPlusOne(docBytes) - 1
+
+  /** Sum of the term frequencies in a block's tfBytes. */
+  def tfSum(tfBytes: Array[Byte]): Long = sumPlusOne(tfBytes)
 
   /** `n` delta-gap docIds from `bytes` at `off` into `out`, gaps undone from
     * `base` (see [[encodeDocIds]]); returns the end offset. */

@@ -209,14 +209,16 @@ object IndexBuilder {
   private[graft] def statsOf(numDocs: Long, totTok: Long, nShards: Int): IndexStats =
     IndexStats(numDocs, totTok, if (numDocs == 0) 0.0 else totTok.toDouble / numDocs, nShards)
 
-  /** Dictionary from blocks: df = Σ block n (one posting per doc), cf from
-    * decoded tfs, (maxTf, minDl) = global tf-part bound inputs. Map-side
-    * partial aggregation is automatic (hash agg). */
+  /** Dictionary from blocks: df = Σ postings per block (one posting per
+    * doc), cf = Σ tfs, both counted from `tfBytes`, so over a saved index
+    * the scan reads only `term`, `tfBytes`, `maxTf` and `minDl`;
+    * (maxTf, minDl) = global tf-part bound inputs. Map-side partial
+    * aggregation is automatic (hash agg). */
   def dictFromBlocks(spark: SparkSession, blocks: Dataset[Block]): Dataset[DictEntry] = {
     import spark.implicits._
     blocks.groupBy($"term").agg(
-      sum($"n").cast("long").as("df"),
-      sum($"tfSum").cast("long").as("cf"),
+      sum(SegmentCatalog.postingsOf($"tfBytes")).cast("long").as("df"),
+      sum(SegmentCatalog.tfSumOf($"tfBytes")).cast("long").as("cf"),
       max($"maxTf").as("maxTf"),
       min($"minDl").as("minDl"))
       .as[DictEntry]

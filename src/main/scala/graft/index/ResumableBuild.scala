@@ -26,8 +26,9 @@ import org.apache.spark.sql.functions._
   * bytes, ms, docs/sec), both via [[writeChunk]], the writer streaming
   * micro-batches share. Restart skips chunks whose manifest row exists
   * and whose segment dir committed (_SUCCESS). Dictionary + stats are
-  * recomputed from the union of segments at finalize, so a resumed build
-  * is segment-identical AND dictionary-identical to a one-shot build.
+  * recomputed from the union of segments at finalize (one dictionary scan
+  * over every committed chunk), so a resumed build is segment-identical
+  * AND dictionary-identical to a one-shot build.
   */
 object ResumableBuild {
 
@@ -37,7 +38,7 @@ object ResumableBuild {
     * driver-recorded BENCH file carries the per-phase evidence needed to
     * tell host noise (spiky totals, flat phase interiors) from serial
     * fraction (one phase growing with parallelism). Keys: "sort+count",
-    * "docs-write", "chunkN-write", "dictpartN", "dict-write", "total". */
+    * "docs-write", "chunkN-write", "dict-write", "total". */
   val lastPhaseSecs = new java.util.concurrent.ConcurrentHashMap[String, Double]()
 
   /** @param failAfterChunks test hook: throw after the k-th chunk commits
@@ -122,33 +123,6 @@ object ResumableBuild {
     }
     val chunks = (0 until numChunks).filter(c => (0 until nShards).exists(chunkOfShard(_) == c))
 
-    // dictionary partials, pipelined: as each chunk commits, its (tiny)
-    // per-term stats aggregate runs while the REMAINING chunks are still
-    // writing, so finalize only merges numChunks small partials instead of
-    // scanning every block row after the last-chunk barrier — the dict
-    // scan was the one serial job left between "last chunk done" and
-    // "snapshot committed" (it cost the same wall at every parallelism
-    // level: an Amdahl term the 2->8 scaling criterion pays directly).
-    // Partials are idempotent (skipped when committed) so resume finds or
-    // recomputes them; merge(sum/max/min) over disjoint chunks is exactly
-    // the single-scan aggregation, so the dict is value-identical.
-    def dictPartPath(c: Int): String = s"$dir/dictpart/${chunkId(c)}"
-    def writeDictPartial(c: Int): Unit = {
-      val p = new Path(dictPartPath(c))
-      if (!fs.exists(new Path(p, "_SUCCESS")))
-        phase(s"dictpart$c") {
-          IndexBuilder.dictFromBlocks(spark,
-            SegmentCatalog.readBlockChunks(spark, dir, Seq(chunkId(c))))
-            .write.mode("overwrite").parquet(p.toString)
-        }
-    }
-    val dictPool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val dictFutures = new java.util.concurrent.ConcurrentLinkedQueue[
-      java.util.concurrent.Future[_]]()
-    def submitDictPartial(c: Int): Unit =
-      dictFutures.add(dictPool.submit(new Runnable {
-        def run(): Unit = writeDictPartial(c)
-      }))
     def runChunk(c: Int): Unit = {
       val maniPath = s"$dir/manifest/v$buildVersion-chunk-$c.json"
       val segDir = SegmentCatalog.blocksChunkPath(dir, chunkId(c))
@@ -177,49 +151,29 @@ object ResumableBuild {
       val tasks = task(docsWrite()) +: chunks.zipWithIndex.map { case (c, i) =>
         task {
           runChunk(c)
-          submitDictPartial(c)
           if (failAfterChunks.contains(i + 1) && i + 1 < chunks.size)
             throw new RuntimeException(s"injected failure after ${i + 1} chunks")
         }
       }
       tasks.foreach(Await.result(_, Duration.Inf))
     } finally {
-      // drain in-flight chunk and partial jobs even on the failure path: a
-      // same-JVM resume must never race a background write to the same dir
-      Seq(pool, dictPool).foreach { p =>
-        p.shutdown()
-        p.awaitTermination(1, java.util.concurrent.TimeUnit.HOURS)
-      }
+      // drain in-flight chunk jobs even on the failure path: a same-JVM
+      // resume must never race a background write to the same dir
+      pool.shutdown()
+      pool.awaitTermination(1, java.util.concurrent.TimeUnit.HOURS)
       nb.release()
     }
-    dictFutures.forEach(_.get()) // surface any partial-write failure
     val docs = SegmentCatalog.readDocChunks(spark, dir, Seq(docsChunkId))
     val stats = IndexBuilder.statsOf(numDocs, totTok, nShards)
 
-    // finalize: merge the pipelined per-chunk dictionary partials (each a
-    // tiny per-term stats table computed while LATER chunks were still
-    // writing), then EVERYTHING (chunks + dict + stats) publishes as one
-    // atomic snapshot commit — readers never see a build mid-flight.
-    // A resumed build may find committed chunks whose partial never got
-    // written (crash between chunk commit and partial commit): recompute
-    // just those. sum/max/min over disjoint chunks == the single full
-    // scan, so the merged dict is value-identical to it.
-    // (Round-2 measured SERIAL per-chunk partials slower than one pruned
-    // scan; the difference here is the partials ride the chunk pipeline's
-    // idle cores — only the small merge remains after the barrier.)
+    // finalize: one dictionary scan over every committed chunk (it reads
+    // only term, tfBytes, maxTf and minDl), then EVERYTHING (chunks + dict
+    // + stats) publishes as one atomic snapshot commit — readers never see
+    // a build mid-flight.
     val version = buildVersion
     val dict = phase("dict-write") {
-      chunks.foreach(writeDictPartial) // no-op when committed
-      val merged = spark.read
-        .parquet(chunks.map(dictPartPath): _*)
-        .groupBy($"term").agg(
-          sum($"df").cast("long").as("df"),
-          sum($"cf").cast("long").as("cf"),
-          max($"maxTf").cast("int").as("maxTf"),
-          min($"minDl").cast("int").as("minDl"))
-        .as[DictEntry]
-      SegmentCatalog.writeDict(merged, dir, version)
-      fs.delete(new Path(s"$dir/dictpart"), true) // partials are scratch
+      SegmentCatalog.writeDict(IndexBuilder.dictFromBlocks(spark,
+        SegmentCatalog.readBlockChunks(spark, dir, chunks.map(chunkId))), dir, version)
       SegmentCatalog.readDictVersion(spark, dir, version)
     }
     val snap = SegmentCatalog.commit(spark, dir, SegmentCatalog.Snapshot(

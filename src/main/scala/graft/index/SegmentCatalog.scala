@@ -1,8 +1,10 @@
 package graft.index
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import graft.core.Codec
 
 /** Snapshot-based segment catalog — Iceberg-style table semantics for the
   * index's on-disk format, implemented natively (the zero-egress build
@@ -42,11 +44,46 @@ import org.apache.spark.sql.functions._
   * (bucket, term), so parquet row-group/page min-max stats carry the
   * term-pushdown pruning that bucket partition dirs used to provide,
   * without the small-files explosion of per-bucket directories.
+  *
+  * Format v3 (the one write format). Every table (blocks, docs, dict) is
+  * written by one helper with fixed encodings: zstd, parquet dictionary
+  * encoding on for every column except the three varbyte payloads
+  * (`docBytes`, `tfBytes`, `dlBytes`: high-entropy bytes a dictionary
+  * only inflates). A blocks file stores `term`, `bucket`, `shard`,
+  * `firstDocId`, the payloads, `maxTf` and `minDl`; it does not store
+  * what a reader can derive: `lastDocId` and `n` come from `docBytes`,
+  * `tfSum` from `tfBytes`, computed in the read projection (so the
+  * `bucket`/`term` filters still push down to the parquet scan). v2 files
+  * (snappy, no dictionaries, the three derived columns stored) share the
+  * v3 on-disk columns, so one read path serves both; readers refuse any
+  * snapshot newer than [[FormatVersion]]. Every read passes its explicit
+  * schema: no read launches a footer-reading schema-inference job.
   */
 object SegmentCatalog {
 
-  /** On-disk format: v2 = snapshot catalog (v1 = round-1 bare dirs). */
-  val FormatVersion = 2L
+  /** On-disk format: v3 = zstd + per-column encodings, derived block
+    * columns not stored; v2 = the snapshot catalog with snappy files that
+    * stored them (read as v3); v1 = round-1 bare dirs (unreadable). A
+    * snapshot's version is the newest format any of its files needs. */
+  val FormatVersion = 3L
+
+  /** The blocks columns every readable format stores (v2 files also hold
+    * `lastDocId`, `n` and `tfSum`, which reads ignore). */
+  private val BlocksOnDisk = StructType(Seq(
+    StructField("term", StringType), StructField("bucket", IntegerType),
+    StructField("shard", IntegerType), StructField("firstDocId", LongType),
+    StructField("docBytes", BinaryType), StructField("tfBytes", BinaryType),
+    StructField("dlBytes", BinaryType), StructField("maxTf", IntegerType),
+    StructField("minDl", IntegerType)))
+
+  /** Block payload columns: stored without a parquet dictionary. */
+  private val Payloads = Seq("docBytes", "tfBytes", "dlBytes")
+
+  /** The block columns v3 derives instead of storing (deterministic, so
+    * filters on the stored columns still push through the projection). */
+  private[graft] val postingsOf = udf((bytes: Array[Byte]) => Codec.count(bytes))
+  private val lastDocIdOf = udf((docBytes: Array[Byte]) => Codec.lastDocId(docBytes))
+  private[graft] val tfSumOf = udf((tfBytes: Array[Byte]) => Codec.tfSum(tfBytes))
 
   /** One immutable table version. `blockChunks`/`docChunks` are chunk-dir
     * ids under blocks/ and docs/; `dictVersion` names dict/v=<n>;
@@ -131,6 +168,10 @@ object SegmentCatalog {
     val json = try new String(
       org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
     val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    val format = m.get("formatVersion").asLong()
+    if (format > FormatVersion)
+      throw new IllegalStateException(s"snapshot v$version of the index at $dir has " +
+        s"format v$format; this reader reads formats up to v$FormatVersion")
     def strs(f: String): Seq[String] = {
       val n = m.get(f)
       (0 until n.size()).map(n.get(_).asText())
@@ -140,7 +181,7 @@ object SegmentCatalog {
       parent = m.get("parent").asLong(),
       op = m.get("op").asText(),
       tsMs = m.get("tsMs").asLong(),
-      formatVersion = m.get("formatVersion").asLong(),
+      formatVersion = format,
       blockChunks = strs("blockChunks"),
       docChunks = strs("docChunks"),
       dictVersion = m.get("dictVersion").asLong(),
@@ -157,7 +198,7 @@ object SegmentCatalog {
     readSnapshot(spark, dir, currentVersion(spark, dir).getOrElse(
       throw new IllegalStateException(
         s"no snapshot catalog at $dir (missing ${hintPath(dir)}). " +
-        "Not a graft format-v2 index: v1 bare-dir indexes predate the " +
+        "Not a graft catalog index: v1 bare-dir indexes predate the " +
         "catalog — rebuild, or re-save from the session that built them.")))
 
   /** Commit `snap` as the next table version. The snapshot file is created
@@ -166,7 +207,8 @@ object SegmentCatalog {
     * Iceberg-style). The hint swap is last: a crash before it leaves an
     * orphan snapshot file, never a broken table. */
   def commit(spark: SparkSession, dir: String, snap: Snapshot): Snapshot = {
-    require(snap.formatVersion == FormatVersion)
+    require(snap.formatVersion == FormatVersion,
+      s"writers commit format v$FormatVersion, not v${snap.formatVersion}")
     val fs = fsOf(spark, dir)
     fs.mkdirs(new Path(s"$dir/catalog"))
     val json =
@@ -195,33 +237,58 @@ object SegmentCatalog {
     snap
   }
 
-  /** Write one blocks chunk dir (idempotent overwrite; commit publishes).
-    * Rows are sorted by (bucket, term, shard, firstDocId) within each task
-    * so parquet min/max stats make the candidate-scan's bucket+term
-    * filters prune row groups/pages — the stats-pruned-data-column layout. */
+  /** The one writer of every catalog table (idempotent overwrite; commit
+    * publishes), with the format's fixed encodings: zstd, and parquet
+    * dictionary encoding on for every column but the block payloads.
+    * The encodings are constants, the same for every table, because
+    * parquet-mr (1.16) decides each column's encoding from JVM-wide state:
+    * building a writer's `ParquetProperties` re-initializes the shared
+    * `ParquetProperties.DEFAULT_VALUES_WRITER_FACTORY`, so a file opened
+    * while a writer with other settings starts takes that writer's
+    * dictionary choice (the cause of format v2's occasional
+    * dictionary-encoded chunk file). Writes that concurrent builds run
+    * through here cannot disagree. */
+  private def writeTable(table: DataFrame, path: String): Unit =
+    Payloads.foldLeft(table.write.mode("overwrite")
+        .option("compression", "zstd").option("parquet.enable.dictionary", "true")) {
+      (w, c) => w.option(s"parquet.enable.dictionary#$c", "false")
+    }.parquet(path)
+
+  /** Write one blocks chunk dir: the stored columns only. Rows are sorted
+    * by (bucket, term, shard, firstDocId) within each task so parquet
+    * min/max stats make the candidate-scan's bucket+term filters prune row
+    * groups/pages — the stats-pruned-data-column layout. */
   def writeBlocksChunk(blocks: Dataset[Block], dir: String, cid: String): Unit =
-    blocks
+    writeTable(blocks
       .sortWithinPartitions(col("bucket"), col("term"), col("shard"), col("firstDocId"))
-      .write.mode("overwrite")
-      .option("parquet.enable.dictionary", "false") // high-entropy payloads
-      .parquet(blocksChunkPath(dir, cid))
+      .select(BlocksOnDisk.fieldNames.map(col).toIndexedSeq: _*),
+      blocksChunkPath(dir, cid))
 
   def writeDocsChunk(docs: Dataset[DocMeta], dir: String, cid: String): Unit =
-    docs.write.mode("overwrite").parquet(docsChunkPath(dir, cid))
+    writeTable(docs.toDF(), docsChunkPath(dir, cid))
 
   def writeDict(dict: Dataset[DictEntry], dir: String, v: Long): Unit =
-    dict.write.mode("overwrite").parquet(dictPath(dir, v))
+    writeTable(dict.toDF(), dictPath(dir, v))
 
   def readBlocks(spark: SparkSession, dir: String, snap: Snapshot): Dataset[Block] =
     readBlockChunks(spark, dir, snap.blockChunks)
 
+  /** Blocks of the given chunks, v2 and v3 files alike, with the derived
+    * columns computed from the payloads. Parquet's dictionary filter is
+    * off: for a `bucket`/`term` filter it reads every file's `term`
+    * dictionary (about 1.7 MB per DataFrame query on graftbench's bm25
+    * index, against about 0.1 MB without it), yet a head term sits in every
+    * file, and the page index already prunes the sorted pages. */
   def readBlockChunks(spark: SparkSession, dir: String,
                       chunks: Seq[String]): Dataset[Block] = {
     import spark.implicits._
-    spark.read.option("basePath", s"$dir/blocks")
+    spark.read.schema(BlocksOnDisk).option("basePath", s"$dir/blocks")
+      .option("parquet.filter.dictionary.enabled", "false")
       .parquet(chunks.map(blocksChunkPath(dir, _)): _*)
-      .select("term", "bucket", "shard", "firstDocId", "lastDocId", "n",
-        "docBytes", "tfBytes", "dlBytes", "maxTf", "minDl", "tfSum").as[Block]
+      .select($"term", $"bucket", $"shard", $"firstDocId",
+        lastDocIdOf($"docBytes").as("lastDocId"), postingsOf($"docBytes").as("n"),
+        $"docBytes", $"tfBytes", $"dlBytes", $"maxTf", $"minDl",
+        tfSumOf($"tfBytes").as("tfSum")).as[Block]
   }
 
   def readDocs(spark: SparkSession, dir: String, snap: Snapshot): Dataset[DocMeta] =
@@ -230,9 +297,10 @@ object SegmentCatalog {
   def readDocChunks(spark: SparkSession, dir: String,
                     chunks: Seq[String]): Dataset[DocMeta] = {
     import spark.implicits._
-    spark.read.option("basePath", s"$dir/docs")
+    val schema = Encoders.product[DocMeta].schema
+    spark.read.schema(schema).option("basePath", s"$dir/docs")
       .parquet(chunks.map(docsChunkPath(dir, _)): _*)
-      .select("docId", "shard", "url", "docLen", "lang").as[DocMeta]
+      .select(schema.fieldNames.map(col).toIndexedSeq: _*).as[DocMeta]
   }
 
   def readDict(spark: SparkSession, dir: String, snap: Snapshot): Dataset[DictEntry] =
@@ -240,7 +308,7 @@ object SegmentCatalog {
 
   def readDictVersion(spark: SparkSession, dir: String, v: Long): Dataset[DictEntry] = {
     import spark.implicits._
-    spark.read.parquet(dictPath(dir, v)).as[DictEntry]
+    spark.read.schema(Encoders.product[DictEntry].schema).parquet(dictPath(dir, v)).as[DictEntry]
   }
 
   /** Assemble an [[InvertedIndex]] from a snapshot (default: current). */
@@ -248,8 +316,6 @@ object SegmentCatalog {
            version: Option[Long] = None): InvertedIndex = {
     val snap = version.map(readSnapshot(spark, dir, _))
       .getOrElse(current(spark, dir))
-    require(snap.formatVersion <= FormatVersion,
-      s"unsupported index format v${snap.formatVersion}")
     // invalidate any cached listing of these (reused) chunk roots: a newer
     // snapshot may reference chunks appended after this session first
     // listed the path (Spark only auto-refreshes paths it wrote itself)
@@ -316,8 +382,8 @@ object SegmentCatalog {
     val od = orphansUnder("docs", "chunk=", liveD)
     val odict = orphansUnder("dict", "v=",
       id => id.toLongOption.forall(liveDict)) // unparseable -> keep
-    // dictionary-partial scratch (dictpart/<chunkId>): always deleted by a
-    // successful finalize, so any aged survivor is a crashed build's debris
+    // dictionary-partial scratch (dictpart/<chunkId>) that builds before
+    // the single-scan finalize left behind when they crashed
     val oscratch = orphansUnder("dictpart", "", _ => false)
     if (!dryRun) {
       (ob ++ od ++ odict ++ oscratch).foreach { case (_, p) => fs.delete(p, true) }

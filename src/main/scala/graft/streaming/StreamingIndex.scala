@@ -101,7 +101,7 @@ object StreamingIndex {
     // THE commit: chunks + stats + high-water mark become visible atomically
     SegmentCatalog.commit(spark, dir, snap.copy(
       version = snap.version + 1, parent = snap.version, op = "append",
-      tsMs = System.currentTimeMillis(),
+      tsMs = System.currentTimeMillis(), formatVersion = SegmentCatalog.FormatVersion,
       blockChunks = snap.blockChunks :+ cid,
       docChunks = snap.docChunks :+ cid,
       stats = newStats, maxStreamBatch = batchId,
@@ -122,7 +122,8 @@ object StreamingIndex {
     SegmentCatalog.writeDict(dict, dir, v)
     SegmentCatalog.commit(spark, dir, snap.copy(
       version = v, parent = snap.version, op = "refresh",
-      tsMs = System.currentTimeMillis(), dictVersion = v))
+      tsMs = System.currentTimeMillis(), formatVersion = SegmentCatalog.FormatVersion,
+      dictVersion = v))
     InvertedIndex.load(spark, dir)
   }
 }

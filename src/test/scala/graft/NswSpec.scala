@@ -885,7 +885,8 @@ class NswSpec extends AnyFunSuite with BeforeAndAfterAll {
       hot.threshold(q, -1.0, 4, Int.MaxValue, null, sizes.max.toInt)
     }
     assert(msgChain(total).contains("across the probed clusters"), msgChain(total))
-    // a cluster over the cap fails in its task, before its rows ship
+    // a cluster over the cap: its task withholds the rows and flags the
+    // request, and the caller checks that flag after the job and fails the call
     val one = intercept[Exception] {
       hot.threshold(q, -1.0, 4, Int.MaxValue, null, sizes.max.toInt - 1)
     }
