@@ -148,8 +148,9 @@ object IndexCli {
 
       case "serve" =>
         // long-lived serving loop (jvector IPCService.java:325-368 analog):
-        // prepare once (shard-co-located cached blocks + driver hot dict),
-        // then answer queries from stdin with no per-query planning job.
+        // pin once (HotIndex: packed stores in the fewest partitions their
+        // size allows + driver hot dict), then answer queries from stdin
+        // with no per-query planning job, one task per pinned partition.
         if (args.length < 2) { usage(); sys.exit(2) }
         val spark = session(cpus)
         spark.sparkContext.setLogLevel("WARN")

@@ -1,12 +1,15 @@
 package graft.index
 
-import org.apache.spark.HashPartitioner
+import org.apache.spark.{HashPartitioner, NarrowDependency, Partition, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.storage.StorageLevel
 import graft.core.DoubleTopK
 
+import scala.collection.mutable.ArrayBuffer
 import scala.concurrent.Await
 import scala.concurrent.duration.Duration
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 import scala.util.control.NonFatal
 
 /** Long-lived serving handle over a built index — the engine's analog of
@@ -18,19 +21,33 @@ import scala.util.control.NonFatal
   * The batch/search DataFrame path re-plans through Catalyst per query —
   * right for throughput, wrong for a serving loop where planning dominates
   * (~100 ms/query). Here the index is materialized ONCE as a cached RDD
-  * holding one packed [[Searcher.Store]] per partition (shard-co-located,
-  * so one WAND run per partition is valid: shards are disjoint increasing
-  * docId ranges): the partition's blocks grouped by term, block metadata
-  * in primitive arrays and all payload bytes in one array, so the pinned
-  * cache costs the blocks' varbyte payload, ~32 B of metadata per block
-  * and one string per term. A query is
-  * then one Spark job over those stores — a binary-search term
-  * lookup + the WAND kernel decoding in place + a driver-side k-way
-  * merge, no per-query planning, shuffle, or scan. The query plan itself
-  * (idf + upper bound per term) comes from the driver-resident hot
-  * dictionary. The stores and the kernel inputs come from [[Searcher]],
-  * the same code the DataFrame path runs, so both paths score
-  * bit-identically.
+  * holding one packed [[Searcher.Store]] per partition: the partition's
+  * blocks grouped by term, block metadata in primitive arrays and all
+  * payload bytes in one array, so the pinned cache costs the blocks'
+  * varbyte payload, ~32 B of metadata per block and one string per term.
+  * A partition holds whole shards, so one WAND run per partition is valid
+  * (a shard holds every posting of its docs). A query is then one Spark
+  * job over those stores — a binary-search term lookup + the WAND kernel
+  * decoding in place + a driver-side k-way merge, no per-query planning,
+  * shuffle, or scan. The query plan itself (idf + upper bound per term)
+  * comes from the driver-resident hot dictionary. The stores and the
+  * kernel inputs come from [[Searcher]], the same code the DataFrame path
+  * runs, so both paths score bit-identically.
+  *
+  * Layout by size, not by cores: the pin holds the fewest partitions
+  * that keep each store under [[HotIndex.PartitionBytes]], so a small
+  * index is one partition and a lone query runs one task: every extra
+  * task of a serving job costs scheduler time, while WAND over a few MB
+  * takes a fraction of a millisecond. The pin itself stays parallel:
+  * every shard is packed on its own, and the shard stores then merge into
+  * the partition stores ([[Searcher.merge]]).
+  *
+  * A batch gets every core without pinning more partitions: a view whose
+  * task t reads pinned partition t mod P (a narrow dependency, no copy)
+  * runs P × s tasks, s = min(#queries, ⌈cores / P⌉), and task t scores the
+  * queries whose index is ≡ ⌊t / P⌋ (mod s). In cluster mode the
+  * DAGScheduler follows that narrow dependency to the cached block, so
+  * each task prefers the executor holding its partition.
   *
   * This is the one deliberately non-declarative surface of the engine
   * (SURVEY §2.4 P5): serving latency is a per-partition imperative
@@ -113,7 +130,7 @@ final class HotIndex private (
     val filter = mkFilter(null, deny)
     val avgdl = ix.stats.avgdl
     val cap = maxResults
-    val perPart = everyPartition { s =>
+    val perPart = sliced(1) { (s, _) =>
       val hits = Wand.threshold(s, plan, tau, avgdl, filter, null).toArray
       HotIndex.requireUnderCap(hits.length, cap, "in one partition",
         "InvertedIndex.searchThreshold")
@@ -129,7 +146,8 @@ final class HotIndex private (
 
   /** Batch serving: ONE job scores every query against each partition's
     * store (shared scan, jvector SiftSmall.java:92-113 parallel batch
-    * analog); returns per-query exact top-k. */
+    * analog), fanned out over query slices so the batch gets every core;
+    * returns per-query exact top-k. */
   def searchAll(queries: Seq[(Int, String)], k: Int,
                 deny: Array[Long] = Array.emptyLongArray): Seq[(Int, Array[ScoredDoc])] =
     runTopK(queries, k, mkFilter(null, deny), null)
@@ -141,8 +159,11 @@ final class HotIndex private (
     if (k <= 0 || plans.forall(_._2.isEmpty)) return plans.map(p => (p._1, Array.empty[ScoredDoc]))
     val avgdl = ix.stats.avgdl
     val kk = k
-    val perPart = everyPartition { s =>
-      plans.map { case (qid, plan) => (qid, Wand.topK(s, plan, kk, avgdl, filter, after, null)) }
+    val slices = math.min(plans.size, maxSlices)
+    val perPart = sliced(slices) { (s, slice) =>
+      plans.iterator.zipWithIndex.collect { case ((qid, plan), j) if j % slices == slice =>
+        (qid, Wand.topK(s, plan, kk, avgdl, filter, after, null))
+      }.toList
     }
     // tiny driver merge: numPartitions × k candidates per query, grouped
     // once so the merge is O(Q·P), not O(Q²·P)
@@ -157,9 +178,28 @@ final class HotIndex private (
     }
   }
 
-  /** The one serving job: `f` over every partition's store. */
-  private def everyPartition[T](f: Searcher.Store => T): Seq[T] =
-    HotIndex.serve(parts, parts.partitions.indices)(_.map(f).toList).flatten
+  /** Partitions of the pinned RDD. */
+  private[graft] def numPartitions: Int = parts.getNumPartitions
+
+  /** Query slices a batch fans out to: enough for every core. */
+  private val maxSlices = {
+    val cores = parts.sparkContext.defaultParallelism
+    math.max(1, (cores + numPartitions - 1) / numPartitions)
+  }
+
+  /** Task t of [[sliced]] reads pinned partition t mod P. */
+  private lazy val fanOut: RDD[Searcher.Store] =
+    new Gather(parts, Array.tabulate(numPartitions * maxSlices)(t => Array(t % numPartitions)))
+
+  /** The one serving job: `f(store, slice)` for every pinned partition's
+    * store and every slice in [0, `slices`), one task each. */
+  private def sliced[T](slices: Int)(f: (Searcher.Store, Int) => T): Seq[T] = {
+    val p = numPartitions
+    HotIndex.serve(if (slices == 1) parts else fanOut, 0 until p * slices) { it =>
+      val slice = TaskContext.get.partitionId / p
+      it.map(f(_, slice)).toList // drained, so the cached block's read lock is released
+    }.flatten
+  }
 
   def close(): Unit = parts.unpersist()
 }
@@ -221,24 +261,70 @@ object HotIndex {
     def apply(it: Iterator[T]): U = f(it)
   }
 
-  /** Materialize the serving cache: one packed [[Searcher.Store]] per
-    * partition, built from the shard-partitioned block Dataset and pinned
-    * in executor memory. */
-  def apply(ix0: InvertedIndex, numPartitions: Int = 0): HotIndex = {
+  /** Largest store the pin puts in one partition, payload plus block
+    * metadata ([[Searcher.Store.bytes]]): an eighth of the 2 GiB a store can
+    * address, yet enough that an index of a few hundred MB pins a handful
+    * of partitions. Only a shard larger than this gets a store over it. */
+  val PartitionBytes: Long = 256L << 20
+
+  /** Materialize the serving cache: the fewest partitions that keep each
+    * packed [[Searcher.Store]] within [[PartitionBytes]], pinned in
+    * executor memory. */
+  def apply(ix: InvertedIndex): HotIndex = apply(ix, PartitionBytes)
+
+  /** [[apply]] under a given partition budget. Every shard is packed in
+    * parallel; the driver then groups the shards in shard order, starting
+    * a partition whenever the next shard would take it over `budget`, and
+    * each partition merges its shards' stores. */
+  private[graft] def apply(ix0: InvertedIndex, budget: Long): HotIndex = {
     val ix = if (ix0.hotDict != null) ix0 else ix0.withHotDict()
     val sc = ix.spark.sparkContext
-    // never exceed the shard count: blocks hash-partition by shard, so
-    // partitions beyond numShards are structurally EMPTY yet still cost a
-    // scheduled task in every serving job — pure per-query latency overhead
-    val p = if (numPartitions > 0) numPartitions
-            else math.max(1, math.min(sc.defaultParallelism, ix.stats.numShards))
-    val parts = ix.blocks.rdd
+    val packers = math.max(1, math.min(sc.defaultParallelism, ix.stats.numShards))
+    val shards = ix.blocks.rdd
       .map(b => (b.shard, b))
-      .partitionBy(new HashPartitioner(p))
-      .mapPartitions(it => Iterator(Searcher.pack(it.map(_._2))),
-        preservesPartitioning = true)
+      .partitionBy(new HashPartitioner(packers))
+      .mapPartitions { it =>
+        val byShard = new java.util.HashMap[Int, ArrayBuffer[Block]]()
+        it.foreach { case (s, b) => byShard.computeIfAbsent(s, _ => new ArrayBuffer[Block]) += b }
+        byShard.asScala.iterator.map { case (s, bs) => (s, Searcher.pack(bs.iterator)) }
+      }
+      .persist(StorageLevel.MEMORY_ONLY)
+    // (shard, packer partition, bytes), in shard order
+    val sized = serve(shards, shards.partitions.indices)(_.map { case (s, st) => (s, st.bytes) }.toList)
+      .zipWithIndex.flatMap { case (ss, p) => ss.map { case (s, b) => (s, p, b) } }.sortBy(_._1)
+    val groups = ArrayBuffer(ArrayBuffer.empty[(Int, Int, Long)])
+    var used = 0L
+    sized.foreach { case u @ (_, _, b) =>
+      if (groups.last.nonEmpty && used + b > budget) { groups += ArrayBuffer.empty; used = 0L }
+      groups.last += u
+      used += b
+    }
+    val members = groups.map(_.map(_._1).toArray).toArray
+    val parts = new Gather(shards, groups.map(_.map(_._2).distinct.sorted.toArray).toArray)
+      .mapPartitionsWithIndex { (j, it) =>
+        val mine = it.toMap
+        Iterator.single(Searcher.merge(members(j).map(mine).toIndexedSeq))
+      }
       .persist(StorageLevel.MEMORY_ONLY)
     parts.count() // materialize before first query
+    shards.unpersist(blocking = false)
     new HotIndex(ix, parts)
   }
+}
+
+/** A narrow view of `parent`: partition i reads the parent partitions
+  * `reads(i)`, in order, with no shuffle and no copy. */
+private[index] final class Gather[T: ClassTag](parent: RDD[T], reads: Array[Array[Int]])
+    extends RDD[T](parent.sparkContext, Seq(new NarrowDependency[T](parent) {
+      def getParents(i: Int): Seq[Int] = reads(i).toSeq
+    })) {
+  override protected def getPartitions: Array[Partition] =
+    Array.tabulate[Partition](reads.length)(Gather.Part(_))
+
+  override def compute(split: Partition, ctx: TaskContext): Iterator[T] =
+    reads(split.index).iterator.flatMap(p => parent.iterator(parent.partitions(p), ctx))
+}
+
+private[index] object Gather {
+  final case class Part(index: Int) extends Partition
 }

@@ -446,8 +446,9 @@ object InvertedIndex {
 }
 
 /** Executor-side glue between block sets and the WAND kernel: every BM25
-  * search — [[HotIndex]] partitions and DataFrame shard groups alike —
-  * packs its blocks with [[pack]] and resolves its plan with [[plan]], so
+  * search — [[HotIndex]] partitions (shards packed, then merged) and
+  * DataFrame shard groups alike — packs its blocks with [[pack]] and
+  * resolves its plan with [[plan]], so
   * the pinned layout, the term set and the term-sorted cursor order (which
   * fixes the fp summation order, hence bit-identical scores across paths)
   * are decided in one place. */
@@ -465,7 +466,7 @@ private[graft] object Searcher {
     *   `payload(off(i))`; each section holds `n(i)` varbytes, so decoding
     *   needs no per-section offsets */
   final class Store private[Searcher] (
-      terms: Array[String],
+      val terms: Array[String],
       val start: Array[Int],
       val first: Array[Long],
       val last: Array[Long],
@@ -473,14 +474,34 @@ private[graft] object Searcher {
       val minDl: Array[Int],
       val n: Array[Int],
       val off: Array[Int],
-      val payload: Array[Byte]) {
+      val payload: Array[Byte]) extends Serializable {
     /** The range holding `term`'s blocks, or -1 when there are none. */
     def range(term: String): Int =
       math.max(-1, java.util.Arrays.binarySearch(terms.asInstanceOf[Array[AnyRef]], term))
+
+    /** Pinned size as a partition budget counts it: the payload plus the
+      * block metadata arrays (`first`, `last`, `maxTf`, `minDl`, `n`,
+      * `off`). Both add up exactly across [[merge]]; the term index does
+      * not, since stores share terms. */
+    def bytes: Long = payload.length + MetaBytesPerBlock * first.length
+
+    /** Bytes of block `i`'s payload: blocks are laid out in index order. */
+    private[Searcher] def payloadEnd(i: Int): Int =
+      if (i + 1 < off.length) off(i + 1) else payload.length
   }
+
+  /** Bytes of metadata a store holds per block: two longs, four ints. */
+  val MetaBytesPerBlock = 32L
 
   /** Largest payload one store can address (an `Array[Byte]` index). */
   private val MaxPayload = Int.MaxValue - 8
+
+  /** A store never splits a shard, so only a rebuild with more (hence
+    * smaller) shards gets under the cap. */
+  private def requireAddressable(bytes: Long): Unit =
+    require(bytes <= MaxPayload,
+      s"$bytes bytes of postings in one store, over the 2 GiB a packed store " +
+      "can address; a store holds whole shards, so rebuild the index with more shards")
 
   private val byFirstDocId: java.util.Comparator[Block] =
     (a: Block, b: Block) => java.lang.Long.compare(a.firstDocId, b.firstDocId)
@@ -514,9 +535,7 @@ private[graft] object Searcher {
       runs(r).foreach(b => bytes += b.docBytes.length + b.tfBytes.length + b.dlBytes.length)
       r += 1
     }
-    require(bytes <= MaxPayload,
-      s"one partition holds $bytes bytes of postings, over the 2 GiB a packed " +
-      "store can address; pin the index with more partitions")
+    requireAddressable(bytes)
     val nb = start(runs.length)
     val first, last = new Array[Long](nb)
     val maxTf, minDl, n, off = new Array[Int](nb)
@@ -533,6 +552,74 @@ private[graft] object Searcher {
       i += 1
     })
     new Store(terms, start, first, last, maxTf, minDl, n, off, payload)
+  }
+
+  /** Merge stores into the one [[pack]] would build from all their
+    * blocks: the sorted term indexes merge, and each term's blocks merge
+    * by firstDocId across the stores that hold the term. Any split of a
+    * block set into stores merges back the same way: a term's blocks never
+    * share a docId, so firstDocId orders them totally. One store is
+    * returned as it is. */
+  def merge(stores: IndexedSeq[Store]): Store = {
+    if (stores.length == 1) return stores(0)
+    val in = stores.toArray
+    val k = in.length
+    val bytes = in.map(_.payload.length.toLong).sum
+    requireAddressable(bytes)
+    val nb = in.map(_.first.length).sum
+    val first, last = new Array[Long](nb)
+    val maxTf, minDl, n, off = new Array[Int](nb)
+    val payload = new Array[Byte](bytes.toInt)
+    val terms = Array.newBuilder[String]
+    val start = Array.newBuilder[Int]
+    val next = new Array[Int](k)    // each store's next range
+    val at, end = new Array[Int](k) // each store's blocks of the current term
+    var i = 0
+    var o = 0
+    var more = true
+    while (more) {
+      var t: String = null
+      var s = 0
+      while (s < k) {
+        val ts = in(s).terms
+        if (next(s) < ts.length && (t == null || ts(next(s)).compareTo(t) < 0)) t = ts(next(s))
+        s += 1
+      }
+      more = t != null
+      if (more) {
+        terms += t
+        start += i
+        s = 0
+        while (s < k) {
+          val st = in(s)
+          val r = next(s)
+          if (r < st.terms.length && st.terms(r) == t) {
+            at(s) = st.start(r); end(s) = st.start(r + 1); next(s) = r + 1
+          } else { at(s) = 0; end(s) = 0 }
+          s += 1
+        }
+        var b = 0
+        while (b >= 0) {
+          b = -1
+          s = 0
+          while (s < k) {
+            if (at(s) < end(s) && (b < 0 || in(s).first(at(s)) < in(b).first(at(b)))) b = s
+            s += 1
+          }
+          if (b >= 0) {
+            val st = in(b)
+            val j = at(b)
+            first(i) = st.first(j); last(i) = st.last(j)
+            maxTf(i) = st.maxTf(j); minDl(i) = st.minDl(j); n(i) = st.n(j); off(i) = o
+            val len = st.payloadEnd(j) - st.off(j)
+            System.arraycopy(st.payload, st.off(j), payload, o, len)
+            o += len; i += 1; at(b) = j + 1
+          }
+        }
+      }
+    }
+    start += i
+    new Store(terms.result(), start.result(), first, last, maxTf, minDl, n, off, payload)
   }
 
   /** One query's (idf, ub, range) cursor inputs from a store, in term

@@ -20,9 +20,9 @@ import scala.util.control.NonFatal
   * batch scoring, wrong for a serving loop. Here each cluster's graph is
   * materialized ONCE as assembled arrays (keys, float32 vectors, index
   * adjacency, medioid entry) in a cached RDD of `P = min(kCenters,
-  * defaultParallelism)` partitions, the rule `HotIndex` pins by: cluster
-  * `c` lives on partition `c mod P`, so a job never runs more tasks than
-  * there are cores. A query ranks centroids on the driver, and its
+  * defaultParallelism)` partitions: cluster `c` lives on partition
+  * `c mod P`, so a job never runs more tasks than there are cores. A
+  * query ranks centroids on the driver, and its
   * search runs on ONLY the partitions that hold its nProbe probed
   * clusters — no planning, no shuffle, no scan. The driver merge is
   * nProbe·k rows.
@@ -53,6 +53,9 @@ final class HotAnn private (
 
   /** Partitions of the pinned RDD. */
   private[graft] def numPartitions: Int = parts.getNumPartitions
+
+  /** Id of the pinned RDD: the key of its `getRDDStorageInfo` entry. */
+  private[graft] def rddId: Int = parts.id
 
   /** Exact same contract as [[Nsw.topK]]: probe the nProbe nearest
     * clusters, beam from each medioid with frontier `ef`, merge

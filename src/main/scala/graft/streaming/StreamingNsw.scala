@@ -33,7 +33,7 @@ import graft.ops.Nsw
   * stable-router contract as `Nsw.append`; re-clustering is a rebuild.
   * Each committed batch's graph owns its rows (`Nsw.Graph`), so the
   * resident graph never stacks a plan on its predecessors; the one it
-  * replaces is retired.
+  * replaces is retired once nothing serves it.
   * Fused PQ codes, if present, are dropped by the first append (new nodes
   * have none) — re-attach offline with `Nsw.attachPqWith`. */
 object StreamingNsw {
@@ -41,18 +41,30 @@ object StreamingNsw {
   /** Live serving over a streaming-ingested graph — the reference IPC
     * service's concurrent WRITE+SEARCH (IPCService.java:107-230 accepts
     * writes and searches on one resident index): searches always run
-    * against the latest COMMITTED batch's graph. [[refresh]] retires the
-    * previous generation's cache with a one-generation grace (closed on
+    * against the latest COMMITTED batch's graph. [[refresh]] keeps the
+    * previous generation serving with a one-generation grace (closed on
     * the refresh after next), so a search racing a refresh never loses
-    * the arrays under its feet mid-query. */
-  final class LiveAnn private[streaming] (initial: graft.ops.HotAnn) {
-    @volatile private var hot = initial
-    private var retiring: graft.ops.HotAnn = null
+    * the arrays under its feet mid-query. A generation is retired — its
+    * cache and its checkpoint released — only when its grace handle
+    * closes: until then an evicted pinned block can still be recomputed
+    * from it. */
+  final class LiveAnn private[streaming] (first: Nsw.Graph) {
+    @volatile private var hot = graft.ops.HotAnn(first)
+    private var graph = first
+    private var retiring: (graft.ops.HotAnn, Nsw.Graph) = null
     private[streaming] def refresh(g: Nsw.Graph): Unit = synchronized {
-      if (retiring != null) retiring.close()
+      retire()
       val next = graft.ops.HotAnn(g)
-      retiring = hot
+      retiring = (hot, graph)
       hot = next
+      graph = g
+    }
+    /** The previous generation's handle and graph, while its grace lasts. */
+    private[graft] def grace: Option[(graft.ops.HotAnn, Nsw.Graph)] = synchronized(Option(retiring))
+    private def retire(): Unit = if (retiring != null) {
+      retiring._1.close()
+      retiring._2.unpersist()
+      retiring = null
     }
     def topK(query: Seq[Float], k: Int, nProbe: Int, ef: Int,
              metrics: Nsw.SearchMetrics = null): Array[(Long, Double)] =
@@ -63,9 +75,11 @@ object StreamingNsw {
     def searchAfter(query: Seq[Float], k: Int, cursor: (Double, Long),
                     nProbe: Int, ef: Int): Array[(Long, Double)] =
       hot.searchAfter(query, k, cursor, nProbe, ef)
+    /** Retires every generation the handle holds; stop the query first. */
     def close(): Unit = synchronized {
-      if (retiring != null) { retiring.close(); retiring = null }
+      retire()
       hot.close()
+      graph.unpersist()
     }
   }
 
@@ -76,17 +90,26 @@ object StreamingNsw {
   def startServing(spark: SparkSession, vectors: DataFrame, keyCol: String,
                    vecCol: String, dir: String, checkpoint: String)
       : (StreamingQuery, LiveAnn) = {
-    val live = new LiveAnn(graft.ops.HotAnn(Nsw.load(spark, dir)))
-    val q = start(spark, vectors, keyCol, vecCol, dir, checkpoint,
-      onCommit = live.refresh)
+    val graph = Nsw.load(spark, dir)
+    val live = new LiveAnn(graph)
+    val q = run(spark, vectors, keyCol, vecCol, dir, checkpoint, graph,
+      commit = (_, next) => live.refresh(next)) // the handle retires the previous one
     (q, live)
   }
 
   def start(spark: SparkSession, vectors: DataFrame, keyCol: String,
-            vecCol: String, dir: String, checkpoint: String,
-            onCommit: Nsw.Graph => Unit = _ => ()): StreamingQuery = {
-    // resident graph: loaded once, replaced after each committed batch
-    @volatile var graph = Nsw.load(spark, dir)
+            vecCol: String, dir: String, checkpoint: String): StreamingQuery =
+    run(spark, vectors, keyCol, vecCol, dir, checkpoint, Nsw.load(spark, dir),
+      commit = (previous, _) => previous.unpersist())
+
+  /** The stream from resident graph `first`; `commit(previous, next)` runs
+    * after each batch that changed the graph is durable, and owns
+    * retiring `previous`. */
+  private def run(spark: SparkSession, vectors: DataFrame, keyCol: String, vecCol: String,
+                  dir: String, checkpoint: String, first: Nsw.Graph,
+                  commit: (Nsw.Graph, Nsw.Graph) => Unit): StreamingQuery = {
+    // resident graph: replaced after each committed batch
+    @volatile var graph = first
     @volatile var mark = Nsw.loadStreamBatch(spark, dir)
     vectors.writeStream
       .option("checkpointLocation", checkpoint)
@@ -100,9 +123,9 @@ object StreamingNsw {
           val (next, touched) = Nsw.appendTouched(s, graph, batch, keyCol, vecCol)
           Nsw.saveTouched(s, next, dir, touched, maxStreamBatch = batchId)
           if (next ne graph) {
-            graph.unpersist()
+            val previous = graph
             graph = next
-            onCommit(graph) // serving refresh hook (after the commit)
+            commit(previous, next)
           } // else: nothing changed (an empty or replayed batch) — the mark still advances
           mark = batchId
         }

@@ -563,7 +563,8 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select($"n").as[Int].collect().sorted.toSeq
     assert(runs("p128", 0) == Seq(128) && runs("p129", 0) == Seq(1, 128))
     assert(live.blocks.select($"shard").distinct().count() == 4) // 3 bulk + the micro-batch
-    val one = HotIndex(live, numPartitions = 1)
+    val one = HotIndex(live, budget = Long.MaxValue)
+    assert(one.numPartitions == 1)
     def dfRows(df: org.apache.spark.sql.DataFrame) =
       df.select($"docId", $"score").as[(Long, Double)].collect().toSeq
     def rows(h: Array[ScoredDoc]) = h.map(sd => (sd.docId, sd.score)).toSeq
@@ -625,21 +626,73 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     hot.close()
   }
 
-  test("HotIndex job shape: search, searchThreshold and a 50-query searchAll each run one job, one task per pinned partition") {
-    val hot = HotIndex(index)
+  /** Bytes the pin counts for `ix`'s blocks (payload plus block metadata). */
+  def pinnedBytes(ix: InvertedIndex): Long = ix.blocks.collect().map(b =>
+    b.docBytes.length + b.tfBytes.length + b.dlBytes.length + Searcher.MetaBytesPerBlock).sum
+
+  /** Handles pinning `index` at 1, 2 and 3 partitions: 8 range shards of
+    * similar size, so 0.6 of the total groups them 4+4 (or 5+3) and 0.44
+    * of it groups them 3+3+2. */
+  def layouts(): Seq[HotIndex] = {
+    val total = pinnedBytes(index)
+    val hots = Seq(HotIndex(index), HotIndex(index, (total * 0.6).toLong),
+      HotIndex(index, (total * 0.44).toLong))
+    assert(hots.map(_.numPartitions) == Seq(1, 2, 3), "premise: the budgets give 1, 2, 3 partitions")
+    hots
+  }
+
+  test("HotIndex job shape: single calls run one task per pinned partition; a batch fans out over P x min(#queries, ceil(cores/P)) query slices") {
     val sc = spark.sparkContext
-    val every = 0 until sc.getPersistentRDDs(hot.rddId).getNumPartitions
+    val cores = sc.defaultParallelism
     val qs = (0 until 50).map(i => (i, s"t$i t${i * 37}"))
-    val calls = Seq[(String, () => Int)](
-      "search" -> (() => hot.search("t0 t1", 10).length),
-      "searchThreshold" -> (() => hot.searchThreshold("t5 t100 t2000", 1.0).length),
-      "searchAll" -> (() => hot.searchAll(qs, 10).count(_._2.nonEmpty)))
-    calls.foreach { case (name, call) =>
-      val (hits, shape) = ServingProbes.jobShape(sc)(call())
-      assert(hits > 0, s"$name: premise, the call finds something")
-      assert(shape == ServingProbes.Shape(1, every), s"$name: $shape")
+    layouts().foreach { hot =>
+      val p = hot.numPartitions
+      val tasks = (n: Int) => 0 until p * math.min(n, (cores + p - 1) / p)
+      val calls = Seq[(String, () => Int, Seq[Int])](
+        ("search", () => hot.search("t0 t1", 10).length, 0 until p),
+        ("searchThreshold", () => hot.searchThreshold("t5 t100 t2000", 1.0).length, 0 until p),
+        ("searchAll of 50", () => hot.searchAll(qs, 10).count(_._2.nonEmpty), tasks(50)),
+        ("searchAll of 2", () => hot.searchAll(qs.take(2), 10).count(_._2.nonEmpty), tasks(2)))
+      calls.foreach { case (name, call, want) =>
+        val (hits, shape) = ServingProbes.jobShape(sc)(call())
+        assert(hits > 0, s"$name: premise, the call finds something")
+        assert(shape == ServingProbes.Shape(1, want), s"$name at P=$p: $shape")
+      }
+      // a batch smaller than the cores runs one task per (partition, query),
+      // never one per core: no task gets an empty query slice
+      assert(tasks(2).size == 2 * p && tasks(50).size <= 50 * p)
+      hot.close()
     }
-    hot.close()
+  }
+
+  test("HotIndex layouts: pinned at 1, 2 and 3 partitions, every serving call answers bit-identically to InvertedIndex.search") {
+    import spark.implicits._
+    def bits(h: Seq[(Long, Double)]) = h.map { case (d, s) => (d, java.lang.Double.doubleToRawLongBits(s)) }
+    def of(h: Array[ScoredDoc]) = bits(h.toSeq.map(sd => (sd.docId, sd.score)))
+    def df(d: org.apache.spark.sql.DataFrame) = bits(d.select($"docId", $"score").as[(Long, Double)].collect().toSeq)
+    val qs = queryStrings.zipWithIndex.map(_.swap)
+    val dead = engineTopK("t0 t1", 3).map(_._1).toArray
+    val top = engineTopK("t0 t1", 20)
+    val tau = engineTopK("t5 t100 t2000", 10)(4)._2
+    val wantTop = qs.map { case (_, q) => df(index.search(q, 10)) }
+    val wantDeny = df(index.search("t0 t1", 10, tombstones = Some(spark.createDataset(dead.toSeq))))
+    val wantAfter = df(index.searchAfter("t0 t1", 10, top(9)._2, top(9)._1))
+    val wantTau = bits(index.searchThreshold("t5 t100 t2000", tau).as[(Long, Double)].collect()
+      .toSeq.sortBy(r => (-r._2, r._1)))
+    assert(wantTop.count(_.nonEmpty) > 5 && wantDeny.nonEmpty && wantAfter.nonEmpty &&
+      wantTau.size >= 5, "premise: the calls find documents")
+    layouts().foreach { hot =>
+      val p = hot.numPartitions
+      val all = hot.searchAll(qs, 10).toMap
+      val small = hot.searchAll(qs.take(2), 10).toMap // fewer queries than cores
+      assert(qs.map { case (i, _) => of(all(i)) } == wantTop, s"searchAll at P=$p")
+      assert(qs.take(2).map { case (i, _) => of(small(i)) } == wantTop.take(2), s"small searchAll at P=$p")
+      assert(qs.map { case (_, q) => of(hot.search(q, 10)) } == wantTop, s"search at P=$p")
+      assert(of(hot.search("t0 t1", 10, deny = dead)) == wantDeny, s"deny-filtered search at P=$p")
+      assert(of(hot.searchAfter("t0 t1", 10, top(9)._2, top(9)._1)) == wantAfter, s"searchAfter at P=$p")
+      assert(of(hot.searchThreshold("t5 t100 t2000", tau)) == wantTau, s"searchThreshold at P=$p")
+      hot.close()
+    }
   }
 
   test("HotIndex concurrent callers: 4 threads x 25 queries answer bit-identically to one thread") {

@@ -406,6 +406,19 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     q.processAllAvailable()
     assert(live.topK(qv0, 10, nProbe = 4, ef = Int.MaxValue).map(_._1).toSeq
       == bruteOver(base ++ b1 ++ b2, qv0))
+    // the grace handle still serves batch 1's generation: with its cached
+    // blocks dropped (as an eviction would), its searches recompute them
+    // from that generation, which is therefore not retired yet
+    val (graceHot, graceGen) = live.grace.get
+    val pinned = spark.sparkContext.getPersistentRDDs(graceHot.rddId)
+    pinned.unpersist(blocking = true)
+    pinned.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    Seq(qv0, gvec(8), b2.head._2).foreach { qv =>
+      val want = Nsw.topK(graceGen, qv, 10, nProbe = 4, ef = 48).as[(Long, Double)].collect().toSeq
+      assert(graceHot.topK(qv, 10, nProbe = 4, ef = 48).toSeq == want)
+    }
+    assert(graceHot.topK(qv0, 10, nProbe = 4, ef = Int.MaxValue).map(_._1).toSeq
+      == bruteOver(base ++ b1, qv0))
     // the serving surfaces compose: threshold + pagination over the union
     val page1 = live.topK(qv0, 5, nProbe = 4, ef = Int.MaxValue)
     val page2 = live.searchAfter(qv0, 5, (page1.last._2, page1.last._1),

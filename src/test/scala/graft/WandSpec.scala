@@ -344,6 +344,16 @@ class WandSpec extends AnyFunSuite with TimeLimits {
         Wand.threshold(store, plan, tau, avgdl, Wand.DocFilter.All, sb).toSeq, s"iter=$iter")
       assert(sa.totalBlocks > 0 && sa.decodedBlocks > 0)
       assert((sa.decodedBlocks, sa.totalBlocks) == (sb.decodedBlocks, sb.totalBlocks), s"iter=$iter")
+      // the pin's merge step: split the blocks at random (across shards and
+      // within a term's run), pack each part, merge in any order
+      val parts = 1 + rnd.nextInt(4)
+      val split = all.groupBy(_ => rnd.nextInt(parts)).values.toIndexedSeq
+      val merged = Searcher.merge(rnd.shuffle(split).map(bs => Searcher.pack(bs.iterator)))
+      def cols(st: Searcher.Store): Seq[Seq[Any]] = Seq(st.terms.toSeq, st.start.toSeq,
+        st.first.toSeq, st.last.toSeq, st.maxTf.toSeq, st.minDl.toSeq, st.n.toSeq, st.off.toSeq,
+        st.payload.toSeq)
+      assert(cols(merged) == cols(store), s"iter=$iter: merge of $parts parts")
+      assert(merged.bytes == split.map(bs => Searcher.pack(bs.iterator).bytes).sum)
     }
   }
 }
