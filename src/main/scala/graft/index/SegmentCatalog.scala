@@ -1,7 +1,9 @@
 package graft.index
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Codec
@@ -108,7 +110,7 @@ object SegmentCatalog {
       nextDocId: Long,
       streamId: String = "")
 
-  private def fsOf(spark: SparkSession, dir: String): FileSystem =
+  private[graft] def fsOf(spark: SparkSession, dir: String): FileSystem =
     FileSystem.get(new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
 
   private def hintPath(dir: String) = new Path(s"$dir/catalog/version-hint.text")
@@ -149,25 +151,21 @@ object SegmentCatalog {
     * is a best-effort pointer, exactly as in Iceberg's
     * HadoopTableOperations (findVersion scans when the version-hint read
     * fails), so a healthy table is never reported absent mid-commit. */
-  def currentVersion(spark: SparkSession, dir: String): Option[Long] = {
+  def currentVersion(spark: SparkSession, dir: String): Option[Long] =
+    hintVersion(spark, dir).orElse(snapVersions(spark, dir).maxOption)
+
+  /** The versions of the snapshot files under `dir`'s catalog. */
+  private def snapVersions(spark: SparkSession, dir: String): Seq[Long] = {
     val fs = fsOf(spark, dir)
-    def highestSnap(): Option[Long] = {
-      val cat = new Path(s"$dir/catalog")
-      if (!fs.exists(cat)) None
-      else fs.listStatus(cat).map(_.getPath.getName)
-        .filter(n => n.startsWith("snap-") && n.endsWith(".json"))
-        .map(_.stripPrefix("snap-").stripSuffix(".json").toLong)
-        .maxOption
-    }
-    hintVersion(spark, dir).orElse(highestSnap())
+    val cat = new Path(s"$dir/catalog")
+    if (!fs.exists(cat)) Seq.empty
+    else fs.listStatus(cat).map(_.getPath.getName).toSeq
+      .filter(n => n.startsWith("snap-") && n.endsWith(".json"))
+      .map(n => n.stripPrefix("snap-").stripSuffix(".json").toLong)
   }
 
   def readSnapshot(spark: SparkSession, dir: String, version: Long): Snapshot = {
-    val fs = fsOf(spark, dir)
-    val in = fs.open(snapPath(dir, version))
-    val json = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-    val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    val m = readJson(fsOf(spark, dir), snapPath(dir, version))
     val format = m.get("formatVersion").asLong()
     if (format > FormatVersion)
       throw new IllegalStateException(s"snapshot v$version of the index at $dir has " +
@@ -237,22 +235,28 @@ object SegmentCatalog {
     snap
   }
 
-  /** The one writer of every catalog table (idempotent overwrite; commit
-    * publishes), with the format's fixed encodings: zstd, and parquet
-    * dictionary encoding on for every column but the block payloads.
-    * The encodings are constants, the same for every table, because
-    * parquet-mr (1.16) decides each column's encoding from JVM-wide state:
-    * building a writer's `ParquetProperties` re-initializes the shared
+  /** The parquet dictionary options every engine write carries: the
+    * catalog tables and every ANN payload. Dictionary encoding is on for
+    * every column but the block payloads. The options are constants, the
+    * same for every write, because parquet-mr (1.16) decides each column's
+    * encoding from JVM-wide state: building a writer's `ParquetProperties`
+    * re-initializes the shared
     * `ParquetProperties.DEFAULT_VALUES_WRITER_FACTORY`, so a file opened
     * while a writer with other settings starts takes that writer's
     * dictionary choice (the cause of format v2's occasional
-    * dictionary-encoded chunk file). Writes that concurrent builds run
-    * through here cannot disagree. */
-  private def writeTable(table: DataFrame, path: String): Unit =
-    Payloads.foldLeft(table.write.mode("overwrite")
-        .option("compression", "zstd").option("parquet.enable.dictionary", "true")) {
+    * dictionary-encoded chunk file). Engine writes cannot disagree; a user
+    * parquet write with other dictionary settings in the same JVM still
+    * can. The codec is per file, so it is free to differ. */
+  private[graft] def withDictionaryOptions[T](w: DataFrameWriter[T]): DataFrameWriter[T] =
+    Payloads.foldLeft(w.option("parquet.enable.dictionary", "true")) {
       (w, c) => w.option(s"parquet.enable.dictionary#$c", "false")
-    }.parquet(path)
+    }
+
+  /** The one writer of every catalog table (idempotent overwrite; commit
+    * publishes): zstd, with the engine's dictionary options. */
+  private def writeTable(table: DataFrame, path: String): Unit =
+    withDictionaryOptions(table.write.mode("overwrite").option("compression", "zstd"))
+      .parquet(path)
 
   /** Write one blocks chunk dir: the stored columns only. Rows are sorted
     * by (bucket, term, shard, firstDocId) within each task so parquet
@@ -328,15 +332,8 @@ object SegmentCatalog {
       snap.stats)
   }
 
-  def listSnapshots(spark: SparkSession, dir: String): Seq[Snapshot] = {
-    val fs = fsOf(spark, dir)
-    val cat = new Path(s"$dir/catalog")
-    if (!fs.exists(cat)) Seq.empty
-    else fs.listStatus(cat).map(_.getPath.getName).toSeq
-      .filter(n => n.startsWith("snap-") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("snap-").stripSuffix(".json").toLong)
-      .sorted.map(readSnapshot(spark, dir, _))
-  }
+  def listSnapshots(spark: SparkSession, dir: String): Seq[Snapshot] =
+    snapVersions(spark, dir).sorted.map(readSnapshot(spark, dir, _))
 
   /** What [[removeOrphans]] deleted (or would delete, when dryRun). */
   final case class OrphanReport(blockChunks: Seq[String], docChunks: Seq[String],
@@ -404,7 +401,7 @@ object SegmentCatalog {
   }
 
   /** Atomic small-file publish shared by every artifact writer (the
-    * catalog hint, NSW/PQ/IVF metadata): write to a dot-tmp sibling, then
+    * build chunk manifests, the ANN artifact markers): write to a dot-tmp sibling, then
     * rename over the target — readers see the old bytes or the new bytes,
     * never a torn file. */
   def publishJson(spark: SparkSession, path: String, bytes: Array[Byte]): Unit = {
@@ -420,13 +417,70 @@ object SegmentCatalog {
     }
   }
 
-  /** ANN artifact layouts share ONE commit protocol: payload dir(s)
-    * first, metadata JSON last via [[publishJson]] — the metadata file IS
-    * the commit marker. This maps each payload dir name to its marker. */
-  private val ArtifactMarkers = Seq(
-    "adj" -> Seq("meta.json"),                  // Nsw.save
-    "codes" -> Seq("model.json", "bq.json", "lvq.json"), // Pq/Bq/Lvq.save
-    "assigned" -> Seq("centroids.json"))        // Ann.saveIvf
+  /** An ANN artifact kind. Every kind shares one commit protocol: its
+    * `payload` parquet dir is written first, its `marker` JSON last via
+    * [[publishJson]]. The marker IS the commit, and its `formatVersion`
+    * gates loads: a reader refuses a marker newer than `formatVersion`,
+    * naming the kind by `name`. */
+  private[graft] final case class Artifact(name: String, payload: String, marker: String,
+                            formatVersion: Long) {
+    def payloadIn(dir: String): String = s"$dir/$payload"
+  }
+
+  /** A saved NSW graph (`Nsw.save`). v2 (round 4): float32 vectors,
+    * per-cluster medioid entry flag, tombstone list in meta. v1 graphs
+    * load with entry = smallest-key node (the v1 search behavior) and no
+    * tombstones. */
+  private[graft] val NswArtifact = Artifact("NSW graph", "adj", "meta.json", 2L)
+  private[graft] val PqArtifact = Artifact("PQ model", "codes", "model.json", 1L)
+  private[graft] val LvqArtifact = Artifact("LVQ", "codes", "lvq.json", 1L)
+  private[graft] val BqArtifact = Artifact("BQ", "codes", "bq.json", 1L)
+  private[graft] val IvfArtifact = Artifact("IVF", "assigned", "centroids.json", 1L)
+  /** Every kind; [[gcArtifacts]] reads its marker table from here. */
+  private[graft] val Artifacts = Seq(NswArtifact, PqArtifact, LvqArtifact, BqArtifact, IvfArtifact)
+
+  private val Json = new ObjectMapper()
+  private[graft] def toJson(v: AnyRef): JsonNode = Json.valueToTree[JsonNode](v)
+  private[graft] def longs(n: JsonNode): Array[Long] = Array.tabulate(n.size())(n.get(_).asLong())
+  private[graft] def doubles(n: JsonNode): Array[Double] =
+    Array.tabulate(n.size())(n.get(_).asDouble())
+  private[graft] def doubleRows(n: JsonNode): Array[Array[Double]] =
+    Array.tabulate(n.size())(i => doubles(n.get(i)))
+
+  /** Save one artifact under `dir`: `payload` (with the engine's
+    * dictionary options, parquet's default codec; partitioned by
+    * `partitionBy` when given), then the marker ([[publishMeta]]). */
+  private[graft] def saveArtifact(spark: SparkSession, dir: String, art: Artifact,
+                                  payload: DataFrame, partitionBy: Option[String] = None)(
+      meta: ObjectNode => Unit): Unit = {
+    val w = withDictionaryOptions(payload.write.mode("overwrite"))
+    partitionBy.fold(w)(w.partitionBy(_)).parquet(art.payloadIn(dir))
+    publishMeta(spark, dir, art)(meta)
+  }
+
+  /** Publish `art`'s marker under `dir`: `formatVersion` first, then the
+    * fields `meta` puts. */
+  private[graft] def publishMeta(spark: SparkSession, dir: String, art: Artifact)(
+      meta: ObjectNode => Unit): Unit = {
+    val root = Json.createObjectNode()
+    root.put("formatVersion", art.formatVersion)
+    meta(root)
+    publishJson(spark, s"$dir/${art.marker}", Json.writeValueAsBytes(root))
+  }
+
+  /** `art`'s marker under `dir`; a marker without `formatVersion` reads as
+    * v0, one newer than the kind's `formatVersion` is refused. */
+  private[graft] def readMeta(spark: SparkSession, dir: String, art: Artifact): JsonNode = {
+    val m = readJson(fsOf(spark, dir), new Path(s"$dir/${art.marker}"))
+    val v = if (m.has("formatVersion")) m.get("formatVersion").asLong() else 0L
+    require(v <= art.formatVersion, s"unsupported ${art.name} format v$v")
+    m
+  }
+
+  private def readJson(fs: FileSystem, p: Path): JsonNode = {
+    val in = fs.open(p)
+    try Json.readTree(in) finally in.close()
+  }
 
   /** Collect crashed ANN artifact saves (payload written, commit-marker
     * metadata never published) under `dir` and its immediate children —
@@ -443,10 +497,11 @@ object SegmentCatalog {
     val nowMs = System.currentTimeMillis()
     val candidates = root +: fs.listStatus(root).toSeq
       .filter(_.isDirectory).map(_.getPath)
+    val markers = Artifacts.groupMap(_.payload)(_.marker)
     val dead = candidates.flatMap { base =>
-      ArtifactMarkers.flatMap { case (payload, markers) =>
+      Artifacts.map(_.payload).distinct.flatMap { payload =>
         val pp = new Path(base, payload)
-        if (fs.exists(pp) && !markers.exists(m => fs.exists(new Path(base, m))) &&
+        if (fs.exists(pp) && !markers(payload).exists(m => fs.exists(new Path(base, m))) &&
             nowMs - fs.getFileStatus(pp).getModificationTime >= graceMs)
           Some(pp)
         else None

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.index.SegmentCatalog
 
 /** Approximate-nearest-neighbor operators over an embedding column
   * (Array[Float]) — the engine's sibling of the reference's actual domain
@@ -30,18 +31,96 @@ object Ann {
   case object Cosine extends Sim { def col(a: Column, b: Column) = cosine(a, b); val asc = false }
   case object Dot extends Sim { def col(a: Column, b: Column) = dot(a, b); val asc = false }
   case object L2 extends Sim { def col(a: Column, b: Column) = l2(a, b); val asc = true }
+  /** Squared L2: the exact score of PQ's L2 rerank (`dist2`). */
+  private[ops] case object L2Squared extends Sim {
+    def col(a: Column, b: Column) = graft.functions.VectorFunctions.l2Dist2(a, b); val asc = true
+  }
 
   /** Brute-force top-k: exact baseline. One narrow scan; global top-k is
     * Spark's TakeOrderedAndProject (per-partition heaps + tiny merge). */
   def bruteTopK(emb: DataFrame, keyCol: String, vecCol: String,
                 query: Seq[Float], k: Int, sim: Sim): DataFrame = {
     val q = typedlit(query.map(_.toDouble))
-    val scored = emb.select(col(keyCol).as("key"),
-      sim.col(vd(col(vecCol)), q).as("sim"))
-    val ordered =
-      if (sim.asc) scored.orderBy(col("sim").asc, col("key").asc)
-      else scored.orderBy(col("sim").desc, col("key").asc)
-    ordered.limit(k)
+    best(emb.select(col(keyCol).as("key"), sim.col(vd(col(vecCol)), q).as("sim")),
+      "sim", sim, k)
+  }
+
+  /** The k best rows of `scored` by (`out` in `sim`'s order, key asc). */
+  private def best(scored: DataFrame, out: String, sim: Sim, k: Int): DataFrame =
+    scored.orderBy(if (sim.asc) col(out).asc else col(out).desc, col("key").asc).limit(k)
+
+  /** The one compressed-scan plan behind PQ, LVQ and BQ (the reference's
+    * approximate score + exact reranker pair,
+    * graph/similarity/SearchScoreProvider.java:20-41): each partition
+    * keeps its kk = k·rerankFactor best codes by `approx` (higher is
+    * better, ties to the smaller key) in a [[graft.core.DoubleTopK]]; the
+    * kk global survivors, ordered (approx desc, key asc), join back to
+    * `emb` and are rescored by the codegen kernel of `exact` (never an
+    * interpreted HOF: OpsSpec's plan guard) into column `out`; the k best
+    * by (`out`, key asc) are the answer. A rerank set covering the corpus
+    * degenerates to the exact scan (gate mode). */
+  private[ops] def scanRerank[R](codes: Dataset[R], emb: DataFrame, keyCol: String,
+                                 vecCol: String, q: Array[Double], k: Int,
+                                 rerankFactor: Int, out: String, exact: Sim)
+                                (approx: R => (Double, Long)): DataFrame = {
+    val spark = codes.sparkSession
+    import spark.implicits._
+    val kk = math.max(1, k * rerankFactor)
+    val survivors = codes.mapPartitions { it =>
+        val heap = new graft.core.DoubleTopK(kk)
+        it.foreach { r => val (s, key) = approx(r); heap.offer(s, key) }
+        heap.drain().iterator
+      }.toDF("approx", "key")
+      .orderBy($"approx".desc, $"key".asc).limit(kk)
+    best(survivors.join(emb.select(col(keyCol).cast("long").as("key"), col(vecCol)), "key")
+      .select($"key", exact.col(vd(col(vecCol)), typedlit(q.toSeq)).as(out)), out, exact, k)
+  }
+
+  /** (key: long, v: array<double>): the input of every quantizer's train
+    * and encode. */
+  private[ops] def keyedVectors(emb: DataFrame, keyCol: String,
+                                vecCol: String): Dataset[(Long, Seq[Double])] = {
+    import emb.sparkSession.implicits._
+    emb.select(col(keyCol).cast("long").as("key"), vd(col(vecCol)).as("v"))
+      .as[(Long, Seq[Double])]
+  }
+
+  /** Rows of `all` (with a `key` column) whose `xxhash64(key) % m == 0`,
+    * m chosen so about `sampleCap` of the `n` rows remain: a training
+    * sample independent of partitioning, so models are reproducible at
+    * any parallelism (the reference also trains on a bounded sample,
+    * jvector pq/ProductQuantization.java:58). */
+  private def hashSample(all: DataFrame, n: Long, sampleCap: Long): DataFrame = {
+    val m = math.max(1L, (n + sampleCap - 1) / sampleCap)
+    if (m > 1L) all.filter(pmod(xxhash64(col("key")), lit(m)) === 0) else all
+  }
+
+  /** The training vectors of PQ, LVQ and BQ: the key-hash sample of
+    * `emb`, collected to the driver (bounded by `sampleCap`), in key order
+    * when `keyOrder` (PQ's k-means initializes from the smallest keys),
+    * else in scan order. */
+  private[ops] def trainSample(spark: SparkSession, emb: DataFrame, keyCol: String,
+                               vecCol: String, sampleCap: Long,
+                               keyOrder: Boolean): Array[Array[Double]] = {
+    import spark.implicits._
+    val all = keyedVectors(emb, keyCol, vecCol).toDF()
+    val sample = hashSample(all, all.count(), sampleCap).as[(Long, Seq[Double])]
+    val rows = (if (keyOrder) sample.orderBy($"key") else sample).collect()
+    require(rows.nonEmpty, "empty training sample")
+    rows.map(_._2.toArray)
+  }
+
+  /** Mean of the training sample: the whole model of LVQ and BQ (d
+    * doubles). */
+  private[ops] def sampleMean(spark: SparkSession, emb: DataFrame, keyCol: String,
+                              vecCol: String, sampleCap: Long): Array[Double] = {
+    val sample = trainSample(spark, emb, keyCol, vecCol, sampleCap, keyOrder = false)
+    val acc = new Array[Double](sample.head.length)
+    sample.foreach { v =>
+      var i = 0
+      while (i < acc.length) { acc(i) += v(i); i += 1 }
+    }
+    acc.map(_ / sample.length)
   }
 
   /** Deterministic k-means centroids: init = vectors of the k smallest
@@ -65,9 +144,7 @@ object Ann {
     // nHint: callers that already counted the corpus (e.g. auto-scaled
     // cluster sizing) pass it through so training doesn't pay the pass twice
     val n = if (nHint >= 0) nHint else all.count()
-    val m = math.max(1L, (n + trainCap - 1) / trainCap)
-    val e = (if (m > 1L) all.filter(pmod(xxhash64(col("key")), lit(m)) === 0)
-             else all).as[(Long, Seq[Double])].persist()
+    val e = hashSample(all, n, trainCap).as[(Long, Seq[Double])].persist()
     var centroids = e.orderBy($"key").limit(kCenters).collect().map(_._2.toArray)
     (0 until iters).foreach { _ =>
       val cB = spark.sparkContext.broadcast(centroids)
@@ -166,35 +243,19 @@ object Ann {
     * partition directories at the file level, the real 10^12-vector
     * serving layout (a session-only assignment re-runs k-means + a full
     * corpus pass per session). Payload first, centroids.json LAST as the
-    * atomic commit marker (shared artifact protocol —
-    * SegmentCatalog.publishJson/gcArtifacts). */
-  def saveIvf(spark: SparkSession, ivf: Ivf, dir: String): Unit = {
-    ivf.assigned.write.mode("overwrite").partitionBy("c").parquet(s"$dir/assigned")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("formatVersion", Pq.FormatVersion)
-    root.set("centroids", mapper.valueToTree(ivf.centroids)
-      : com.fasterxml.jackson.databind.JsonNode)
-    graft.index.SegmentCatalog.publishJson(spark, s"$dir/centroids.json",
-      mapper.writeValueAsBytes(root))
-  }
+    * atomic commit marker (the shared artifact protocol,
+    * [[SegmentCatalog.saveArtifact]]). */
+  def saveIvf(spark: SparkSession, ivf: Ivf, dir: String): Unit =
+    SegmentCatalog.saveArtifact(spark, dir, SegmentCatalog.IvfArtifact, ivf.assigned,
+      partitionBy = Some("c"))(_.set[com.fasterxml.jackson.databind.JsonNode](
+        "centroids", SegmentCatalog.toJson(ivf.centroids)))
 
   def loadIvf(spark: SparkSession, dir: String): Ivf = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
-      spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(s"$dir/centroids.json"))
-    val json = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-    val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-    val v = if (m.has("formatVersion")) m.get("formatVersion").asLong() else 0L
-    require(v <= Pq.FormatVersion, s"unsupported IVF format v$v")
-    val cn = m.get("centroids")
-    val centroids = Array.tabulate(cn.size()) { c =>
-      val cent = cn.get(c)
-      Array.tabulate(cent.size())(cent.get(_).asDouble())
-    }
+    val art = SegmentCatalog.IvfArtifact
+    val centroids = SegmentCatalog.doubleRows(
+      SegmentCatalog.readMeta(spark, dir, art).get("centroids"))
     // pre-r4 saves stored double vectors; normalize to the float layout
-    val assigned = spark.read.parquet(s"$dir/assigned")
+    val assigned = spark.read.parquet(art.payloadIn(dir))
       .select(col("key"), col("c").cast("int").as("c"),
         transform(col("v"), x => x.cast("float")).as("v"))
     Ivf(assigned, centroids)
@@ -206,9 +267,7 @@ object Ann {
   def ivfTopK(ivf: Ivf, query: Seq[Float], k: Int, nProbe: Int): DataFrame = {
     val q = query.map(_.toDouble).toArray
     val qc = typedlit(q.toSeq)
-    ivf.assigned.filter(col("c").isin(probeOrder(ivf.centroids, q, nProbe).toSeq: _*))
-      .select(col("key"), cosine(vd(col("v")), qc).as("sim"))
-      .orderBy(col("sim").desc, col("key").asc)
-      .limit(k)
+    best(ivf.assigned.filter(col("c").isin(probeOrder(ivf.centroids, q, nProbe).toSeq: _*))
+      .select(col("key"), cosine(vd(col("v")), qc).as("sim")), "sim", Cosine, k)
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.index.SegmentCatalog
 
 /** Binary quantization: 1 bit per dimension around the corpus centroid —
   * the reference's coarsest compressed representation (jvector
@@ -25,8 +26,6 @@ import org.apache.spark.sql.functions._
   * (recall pinned in OpsSpec).
   */
 object Bq {
-
-  val FormatVersion = 1L
 
   final case class Model(center: Array[Double]) {
     def dim: Int = center.length
@@ -57,32 +56,15 @@ object Bq {
 
   /** Centroid of a deterministic key-hash sample (bounded driver work). */
   def train(spark: SparkSession, emb: DataFrame, keyCol: String, vecCol: String,
-            sampleCap: Long = 131072L): Model = {
-    import spark.implicits._
-    val all = emb.select(col(keyCol).cast("long").as("key"),
-      transform(col(vecCol), x => x.cast("double")).as("v"))
-    val n = all.count()
-    val frac = math.max(1L, (n + sampleCap - 1) / sampleCap)
-    val sample = (if (frac > 1L) all.filter(pmod(xxhash64(col("key")), lit(frac)) === 0)
-                  else all).as[(Long, Seq[Double])].collect()
-    require(sample.nonEmpty, "empty training sample")
-    val dim = sample.head._2.length
-    val acc = new Array[Double](dim)
-    sample.foreach { case (_, v) =>
-      var i = 0
-      while (i < dim) { acc(i) += v(i); i += 1 }
-    }
-    Model(acc.map(_ / sample.length))
-  }
+            sampleCap: Long = 131072L): Model =
+    Model(Ann.sampleMean(spark, emb, keyCol, vecCol, sampleCap))
 
   /** Encode the corpus: (key, bits: array<long>). Narrow map, no shuffle. */
   def encode(spark: SparkSession, emb: DataFrame, keyCol: String, vecCol: String,
              model: Model): DataFrame = {
     import spark.implicits._
     val mB = spark.sparkContext.broadcast(model)
-    emb.select(col(keyCol).cast("long").as("key"),
-        transform(col(vecCol), x => x.cast("double")).as("v"))
-      .as[(Long, Seq[Double])]
+    Ann.keyedVectors(emb, keyCol, vecCol)
       .map { case (k, v) => (k, mB.value.encodeOne(v.toArray)) }
       .toDF("key", "bits")
   }
@@ -96,55 +78,24 @@ object Bq {
            query: Seq[Float], k: Int, rerankFactor: Int = 8): DataFrame = {
     import spark.implicits._
     val q = query.map(_.toDouble).toArray
-    val qBits = model.encodeOne(q)
     val mB = spark.sparkContext.broadcast(model)
-    val qB = spark.sparkContext.broadcast(qBits)
-    val kk = math.max(1, k * rerankFactor)
-    val approx = codes.as[(Long, Array[Long])]
-      .mapPartitions { it =>
-        val heap = new graft.core.DoubleTopK(kk)
-        it.foreach { case (key, bits) =>
-          heap.offer(mB.value.sim(bits, qB.value), key)
-        }
-        heap.drain().iterator
-      }.toDF("bsim", "key")
-      .orderBy($"bsim".desc, $"key".asc).limit(kk)
-    val qc = typedlit(q.toSeq)
-    approx.join(emb.select(col(keyCol).cast("long").as("key"), col(vecCol)), "key")
-      .withColumn("sim", graft.functions.VectorFunctions.cosineSim(
-        transform(col(vecCol), x => x.cast("double")), qc))
-      .select(col("key"), col("sim"))
-      .orderBy(col("sim").desc, col("key").asc)
-      .limit(k)
+    val qB = spark.sparkContext.broadcast(model.encodeOne(q))
+    Ann.scanRerank(codes.as[(Long, Array[Long])], emb, keyCol, vecCol, q, k, rerankFactor,
+      "sim", Ann.Cosine) { case (key, bits) => (mB.value.sim(bits, qB.value), key) }
   }
 
   /** Persist: codes parquet first, bq.json LAST as the atomic commit
-    * marker (shared artifact protocol; gcArtifacts collects metaless
-    * crashed saves). */
-  def save(spark: SparkSession, model: Model, codes: DataFrame, dir: String): Unit = {
-    codes.write.mode("overwrite").parquet(s"$dir/codes")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("formatVersion", FormatVersion)
-    root.put("kind", "bq")
-    root.set("center", mapper.valueToTree(model.center)
-      : com.fasterxml.jackson.databind.JsonNode)
-    graft.index.SegmentCatalog.publishJson(spark, s"$dir/bq.json",
-      mapper.writeValueAsBytes(root))
-  }
+    * marker (the shared artifact protocol,
+    * [[SegmentCatalog.saveArtifact]]). */
+  def save(spark: SparkSession, model: Model, codes: DataFrame, dir: String): Unit =
+    SegmentCatalog.saveArtifact(spark, dir, SegmentCatalog.BqArtifact, codes) { m =>
+      m.put("kind", "bq")
+      m.set[com.fasterxml.jackson.databind.JsonNode]("center", SegmentCatalog.toJson(model.center))
+    }
 
   def load(spark: SparkSession, dir: String): (Model, DataFrame) = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
-      spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(s"$dir/bq.json"))
-    val json = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-    val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-    val v = if (m.has("formatVersion")) m.get("formatVersion").asLong() else 0L
-    require(v <= FormatVersion, s"unsupported BQ format v$v")
-    val cn = m.get("center")
-    val center = Array.tabulate(cn.size())(cn.get(_).asDouble())
-    (Model(center),
-      spark.read.parquet(s"$dir/codes").select(col("key"), col("bits")))
+    val art = SegmentCatalog.BqArtifact
+    (Model(SegmentCatalog.doubles(SegmentCatalog.readMeta(spark, dir, art).get("center"))),
+      spark.read.parquet(art.payloadIn(dir)).select(col("key"), col("bits")))
   }
 }

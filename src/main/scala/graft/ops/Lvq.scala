@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.index.SegmentCatalog
 
 /** Locally-adaptive vector quantization — the reference's MIDDLE
   * compression tier between BQ (1 bit/dim) and PQ codebooks (jvector
@@ -35,8 +36,6 @@ import org.apache.spark.sql.functions._
   * store defaults to this tier).
   */
 object Lvq {
-
-  val FormatVersion = 1L
 
   /** The model is just the sample mean; quantization params are PER
     * VECTOR (stored with each code row). */
@@ -117,26 +116,12 @@ object Lvq {
     }
   }
 
-  /** Mean of a deterministic key-hash sample (bounded driver work — the
-    * Bq.train contract; the model is d doubles). */
+  /** Mean of a deterministic key-hash sample (bounded driver work, the
+    * one trainer LVQ and BQ share: [[Ann.sampleMean]]; the model is d
+    * doubles). */
   def train(spark: SparkSession, emb: DataFrame, keyCol: String, vecCol: String,
-            sampleCap: Long = 131072L): Model = {
-    import spark.implicits._
-    val all = emb.select(col(keyCol).cast("long").as("key"),
-      transform(col(vecCol), x => x.cast("double")).as("v"))
-    val n = all.count()
-    val frac = math.max(1L, (n + sampleCap - 1) / sampleCap)
-    val sample = (if (frac > 1L) all.filter(pmod(xxhash64(col("key")), lit(frac)) === 0)
-                  else all).as[(Long, Seq[Double])].collect()
-    require(sample.nonEmpty, "empty training sample")
-    val dim = sample.head._2.length
-    val acc = new Array[Double](dim)
-    sample.foreach { case (_, v) =>
-      var i = 0
-      while (i < dim) { acc(i) += v(i); i += 1 }
-    }
-    Model(acc.map(_ / sample.length))
-  }
+            sampleCap: Long = 131072L): Model =
+    Model(Ann.sampleMean(spark, emb, keyCol, vecCol, sampleCap))
 
   /** Encode the corpus: (key, u: binary, bias: float, scale: float).
     * Narrow map, no shuffle — d bytes + 8 bytes per vector at rest. */
@@ -144,9 +129,7 @@ object Lvq {
              model: Model): DataFrame = {
     import spark.implicits._
     val mB = spark.sparkContext.broadcast(model)
-    emb.select(col(keyCol).cast("long").as("key"),
-        transform(col(vecCol), x => x.cast("double")).as("v"))
-      .as[(Long, Seq[Double])]
+    Ann.keyedVectors(emb, keyCol, vecCol)
       .map { case (k, v) =>
         val (u, bias, scale) = mB.value.encodeOne(v.toArray)
         (k, u, bias, scale)
@@ -167,24 +150,10 @@ object Lvq {
     val invQNorm = if (qn2 == 0) 0.0 else 1.0 / math.sqrt(qn2)
     val mB = spark.sparkContext.broadcast(model)
     val qB = spark.sparkContext.broadcast(q)
-    val kk = math.max(1, k * rerankFactor)
-    val approx = codes.as[(Long, Array[Byte], Float, Float)]
-      .mapPartitions { it =>
-        val heap = new graft.core.DoubleTopK(kk)
-        it.foreach { case (key, u, bias, scale) =>
-          heap.offer(mB.value.approxCos(qB.value, qMu, qSum, invQNorm,
-            u, bias, scale), key)
-        }
-        heap.drain().iterator
-      }.toDF("lsim", "key")
-      .orderBy($"lsim".desc, $"key".asc).limit(kk)
-    val qc = typedlit(q.toSeq)
-    approx.join(emb.select(col(keyCol).cast("long").as("key"), col(vecCol)), "key")
-      .withColumn("sim", graft.functions.VectorFunctions.cosineSim(
-        transform(col(vecCol), x => x.cast("double")), qc))
-      .select(col("key"), col("sim"))
-      .orderBy(col("sim").desc, col("key").asc)
-      .limit(k)
+    Ann.scanRerank(codes.as[(Long, Array[Byte], Float, Float)], emb, keyCol, vecCol, q, k,
+      rerankFactor, "sim", Ann.Cosine) { case (key, u, bias, scale) =>
+      (mB.value.approxCos(qB.value, qMu, qSum, invQNorm, u, bias, scale), key)
+    }
   }
 
   /** MIPS twin: approximate top-k by the PURE decomposition dot (the scan
@@ -197,53 +166,25 @@ object Lvq {
     val (qMu, qSum, _) = model.queryParts(q)
     val mB = spark.sparkContext.broadcast(model)
     val qB = spark.sparkContext.broadcast(q)
-    val kk = math.max(1, k * rerankFactor)
-    val approx = codes.as[(Long, Array[Byte], Float, Float)]
-      .mapPartitions { it =>
-        val heap = new graft.core.DoubleTopK(kk)
-        it.foreach { case (key, u, bias, scale) =>
-          heap.offer(mB.value.approxDot(qB.value, qMu, qSum, u, bias, scale), key)
-        }
-        heap.drain().iterator
-      }.toDF("ldot", "key")
-      .orderBy($"ldot".desc, $"key".asc).limit(kk)
-    val qc = typedlit(q.toSeq)
-    approx.join(emb.select(col(keyCol).cast("long").as("key"), col(vecCol)), "key")
-      .withColumn("dot", graft.functions.VectorFunctions.dotProd(
-        transform(col(vecCol), x => x.cast("double")), qc))
-      .select(col("key"), col("dot"))
-      .orderBy(col("dot").desc, col("key").asc)
-      .limit(k)
+    Ann.scanRerank(codes.as[(Long, Array[Byte], Float, Float)], emb, keyCol, vecCol, q, k,
+      rerankFactor, "dot", Ann.Dot) { case (key, u, bias, scale) =>
+      (mB.value.approxDot(qB.value, qMu, qSum, u, bias, scale), key)
+    }
   }
 
   /** Persist: codes parquet first, lvq.json LAST as the atomic commit
-    * marker (shared artifact protocol; gcArtifacts collects metaless
-    * crashed saves). */
-  def save(spark: SparkSession, model: Model, codes: DataFrame, dir: String): Unit = {
-    codes.write.mode("overwrite").parquet(s"$dir/codes")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("formatVersion", FormatVersion)
-    root.put("kind", "lvq")
-    root.set("center", mapper.valueToTree(model.center)
-      : com.fasterxml.jackson.databind.JsonNode)
-    graft.index.SegmentCatalog.publishJson(spark, s"$dir/lvq.json",
-      mapper.writeValueAsBytes(root))
-  }
+    * marker (the shared artifact protocol,
+    * [[SegmentCatalog.saveArtifact]]). */
+  def save(spark: SparkSession, model: Model, codes: DataFrame, dir: String): Unit =
+    SegmentCatalog.saveArtifact(spark, dir, SegmentCatalog.LvqArtifact, codes) { m =>
+      m.put("kind", "lvq")
+      m.set[com.fasterxml.jackson.databind.JsonNode]("center", SegmentCatalog.toJson(model.center))
+    }
 
   def load(spark: SparkSession, dir: String): (Model, DataFrame) = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
-      spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(s"$dir/lvq.json"))
-    val json = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-    val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-    val v = if (m.has("formatVersion")) m.get("formatVersion").asLong() else 0L
-    require(v <= FormatVersion, s"unsupported LVQ format v$v")
-    val cn = m.get("center")
-    val center = Array.tabulate(cn.size())(cn.get(_).asDouble())
-    (Model(center),
-      spark.read.parquet(s"$dir/codes")
+    val art = SegmentCatalog.LvqArtifact
+    (Model(SegmentCatalog.doubles(SegmentCatalog.readMeta(spark, dir, art).get("center"))),
+      spark.read.parquet(art.payloadIn(dir))
         .select(col("key"), col("u"), col("bias"), col("scale")))
   }
 }

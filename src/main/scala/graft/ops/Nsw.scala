@@ -1,9 +1,12 @@
 package graft.ops
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
+import graft.index.SegmentCatalog
 
 import scala.collection.mutable
 
@@ -78,12 +81,6 @@ import scala.collection.mutable
   * IVF path.)
   */
 object Nsw {
-
-  /** On-disk format of a saved graph (meta.json + adj parquet).
-    * v2 (round 4): float32 vectors, per-cluster medioid entry flag,
-    * tombstone list in meta. v1 graphs load with entry = smallest-key
-    * node (the v1 search behavior) and no tombstones. */
-  val FormatVersion = 2L
 
   /** Closure cap on the driver-resident tombstone set (the vector twin of
     * `HotIndex.FilterSetCap`): `Graph.deleted` ships with EVERY search
@@ -983,15 +980,11 @@ object Nsw {
   def attachPqWith(spark: SparkSession, graph: Graph, model: Pq.Model,
                    anisotropicThreshold: Double = 0.0): Graph = {
     import spark.implicits._
-    val pcm = if (anisotropicThreshold > 0)
-      Pq.parallelCostMultiplier(anisotropicThreshold, model.dim) else 0.0
+    val pcm = Pq.pcmOf(anisotropicThreshold, model.dim)
     val mB = spark.sparkContext.broadcast(model)
     val adj2 = nodes(graph.adj)
       .map { case (c, k, v, nb, e) =>
-        val arr = toDoubles(toFloatArray(v))
-        val code = if (pcm > 0) mB.value.encodeOneAnisotropic(arr, pcm)
-                   else mB.value.encodeOne(arr)
-        (c, k, v, nb, e, code)
+        (c, k, v, nb, e, mB.value.encodeWith(toDoubles(toFloatArray(v)), pcm))
       }.toDF("c", "key", "v", "nbrs", "entry", "code")
     // narrow map: the cluster layout is preserved
     Graph(adj2.localCheckpoint(eager = true), graph.centroids, graph.params,
@@ -1060,10 +1053,9 @@ object Nsw {
     * layout contract as Ann.saveIvf). Payload first, meta.json LAST via
     * atomic rename: meta is the commit marker, so a crashed save leaves a
     * metaless payload dir that artifact GC can collect. */
-  def save(spark: SparkSession, graph: Graph, dir: String): Unit = {
-    graph.adj.write.mode("overwrite").partitionBy("c").parquet(s"$dir/adj")
-    publishMeta(spark, graph, dir, maxStreamBatch = -1L)
-  }
+  def save(spark: SparkSession, graph: Graph, dir: String): Unit =
+    SegmentCatalog.saveArtifact(spark, dir, SegmentCatalog.NswArtifact, graph.adj,
+      partitionBy = Some("c"))(putMeta(graph, maxStreamBatch = -1L))
 
   /** Persist ONLY the touched clusters' partition dirs (dynamic partition
     * overwrite: untouched cluster files are not rewritten, not even
@@ -1088,13 +1080,13 @@ object Nsw {
       // patched by a partial write: refuse it before writing anything.
       val fusedCols = Seq("code" -> "binary", "lu" -> "binary",
         "lbias" -> "float", "lscale" -> "float")
-      val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
-        spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/adj"))) {
-        val existing = spark.read.parquet(s"$dir/adj").columns.toSet
+      val adjDir = SegmentCatalog.NswArtifact.payloadIn(dir)
+      val fs = SegmentCatalog.fsOf(spark, dir)
+      if (fs.exists(new org.apache.hadoop.fs.Path(adjDir))) {
+        val existing = spark.read.parquet(adjDir).columns.toSet
         val extra = fusedCols.map(_._1).filter(c2 => rows.columns.contains(c2) && !existing(c2))
         require(extra.isEmpty, s"saveTouched: the graph carries ${extra.mkString(", ")} but " +
-          s"$dir/adj does not; a partial write would mix schemas — use Nsw.save")
+          s"$adjDir does not; a partial write would mix schemas — use Nsw.save")
         fusedCols.foreach { case (c2, tpe) =>
           if (existing(c2) && !rows.columns.contains(c2))
             rows = rows.withColumn(c2, lit(null).cast(tpe))
@@ -1110,89 +1102,44 @@ object Nsw {
       // a dynamic overwrite keeps the files of a partition it writes no row
       // to: drop the dir of each touched cluster an upsert left empty
       val left = staged.select("c").distinct().collect().map(_.getInt(0)).toSet
-      (touched -- left).foreach(c => fs.delete(new org.apache.hadoop.fs.Path(s"$dir/adj/c=$c"), true))
-      staged.write.mode("overwrite")
+      (touched -- left).foreach(c => fs.delete(new org.apache.hadoop.fs.Path(s"$adjDir/c=$c"), true))
+      SegmentCatalog.withDictionaryOptions(staged.write.mode("overwrite"))
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("c").parquet(s"$dir/adj")
+        .partitionBy("c").parquet(adjDir)
       dropCheckpoint(staged)
     }
-    publishMeta(spark, graph, dir, maxStreamBatch)
+    SegmentCatalog.publishMeta(spark, dir, SegmentCatalog.NswArtifact)(
+      putMeta(graph, maxStreamBatch))
   }
 
   /** The replay mark of a saved graph (-1 when none recorded). */
   def loadStreamBatch(spark: SparkSession, dir: String): Long = {
-    val m = readMeta(spark, dir)
+    val m = SegmentCatalog.readMeta(spark, dir, SegmentCatalog.NswArtifact)
     if (m.has("maxStreamBatch")) m.get("maxStreamBatch").asLong() else -1L
   }
 
-  private def readMeta(spark: SparkSession, dir: String): com.fasterxml.jackson.databind.JsonNode = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
-      spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(s"$dir/meta.json"))
-    val json = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-    new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-  }
-
-  private def publishMeta(spark: SparkSession, graph: Graph, dir: String,
-                          maxStreamBatch: Long): Unit = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("formatVersion", FormatVersion)
+  /** The fields of a graph's meta.json after `formatVersion`. */
+  private def putMeta(graph: Graph, maxStreamBatch: Long)(root: ObjectNode): Unit = {
     root.put("m", graph.params.m)
     root.put("efConstruction", graph.params.efConstruction)
     if (maxStreamBatch >= 0) root.put("maxStreamBatch", maxStreamBatch)
-    root.set("centroids", mapper.valueToTree(graph.centroids)
-      : com.fasterxml.jackson.databind.JsonNode)
-    root.set("deleted", mapper.valueToTree(graph.deleted)
-      : com.fasterxml.jackson.databind.JsonNode)
-    graph.pq.foreach { model =>
-      val pq = root.putObject("pq")
-      pq.put("m", model.m)
-      pq.put("dim", model.dim)
-      val _ = pq.set[com.fasterxml.jackson.databind.JsonNode]("codebooks",
-        mapper.valueToTree(model.codebooks))
-    }
-    graph.lvq.foreach { model =>
-      val lv = root.putObject("lvq")
-      val _ = lv.set[com.fasterxml.jackson.databind.JsonNode]("center",
-        mapper.valueToTree(model.center))
-    }
-    graft.index.SegmentCatalog.publishJson(spark, s"$dir/meta.json",
-      mapper.writeValueAsBytes(root))
+    root.set[JsonNode]("centroids", SegmentCatalog.toJson(graph.centroids))
+    root.set[JsonNode]("deleted", SegmentCatalog.toJson(graph.deleted))
+    graph.pq.foreach(model => model.putJson(root.putObject("pq")))
+    graph.lvq.foreach(model =>
+      root.putObject("lvq").set[JsonNode]("center", SegmentCatalog.toJson(model.center)))
   }
 
   def load(spark: SparkSession, dir: String): Graph = {
-    val mNode = readMeta(spark, dir)
-    val v = if (mNode.has("formatVersion")) mNode.get("formatVersion").asLong() else 0L
-    require(v <= FormatVersion, s"unsupported NSW graph format v$v")
-    val cn = mNode.get("centroids")
-    val centroids = Array.tabulate(cn.size()) { c =>
-      val cent = cn.get(c)
-      Array.tabulate(cent.size())(cent.get(_).asDouble())
-    }
+    val mNode = SegmentCatalog.readMeta(spark, dir, SegmentCatalog.NswArtifact)
+    val centroids = SegmentCatalog.doubleRows(mNode.get("centroids"))
     val deleted =
-      if (mNode.has("deleted")) {
-        val dn = mNode.get("deleted")
-        Array.tabulate(dn.size())(dn.get(_).asLong())
-      } else Array.emptyLongArray
+      Option(mNode.get("deleted")).map(SegmentCatalog.longs).getOrElse(Array.emptyLongArray)
     val params = Params(m = mNode.get("m").asInt(),
       efConstruction = mNode.get("efConstruction").asInt(),
       kCenters = centroids.length)
-    val pqModel =
-      if (mNode.has("pq")) {
-        val pn = mNode.get("pq")
-        val cbNode = pn.get("codebooks")
-        val codebooks = Array.tabulate(cbNode.size()) { s =>
-          val sub = cbNode.get(s)
-          Array.tabulate(sub.size()) { c =>
-            val cent = sub.get(c)
-            Array.tabulate(cent.size())(cent.get(_).asDouble())
-          }
-        }
-        Some(Pq.Model(pn.get("m").asInt(), pn.get("dim").asInt(), codebooks))
-      } else None
-    val raw = spark.read.parquet(s"$dir/adj")
+    val pqModel = Option(mNode.get("pq")).map(Pq.modelOf)
+    val raw = spark.read.parquet(SegmentCatalog.NswArtifact.payloadIn(dir))
     // v1 back-compat: double vectors, no entry flag (entry = smallest-key
     // node, i.e. local index 0 — the v1 search behavior). Fused codes are
     // gated on META.JSON's pq node, not on parquet schema sampling: a
@@ -1204,10 +1151,7 @@ object Nsw {
       (if (raw.columns.contains("entry")) col("entry") else lit(false))
         .as("entry"))
     val lvqModel =
-      if (mNode.has("lvq")) {
-        val cn2 = mNode.get("lvq").get("center")
-        Some(Lvq.Model(Array.tabulate(cn2.size())(cn2.get(_).asDouble())))
-      } else None
+      Option(mNode.get("lvq")).map(n => Lvq.Model(SegmentCatalog.doubles(n.get("center"))))
     val withCodes = pqModel.isDefined && raw.columns.contains("code")
     val withLvq = lvqModel.isDefined && raw.columns.contains("lu")
     val cols = baseCols ++

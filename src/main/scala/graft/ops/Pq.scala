@@ -1,7 +1,10 @@
 package graft.ops
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.index.SegmentCatalog
 
 /** Product quantization for the embedding column — the compressed ANN
   * path of the capability surface (reference: jvector
@@ -28,9 +31,6 @@ import org.apache.spark.sql.functions._
   *    ADC top k·rerank, which the recall test pins.
   */
 object Pq {
-
-  /** On-disk format of a saved quantizer (model.json + codes parquet). */
-  val FormatVersion = 1L
 
   /** Trained product quantizer: codebooks(sub)(code) = centroid of the
     * sub-th subspace (length dim/m). */
@@ -61,32 +61,25 @@ object Pq {
     }
 
     /** Per-subspace ADC lookup tables for a query (squared-L2 parts). */
-    def distTables(q: Array[Double]): Array[Array[Double]] = {
-      val w = dim / m
-      Array.tabulate(m) { s =>
-        val cb = codebooks(s)
-        Array.tabulate(cb.length) { c =>
-          var d = 0.0
-          var i = 0
-          while (i < w) { val t = q(s * w + i) - cb(c)(i); d += t * t; i += 1 }
-          d
-        }
-      }
-    }
+    def distTables(q: Array[Double]): Array[Array[Double]] =
+      tables(q) { (x, c) => val t = x - c; t * t }
 
     /** Per-subspace ADC tables of INNER-PRODUCT parts (the reference's
       * DOT similarity with PQ — pq/PQVectors.java:112-123 precomputes
       * partial dot products the same way). Σ_s table(s)(code_s) = ⟨q,
       * decode(code)⟩; ranking descending is the MIPS setting the
       * anisotropic loss optimizes. */
-    def dotTables(q: Array[Double]): Array[Array[Double]] = {
+    def dotTables(q: Array[Double]): Array[Array[Double]] = tables(q)(_ * _)
+
+    /** table(s)(c) = Σ_i part(q_i, centroid_i) over subspace s, code c. */
+    private def tables(q: Array[Double])(part: (Double, Double) => Double): Array[Array[Double]] = {
       val w = dim / m
       Array.tabulate(m) { s =>
         val cb = codebooks(s)
         Array.tabulate(cb.length) { c =>
           var d = 0.0
           var i = 0
-          while (i < w) { d += q(s * w + i) * cb(c)(i); i += 1 }
+          while (i < w) { d += part(q(s * w + i), cb(c)(i)); i += 1 }
           d
         }
       }
@@ -98,6 +91,18 @@ object Pq {
       while (s < m) { d += tables(s)(code(s) & 0xFF); s += 1 }
       d
     }
+
+    /** The JSON fields of a saved model: the `model.json` of [[save]] and
+      * the `pq` node of a fused graph's meta. */
+    private[ops] def putJson(node: ObjectNode): Unit = {
+      node.put("m", m)
+      node.put("dim", dim)
+      node.set[JsonNode]("codebooks", SegmentCatalog.toJson(codebooks))
+    }
+
+    /** The code of `v`: anisotropic when `pcm` > 0 ([[pcmOf]]), else plain. */
+    def encodeWith(v: Array[Double], pcm: Double): Array[Byte] =
+      if (pcm > 0) encodeOneAnisotropic(v, pcm) else encodeOne(v)
 
     /** Anisotropic encode (SCANN-style; reference
       * pq/ProductQuantization.java:233-312 encodeAnisotropic +
@@ -190,6 +195,13 @@ object Pq {
     }
   }
 
+  /** The model that [[Model.putJson]] wrote into `node`. */
+  private[ops] def modelOf(node: JsonNode): Model = {
+    val cb = node.get("codebooks")
+    Model(node.get("m").asInt(), node.get("dim").asInt(),
+      Array.tabulate(cb.size())(s => SegmentCatalog.doubleRows(cb.get(s))))
+  }
+
   /** Parallel-cost multiplier from a dot-product threshold T (reference
     * KMeansPlusPlusClusterer.java:116-124): pairs scoring above T are the
     * ones whose ranks matter; on unit vectors the expected parallel share
@@ -204,30 +216,30 @@ object Pq {
     math.max(1.0, parallelCost / perpendicularCost)
   }
 
+  /** The `pcm` of [[Model.encodeWith]]: derived from a dot-product
+    * threshold when it is > 0, else 0 (plain assignment). */
+  private[ops] def pcmOf(anisotropicThreshold: Double, dim: Int): Double =
+    if (anisotropicThreshold > 0) parallelCostMultiplier(anisotropicThreshold, dim) else 0.0
+
   /** Train codebooks on a deterministic key-hash sample (collected to the
     * driver — bounded by sampleCap vectors; centroids init from the k
     * smallest keys' sub-vectors, `iters` Lloyd rounds per subspace). */
   def train(spark: SparkSession, emb: DataFrame, keyCol: String, vecCol: String,
             m: Int, codes: Int = 256, iters: Int = 5,
-            sampleCap: Long = 131072L): Model = {
-    import spark.implicits._
-    val all = emb.select(col(keyCol).cast("long").as("key"),
-      transform(col(vecCol), x => x.cast("double")).as("v"))
-    val n = all.count()
-    val frac = math.max(1L, (n + sampleCap - 1) / sampleCap)
-    val sample = (if (frac > 1L) all.filter(pmod(xxhash64(col("key")), lit(frac)) === 0)
-                  else all)
-      .as[(Long, Seq[Double])].orderBy($"key").collect()
-    require(sample.nonEmpty, "empty training sample")
-    val dim = sample.head._2.length
+            sampleCap: Long = 131072L): Model =
+    lloyd(Ann.trainSample(spark, emb, keyCol, vecCol, sampleCap, keyOrder = true),
+      m, codes, iters)
+
+  /** Plain-Lloyd codebooks over the training vectors, one k-means per
+    * subspace. */
+  private def lloyd(vecs: Array[Array[Double]], m: Int, codes: Int, iters: Int): Model = {
+    val dim = vecs.head.length
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val w = dim / m
-    val vecs = sample.map(_._2.toArray)
-    val codebooks = Array.tabulate(m) { s =>
+    Model(m, dim, Array.tabulate(m) { s =>
       val subs = vecs.map(v => java.util.Arrays.copyOfRange(v, s * w, (s + 1) * w))
       kmeansLocal(subs, math.min(codes, subs.length), iters)
-    }
-    Model(m, dim, codebooks)
+    })
   }
 
   /** Anisotropic codebook TRAINING — the other half of SCANN (reference
@@ -259,25 +271,12 @@ object Pq {
                        codes: Int = 256, iters: Int = 5,
                        sampleCap: Long = 131072L,
                        outerIters: Int = 4): Model = {
-    import spark.implicits._
-    val all = emb.select(col(keyCol).cast("long").as("key"),
-      transform(col(vecCol), x => x.cast("double")).as("v"))
-    val n = all.count()
-    val frac = math.max(1L, (n + sampleCap - 1) / sampleCap)
-    val sample = (if (frac > 1L) all.filter(pmod(xxhash64(col("key")), lit(frac)) === 0)
-                  else all)
-      .as[(Long, Seq[Double])].orderBy($"key").collect()
-    require(sample.nonEmpty, "empty training sample")
-    val dim = sample.head._2.length
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val w = dim / m
-    val vecs = sample.map(_._2.toArray)
-    val pcm = parallelCostMultiplier(threshold, dim)
+    val vecs = Ann.trainSample(spark, emb, keyCol, vecCol, sampleCap, keyOrder = true)
     // seed: the plain-Lloyd codebooks (identical to train())
-    var model = Model(m, dim, Array.tabulate(m) { s =>
-      val subs = vecs.map(v => java.util.Arrays.copyOfRange(v, s * w, (s + 1) * w))
-      kmeansLocal(subs, math.min(codes, subs.length), iters)
-    })
+    var model = lloyd(vecs, m, codes, iters)
+    val dim = model.dim
+    val w = dim / m
+    val pcm = parallelCostMultiplier(threshold, dim)
     val kCodes = model.codebooks(0).length
     var outer = 0
     while (outer < outerIters) {
@@ -389,16 +388,7 @@ object Pq {
       val sums = Array.fill(k)(new Array[Double](w))
       val counts = new Array[Long](k)
       xs.foreach { x =>
-        var best = 0
-        var bestD = Double.MaxValue
-        var c = 0
-        while (c < k) {
-          var d = 0.0
-          var i = 0
-          while (i < w) { val t = x(i) - cents(c)(i); d += t * t; i += 1 }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
+        val best = Ann.nearestCentroid(x, cents)
         var i = 0
         while (i < w) { sums(best)(i) += x(i); i += 1 }
         counts(best) += 1
@@ -421,16 +411,9 @@ object Pq {
              model: Model, anisotropicThreshold: Double = 0.0): DataFrame = {
     import spark.implicits._
     val mB = spark.sparkContext.broadcast(model)
-    val pcm = if (anisotropicThreshold > 0)
-      parallelCostMultiplier(anisotropicThreshold, model.dim) else 0.0
-    emb.select(col(keyCol).cast("long").as("key"),
-        transform(col(vecCol), x => x.cast("double")).as("v"))
-      .as[(Long, Seq[Double])]
-      .map { case (k, v) =>
-        val arr = v.toArray
-        (k, if (pcm > 0) mB.value.encodeOneAnisotropic(arr, pcm)
-            else mB.value.encodeOne(arr))
-      }
+    val pcm = pcmOf(anisotropicThreshold, model.dim)
+    Ann.keyedVectors(emb, keyCol, vecCol)
+      .map { case (k, v) => (k, mB.value.encodeWith(v.toArray, pcm)) }
       .toDF("key", "code")
   }
 
@@ -440,52 +423,16 @@ object Pq {
     * retrains and re-encodes the corpus. Layout under `dir`:
     * `model.json` (format-versioned codebooks; small: m·codes·(dim/m)
     * doubles) and `codes/` (parquet (key, code), the 4·d/m-compressed
-    * corpus representation). */
-  def save(spark: SparkSession, model: Model, codes: DataFrame, dir: String): Unit = {
-    // payload first, model.json LAST: the metadata publish is the atomic
-    // commit marker (shared artifact protocol — SegmentCatalog
-    // .publishJson/gcArtifacts collects metaless crashed saves)
-    codes.write.mode("overwrite").parquet(s"$dir/codes")
-    saveModel(spark, model, dir)
+    * corpus representation), committed by the shared artifact protocol
+    * ([[SegmentCatalog.saveArtifact]]). */
+  def save(spark: SparkSession, model: Model, codes: DataFrame, dir: String): Unit =
+    SegmentCatalog.saveArtifact(spark, dir, SegmentCatalog.PqArtifact, codes)(model.putJson)
+
+  def load(spark: SparkSession, dir: String): (Model, DataFrame) = {
+    val art = SegmentCatalog.PqArtifact
+    (modelOf(SegmentCatalog.readMeta(spark, dir, art)),
+      spark.read.parquet(art.payloadIn(dir)).select(col("key"), col("code")))
   }
-
-  def saveModel(spark: SparkSession, model: Model, dir: String): Unit = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("formatVersion", FormatVersion)
-    root.put("m", model.m)
-    root.put("dim", model.dim)
-    root.set("codebooks", mapper.valueToTree(model.codebooks)
-      : com.fasterxml.jackson.databind.JsonNode)
-    graft.index.SegmentCatalog.publishJson(spark, s"$dir/model.json",
-      mapper.writeValueAsBytes(root))
-  }
-
-  def loadModel(spark: SparkSession, dir: String): Model = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
-      spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(s"$dir/model.json"))
-    val json = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-    val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-    val v = if (m.has("formatVersion")) m.get("formatVersion").asLong() else 0L
-    require(v <= FormatVersion, s"unsupported PQ model format v$v")
-    val cbNode = m.get("codebooks")
-    val codebooks = Array.tabulate(cbNode.size()) { s =>
-      val sub = cbNode.get(s)
-      Array.tabulate(sub.size()) { c =>
-        val cent = sub.get(c)
-        Array.tabulate(cent.size())(cent.get(_).asDouble())
-      }
-    }
-    Model(m.get("m").asInt(), m.get("dim").asInt(), codebooks)
-  }
-
-  def loadCodes(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/codes").select(col("key"), col("code"))
-
-  def load(spark: SparkSession, dir: String): (Model, DataFrame) =
-    (loadModel(spark, dir), loadCodes(spark, dir))
 
   /** Approximate top-k by INNER-PRODUCT ADC over the compressed codes
     * (descending ⟨q, decode(code)⟩), then EXACT dot-product rerank of the
@@ -499,23 +446,8 @@ object Pq {
     val q = query.map(_.toDouble).toArray
     val tB = spark.sparkContext.broadcast(model.dotTables(q))
     val mB = spark.sparkContext.broadcast(model)
-    val kk = math.max(1, k * rerankFactor)
-    val approx = codes.as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val heap = new graft.core.DoubleTopK(kk)
-        it.foreach { case (key, code) =>
-          heap.offer(mB.value.adc(tB.value, code), key)
-        }
-        heap.drain().iterator
-      }.toDF("adc", "key")
-      .orderBy($"adc".desc, $"key".asc).limit(kk)
-    val qc = typedlit(q.toSeq)
-    approx.join(emb.select(col(keyCol).cast("long").as("key"), col(vecCol)), "key")
-      .withColumn("dot", graft.functions.VectorFunctions.dotProd(
-        transform(col(vecCol), x => x.cast("double")), qc))
-      .select(col("key"), col("dot"))
-      .orderBy(col("dot").desc, col("key").asc)
-      .limit(k)
+    Ann.scanRerank(codes.as[(Long, Array[Byte])], emb, keyCol, vecCol, q, k, rerankFactor,
+      "dot", Ann.Dot) { case (key, code) => (mB.value.adc(tB.value, code), key) }
   }
 
   /** Approximate top-k by ADC over the compressed codes, then EXACT
@@ -528,28 +460,8 @@ object Pq {
     val q = query.map(_.toDouble).toArray
     val tB = spark.sparkContext.broadcast(model.distTables(q))
     val mB = spark.sparkContext.broadcast(model)
-    val kk = math.max(1, k * rerankFactor)
-    val approx = codes.as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val heap = new graft.core.DoubleTopK(kk)
-        it.foreach { case (key, code) =>
-          // DoubleTopK keeps LARGEST scores; negate the distance
-          heap.offer(-mB.value.adc(tB.value, code), key)
-        }
-        heap.drain().iterator.map { case (negD, key) => (key, -negD) }
-      }.toDF("key", "adc2")
-      .orderBy($"adc2".asc, $"key".asc).limit(kk)
-    val qc = typedlit(q.toSeq)
-    // codegen fused-loop kernel (same left-to-right accumulation as the
-    // zip_with/aggregate HOF it replaces, so dist2 is bit-identical) — the
-    // interpreted HOF was the expression family behind the round-3
-    // dedup_embed 53x blowup; the survivor set here is bounded to
-    // k*rerankFactor rows but the hot kernel is still the right one
-    approx.join(emb.select(col(keyCol).cast("long").as("key"), col(vecCol)), "key")
-      .withColumn("dist2", graft.functions.VectorFunctions.l2Dist2(
-        transform(col(vecCol), x => x.cast("double")), qc))
-      .select(col("key"), col("dist2"))
-      .orderBy(col("dist2").asc, col("key").asc)
-      .limit(k)
+    // a higher approximate score is better: the scan ranks by −ADC
+    Ann.scanRerank(codes.as[(Long, Array[Byte])], emb, keyCol, vecCol, q, k, rerankFactor,
+      "dist2", Ann.L2Squared) { case (key, code) => (-mB.value.adc(tB.value, code), key) }
   }
 }

@@ -101,13 +101,16 @@ class FormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     p
   }
 
+  /** A 4-chunk build with the 4 chunks written concurrently: its dir and
+    * per-chunk bytes. */
+  private def build(): (String, Seq[(Int, Long)]) = {
+    val dir = tmp("graft-v3-build")
+    ResumableBuild.build(spark, spark.read.parquet(corpusPath), dir, opts, numChunks = 4,
+      assumeSorted = true, parallelChunks = 4)
+    (dir, ResumableBuild.readManifest(spark, dir).map(m => (m.chunk, m.bytes)))
+  }
+
   test("format v3 files: zstd everywhere, plain payloads, no derived block columns; concurrent chunk writes give identical bytes") {
-    def build(): (String, Seq[(Int, Long)]) = {
-      val dir = tmp("graft-v3-build")
-      ResumableBuild.build(spark, spark.read.parquet(corpusPath), dir, opts, numChunks = 4,
-        assumeSorted = true, parallelChunks = 4)
-      (dir, ResumableBuild.readManifest(spark, dir).map(m => (m.chunk, m.bytes)))
-    }
     val (dir, bytes) = build()
     val (_, again) = build()
     assert(bytes.size == 4 && bytes == again, s"chunk bytes differ between builds: $bytes vs $again")
@@ -126,6 +129,44 @@ class FormatSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     }
     assert(SegmentCatalog.current(spark, dir).formatVersion == 3L)
+  }
+
+  test("a chunked build beside concurrent ANN saves writes the bytes of a build alone, plain payloads") {
+    import spark.implicits._
+    val (_, alone) = build()
+    val rnd = new scala.util.Random(5)
+    val emb = (0L until 400L).map(i => (i, Seq.fill(16)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding").persist()
+    val graph = graft.ops.Nsw.build(spark, emb, "vec_id", "embedding",
+      graft.ops.Nsw.Params(m = 4, efConstruction = 16, kCenters = 4, iters = 1))
+    val pq = graft.ops.Pq.train(spark, emb, "vec_id", "embedding", m = 4, iters = 2)
+    val codes = graft.ops.Pq.encode(spark, emb, "vec_id", "embedding", pq).persist()
+    // ANN saves run back to back on another thread for the whole build
+    val annRoot = tmp("graft-ann-beside-build")
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val saves = new java.util.concurrent.atomic.AtomicInteger(0)
+    @volatile var failure: Throwable = null
+    val saver = new Thread(() =>
+      try while (!stop.get) {
+        val i = saves.get
+        graft.ops.Nsw.save(spark, graph, s"$annRoot/nsw-$i")
+        graft.ops.Pq.save(spark, pq, codes, s"$annRoot/pq-$i")
+        saves.incrementAndGet()
+      } catch { case t: Throwable => failure = t })
+    saver.start()
+    val (dir, beside) = try build() finally { stop.set(true); saver.join() }
+    assert(failure == null, s"ANN save failed: $failure")
+    assert(saves.get > 0, "premise: an ANN save ran during the build")
+    assert(beside == alone, s"chunk bytes beside ANN saves $beside vs alone $alone")
+    val payloads = Set("docBytes", "tfBytes", "dlBytes")
+    footers(s"$dir/blocks").foreach { case (file, cols) =>
+      payloads.foreach { c =>
+        val enc = cols(c)._2
+        assert(enc.contains("PLAIN") && !usesDictionary(enc), s"$file column $c: $enc")
+      }
+    }
+    graph.unpersist()
+    Seq(emb, codes).foreach(_.unpersist())
   }
 
   test("a v2 dir loads and answers like v3; an append to it commits v3; a newer format is refused") {

@@ -137,6 +137,76 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     plans.collectFirst { case ("dedup_embed", df) => df.unpersist() }
   }
 
+  test("compressed scans in production mode (rerankFactor 1 and 3) equal a driver reference") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(67)
+    val dim = 16
+    // 4 scan partitions, so each keeps its own bounded heap before the merge
+    val emb = (0L until 600L).map(i => (i, Seq.fill(dim)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding").repartition(4).persist()
+    val vecs = emb.as[(Long, Seq[Float])].collect()
+      .map { case (key, v) => key -> v.map(_.toDouble).toArray }.toMap
+    val pq = Pq.train(spark, emb, "vec_id", "embedding", m = 4, iters = 3)
+    val lvq = Lvq.train(spark, emb, "vec_id", "embedding")
+    val bq = Bq.train(spark, emb, "vec_id", "embedding")
+    val pqCodes = Pq.encode(spark, emb, "vec_id", "embedding", pq).persist()
+    val lvqCodes = Lvq.encode(spark, emb, "vec_id", "embedding", lvq).persist()
+    val bqCodes = Bq.encode(spark, emb, "vec_id", "embedding", bq).persist()
+    val pqC = pqCodes.as[(Long, Array[Byte])].collect()
+    val lvqC = lvqCodes.as[(Long, Array[Byte], Float, Float)].collect()
+    val bqC = bqCodes.as[(Long, Array[Long])].collect()
+    def dot(a: Array[Double], b: Array[Double]) = a.indices.map(i => a(i) * b(i)).sum
+    def cos(a: Array[Double], b: Array[Double]) =
+      dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b)))
+    def l2sq(a: Array[Double], b: Array[Double]) =
+      a.indices.map(i => (a(i) - b(i)) * (a(i) - b(i))).sum
+    val byScoreDescKey = Ordering.Tuple2(Ordering.Double.TotalOrdering.reverse, Ordering.Long)
+    // the reference plan on the driver: the kk best codes by (approx desc,
+    // key asc), reranked exactly, ordered by (exact, key asc)
+    def reference(approx: Seq[(Long, Double)], exact: Array[Double] => Double, asc: Boolean,
+                  k: Int, rf: Int): Seq[(Long, Double)] =
+      approx.sortBy { case (key, a) => (a, key) }(byScoreDescKey).take(k * rf)
+        .map { case (key, _) => (key, exact(vecs(key))) }
+        .sortBy { case (key, e) => (if (asc) -e else e, key) }(byScoreDescKey).take(k)
+    val k = 10
+    var tiedCuts = 0
+    for (qi <- Seq(3L, 77L, 500L); rf <- Seq(1, 3)) {
+      val qf = emb.filter($"vec_id" === qi).select($"embedding").as[Seq[Float]].head()
+      val q = qf.map(_.toDouble).toArray
+      val (qMu, qSum, qn2) = lvq.queryParts(q)
+      val bqQ = bq.encodeOne(q)
+      val bqApprox = bqC.toSeq.map { case (key, bits) => (key, bq.sim(bits, bqQ)) }
+      val kth = bqApprox.map(_._2).sorted(Ordering.Double.TotalOrdering.reverse)
+      if (kth(k * rf - 1) == kth(k * rf)) tiedCuts += 1
+      val cases = Seq(
+        ("Pq.topK", Pq.topK(spark, pqCodes, emb, "vec_id", "embedding", pq, qf, k, rf),
+          reference(pqC.toSeq.map { case (key, c) => (key, -pq.adc(pq.distTables(q), c)) },
+            l2sq(_, q), asc = true, k, rf)),
+        ("Pq.topKDot", Pq.topKDot(spark, pqCodes, emb, "vec_id", "embedding", pq, qf, k, rf),
+          reference(pqC.toSeq.map { case (key, c) => (key, pq.adc(pq.dotTables(q), c)) },
+            dot(_, q), asc = false, k, rf)),
+        ("Lvq.topK", Lvq.topK(spark, lvqCodes, emb, "vec_id", "embedding", lvq, qf, k, rf),
+          reference(lvqC.toSeq.map { case (key, u, b, sc) =>
+            (key, lvq.approxCos(q, qMu, qSum, 1.0 / math.sqrt(qn2), u, b, sc)) },
+            cos(_, q), asc = false, k, rf)),
+        ("Lvq.topKDot", Lvq.topKDot(spark, lvqCodes, emb, "vec_id", "embedding", lvq, qf, k, rf),
+          reference(lvqC.toSeq.map { case (key, u, b, sc) =>
+            (key, lvq.approxDot(q, qMu, qSum, u, b, sc)) }, dot(_, q), asc = false, k, rf)),
+        ("Bq.topK", Bq.topK(spark, bqCodes, emb, "vec_id", "embedding", bq, qf, k, rf),
+          reference(bqApprox, cos(_, q), asc = false, k, rf)))
+      cases.foreach { case (name, df, want) =>
+        val got = df.as[(Long, Double)].collect().toSeq
+        assert(got.map(_._1) == want.map(_._1), s"$name q=$qi rerank=$rf keys")
+        got.zip(want).foreach { case ((_, g), (_, w)) =>
+          assert(math.abs(g - w) <= 1e-9, s"$name q=$qi rerank=$rf: $g vs $w")
+        }
+      }
+    }
+    // premise: BQ's hamming ties straddle the kk cut, so the key rule decides
+    assert(tiedCuts > 0, "no BQ query cut a tie")
+    Seq(emb, pqCodes, lvqCodes, bqCodes).foreach(_.unpersist())
+  }
+
   test("BQ: 1 bit/dim hamming prefilter + exact rerank; exact at full rerank; round-trips") {
     import spark.implicits._
     val rnd = new scala.util.Random(43)
@@ -276,7 +346,8 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("anisotropic PQ beats plain PQ recall at equal code size on the hard corpus") {
     import spark.implicits._
-    // hard corpus (RecallProbe shape): overlapping unit-normalized Gaussian
+    // hard corpus (the recall probes' shape, tools/recall_probe_r*.json and
+    // tools/aniso_probe_r*.txt): overlapping unit-normalized Gaussian
     // clusters + outliers, so codes must preserve dot products of
     // HIGH-scoring pairs — exactly what the anisotropic loss weights
     val rnd = new scala.util.Random(41)
@@ -298,7 +369,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // m=8 (8 bytes/vector): the regime where quantization is fine enough
     // for assignment trades to matter — at very coarse codes (m=4 here,
     // residual norms ~ |x|) the anisotropic trade buys nothing; measured
-    // curve in AnisoProbe / BASELINE.md round 4
+    // curve in tools/aniso_probe_r4.txt / BASELINE.md round 4
     val model = Pq.train(spark, emb, "vec_id", "embedding", m = 8, iters = 5)
     val plain = Pq.encode(spark, emb, "vec_id", "embedding", model).persist()
     val aniso = Pq.encode(spark, emb, "vec_id", "embedding", model,
@@ -389,9 +460,9 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       finally in.close()
     }
     val out = fs.create(p, true)
-    out.write(json.replace(s""""formatVersion":${Pq.FormatVersion}""",
+    out.write(json.replace(s""""formatVersion":${graft.index.SegmentCatalog.PqArtifact.formatVersion}""",
       """"formatVersion":999""").getBytes("UTF-8")); out.close()
-    intercept[IllegalArgumentException] { Pq.loadModel(spark, dir) }
+    intercept[IllegalArgumentException] { Pq.load(spark, dir) }
   }
 
   test("IVF persistence: loaded index answers identically and probes prune partitions") {
@@ -420,32 +491,71 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("artifact GC collects crashed ANN saves, spares committed ones") {
     import spark.implicits._
+    import graft.index.SegmentCatalog
     val root = java.nio.file.Files.createTempDirectory("graft-art-gc").toString
     val emb = (0L until 200L).map { i =>
       (i, Seq.tabulate(8)(d => ((i * 31 + d * 7) % 13).toFloat))
     }.toDF("vec_id", "embedding")
-    // committed artifact: payload + published commit marker
     val g = Nsw.build(spark, emb, "vec_id", "embedding",
       Nsw.Params(m = 4, efConstruction = 16, kCenters = 2, iters = 1))
-    Nsw.save(spark, g, s"$root/nsw-ok")
-    // crashed save: payload written, meta.json never published
-    g.adj.write.mode("overwrite").partitionBy("c").parquet(s"$root/nsw-crashed/adj")
-    g.unpersist()
+    val pq = Pq.train(spark, emb, "vec_id", "embedding", m = 4, iters = 2)
+    val lvq = Lvq.train(spark, emb, "vec_id", "embedding")
+    val bq = Bq.train(spark, emb, "vec_id", "embedding")
+    val ivf = Ann.buildIvf(spark, emb, "vec_id", "embedding", kCenters = 2, iters = 1)
+    // each kind as one input: its declaration, a save into a dir, a load
+    val kinds: Seq[(SegmentCatalog.Artifact, String => Unit, String => Any)] = Seq(
+      (SegmentCatalog.NswArtifact, Nsw.save(spark, g, _), Nsw.load(spark, _)),
+      (SegmentCatalog.PqArtifact,
+        Pq.save(spark, pq, Pq.encode(spark, emb, "vec_id", "embedding", pq), _), Pq.load(spark, _)),
+      (SegmentCatalog.LvqArtifact,
+        Lvq.save(spark, lvq, Lvq.encode(spark, emb, "vec_id", "embedding", lvq), _), Lvq.load(spark, _)),
+      (SegmentCatalog.BqArtifact,
+        Bq.save(spark, bq, Bq.encode(spark, emb, "vec_id", "embedding", bq), _), Bq.load(spark, _)),
+      (SegmentCatalog.IvfArtifact, Ann.saveIvf(spark, ivf, _), Ann.loadIvf(spark, _)))
+    assert(kinds.map(_._1).toSet == SegmentCatalog.Artifacts.toSet, "a kind is not covered")
     val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(root),
       spark.sparkContext.hadoopConfiguration)
     def exists(p: String) = fs.exists(new org.apache.hadoop.fs.Path(p))
+    def dirOf(art: SegmentCatalog.Artifact, state: String) =
+      s"$root/${art.marker.stripSuffix(".json")}-$state"
+    kinds.foreach { case (art, save, _) =>
+      // committed artifact: payload + published commit marker
+      save(dirOf(art, "ok"))
+      // crashed save: payload written, the marker never published
+      save(dirOf(art, "crashed"))
+      fs.delete(new org.apache.hadoop.fs.Path(s"${dirOf(art, "crashed")}/${art.marker}"), false)
+    }
+    g.unpersist()
     // age guard: a fresh (in-flight) save is never collected
-    assert(graft.index.SegmentCatalog.gcArtifacts(spark, root, graceMs = 3600000L).isEmpty)
-    assert(exists(s"$root/nsw-crashed/adj"))
-    // past the grace window the metaless payload dies, the committed one lives
-    val dead = graft.index.SegmentCatalog.gcArtifacts(spark, root, graceMs = 0L)
-    assert(dead.size == 1 && dead.head.contains("nsw-crashed"), dead.toString)
-    assert(!exists(s"$root/nsw-crashed/adj"))
-    assert(exists(s"$root/nsw-ok/adj") && exists(s"$root/nsw-ok/meta.json"))
-    // the committed graph still loads and serves after GC
-    val loaded = Nsw.load(spark, s"$root/nsw-ok")
-    assert(Nsw.topK(loaded, Seq.fill(8)(1.0f), 5, nProbe = 2, ef = Int.MaxValue)
-      .count() == 5)
+    assert(SegmentCatalog.gcArtifacts(spark, root, graceMs = 3600000L).isEmpty)
+    kinds.foreach { case (art, _, _) => assert(exists(art.payloadIn(dirOf(art, "crashed")))) }
+    // past the grace window each metaless payload dies, each committed one lives
+    val dead = SegmentCatalog.gcArtifacts(spark, root, graceMs = 0L)
+    assert(dead.map(_.split('/').takeRight(2).mkString("/")).toSet ==
+      kinds.map { case (art, _, _) => s"${art.marker.stripSuffix(".json")}-crashed/${art.payload}" }
+        .toSet, dead.toString)
+    // the committed graph still serves after GC
+    assert(Nsw.topK(Nsw.load(spark, dirOf(SegmentCatalog.NswArtifact, "ok")), Seq.fill(8)(1.0f),
+      5, nProbe = 2, ef = Int.MaxValue).count() == 5)
+    kinds.foreach { case (art, _, load) =>
+      assert(!exists(art.payloadIn(dirOf(art, "crashed"))))
+      val ok = dirOf(art, "ok")
+      assert(exists(art.payloadIn(ok)) && exists(s"$ok/${art.marker}"))
+      load(ok) // the committed artifact still loads after GC
+      // a marker one format newer than the reader is refused, not misparsed
+      val p = new org.apache.hadoop.fs.Path(s"$ok/${art.marker}")
+      val json = {
+        val in = fs.open(p)
+        try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
+      }
+      val out = fs.create(p, true)
+      out.write(json.replace(s""""formatVersion":${art.formatVersion}""",
+        s""""formatVersion":${art.formatVersion + 1}""").getBytes("UTF-8"))
+      out.close()
+      val e = intercept[IllegalArgumentException](load(ok))
+      assert(e.getMessage.contains(s"unsupported ${art.name} format v${art.formatVersion + 1}"),
+        e.getMessage)
+    }
   }
 
   test("multimodal: payload plumbing shapes and stub decode determinism") {
