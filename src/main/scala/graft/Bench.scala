@@ -27,15 +27,7 @@ object Bench {
   private def session(cpus: Int): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
+    IndexCli.session(cpus.toString, "ERROR")
   }
 
   private def timeS[A](f: => A): Double = {
@@ -284,7 +276,7 @@ object Bench {
       if (scaleOnly || sys.env.contains("SPARK_GRAFT_SKIP_SF1")) Seq.empty
       else {
         val sf1Dir = s"$tmpBase/sf1"
-        Sf1Gen.generate(spark, sfDir, sf1Dir, reps = 10)
+        Sf1Gen.generate(spark, sfDir, sf1Dir)
         Gate.index(spark, sf1Dir) // build once, like phase 1
         SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
           val t = timeS {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.index.{IndexBuilder, ResumableBuild}
 
 /** One pinned build, spawned by Bench as a separate JVM per parallelism
@@ -10,22 +9,7 @@ import graft.index.{IndexBuilder, ResumableBuild}
 object BenchBuildOne {
   def main(args: Array[String]): Unit = {
     val Array(corpusPath, indexDir, chunks, parChunks) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-build-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // v2 committer: task output moves to the destination at task commit,
-      // removing the serial per-file job-commit rename tail that the
-      // phase-timing probe showed pinning one core at 32-way parallelism.
-      // Safe here: chunk dirs are overwrite-mode and only become visible
-      // via the catalog snapshot commit, so a failed job's partials are
-      // cleared by the rerun's overwrite and never read.
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = IndexCli.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"), "ERROR")
     val corpus = spark.read.parquet(corpusPath)
     // Warm the session OUTSIDE the timed window: JIT/codegen, executor
     // task-launch path and shuffle machinery all pay a first-use cost that

@@ -16,22 +16,32 @@ import graft.index._
   *   compact <indexDir> <outDir> <tombstoneCsv>          (OPTIMIZE)
   *   stats <indexDir>                                    (MEMORY)
   *   explain <indexDir> <query terms...>                 (plan audit)
-  *   bench <N> [see Bench.scala for the driver-run harness]
+  *   annserve <graphDir> [k]                             (vector SEARCH/WRITE loop)
   *
   * Input is either a parquet path with (url, text|html, lang) columns or
   * `synth:N` for the seeded deterministic corpus.
   */
 object IndexCli {
 
-  def session(cpus: String): SparkSession = SparkSession.builder()
-    .master(s"local[$cpus]")
-    .appName("graft-index")
-    .config("spark.sql.shuffle.partitions", cpus)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // see BenchBuildOne: v2 committer is safe under the snapshot catalog
-    .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-    .getOrCreate()
+  /** The session of every main: `local[cpus]`, as many shuffle
+    * partitions, UTC, no UI, and the v2 output committer. v2 moves task
+    * output to the destination at task commit, removing the serial
+    * per-file job-commit rename tail that pinned one core at 32-way
+    * parallelism. It is safe here: chunk dirs are overwrite-mode and only
+    * become visible via the catalog snapshot commit, so a failed job's
+    * partials are cleared by the rerun's overwrite and never read. */
+  def session(cpus: String, logLevel: String = "WARN"): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName("graft")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
 
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) { usage(); sys.exit(2) }
@@ -40,7 +50,6 @@ object IndexCli {
       case "build" =>
         if (args.length < 3) { usage(); sys.exit(2) }
         val spark = session(cpus)
-        spark.sparkContext.setLogLevel("WARN")
         val input = args(1)
         val dir = args(2)
         val chunks = if (args.length > 3) args(3).toInt else 8
@@ -70,7 +79,6 @@ object IndexCli {
       case "query" =>
         if (args.length < 4) { usage(); sys.exit(2) }
         val spark = session(cpus)
-        spark.sparkContext.setLogLevel("WARN")
         val ix = InvertedIndex.load(spark, args(1))
         val k = args(2).toInt
         val q = args.drop(3).mkString(" ")
@@ -89,7 +97,6 @@ object IndexCli {
       case "compact" =>
         if (args.length < 4) { usage(); sys.exit(2) }
         val spark = session(cpus)
-        spark.sparkContext.setLogLevel("WARN")
         import spark.implicits._
         val ix = InvertedIndex.load(spark, args(1))
         val dead = args(3).split(",").filter(_.nonEmpty).map(_.toLong)
@@ -100,7 +107,6 @@ object IndexCli {
 
       case "snapshots" =>
         val spark = session(cpus)
-        spark.sparkContext.setLogLevel("WARN")
         val cur = SegmentCatalog.currentVersion(spark, args(1)).getOrElse(-1L)
         SegmentCatalog.listSnapshots(spark, args(1)).foreach { s =>
           val mark = if (s.version == cur) "*" else " "
@@ -111,7 +117,6 @@ object IndexCli {
 
       case "expire" =>
         val spark = session(cpus)
-        spark.sparkContext.setLogLevel("WARN")
         val keep = if (args.length > 2) args(2).toInt else 1
         SegmentCatalog.expireSnapshots(spark, args(1), keep)
         println(s"retained ${SegmentCatalog.listSnapshots(spark, args(1)).size} snapshot(s)")
@@ -121,7 +126,6 @@ object IndexCli {
         // remove_orphan_files analog: chunks no snapshot references at all
         // (crashed writers), with an age guard for in-flight builds
         val spark = session(cpus)
-        spark.sparkContext.setLogLevel("WARN")
         val graceMs = if (args.length > 2) args(2).toLong else 86400000L
         val r = SegmentCatalog.removeOrphans(spark, args(1), graceMs)
         // crashed ANN artifact saves (NSW/PQ/IVF payload dirs whose
@@ -135,7 +139,6 @@ object IndexCli {
 
       case "stats" =>
         val spark = session(cpus)
-        spark.sparkContext.setLogLevel("WARN")
         val ix = InvertedIndex.load(spark, args(1))
         val manifest = ResumableBuild.readManifest(spark, args(1))
         println(s"docs=${ix.stats.numDocs} tokens=${ix.stats.totalTokens} " +
@@ -147,41 +150,10 @@ object IndexCli {
         spark.stop()
 
       case "serve" =>
-        // long-lived serving loop (jvector IPCService.java:325-368 analog):
-        // pin once (HotIndex: packed stores in the fewest partitions their
-        // size allows + driver hot dict), then answer queries from stdin
-        // with no per-query planning job, one task per pinned partition.
         if (args.length < 2) { usage(); sys.exit(2) }
         val spark = session(cpus)
-        spark.sparkContext.setLogLevel("WARN")
         val k = if (args.length > 2) args(2).toInt else 10
-        val hot = HotIndex(InvertedIndex.load(spark, args(1)))
-        hot.search("warmup", 1) // touch the cache + JIT the kernel
-        println(s"ready: ${hot.stats.numDocs} docs, k=$k (query per line; " +
-          "prefixes: ':t <tau> q...' threshold, ':a <score> <docId> q...' " +
-          "next page, ':d id,id q...' deny set; empty line or EOF quits)")
-        val in = scala.io.Source.stdin.getLines()
-        var go = true
-        while (go && in.hasNext) {
-          val line = in.next().trim
-          if (line.isEmpty) go = false
-          else {
-            val t0 = System.nanoTime()
-            val hits = line.split("\\s+").toList match {
-              case ":t" :: tau :: rest =>
-                hot.searchThreshold(rest.mkString(" "), tau.toDouble)
-              case ":a" :: s :: d :: rest =>
-                hot.searchAfter(rest.mkString(" "), k, s.toDouble, d.toLong)
-              case ":d" :: ids :: rest =>
-                hot.search(rest.mkString(" "), k,
-                  deny = ids.split(",").filter(_.nonEmpty).map(_.toLong))
-              case _ => hot.search(line, k)
-            }
-            val ms = (System.nanoTime() - t0) / 1e6
-            println(f"[$ms%.1f ms] " + hits.map(sd =>
-              f"${sd.docId}:${sd.score}%.3f").mkString(" "))
-          }
-        }
+        serveLoop(spark, args(1), k, scala.io.Source.stdin.getLines(), println(_))
         spark.stop()
 
       case "annserve" =>
@@ -195,7 +167,6 @@ object IndexCli {
         // with a durable write + cache refresh.
         if (args.length < 2) { usage(); sys.exit(2) }
         val spark = session(cpus)
-        spark.sparkContext.setLogLevel("WARN")
         val kAnn = if (args.length > 2) args(2).toInt else 10
         annServeLoop(spark, args(1), kAnn,
           scala.io.Source.stdin.getLines(), println(_))
@@ -206,7 +177,6 @@ object IndexCli {
         // partition + term pushdown before anything shuffles
         if (args.length < 3) { usage(); sys.exit(2) }
         val spark = session(cpus)
-        spark.sparkContext.setLogLevel("WARN")
         val ix = InvertedIndex.load(spark, args(1))
         val q = args.drop(2).mkString(" ")
         println("=== search plan ===")
@@ -219,8 +189,69 @@ object IndexCli {
     }
   }
 
+  /** The serve command loop, factored off stdin so it is testable
+    * end-to-end (EngineSpec drives it with scripted lines). It pins the
+    * index once (HotIndex: packed stores in the fewest partitions their
+    * size allows + driver hot dict; jvector IPCService.java:325-368
+    * analog) and answers with no per-query planning job, one task per
+    * pinned partition.
+    *
+    * Protocol (one command per line):
+    *   q...                         top-k
+    *   :t <tau> q...                THRESHOLD — every doc scoring >= tau
+    *   :a <score> <docId> q...      NEXT PAGE after the (score, docId) cursor
+    *   :d <id>[,<id>...] q...       top-k with a deny set
+    *   (empty line / EOF)           quit
+    *
+    * A line that fails (a malformed number, a threshold matching more
+    * than the serving cap) answers `ERROR <class>: <message>` and the
+    * loop goes on; the pinned index is released however the loop ends. */
+  private[graft] def serveLoop(spark: SparkSession, dir: String, k: Int,
+                               in: Iterator[String], out: String => Unit): Unit = {
+    val hot = HotIndex(InvertedIndex.load(spark, dir))
+    try {
+      hot.search("warmup", 1) // touch the cache + JIT the kernel
+      out(s"ready: ${hot.stats.numDocs} docs, k=$k (query per line; " +
+        "prefixes: ':t <tau> q...' threshold, ':a <score> <docId> q...' " +
+        "next page, ':d id,id q...' deny set; empty line or EOF quits)")
+      commands(in, out) { line =>
+        val hits = line.split("\\s+").toList match {
+          case ":t" :: tau :: rest =>
+            hot.searchThreshold(rest.mkString(" "), tau.toDouble)
+          case ":a" :: s :: d :: rest =>
+            hot.searchAfter(rest.mkString(" "), k, s.toDouble, d.toLong)
+          case ":d" :: ids :: rest =>
+            hot.search(rest.mkString(" "), k,
+              deny = ids.split(",").filter(_.nonEmpty).map(_.toLong))
+          case _ => hot.search(line, k)
+        }
+        hits.map(sd => f"${sd.docId}:${sd.score}%.3f").mkString(" ")
+      }
+    } finally hot.close()
+  }
+
+  /** The shell of both serve loops: each trimmed line of `in` up to an
+    * empty line or EOF goes to `run`, whose answer is written prefixed by
+    * its latency; a line that throws answers
+    * `ERROR <class>: <message>` instead. */
+  private def commands(in: Iterator[String], out: String => Unit)(run: String => String): Unit = {
+    var go = true
+    while (go && in.hasNext) {
+      val line = in.next().trim
+      if (line.isEmpty) go = false
+      else try {
+        val t0 = System.nanoTime()
+        val answer = run(line)
+        out(f"[${(System.nanoTime() - t0) / 1e6}%.1f ms] $answer")
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          out(s"ERROR ${e.getClass.getSimpleName}: ${e.getMessage}")
+      }
+    }
+  }
+
   /** The annserve command loop, factored off stdin so the serve protocol
-    * is testable end-to-end (EngineSpec drives it with scripted lines).
+    * is testable end-to-end (NswSpec drives it with scripted lines).
     *
     * Protocol (one command per line; reference IPCService.java:84-97):
     *   v1,v2,...                    SEARCH (default knobs)
@@ -275,64 +306,48 @@ object IndexCli {
       require(v.length == dim, s"vector has ${v.length} dims, the graph $dim")
       v
     }
-    var go = true
-    try while (go && in.hasNext) {
-      val line = in.next().trim
-      if (line.isEmpty) go = false
-      else try {
-        val t0 = System.nanoTime()
-        def ms = (System.nanoTime() - t0) / 1e6
-        line.split("\\s+").toList match {
-          case ":w" :: key :: rest =>
-            import spark.implicits._
-            val batch = Seq((key.toLong, parseVec(rest.mkString)))
-              .toDF("key", "v")
-            val (next, touched) = Nsw.appendTouched(spark, g, batch, "key", "v")
-            Nsw.saveTouched(spark, next, dir, touched)
-            if (next ne g) advance(next)
-            out(f"[$ms%.1f ms] WROTE $key (clusters ${touched.mkString(",")})")
-          case ":t" :: tau :: rest =>
-            val hits = hot.threshold(parseVec(rest.mkString), tau.toDouble,
-              nProbe = math.min(4, g.centroids.length))
-            out(f"[$ms%.1f ms] " + hits.map { case (key, s) =>
-              f"$key:$s%.4f" }.mkString(" "))
-          case ":a" :: sim :: key :: rest =>
-            val hits = hot.searchAfter(parseVec(rest.mkString), kAnn,
-              (sim.toDouble, key.toLong),
-              nProbe = math.min(4, g.centroids.length), ef = 48)
-            out(f"[$ms%.1f ms] " + hits.map { case (k2, s) =>
-              f"$k2:$s%.4f" }.mkString(" "))
-          case ":del" :: ids :: Nil =>
-            g = Nsw.delete(g, ids.split(",").filter(_.nonEmpty).map(_.toLong).toSeq)
-            Nsw.saveTouched(spark, g, dir, Set.empty) // meta-only publish
-            hot = hot.withDeleted(g.deleted.toSet) // O(1): same pinned arrays
-            out(f"[$ms%.1f ms] DELETED (${g.deleted.length} live tombstones)")
-          case ":opt" :: Nil =>
-            val compacted = Nsw.compact(spark, g)
-            // nothing purged: the dir already holds this graph
-            if (compacted ne g) {
-              val next = pq.map(Nsw.attachPqWith(spark, compacted, _))
-                .orElse(lvq.map(Nsw.attachLvqWith(spark, compacted, _)))
-                .getOrElse(compacted)
-              if (next ne compacted) compacted.unpersist()
-              // every generation owns its rows: the save reads none of the dir
-              Nsw.save(spark, next, dir)
-              advance(next)
-            }
-            out(f"[$ms%.1f ms] OPTIMIZED (${g.adj.count()} nodes, " +
-              s"${g.deleted.length} tombstones)")
-          case cmd =>
-            val (nProbe, ef, vecStr) = cmd match {
-              case ":p" :: np :: e :: rest => (np.toInt, e.toInt, rest.mkString)
-              case _ => (math.min(4, g.centroids.length), 48, line)
-            }
-            val hits = hot.topK(parseVec(vecStr), kAnn, nProbe, ef)
-            out(f"[$ms%.1f ms] " + hits.map { case (key, s) =>
-              f"$key:$s%.4f" }.mkString(" "))
-        }
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          out(s"ERROR ${e.getClass.getSimpleName}: ${e.getMessage}")
+    try commands(in, out) { line =>
+      def hitsOf(hits: Array[(Long, Double)]): String =
+        hits.map { case (key, sim) => f"$key:$sim%.4f" }.mkString(" ")
+      line.split("\\s+").toList match {
+        case ":w" :: key :: rest =>
+          import spark.implicits._
+          val batch = Seq((key.toLong, parseVec(rest.mkString))).toDF("key", "v")
+          val (next, touched) = Nsw.appendTouched(spark, g, batch, "key", "v")
+          Nsw.saveTouched(spark, next, dir, touched)
+          if (next ne g) advance(next)
+          s"WROTE $key (clusters ${touched.mkString(",")})"
+        case ":t" :: tau :: rest =>
+          hitsOf(hot.threshold(parseVec(rest.mkString), tau.toDouble,
+            nProbe = math.min(4, g.centroids.length)))
+        case ":a" :: sim :: key :: rest =>
+          hitsOf(hot.searchAfter(parseVec(rest.mkString), kAnn,
+            (sim.toDouble, key.toLong),
+            nProbe = math.min(4, g.centroids.length), ef = 48))
+        case ":del" :: ids :: Nil =>
+          g = Nsw.delete(g, ids.split(",").filter(_.nonEmpty).map(_.toLong).toSeq)
+          Nsw.saveTouched(spark, g, dir, Set.empty) // meta-only publish
+          hot = hot.withDeleted(g.deleted.toSet) // O(1): same pinned arrays
+          s"DELETED (${g.deleted.length} live tombstones)"
+        case ":opt" :: Nil =>
+          val compacted = Nsw.compact(spark, g)
+          // nothing purged: the dir already holds this graph
+          if (compacted ne g) {
+            val next = pq.map(Nsw.attachPqWith(spark, compacted, _))
+              .orElse(lvq.map(Nsw.attachLvqWith(spark, compacted, _)))
+              .getOrElse(compacted)
+            if (next ne compacted) compacted.unpersist()
+            // every generation owns its rows: the save reads none of the dir
+            Nsw.save(spark, next, dir)
+            advance(next)
+          }
+          s"OPTIMIZED (${g.adj.count()} nodes, ${g.deleted.length} tombstones)"
+        case cmd =>
+          val (nProbe, ef, vecStr) = cmd match {
+            case ":p" :: np :: e :: rest => (np.toInt, e.toInt, rest.mkString)
+            case _ => (math.min(4, g.centroids.length), 48, line)
+          }
+          hitsOf(hot.topK(parseVec(vecStr), kAnn, nProbe, ef))
       }
     } finally {
       hot.close()

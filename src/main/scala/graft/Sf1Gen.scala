@@ -16,42 +16,17 @@ import org.apache.spark.sql.functions._
   *  - embeddings are cyclically dimension-shifted per replica
   *    (norm-preserving, decorrelating), so cosine-pair density per vector
   *    stays comparable instead of every vector gaining 9 exact twins.
-  *
-  * Usage: Sf1Gen <srcDir> <outDir> [reps=10]
   */
 object Sf1Gen {
-  def main(args: Array[String]): Unit = {
-    val src = args(0)
-    val out = args(1)
-    val reps = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-sf1-gen")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    generate(spark, src, out, reps, verbose = true)
-    spark.stop()
-  }
-
-  /** Callable form (Bench runs this each round for the standing sf1
-    * escalation gate). */
-  def generate(spark: SparkSession, src: String, out: String, reps: Int = 10,
-               verbose: Boolean = false): Unit = {
+  /** Bench runs this each round for the standing sf1 escalation gate. */
+  def generate(spark: SparkSession, src: String, out: String): Unit = {
     import spark.implicits._
 
-    val repCol = spark.range(reps).select($"id".cast("int").as("rep"))
+    val repCol = spark.range(10).select($"id".cast("int").as("rep"))
     def gen(name: String)(f: DataFrame => DataFrame): Unit = {
       val t = spark.read.parquet(s"$src/$name.parquet")
       f(t.crossJoin(repCol)).drop("rep")
         .write.mode("overwrite").parquet(s"$out/$name.parquet")
-      if (verbose) {
-        val n = spark.read.parquet(s"$out/$name.parquet").count()
-        println(s"$name: $n rows")
-      }
     }
     def shifted(c: String, stride: Long): Column =
       col(c) + col("rep").cast("long") * lit(stride)
@@ -89,7 +64,6 @@ object Sf1Gen {
     Seq("nation", "region").foreach { name =>
       spark.read.parquet(s"$src/$name.parquet")
         .write.mode("overwrite").parquet(s"$out/$name.parquet")
-      if (verbose) println(s"$name: copied")
     }
   }
 }

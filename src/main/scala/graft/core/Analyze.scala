@@ -85,10 +85,10 @@ object Analyze {
   def shingleHash31(s: String): Long =
     java.lang.Long.parseLong(md5Hex(s).substring(0, 7), 16)
 
-  /** Deterministic MinHash permutation params (seeded LCG-style). */
+  /** Deterministic MinHash permutation params (seeded LCG-style, seed 42). */
   val MinHashP = 2147483647L // 2^31 - 1
-  def minHashParams(numHashes: Int, seed: Long = 42L): Array[(Long, Long)] = {
-    val rnd = new java.util.Random(seed)
+  def minHashParams(numHashes: Int): Array[(Long, Long)] = {
+    val rnd = new java.util.Random(42L)
     Array.fill(numHashes)((1L + rnd.nextInt((MinHashP - 1).toInt).toLong,
       rnd.nextInt(MinHashP.toInt).toLong))
   }

@@ -43,7 +43,6 @@ object IndexBuilder {
   final case class Options(
       numShards: Int = 32,
       rangePartitions: Int = 32,
-      blockSize: Int = Codec.BlockSize,
       quantizedBounds: Boolean = false,
       docOrder: String = "url")
 
@@ -245,10 +244,8 @@ object IndexBuilder {
       sorted: Dataset[(String, String, String)],
       offsets: Broadcast[Array[Long]],
       shardOf: Long => Int,
-      keepRange: (Long, Long) = (0L, Long.MaxValue), opts: Options,
-      spillBudget: Int = 1000000): Dataset[Block] = {
+      keepRange: (Long, Long) = (0L, Long.MaxValue), opts: Options): Dataset[Block] = {
     import sorted.sparkSession.implicits._
-    val bs = opts.blockSize
     val (dLo, dHi) = keepRange
     val partial: Dataset[Block] = sorted.mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
@@ -258,15 +255,17 @@ object IndexBuilder {
       if (pid + 1 < offsets.value.length &&
           (offsets.value(pid + 1) <= dLo || offsets.value(pid) >= dHi)) {
         Iterator.empty
-      } else spimiPartition(it, offsets.value(pid), dLo, dHi, shardOf, spillBudget)
+      } else spimiPartition(it, offsets.value(pid), dLo, dHi, shardOf)
     }
-    val merged = mergeRuns(partial, bs)
+    val merged = mergeRuns(partial)
     if (opts.quantizedBounds) merged.map(quantizeBlock) else merged
   }
 
+  /** Postings a partition's term map holds before it spills its runs. */
+  private val SpillBudget = 1000000
+
   private def spimiPartition(it: Iterator[(String, String, String)], base: Long,
-                             dLo: Long, dHi: Long, shardOf: Long => Int,
-                             spillBudget: Int): Iterator[Block] = {
+                             dLo: Long, dHi: Long, shardOf: Long => Int): Iterator[Block] = {
       var i = base
       val map = new TermMap
       var out = List.empty[Iterator[Block]]
@@ -311,7 +310,7 @@ object IndexBuilder {
               t += 1
             }
           }
-          if (map.pending >= spillBudget) flush()
+          if (map.pending >= SpillBudget) flush()
         }
       }
       flush()
@@ -397,8 +396,9 @@ object IndexBuilder {
   }
 
   /** Merge each (term, shard)'s disjoint partial runs into final blocks. */
-  private def mergeRuns(partial: Dataset[Block], bs: Int): Dataset[Block] = {
+  private def mergeRuns(partial: Dataset[Block]): Dataset[Block] = {
     import partial.sparkSession.implicits._
+    val bs = Codec.BlockSize
     partial.groupByKey(b => (b.term, b.shard)).flatMapGroups {
       (key: (String, Int), runs: Iterator[Block]) =>
         val (term, shard) = key

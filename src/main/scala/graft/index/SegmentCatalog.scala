@@ -209,18 +209,19 @@ object SegmentCatalog {
       s"writers commit format v$FormatVersion, not v${snap.formatVersion}")
     val fs = fsOf(spark, dir)
     fs.mkdirs(new Path(s"$dir/catalog"))
-    val json =
-      s"""{"version":${snap.version},"parent":${snap.parent},"op":"${snap.op}",""" +
-      s""""tsMs":${snap.tsMs},"formatVersion":${snap.formatVersion},""" +
-      s""""blockChunks":${snap.blockChunks.map(c => s""""$c"""").mkString("[", ",", "]")},""" +
-      s""""docChunks":${snap.docChunks.map(c => s""""$c"""").mkString("[", ",", "]")},""" +
-      s""""dictVersion":${snap.dictVersion},"numDocs":${snap.stats.numDocs},""" +
-      s""""totalTokens":${snap.stats.totalTokens},"avgdl":${snap.stats.avgdl},""" +
-      s""""numShards":${snap.stats.numShards},"maxStreamBatch":${snap.maxStreamBatch},""" +
-      s""""nextDocId":${snap.nextDocId},"streamId":"${snap.streamId}"}"""
+    val root = Json.createObjectNode()
+      .put("version", snap.version).put("parent", snap.parent).put("op", snap.op)
+      .put("tsMs", snap.tsMs).put("formatVersion", snap.formatVersion)
+    Seq("blockChunks" -> snap.blockChunks, "docChunks" -> snap.docChunks).foreach {
+      case (field, chunks) => val a = root.putArray(field); chunks.foreach(c => a.add(c))
+    }
+    root.put("dictVersion", snap.dictVersion).put("numDocs", snap.stats.numDocs)
+      .put("totalTokens", snap.stats.totalTokens).put("avgdl", snap.stats.avgdl)
+      .put("numShards", snap.stats.numShards).put("maxStreamBatch", snap.maxStreamBatch)
+      .put("nextDocId", snap.nextDocId).put("streamId", snap.streamId)
     val sp = snapPath(dir, snap.version)
     val out = fs.create(sp, false) // conflict detection: fails if version exists
-    out.write(json.getBytes("UTF-8")); out.close()
+    out.write(Json.writeValueAsBytes(root)); out.close()
     val tmp = new Path(s"$dir/catalog/.hint-${snap.version}.tmp")
     val ho = fs.create(tmp, true)
     ho.write(snap.version.toString.getBytes("UTF-8")); ho.close()

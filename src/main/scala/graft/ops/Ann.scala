@@ -85,26 +85,28 @@ object Ann {
       .as[(Long, Seq[Double])]
   }
 
+  /** Training-sample size of k-means, PQ, LVQ and BQ, in vectors. */
+  private[ops] val TrainCap = 131072L
+
   /** Rows of `all` (with a `key` column) whose `xxhash64(key) % m == 0`,
-    * m chosen so about `sampleCap` of the `n` rows remain: a training
+    * m chosen so about [[TrainCap]] of the `n` rows remain: a training
     * sample independent of partitioning, so models are reproducible at
     * any parallelism (the reference also trains on a bounded sample,
     * jvector pq/ProductQuantization.java:58). */
-  private def hashSample(all: DataFrame, n: Long, sampleCap: Long): DataFrame = {
-    val m = math.max(1L, (n + sampleCap - 1) / sampleCap)
+  private def hashSample(all: DataFrame, n: Long): DataFrame = {
+    val m = math.max(1L, (n + TrainCap - 1) / TrainCap)
     if (m > 1L) all.filter(pmod(xxhash64(col("key")), lit(m)) === 0) else all
   }
 
   /** The training vectors of PQ, LVQ and BQ: the key-hash sample of
-    * `emb`, collected to the driver (bounded by `sampleCap`), in key order
+    * `emb`, collected to the driver (bounded by [[TrainCap]]), in key order
     * when `keyOrder` (PQ's k-means initializes from the smallest keys),
     * else in scan order. */
   private[ops] def trainSample(spark: SparkSession, emb: DataFrame, keyCol: String,
-                               vecCol: String, sampleCap: Long,
-                               keyOrder: Boolean): Array[Array[Double]] = {
+                               vecCol: String, keyOrder: Boolean): Array[Array[Double]] = {
     import spark.implicits._
     val all = keyedVectors(emb, keyCol, vecCol).toDF()
-    val sample = hashSample(all, all.count(), sampleCap).as[(Long, Seq[Double])]
+    val sample = hashSample(all, all.count()).as[(Long, Seq[Double])]
     val rows = (if (keyOrder) sample.orderBy($"key") else sample).collect()
     require(rows.nonEmpty, "empty training sample")
     rows.map(_._2.toArray)
@@ -113,8 +115,8 @@ object Ann {
   /** Mean of the training sample: the whole model of LVQ and BQ (d
     * doubles). */
   private[ops] def sampleMean(spark: SparkSession, emb: DataFrame, keyCol: String,
-                              vecCol: String, sampleCap: Long): Array[Double] = {
-    val sample = trainSample(spark, emb, keyCol, vecCol, sampleCap, keyOrder = false)
+                              vecCol: String): Array[Double] = {
+    val sample = trainSample(spark, emb, keyCol, vecCol, keyOrder = false)
     val acc = new Array[Double](sample.head.length)
     sample.foreach { v =>
       var i = 0
@@ -128,7 +130,7 @@ object Ann {
     *
     * Scale shape (the reference trains PQ on a bounded sample too,
     * jvector pq/ProductQuantization.java:58,131-144):
-    *  - training runs on a deterministic key-hash sample of ~trainCap
+    *  - training runs on a deterministic key-hash sample of ~TrainCap
     *    vectors (`xxhash64(key) % m == 0` — independent of partitioning,
     *    so centroids are reproducible at any parallelism);
     *  - each Lloyd round is one broadcast + one mapPartitions pre-sum:
@@ -138,13 +140,13 @@ object Ann {
     *    reduce on the driver. */
   def kmeansCentroids(spark: SparkSession, emb: DataFrame, keyCol: String,
                       vecCol: String, kCenters: Int, iters: Int,
-                      trainCap: Long = 131072L, nHint: Long = -1L): Array[Array[Double]] = {
+                      nHint: Long = -1L): Array[Array[Double]] = {
     import spark.implicits._
     val all = emb.select(col(keyCol).as("key"), vd(col(vecCol)).as("v"))
     // nHint: callers that already counted the corpus (e.g. auto-scaled
     // cluster sizing) pass it through so training doesn't pay the pass twice
     val n = if (nHint >= 0) nHint else all.count()
-    val e = hashSample(all, n, trainCap).as[(Long, Seq[Double])].persist()
+    val e = hashSample(all, n).as[(Long, Seq[Double])].persist()
     var centroids = e.orderBy($"key").limit(kCenters).collect().map(_._2.toArray)
     (0 until iters).foreach { _ =>
       val cB = spark.sparkContext.broadcast(centroids)

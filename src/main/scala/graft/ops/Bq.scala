@@ -55,9 +55,8 @@ object Bq {
   }
 
   /** Centroid of a deterministic key-hash sample (bounded driver work). */
-  def train(spark: SparkSession, emb: DataFrame, keyCol: String, vecCol: String,
-            sampleCap: Long = 131072L): Model =
-    Model(Ann.sampleMean(spark, emb, keyCol, vecCol, sampleCap))
+  def train(spark: SparkSession, emb: DataFrame, keyCol: String, vecCol: String): Model =
+    Model(Ann.sampleMean(spark, emb, keyCol, vecCol))
 
   /** Encode the corpus: (key, bits: array<long>). Narrow map, no shuffle. */
   def encode(spark: SparkSession, emb: DataFrame, keyCol: String, vecCol: String,

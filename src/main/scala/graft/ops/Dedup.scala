@@ -12,17 +12,13 @@ import graft.core.Analyze
   *  - n-gram (char-5-gram) Jaccard: shingle explode -> self-equi-join on
   *    shingle -> count aggregate. The join is the scalable formulation
   *    (candidates only meet if they SHARE a shingle — never all-pairs);
-  *  - MinHash + banded LSH: declarative signature aggregate (64 min()
-  *    columns over (a·x+b) mod p), band bucketing, bucket equi-join for
-  *    candidates, exact-Jaccard verification of candidates only. At
-  *    10^12-doc scale only the LSH path survives: its shuffle is
-  *    O(docs · bands), and verification touches candidate pairs only.
+  *  - MinHash + banded LSH: in-row 64-value signatures over (a·x+b) mod p,
+  *    band bucketing, bucket equi-join for candidates, exact-Jaccard
+  *    verification of candidates only. At 10^12-doc scale only the LSH
+  *    path survives: its shuffle is O(docs · bands), and verification
+  *    touches candidate pairs only.
   */
 object Dedup {
-
-  /** trim(regexp_replace(lower(text),'[^a-z0-9]+',' ')) == Analyze.normalize. */
-  def normCol(text: Column): Column =
-    trim(regexp_replace(lower(text), "[^a-z0-9]+", " "))
 
   /** Exact duplicate groups: (text_md5, cnt, min_key), cnt > 1. */
   def exactGroups(docs: DataFrame, keyCol: String, textCol: String): DataFrame =
@@ -121,38 +117,24 @@ object Dedup {
       .select(col("a"), col("b"), col("jacc"))
   }
 
-  /** MinHash signatures: one row per key with numHashes min-hash values,
-    * computed as a single hash-aggregate (no UDAF needed). The shingle
-    * hash (first 7 hex of md5 -> 28-bit int) matches Analyze.shingleHash31. */
-  def minHashSignature(sh: DataFrame, numHashes: Int = 64, seed: Long = 42L): DataFrame = {
-    val params = Analyze.minHashParams(numHashes, seed)
-    val x = conv(substring(md5(col("shingle")), 1, 7), 16, 10).cast("long")
-    val hashed = sh.select(col("key"), x.as("x"))
-    val aggs = params.zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * col("x") + lit(b)) % lit(Analyze.MinHashP)).as(s"h$i")
-    }
-    hashed.groupBy(col("key")).agg(aggs.head, aggs.tail: _*)
-  }
-
   /** Banded-LSH candidate pairs + exact-Jaccard verification.
-    * numHashes = bands * rowsPerBand; a pair is a candidate iff one band's
-    * signature slice matches exactly; candidates (only) are then verified
-    * with exact shingle Jaccard >= threshold.
+    * 64 hashes = 16 bands * 4 rows per band; a pair is a candidate iff
+    * one band's signature slice matches exactly; candidates (only) are
+    * then verified with exact shingle Jaccard >= threshold.
     *
     * Signatures are computed IN-ROW (one narrow map over documents: the
     * per-doc shingle set is a local property, and the 64 mins over it even
     * more so), then exploded to bands·|docs| band rows. The previous
     * formulation shuffled every (doc, shingle) row through a 64-column
     * min-aggregate — identical values (same md5-derived 28-bit shingle
-    * hash, same (a·x+b) mod p family: [[minHashSignature]] remains the
-    * declarative twin), but |corpus|·|doc| aggregate input vs |docs|
-    * mapped rows. At 10^12 docs the aggregate's map-side combine already
-    * bounded the SHUFFLE to docs·64; this also removes the combine pass
-    * itself. The shingle table is still materialized once — the exact
-    * verification join needs it regardless. */
+    * hash, same (a·x+b) mod p family), but |corpus|·|doc| aggregate
+    * input vs |docs| mapped rows. At 10^12 docs the aggregate's map-side
+    * combine already bounded the SHUFFLE to docs·64; this also removes the
+    * combine pass itself. The shingle table is still materialized once —
+    * the exact verification join needs it regardless. */
   def lshNearDupPairs(docs: DataFrame, keyCol: String, textCol: String,
-                      threshold: Double, numHashes: Int = 64,
-                      bands: Int = 16): DataFrame = {
+                      threshold: Double): DataFrame = {
+    val (numHashes, bands) = (64, 16)
     val rows = numHashes / bands
     val spark = docs.sparkSession
     import spark.implicits._

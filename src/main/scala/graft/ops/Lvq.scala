@@ -119,9 +119,8 @@ object Lvq {
   /** Mean of a deterministic key-hash sample (bounded driver work, the
     * one trainer LVQ and BQ share: [[Ann.sampleMean]]; the model is d
     * doubles). */
-  def train(spark: SparkSession, emb: DataFrame, keyCol: String, vecCol: String,
-            sampleCap: Long = 131072L): Model =
-    Model(Ann.sampleMean(spark, emb, keyCol, vecCol, sampleCap))
+  def train(spark: SparkSession, emb: DataFrame, keyCol: String, vecCol: String): Model =
+    Model(Ann.sampleMean(spark, emb, keyCol, vecCol))
 
   /** Encode the corpus: (key, u: binary, bias: float, scale: float).
     * Narrow map, no shuffle — d bytes + 8 bytes per vector at rest. */

@@ -222,13 +222,11 @@ object Pq {
     if (anisotropicThreshold > 0) parallelCostMultiplier(anisotropicThreshold, dim) else 0.0
 
   /** Train codebooks on a deterministic key-hash sample (collected to the
-    * driver — bounded by sampleCap vectors; centroids init from the k
+    * driver — bounded by [[Ann.TrainCap]] vectors; centroids init from the k
     * smallest keys' sub-vectors, `iters` Lloyd rounds per subspace). */
   def train(spark: SparkSession, emb: DataFrame, keyCol: String, vecCol: String,
-            m: Int, codes: Int = 256, iters: Int = 5,
-            sampleCap: Long = 131072L): Model =
-    lloyd(Ann.trainSample(spark, emb, keyCol, vecCol, sampleCap, keyOrder = true),
-      m, codes, iters)
+            m: Int, codes: Int = 256, iters: Int = 5): Model =
+    lloyd(Ann.trainSample(spark, emb, keyCol, vecCol, keyOrder = true), m, codes, iters)
 
   /** Plain-Lloyd codebooks over the training vectors, one k-means per
     * subspace. */
@@ -262,16 +260,14 @@ object Pq {
     *     from the same assignment snapshot, so each outer round is
     *     deterministic.
     *
-    * Seeded from the plain-Lloyd codebooks of [[train]]; `outerIters`
+    * Seeded from the plain-Lloyd codebooks of [[train]]; four
     * alternations. Code size and ADC scoring are unchanged — like the
     * anisotropic assignment, this is a pure recall-per-byte knob, and
     * OpsSpec pins that it beats assignment-only at equal code size. */
   def trainAnisotropic(spark: SparkSession, emb: DataFrame, keyCol: String,
                        vecCol: String, m: Int, threshold: Double,
-                       codes: Int = 256, iters: Int = 5,
-                       sampleCap: Long = 131072L,
-                       outerIters: Int = 4): Model = {
-    val vecs = Ann.trainSample(spark, emb, keyCol, vecCol, sampleCap, keyOrder = true)
+                       codes: Int = 256, iters: Int = 5): Model = {
+    val vecs = Ann.trainSample(spark, emb, keyCol, vecCol, keyOrder = true)
     // seed: the plain-Lloyd codebooks (identical to train())
     var model = lloyd(vecs, m, codes, iters)
     val dim = model.dim
@@ -279,7 +275,7 @@ object Pq {
     val pcm = parallelCostMultiplier(threshold, dim)
     val kCodes = model.codebooks(0).length
     var outer = 0
-    while (outer < outerIters) {
+    while (outer < 4) {
       // 1. anisotropic assignment snapshot
       val assign = vecs.map(v => model.encodeOneAnisotropic(v, pcm))
       // 2. per (subspace, code) normal systems

@@ -38,7 +38,6 @@ object TextOps {
   private val langIdUdf = udf((t: String) => Analyze.langId(if (t == null) "" else t))
   private val simhashUdf = udf((t: String) => Analyze.simhash60(if (t == null) "" else t))
   private val fpUdf = udf((t: String) => Analyze.fingerprint15(if (t == null) "" else t))
-  private val rollUdf = udf((t: String) => Analyze.rollingHash(if (t == null) "" else t))
 
   def langId(docs: DataFrame, keyCol: String, textCol: String): DataFrame =
     docs.select(col(keyCol), langIdUdf(col(textCol)).as("lang_pred"))
@@ -48,9 +47,6 @@ object TextOps {
 
   def fingerprint(docs: DataFrame, keyCol: String, textCol: String): DataFrame =
     docs.select(col(keyCol), fpUdf(col(textCol)).as("fp"))
-
-  def rollingFingerprint(docs: DataFrame, keyCol: String, textCol: String): DataFrame =
-    docs.select(col(keyCol), rollUdf(col(textCol)).as("rolling_fp"))
 
   /** SimHash near-dup pairs: hamming distance <= maxDist on the 60-bit
     * simhash. Scale path: bucket on bit-bands (pigeonhole: dist <= d means

@@ -212,4 +212,24 @@ class CoreSpec extends AnyFunSuite {
     // every build of a level failed and no pair is possible: nulls, still JSON
     check(levels.updated(1, Bench.Level("c8", Nil, "{}")), Seq(1.2, 1.3))
   }
+
+  test("entry points: exactly IndexCli, Bench, BenchBuildOne and Verify have a main") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    // a probe or a one-off tool added as a main must be a deliberate edit
+    // of this list; the evidence of a measurement goes to tools/ instead
+    val objectDecl = """(?m)^[ \t]*(?:private(?:\[\w+\])?\s+|final\s+|case\s+)*object\s+(\w+)""".r
+    val entry = """def\s+main\s*\(|extends\s+App\b""".r
+    val files = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val mains = files.flatMap { f =>
+      val src = Files.readString(f)
+      entry.findAllMatchIn(src).map { m =>
+        objectDecl.findAllMatchIn(src.substring(0, m.end)).map(_.group(1)).toSeq.lastOption
+          .getOrElse(fail(s"an entry point outside any object in $f"))
+      }
+    }.sorted
+    assert(files.nonEmpty)
+    assert(mains == Seq("Bench", "BenchBuildOne", "IndexCli", "Verify"), mains.mkString(", "))
+  }
 }

@@ -582,6 +582,28 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     one.close()
   }
 
+  test("serve loop: malformed lines answer ERROR and the loop goes on; the pin is released") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-serve").toString
+    index.save(dir)
+    def pinnedIds = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val before = pinnedIds
+    val outs = scala.collection.mutable.ArrayBuffer[String]()
+    IndexCli.serveLoop(spark, dir, 5, Iterator(
+      ":t abc t0",     // tau is not a number
+      ":d 1,x t0 t1",  // a deny id is not a number
+      ":a 0.5 y t0",   // the cursor docId is not a number
+      "t0 t1 t5",
+      "",              // quits: the line after it is never read
+      "t7"), outs += _)
+    assert(outs.size == 5 && outs(0).startsWith("ready"), outs.mkString("\n"))
+    assert(outs.slice(1, 4).forall(_.startsWith("ERROR NumberFormatException: ")), outs.mkString("\n"))
+    assert(pinnedIds -- before == Set.empty, "the serving pin outlived the loop")
+    val hot = HotIndex(InvertedIndex.load(spark, dir))
+    val want = try hot.search("t0 t1 t5", 5) finally hot.close()
+    assert(want.nonEmpty && outs(4).split("] ", 2)(1) ==
+      want.map(sd => f"${sd.docId}:${sd.score}%.3f").mkString(" "), outs(4))
+  }
+
   test("HotIndex pins packed stores: cache memSize <= half the same blocks as term -> Array[Block] maps") {
     val hot = HotIndex(index)
     val st = spark.sparkContext.getRDDStorageInfo.filter(_.id == hot.rddId)

@@ -91,7 +91,7 @@ class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     // single head-ish terms are where the declining block-max layout
     // prunes (multi-term sums keep bounds above θ via per-block max-tf;
-    // ScaleProbe quantifies both — BASELINE.md round 3)
+    // tools/scale_probe_r3.json quantifies both — BASELINE.md round 3)
     val qs = Seq("t7", "t3")
     val (dU, tU) = qs.map(decodedFor(ixUrl, _)).reduce((x, y) => (x._1 + y._1, x._2 + y._2))
     val (dL, tL) = qs.map(decodedFor(ixLen, _)).reduce((x, y) => (x._1 + y._1, x._2 + y._2))

@@ -185,6 +185,23 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     got.zip(want).foreach { case ((_, gs), (_, ws)) => assert(math.abs(gs - ws) < 1e-9) }
   }
 
+  test("a stream id with a quote and a backslash commits a readable snapshot; its replay is skipped") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-escape").toString
+    val opts = IndexBuilder.Options(numShards = 4, rangePartitions = 4)
+    val all = (0L until 240L).map(i => WebCorpus.page(23L, i))
+    def toDf(ps: Seq[WebCorpus.Page]) =
+      ps.map(p => (p.url, p.text, p.lang)).toDF("url", "text", "lang")
+    ResumableBuild.build(spark, toDf(all.take(200)), dir, opts, numChunks = 1)
+    val ckpt = "ck\"1\\x"
+    StreamingIndex.appendBatch(spark, toDf(all.drop(200)), dir, opts, 0L, streamId = ckpt)
+    val snap = SegmentCatalog.current(spark, dir)
+    assert(snap.streamId == ckpt && snap.maxStreamBatch == 0L && snap.stats.numDocs == 240)
+    StreamingIndex.appendBatch(spark, toDf(all.drop(200)), dir, opts, 0L, streamId = ckpt)
+    assert(SegmentCatalog.current(spark, dir).version == snap.version, "replay committed again")
+    assert(StreamingIndex.refresh(spark, dir).stats.numDocs == 240)
+  }
+
   test("append crash before snapshot commit: replay is exactly-once (no dup docs, no double-counted stats)") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-crash").toString
